@@ -709,7 +709,7 @@ object Dedup {
       .union(pairs.select(col("doc_id_2").as("src"), col("doc_id_1").as("dst")))
       .persist()
     edges.count() // eager: every round joins this index; don't race the lazy cache
-    val (labels, iters) =
+    val Components(labels, iters, _) =
       try connectedComponents(edges, maxIters,
         halveFrom = if (pathHalving) DefaultHalveFrom else Int.MaxValue)
       finally edges.unpersist()
@@ -822,18 +822,18 @@ object Dedup {
     *
     * ADAPTIVE LOCAL FALLBACK: a graph at or below `localMaxEdges`
     * edges resolves as a driver union-find ([[localCc]], identical
-    * labelling, iters reported as 0) instead of paying per-round
-    * distributed-job latency — pass `localMaxEdges = 0` to force the
-    * distributed loop (specs pinning round counts do).
+    * labelling, `local = true`, zero rounds) instead of paying
+    * per-round distributed-job latency — pass `localMaxEdges = 0` to
+    * force the distributed loop (specs pinning round counts do).
     */
   private[graft] def connectedComponents(edges: DataFrame, maxIters: Int = 50,
       halveFrom: Int = DefaultHalveFrom,
-      localMaxEdges: Long = LocalCcMaxEdges): (DataFrame, Int) = {
+      localMaxEdges: Long = LocalCcMaxEdges): Components = {
     val sess = edges.sparkSession
     // ADAPTIVE: small graphs resolve on the driver (callers persist +
     // count the edge frame already, so this count hits cache)
     if (localMaxEdges > 0 && edges.count() <= localMaxEdges)
-      return (localCc(edges), 0)
+      return Components(localCc(edges), iters = 0, local = true)
     val reliableDir = sess.conf.getOption("graft.cc.checkpointDir")
     reliableDir.foreach(sess.sparkContext.setCheckpointDir)
     def materialize(df: DataFrame): DataFrame =
@@ -896,8 +896,16 @@ object Dedup {
     } finally {
       if (!converged) releaseLabels(labels)
     }
-    (labels, iter)
+    Components(labels, iter, local = false)
   }
+
+  /** A [[connectedComponents]] result: the (doc_id, cluster_id)
+    * labels, the propagation rounds run, and which path produced
+    * them — `local` labels are a driver-built LocalRelation with no
+    * checkpoint blocks behind them; distributed ones must go through
+    * [[releaseLabels]] once consumed. */
+  private[graft] final case class Components(labels: DataFrame, iters: Int,
+      local: Boolean)
 
   /** Release the storage behind a [[connectedComponents]] round/result
     * frame. Checkpointed RDDs are persisted at the RDD level, OUTSIDE
@@ -956,8 +964,8 @@ object Dedup {
             .union(pairs.select(col("dst").as("src"), col("src").as("dst")))
             .persist()
           edges.count()
-          val (labels, _) =
-            try connectedComponents(edges) finally edges.unpersist()
+          val labels =
+            try connectedComponents(edges).labels finally edges.unpersist()
           val labelTable = s"graft_cc_labels_$tag"
           Sources.writeBucketed(labels, labelTable, Seq("doc_id"), nBuckets = 8,
             sortCols = Seq("doc_id"),
@@ -1037,7 +1045,7 @@ object Dedup {
       .union(half.select(col("dst").as("src"), col("src").as("dst")))
       .persist()
     edges.count()
-    val (merged, _) = try connectedComponents(edges) finally edges.unpersist()
+    val merged = try connectedComponents(edges).labels finally edges.unpersist()
     // contracted-node labels: bounded by increment + touched clusters
     // (metadata-scale next to the corpus), hence broadcastable
     val nodeLabels = merged

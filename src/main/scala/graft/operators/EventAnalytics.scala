@@ -2252,21 +2252,23 @@ object EventAnalytics {
     * branch's exact schema (native item type, nullable fields),
     * ordered by item — so the two branches are indistinguishable to
     * any consumer (pinned by the adaptive-local-walk specs). */
-  private def localPathsDF(spark: org.apache.spark.sql.SparkSession,
+  private[graft] def localPathsDF(spark: org.apache.spark.sql.SparkSession,
       itemType: org.apache.spark.sql.types.DataType,
       distType: org.apache.spark.sql.types.DataType,
       rows: Seq[(Long, Any)]): DataFrame = {
     import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
     import scala.jdk.CollectionConverters._
     val schema = StructType(Seq(StructField("item", itemType),
       StructField("dist", distType)))
-    val data = rows.map { case (i, d) =>
-      Row(itemType match {
-        case LongType => i
-        case _        => i.toInt
-      }, d)
+    val toItem: Long => Any = itemType match {
+      case LongType    => i => i
+      case IntegerType => i => i.toInt
+      case other => throw new IllegalArgumentException(
+        s"localPathsDF: item type $other is not long or int — the " +
+          "driver-local walk cannot build rows of it")
     }
+    val data = rows.map { case (i, d) => Row(toItem(i), d) }
     spark.createDataFrame(data.asJava, schema).orderBy(col("item"))
   }
 

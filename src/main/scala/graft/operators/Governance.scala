@@ -441,15 +441,13 @@ object Governance {
       .union(matches.select(col("key_2").as("src"), col("key_1").as("dst")))
       .persist()
     edges.count() // eager: every CC round joins this frame
-    val (ccLabels, ccIters) =
-      try Dedup.connectedComponents(edges)
-      finally edges.unpersist()
-    if (ccIters == 0) {
+    val cc = try Dedup.connectedComponents(edges) finally edges.unpersist()
+    if (cc.local) {
       // adaptive driver-local CC path (small match graph): the labels
       // are a LocalRelation — no checkpoint blocks to release and
       // nothing to gain from a parquet roundtrip; feed the rollup
       // directly (two fewer jobs per call)
-      goldenOf(t.part, ccLabels)
+      goldenOf(t.part, cc.labels)
     } else {
       // distributed path: the entity assignment is a persisted
       // artifact in production (the master-data crosswalk table);
@@ -459,8 +457,8 @@ object Governance {
       // ContextCleaner GC (see Dedup.releaseLabels)
       val labelPath = graft.sources.SourceOps.staging(
         s"er_labels_${graft.sources.SourceOps.dirTag(t.dir)}")
-      ccLabels.write.mode("overwrite").parquet(labelPath)
-      Dedup.releaseLabels(ccLabels)
+      cc.labels.write.mode("overwrite").parquet(labelPath)
+      Dedup.releaseLabels(cc.labels)
       goldenOf(t.part, t.spark.read.parquet(labelPath))
     }
   }
@@ -530,8 +528,8 @@ object Governance {
             .union(pairs.select(col("key_2").as("src"), col("key_1").as("dst")))
             .persist()
           edges.count()
-          val (labels, _) =
-            try Dedup.connectedComponents(edges) finally edges.unpersist()
+          val labels =
+            try Dedup.connectedComponents(edges).labels finally edges.unpersist()
           val labelTable = s"graft_er_labels_$tag"
           Sources.writeBucketed(labels, labelTable, Seq("doc_id"), nBuckets = 8,
             sortCols = Seq("doc_id"),
@@ -607,7 +605,7 @@ object Governance {
       .union(half.select(col("dst").as("src"), col("src").as("dst")))
       .persist()
     edges.count()
-    val (merged, _) = try Dedup.connectedComponents(edges)
+    val merged = try Dedup.connectedComponents(edges).labels
       finally edges.unpersist()
     val nodeLabels = merged
       .select(col("doc_id").as("node"), col("cluster_id").as("label"))

@@ -607,19 +607,35 @@ object Scale {
         round(sum(col("s")), 2).as("revenue"))
   }
 
+  /** The stored pre-CDC dimension seeded as a keyed gshard table
+    * (generation 0, the 8-shard keyed-stats shape `q_shard_merge`
+    * uses), the whole increment MERGEd through [[scd2MergeOf]]
+    * (generation 1); returns (generation 0, head) as pinned reads. */
+  private def mergedScd2Versions(t: Tables, name: String,
+      splitDay: Int): (DataFrame, DataFrame) = {
+    import graft.sources.SourceOps
+    import graft.sources.shard.{ShardFormat, ShardOps}
+    val dir = SourceOps.staging(
+      s"${name}_${SourceOps.runId}_${SourceOps.dirTag(t.dir)}_$splitDay")
+    ShardFormat.write(t.spark.table(scd2State(t, splitDay)), dir, "user_id", 8)
+    ShardOps.merge(t.spark, dir, scd2Events(t).filter(col("day") >= splitDay),
+      "user_id", nShards = 0, txnId = -1L, txnApp = None)(scd2MergeOf)
+    (t.spark.read.format("gshard").option("versionAsOf", "0").load(dir),
+      t.spark.read.format("gshard").load(dir))
+  }
+
   /** E205 — `q_dim_time_travel`: snapshot-to-snapshot dimension AUDIT
-    * through [[graft.sources.MergeTarget]]'s versioned reads — the
-    * time-travel consumer the MERGE sink exists for (Delta's
-    * `VERSION AS OF` shape): seed the target with the stored pre-CDC
-    * dimension (version 0), MERGE the increment (version 1), then
+    * through gshard's versioned reads — the time-travel consumer the
+    * MERGE sink exists for (Delta's `VERSION AS OF` shape): seed the
+    * table with the stored pre-CDC dimension (version 0),
+    * [[graft.sources.shard.ShardOps.merge]] the increment (version 1), then
     * read BOTH versions and classify every dimension row by what the
     * CDC day did to it — `added` (new version row), `closed` (the
     * open version got its `valid_to`), `extended` (still open, more
     * observed days), `unchanged`. The per-class row/user counts are
     * the audit a warehouse review reads after every merge window —
     * and the readout is impossible without versioned snapshots, which
-    * is the point: the bare-parquet fold this target replaced
-    * overwrote its own history.
+    * is the point: a bare-parquet fold overwrites its own history.
     *
     * Classification order matters (an open version can both extend
     * and later close inside one increment — `closed` wins, both
@@ -633,20 +649,14 @@ object Scale {
     * pinned version scans, one user-keyed full-outer join on the
     * metadata-scale dimension, one 4-row rollup. The oracle rebuilds
     * both snapshots from raw events (truncated and full SCD2 chains)
-    * and replays the identical classification — so the TARGET's
+    * and replays the identical classification — so the table's
     * version semantics, not just the merge math, are hash-checked. */
   def qDimTimeTravel(t: Tables, splitDay: Int = 25): DataFrame = {
-    import graft.sources.{MergeTarget, SourceOps}
-    val tag = s"${SourceOps.runId}_${SourceOps.dirTag(t.dir)}_$splitDay"
-    val target = MergeTarget.create(t.spark,
-      SourceOps.staging(s"dim_time_travel_$tag"),
-      t.spark.table(scd2State(t, splitDay)))
-    target.merge(0L)(scd2MergeOf)(
-      scd2Events(t).filter(col("day") >= splitDay))
-    val v0 = target.readVersion(0L).select(col("user_id"),
+    val (v0Dim, v1Dim) = mergedScd2Versions(t, "dim_time_travel", splitDay)
+    val v0 = v0Dim.select(col("user_id"),
       col("valid_from"), col("is_current").as("was_current"),
       col("n_days_observed").as("was_n"))
-    val head = target.read().select(col("user_id"), col("valid_from"),
+    val head = v1Dim.select(col("user_id"), col("valid_from"),
       col("is_current"), col("n_days_observed"))
     val change = when(col("was_current").isNull, lit("added"))
       .when(col("was_current") && !col("is_current"), lit("closed"))
@@ -661,7 +671,7 @@ object Scale {
   }
 
   /** E213 — `q_merge_cdf`: the CHANGE DATA FEED between two committed
-    * versions of the MERGE target — the row-level artifact (Delta
+    * versions of the merged gshard dimension — the row-level artifact (Delta
     * Lake's CDF / `readChangeData` shape) that downstream INCREMENTAL
     * consumers subscribe to instead of diffing snapshots themselves:
     * every inserted version row surfaces as `insert`, every modified
@@ -682,18 +692,12 @@ object Scale {
     * pass). The oracle rebuilds both snapshots from raw events and
     * emits the identical three-way feed. */
   def qMergeCdf(t: Tables, splitDay: Int = 25): DataFrame = {
-    import graft.sources.{MergeTarget, SourceOps}
-    val tag = s"${SourceOps.runId}_${SourceOps.dirTag(t.dir)}_$splitDay"
-    val target = MergeTarget.create(t.spark,
-      SourceOps.staging(s"merge_cdf_$tag"),
-      t.spark.table(scd2State(t, splitDay)))
-    target.merge(0L)(scd2MergeOf)(
-      scd2Events(t).filter(col("day") >= splitDay))
-    val v0 = target.readVersion(0L).select(col("user_id"),
+    val (v0Dim, v1Dim) = mergedScd2Versions(t, "merge_cdf", splitDay)
+    val v0 = v0Dim.select(col("user_id"),
       col("valid_from"), col("status").as("o_status"),
       col("valid_to").as("o_vt"), col("is_current").as("o_cur"),
       col("n_days_observed").as("o_n"))
-    val v1 = target.read().select(col("user_id"), col("valid_from"),
+    val v1 = v1Dim.select(col("user_id"), col("valid_from"),
       col("status").as("n_status"), col("valid_to").as("n_vt"),
       col("is_current").as("n_cur"), col("n_days_observed").as("n_n"))
     val j = v1.join(v0, Seq("user_id", "valid_from"), "full_outer")

@@ -1912,8 +1912,8 @@ object Similarity {
       .select(col("a.src").as("src"), col("a.dst").as("dst"))
       .persist()
     mutual.count() // eager: every CC round joins this frame
-    val (labels, _) =
-      try Dedup.connectedComponents(mutual) finally mutual.unpersist()
+    val labels =
+      try Dedup.connectedComponents(mutual).labels finally mutual.unpersist()
     val nodes = withEmb(t).filter(col("vec_id") % 16 === 0)
       .select(col("vec_id"))
     val lab = nodes

@@ -1808,8 +1808,7 @@ object TextAnalysis {
     // rank = offset + in-cell row_number. Bit-identical bucket
     // assignment — doc_id is unique in perDoc, so rank is the same
     // total order ntile saw.
-    val celled = perDoc.withColumn("cell",
-      floor(col("doc_id") / lit(1048576L)))
+    val celled = perDoc.withColumn("cell", heapsCell)
     val offsets = celled.groupBy(col("cell"))
       .agg(count(lit(1)).as("cn"))
       .select(col("cell"),
@@ -1857,6 +1856,11 @@ object TextAnalysis {
     cum.select(col("bucket"), col("cum_tokens"), col("cum_vocab"))
       .crossJoin(broadcast(fit))
   }
+
+  /** `text_heaps_law`'s ranking cell: the doc-id axis cut into 2^20-wide
+    * ranges by integer DIV, exact at any doc id (a double quotient
+    * loses exactness past 2^53 and can land a doc in the next cell). */
+  private[graft] val heapsCell: Column = expr("doc_id DIV 1048576")
 
   def textCharEntropy(t: Tables): DataFrame = {
     val chars = t.documents

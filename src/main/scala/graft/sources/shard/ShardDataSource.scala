@@ -167,7 +167,7 @@ private[shard] class ShardTable(dir: String, tableSchema: StructType,
   // straddling the predicate boundary, an unsupported shape, a
   // pre-nullcount manifest) rejects the whole DELETE, and Spark reports
   // it — the Iceberg/Delta metadata-delete contract; a row-level
-  // rewrite is MERGE's job ([[graft.sources.MergeTarget]]).
+  // rewrite is MERGE's job ([[ShardOps.merge]]).
   // Commit is manifest-FIRST: the new manifest (without the dropped
   // entries) publishes atomically, then the dropped files are swept —
   // a crash in between leaves orphans, never a manifest naming deleted

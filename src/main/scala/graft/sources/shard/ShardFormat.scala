@@ -2005,8 +2005,8 @@ object ShardFormat {
 
   /** `VERSION AS OF v`: the head when v is the head generation, else
     * the retained archive — a version beyond head fails as
-    * not-committed, a missing archive as vacuumed (the MergeTarget /
-    * Delta contract: loud, never a partial read). */
+    * not-committed, a missing archive as vacuumed (the Delta
+    * contract: loud, never a partial read). */
   def readManifestVersion(dir: String, version: Option[Long]): Manifest = {
     val head = readManifest(dir)
     version match {

@@ -3,33 +3,12 @@ package graft.sources.shard
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Row-level MERGE (UPSERT) through the gshard catalog — the mutation
-  * DELETE-only metadata surgery can't express: `MERGE INTO t USING u
-  * ON t.key = u.key WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED
-  * THEN INSERT *`, the CDC apply shape.
-  *
-  * Scale shape (the Delta/Iceberg copy-on-write MERGE):
-  *  1. TOUCHED-FILE discovery is metadata-first: the manifest's
-  *     per-file key zone maps (≤ #files rows, broadcast) range-join
-  *     the update keys — a file is rewritten only if SOME update key
-  *     falls inside its [min,max]; everything else is untouched
-  *     (zero read, zero write). A key-clustered table localizes a
-  *     key-local update burst to a few files.
-  *  2. Touched files are read back through the NORMAL connector scan
-  *     (a `files`-restricted read — pruning, projection, residuals
-  *     all apply), anti-joined against the update keys (survivors),
-  *     unioned with ALL updates, and rewritten as fresh range-
-  *     clustered shards on the key.
-  *  3. Publish is generational: archive head, publish
-  *     untouched ++ fresh (VERSION AS OF still reads the pre-merge
-  *     table); replaced bytes reclaim at [[ShardFormat.vacuum]].
-  *  4. REPLAY-IDEMPOTENT via the manifest txn slots (Delta's
-  *     txnAppId/txnVersion): a replayed merge with an already-applied
-  *     id is a no-op — the property restarting CDC appliers rely on.
-  *
-  * Source cardinality is ENFORCED (one row per key in `updates`, the
-  * Delta duplicate-source-row check): two updates for one key would
-  * make the result order-dependent, so the merge fails loudly instead.
+/** Row-level mutation through the gshard catalog — what DELETE's
+  * metadata-only surgery can't express: the copy-on-write [[merge]]
+  * (the Delta/Iceberg MERGE shape, with [[upsert]] as its CDC-apply
+  * special case) and the merge-on-read [[deleteMor]]. Every mutation
+  * is one generational, replay-idempotent, optimistic-concurrency
+  * commit carrying its row-level change files.
   */
 object ShardOps {
 
@@ -177,9 +156,64 @@ object ShardOps {
     } finally matchedFull.unpersist()
   }
 
+  /** UPSERT — `MERGE INTO t USING u ON t.key = u.key WHEN MATCHED
+    * THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *`, the CDC apply
+    * shape: [[merge]] with "touched rows minus the updated keys, plus
+    * every update" as the merge function. Source cardinality is
+    * ENFORCED first (the Delta duplicate-source-row check): two
+    * updates for one key would make the result order-dependent, so
+    * the upsert fails loudly instead. */
   def upsert(spark: SparkSession, dir: String, updates: DataFrame,
       keyCol: String, nShards: Int = 0,
       txnId: Long = -1L, txnApp: Option[String] = None): Unit = {
+    // also rejects NULL keys: a NULL can never equi-match, so an
+    // "insert" with a NULL key would dodge idempotent re-merge
+    val dup = updates.groupBy(col(keyCol)).agg(count(lit(1)).as("c"))
+      .filter(col("c") > 1 || col(keyCol).isNull)
+      .limit(1).collect()
+    require(dup.isEmpty,
+      s"gshard merge: duplicate or NULL key in updates " +
+        s"(${if (dup.isEmpty) "" else dup(0).toString})")
+    merge(spark, dir, updates, keyCol, nShards, txnId, txnApp) { (tr, u) =>
+      tr.join(u.select(col(keyCol)), Seq(keyCol), "left_anti").unionByName(u)
+    }
+  }
+
+  /** Copy-on-write MERGE of `source` into the table at `dir` through
+    * `mergeFn(touchedRows, source)`, which must be KEY-LOCAL in
+    * `keyCol`: rows whose key does not occur in `source` pass through
+    * unchanged, and no key's output depends on another key's rows
+    * (true of [[upsert]] and of the SCD2 close/extend/append merge).
+    * `source` may have any schema; the function's output must carry
+    * the table's visible columns. One call:
+    *
+    *  1. discovers TOUCHED files off the manifest's per-file key zone
+    *     maps (≤ #files rows, broadcast): a file is rewritten only if
+    *     some source key falls inside its [min,max] — everything else
+    *     is untouched (zero read, zero write), which is sound exactly
+    *     because `mergeFn` is key-local;
+    *  2. reads the touched rows back through the NORMAL connector scan
+    *     (a `files`-restricted read — pruning, projection and delete
+    *     masks all apply);
+    *  3. applies `mergeFn`, checks its output against the table's
+    *     visible schema, and rewrites it as fresh key-clustered shards;
+    *  4. captures the commit's row-level changes as the NET multiset
+    *     difference of touched rows (−1 preimages) and output (+1
+    *     postimages) — pass-through rows cancel, so a CDC consumer
+    *     streams O(changed rows) per commit;
+    *  5. publishes generationally with the txn slot advanced: the
+    *     head archives (VERSION AS OF still reads the pre-merge
+    *     table), replaced bytes reclaim at [[ShardFormat.vacuum]], and
+    *     the publish is OPTIMISTIC — a concurrent commit since this
+    *     merge read the head fails it loudly.
+    *
+    * REPLAY-IDEMPOTENT via the manifest txn slots (Delta's
+    * txnAppId/txnVersion): a merge whose id is already applied is a
+    * no-op — the property restarting CDC appliers and `foreachBatch`
+    * sinks rely on. */
+  def merge(spark: SparkSession, dir: String, source: DataFrame,
+      keyCol: String, nShards: Int, txnId: Long, txnApp: Option[String])(
+      mergeFn: (DataFrame, DataFrame) => DataFrame): Unit = {
     val head = ShardFormat.readManifest(dir)
 
     // replay idempotence FIRST (same rule as the append path)
@@ -189,15 +223,6 @@ object ShardOps {
     }
     if (appliedBefore) return
 
-    // schema must match by storage tag (the append discipline), on
-    // the VISIBLE surface — drop tombstones are physical placeholders
-    val a = ShardFormat.visible(head.schema).fields
-      .map(f => (f.name, ShardFormat.typeTag(f.dataType))).toSeq
-    val b = updates.schema.fields
-      .map(f => (f.name, ShardFormat.typeTag(f.dataType))).toSeq
-    require(a == b,
-      s"gshard merge schema mismatch: table=${head.schema.catalogString} " +
-        s"updates=${updates.schema.catalogString}")
     // merge keys: every type whose STORAGE ordering the zone maps
     // index — long/int ids, timestamp (micros), date (days),
     // decimal≤18 (unscaled: p ≤ 18 ⇒ unscaled < 10¹⁸ < 2⁶³, the
@@ -225,18 +250,6 @@ object ShardOps {
     }
     if (!isStringKey) storageKey(lit(null).cast(keyType)) // validate type
 
-    // the Delta duplicate-source-row check: MERGE is ill-defined when
-    // two source rows hit one target key — fail loudly, never
-    // last-writer-wins silently (also rejects NULL keys: a NULL can
-    // never equi-match, so an "insert" with a NULL key would dodge
-    // idempotent re-merge semantics)
-    val dup = updates.groupBy(col(keyCol)).agg(count(lit(1)).as("c"))
-      .filter(col("c") > 1 || col(keyCol).isNull)
-      .limit(1).collect()
-    require(dup.isEmpty,
-      s"gshard merge: duplicate or NULL key in updates " +
-        s"(${if (dup.isEmpty) "" else dup(0).toString})")
-
     // 1. touched files off the manifest zone maps (metadata-scale):
     // files with NO recorded key bounds (all-null, pre-stats, or a
     // cap-degraded string bound) are conservatively touched — they
@@ -262,8 +275,8 @@ object ShardOps {
           (e.file, lo, e.zMax(keyCol))))
         .toDF("file", "lo", "hi")
     val keysDf =
-      if (isStringKey) updates.select(col(keyCol).as("k"))
-      else updates.select(storageKey(col(keyCol)).as("k"))
+      if (isStringKey) source.select(col(keyCol).as("k"))
+      else source.select(storageKey(col(keyCol)).as("k"))
     val touchedBounded: Seq[String] =
       if (head.entries.isEmpty) Seq.empty
       else keysDf
@@ -272,26 +285,32 @@ object ShardOps {
         .select(col("file")).distinct().as[String].collect().toSeq
     val touched = (touchedBounded ++ unbounded).distinct.sorted
 
-    // 2. survivors of the touched files + all updates, rewritten as
-    // fresh key-clustered shards; reading through the connector's
-    // files-restricted scan keeps this the one data pass (persisted:
-    // the survivor rewrite AND the change capture below both consume
-    // it, and writeData runs two jobs on top)
+    // 2./3. the touched rows through the connector's files-restricted
+    // scan — the one data pass, persisted: the rewrite AND the change
+    // capture below both consume it, and writeData runs two jobs on
+    // top. No touched file: the merge function sees an empty table.
+    val visSchema = ShardFormat.visible(head.schema)
+    val visCols = visSchema.fieldNames.toSeq
     val touchedRows: Option[DataFrame] =
       if (touched.isEmpty) None
       else Some(spark.read.format("gshard")
         .option("files", touched.mkString(","))
         .load(dir)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val out: DataFrame = touchedRows match {
-      case None => updates
-      case Some(tr) =>
-        tr.join(updates.select(col(keyCol)), Seq(keyCol), "left_anti")
-          .unionByName(updates)
-    }
+    val out = mergeFn(touchedRows.getOrElse(spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      visSchema)), source)
+    // the output must match the table by name and storage tag (the
+    // append discipline), on the VISIBLE surface — drop tombstones
+    // are physical placeholders
+    def tags(st: StructType) =
+      st.fields.map(f => (f.name, ShardFormat.typeTag(f.dataType))).sorted.toSeq
+    require(tags(out.schema) == tags(visSchema),
+      s"gshard merge schema mismatch: table=${visSchema.catalogString} " +
+        s"merged=${out.schema.catalogString}")
     val shards = if (nShards > 0) nShards else math.max(1, touched.size + 1)
     // fresh file prefix: gen for debuggability PLUS a random token —
-    // two concurrent upserts that both planned at gen N must never
+    // two concurrent merges that both planned at gen N must never
     // stage under the same names (the loser's tasks would overwrite
     // the winner's staged bytes BEFORE the OCC check fires, leaving
     // the winner's committed manifest describing the loser's data);
@@ -300,8 +319,9 @@ object ShardOps {
     val prefix = s"m${head.gen + 1}x" +
       java.util.UUID.randomUUID.toString.take(8) + "-"
     // persist around writeData's two jobs (range bounds, then the
-    // clustered write): without it the touched-file scan + anti-join
-    // — the merge's dominant cost — executes twice
+    // clustered write) and the change capture: without it the
+    // touched-file scan + merge — the dominant cost — executes again
+    // per consumer.
     // PHYSICALIZE: the rewrite keeps every physical slot — visible
     // columns from the merged frame, tombstone slots as null blocks —
     // so rewritten files stay positionally compatible with old ones
@@ -322,60 +342,52 @@ object ShardOps {
         conv(rpad(substring(hex(encode(col(keyCol), "UTF-8")), 1, 14),
           14, "0"), 16, 10).cast("long")
       else storageKey(col(keyCol))
-    val fresh =
-      try ShardFormat.writeData(outAligned, dir, keyCol, shards,
-        prefix = prefix,
-        // rewritten files keep the table's bloom set (manifest-derived)
-        bloomCols = head.entries.flatMap(_.bloom.keys).toSet,
-        rangeExpr = Some(clusterExpr))
-      finally outAligned.unpersist()
-
-    // ROW-GRAIN CHANGE CAPTURE at commit (the Delta CDF choice, r16
-    // verdict task #3): the commit's NET preimage (−1) / postimage
-    // (+1) rows, computed HERE where the touched rows and updates are
-    // already in hand — a CDC consumer then streams O(changed rows)
-    // per commit instead of O(rewritten-file rows). Unchanged pairs
-    // (old <=> new) suppress; the `gshard-cdc` rowlevel feed reads
-    // these files, falling back to the ±file diff for generations
-    // without them (appends, SQL row-level rewrites).
-    val visCols = ShardFormat.visible(head.schema).fieldNames.toSeq
     import graft.sources.shard.ShardCdc.{SideCol => ChangeSide}
-    val changesDf: DataFrame = touchedRows match {
-      case None => // no touched files: every update is a net insert
-        updates.select(visCols.map(col) :+ lit(1).as(ChangeSide): _*)
-      case Some(tr) =>
-        // EXPLICIT renames, not subquery aliases: both legs carry the
-        // same column names, and alias-path resolution across a join
-        // of related lineages can silently bind both `o.c` and `u.c`
-        // to one side — renamed attributes cannot
-        val o = tr.select(visCols.map(c => col(c).as(s"__o_$c")): _*)
-        val u = updates.select(visCols.map(c => col(c).as(s"__u_$c")): _*)
-        val j = o.join(u,
-          col(s"__o_$keyCol") === col(s"__u_$keyCol"), "right_outer")
-        val oStruct = struct(visCols.map(c => col(s"__o_$c").as(c)): _*)
-        val uStruct = struct(visCols.map(c => col(s"__u_$c").as(c)): _*)
-        val changed = j.filter(
-          col(s"__o_$keyCol").isNull || !(oStruct <=> uStruct))
-        // preimages keep duplicates (two physical old rows = two
-        // removals); postimages DEDUPE — a duplicate-keyed target
-        // (plain appends don't enforce uniqueness) joins one update
-        // against several old rows, but the commit lands the update
-        // ONCE (key included in the row, and updates are key-unique,
-        // so distinct() is exact)
-        changed.filter(col(s"__o_$keyCol").isNotNull)
-          .select(visCols.map(c => col(s"__o_$c").as(c)) :+
-            lit(-1).as(ChangeSide): _*)
-          .unionByName(changed.select(
-            visCols.map(c => col(s"__u_$c").as(c)) :+
-              lit(1).as(ChangeSide): _*).distinct())
-    }
-    val changeEntries =
-      try ShardFormat.writeData(changesDf, dir, keyCol,
-        math.max(1, math.min(4, shards)), prefix = s"c$prefix",
-        rangeExpr = Some(clusterExpr), namePrefix = "chg-")
-      finally touchedRows.foreach(_.unpersist())
+    val (fresh, changeEntries) =
+      try {
+        val fresh = ShardFormat.writeData(outAligned, dir, keyCol, shards,
+          prefix = prefix,
+          // rewritten files keep the table's bloom set (manifest-derived)
+          bloomCols = head.entries.flatMap(_.bloom.keys).toSet,
+          rangeExpr = Some(clusterExpr))
+        // 4. ROW-GRAIN CHANGE CAPTURE at commit (the Delta CDF choice):
+        // the net multiset difference, touched rows −1 and output +1 —
+        // unchanged pass-through rows cancel, a duplicated old row
+        // that the rewrite lands once leaves one −1. The `gshard-cdc`
+        // rowlevel feed reads these files, falling back to the ±file
+        // diff for generations without them (appends, SQL row-level
+        // rewrites).
+        def side(df: DataFrame, s: Int) =
+          df.select(visCols.map(col) :+ lit(s).as(ChangeSide): _*)
+        val changesDf = touchedRows match {
+          case None => side(outAligned, 1) // every output row is an insert
+          case Some(tr) =>
+            // rows of keys absent from the source cancel by
+            // key-locality, so the diff reads only the source's keys:
+            // change-sized, not touched-file-sized
+            val keys = broadcast(source.select(col(keyCol)))
+            def ofKeys(df: DataFrame) = df.join(keys, Seq(keyCol), "left_semi")
+            side(ofKeys(tr), -1).unionByName(side(ofKeys(outAligned), 1))
+              .groupBy(visCols.map(col): _*)
+              .agg(sum(col(ChangeSide)).as("__net"))
+              .filter(col("__net") =!= 0L)
+              .select(visCols.map(col) :+
+                signum(col("__net")).cast("int").as(ChangeSide) :+
+                explode(sequence(lit(1L), abs(col("__net")))).as("__n"): _*)
+              .drop("__n")
+              // one diff for writeData's two jobs
+              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        }
+        try (fresh, ShardFormat.writeData(changesDf, dir, keyCol,
+          math.max(1, math.min(4, shards)), prefix = s"c$prefix",
+          rangeExpr = Some(clusterExpr), namePrefix = "chg-"))
+        finally changesDf.unpersist()
+      } finally {
+        outAligned.unpersist()
+        touchedRows.foreach(_.unpersist())
+      }
 
-    // 3./4. generational publish with the txn slot advanced
+    // 5. generational publish with the txn slot advanced
     val (nextLast, nextTxns) = txnApp match {
       case None =>
         (if (txnId < 0) head.lastTxn else math.max(txnId, head.lastTxn),
@@ -386,7 +398,7 @@ object ShardOps {
           head.txns + (app -> math.max(txnId, head.txns.getOrElse(app, -1L))))
     }
     val untouched = head.entries.filterNot(e => touched.contains(e.file))
-    // OPTIMISTIC publish: this merge planned (touched files, survivor
+    // OPTIMISTIC publish: this merge planned (touched files, touched
     // read, txn slots) against head.gen — if a concurrent writer
     // moved the head since, publish throws and the fresh files stay
     // orphaned (vacuum re-sweeps them) instead of destroying the

@@ -871,6 +871,24 @@ object Streaming {
     dir.toString
   }
 
+  /** Force the per-day CDC file staging for the bench's explicit
+    * state-build step — the daily drop files are an INPUT artifact
+    * (the feed a production job consumes), so their construction must
+    * not be charged to the merge query. */
+  private[graft] def prebuildScd2Cdc(t: Tables, splitDay: Int = 25): Unit = {
+    stageScd2IncrementDaily(t, splitDay); ()
+  }
+
+  /** The running dimension table `stream_scd2_merge` maintains. */
+  private[graft] def scd2TargetDir(t: Tables, splitDay: Int): String = {
+    import graft.sources.SourceOps
+    SourceOps.staging(s"stream_scd2_target_" +
+      s"${SourceOps.runId}_${SourceOps.dirTag(t.dir)}_$splitDay")
+  }
+
+  /** The txn-slot app id the stream's micro-batch merges commit under. */
+  private[graft] val Scd2TxnApp = "stream_scd2_merge"
+
   /** X18 — `stream_scd2_merge`: the SCD2 dimension maintained as a
     * CONTINUOUS CDC consumer — `q_scd2_merge`'s close/extend/append
     * merge applied once per arriving day. The increment is staged as
@@ -887,64 +905,36 @@ object Streaming {
     * Shape per batch: increment windows partition by user over THAT
     * DAY's rows only; the boundary decision is one user-keyed join of
     * the daily-active users against the stored open versions; the
-    * pass-through is a scan + broadcast anti-join. State lives in the
-    * written dimension table behind [[graft.sources.MergeTarget]] — a
-    * real MERGE-capable versioned sink (atomic pointer commit,
-    * snapshot-isolated readers, per-batch txn idempotence; Delta /
-    * Iceberg in a production deploy, whose jars this offline build
-    * cannot add) — NEVER in driver memory or streaming state stores:
-    * the merge scales with the day + touched users at any history
-    * size. */
-  /** Force the per-day CDC file staging for the bench's explicit
-    * state-build step — the daily drop files are an INPUT artifact
-    * (the feed a production job consumes), so their construction must
-    * not be charged to the merge query. */
-  private[graft] def prebuildScd2Cdc(t: Tables, splitDay: Int = 25): Unit = {
-    stageScd2IncrementDaily(t, splitDay); ()
-  }
-
+    * pass-through is a scan of the touched files + broadcast anti-join.
+    * State lives in a
+    * keyed gshard table that each micro-batch MERGEs into
+    * ([[graft.sources.shard.ShardOps.merge]]: only the files whose key
+    * range the day touches are rewritten, every commit is a readable
+    * generation, and the batch id rides the table's txn slot, so a
+    * replayed micro-batch is a no-op) — NEVER in driver memory or
+    * streaming state stores: the merge scales with the day + touched
+    * users at any history size. */
   def streamScd2Merge(t: Tables, splitDay: Int = 25): DataFrame = {
     import graft.operators.Scale
-    import graft.sources.SourceOps
+    import graft.sources.shard.{ShardFormat, ShardOps}
     val dir = stageScd2IncrementDaily(t, splitDay)
-    val dim = t.spark.table(Scale.scd2State(t, splitDay))
     val schema = t.spark.read.parquet(dir).schema
     val incStream = t.spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(dir)
-    val tag = s"${SourceOps.runId}_${SourceOps.dirTag(t.dir)}_$splitDay"
-    // the running dimension lives in an actual MERGE-capable target
-    // ([[graft.sources.MergeTarget]]: versioned snapshots, atomic
-    // pointer commit, per-batch txn idempotence) — the r11 "a
-    // Delta/Iceberg MERGE target in production" claim as tested code
-    // instead of a comment; each micro-batch is one MERGE INTO.
-    //
-    // Bucket count is sized to the DIMENSION (~1M rows per bucket,
-    // capped at 256 — the Delta/Iceberg file-sizing analog): a small
-    // dimension takes the UNBUCKETED fast path (one write job per
-    // commit — fixed per-commit cost, which dominates at this SF),
-    // while a 100 TB dimension gets hundreds of buckets and commit
-    // bytes ∝ touched buckets ∝ the CDC day. The bucketed merge
-    // semantics themselves (touched-only rewrites, byte-identical
-    // untouched dirs, version sharing) are spec-pinned on explicit
-    // multi-bucket targets in MergeTargetSpec and in the stream spec's
-    // forced-8-bucket replay — sizing the count to the data is the
-    // scale design, not an escape from it.
-    val dimRows = dim.count()
-    val buckets = math.max(1L, math.min(256L,
-      (dimRows + (1L << 20) - 1) / (1L << 20))).toInt
-    val target = graft.sources.MergeTarget.create(t.spark,
-      SourceOps.staging(s"stream_scd2_target_$tag"), dim, "user_id",
-      buckets)
+    val target = scd2TargetDir(t, splitDay)
+    ShardFormat.write(t.spark.table(Scale.scd2State(t, splitDay)), target,
+      "user_id", 8)
     val q = incStream.writeStream
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        target.merge(id)(Scale.scd2MergeOf)(batch)
-        ()
+        ShardOps.merge(t.spark, target, batch, "user_id", nShards = 0,
+          txnId = id, txnApp = Some(Scd2TxnApp))(Scale.scd2MergeOf)
       }
       .start()
     q.awaitTermination()
-    target.read().orderBy(col("user_id"), col("valid_from"))
+    t.spark.read.format("gshard").load(target)
+      .orderBy(col("user_id"), col("valid_from"))
   }
 
   /** X19 — `stream_bpe_train`: the BPE pair-counting round over a

@@ -17,6 +17,15 @@ object ProfileQuery {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val repeat = if (args.length > 2) args(2).toInt else 1
+    val fn = SparkEntry.queries.getOrElse(name,
+      SparkEntry.stateBuilds.get(name) match {
+        case Some(b) => (s: org.apache.spark.sql.SparkSession, d: String) => {
+          b(s, d); Tables(s, d).region.limit(0)
+        }
+        case None => throw new IllegalArgumentException(
+          s"unknown query '$name': not in SparkEntry.queries or " +
+            "SparkEntry.stateBuilds")
+      })
     val spark = GraftSession.builder("graft-profile")
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
@@ -42,12 +51,6 @@ object ProfileQuery {
         }
       }
     }
-    val fn = SparkEntry.queries.getOrElse(name,
-      SparkEntry.stateBuilds(name) match {
-        case b => (s: org.apache.spark.sql.SparkSession, d: String) => {
-          b(s, d); Tables(s, d).region.limit(0)
-        }
-      })
     fn(spark, "/root/testdata/sf0.001").count() // warmup: JIT + codegen
     (1 to repeat).foreach { i =>
       spark.catalog.clearCache()
@@ -58,9 +61,8 @@ object ProfileQuery {
       val t0 = System.nanoTime()
       val n = fn(spark, sfDir).count()
       val sec = (System.nanoTime() - t0) / 1e9
-      // listener events are async: give the bus a moment to drain
-      // before reading counters (private API would be waitUntilEmpty)
-      Thread.sleep(300)
+      // listener events are async: drain the bus before reading counters
+      org.apache.spark.sql.graft.PlanBridge.drainListenerBus(spark)
       spark.sparkContext.removeSparkListener(listener)
       println(f"run$i rows=$n sec=$sec%.3f jobs=${jobs.get} " +
         f"stages=${stages.get} tasks=${tasks.get} " +

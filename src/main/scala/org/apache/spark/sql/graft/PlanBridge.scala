@@ -25,4 +25,9 @@ object PlanBridge {
     * not unique across GC'd/recreated sessions. */
   def sessionUUID(spark: SparkSession): String =
     spark.asInstanceOf[classic.SparkSession].sessionUUID
+
+  /** Block until every listener event posted so far has been
+    * delivered (`listenerBus` is `private[spark]`). */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

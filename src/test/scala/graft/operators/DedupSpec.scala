@@ -59,10 +59,10 @@ class DedupSpec extends SparkSpec {
     // plain round
     val chain = (0L until 63L).flatMap(i => Seq((i, i + 1), (i + 1, i)))
       .toDF("src", "dst")
-    val (plainLabels, plainIters) =
+    val Dedup.Components(plainLabels, plainIters, _) =
       Dedup.connectedComponents(chain, maxIters = 100, halveFrom = Int.MaxValue,
         localMaxEdges = 0)
-    val (halvedLabels, halvedIters) =
+    val Dedup.Components(halvedLabels, halvedIters, _) =
       Dedup.connectedComponents(chain, maxIters = 100, localMaxEdges = 0)
     try {
       // both converge to the single component labelled by node 0
@@ -102,12 +102,13 @@ class DedupSpec extends SparkSpec {
       if (a == b) (a, a + 1) else (a, b)
     }
     val edges = (half ++ half.map(p => (p._2, p._1))).toDF("src", "dst")
-    val (localLabels, localIters) = Dedup.connectedComponents(edges)
-    val (distLabels, distIters) =
+    val Dedup.Components(localLabels, localIters, local) =
+      Dedup.connectedComponents(edges)
+    val Dedup.Components(distLabels, distIters, distLocal) =
       Dedup.connectedComponents(edges, localMaxEdges = 0)
     try {
-      assert(localIters == 0, "small graph did not take the local path")
-      assert(distIters > 0)
+      assert(local && localIters == 0, "small graph did not take the local path")
+      assert(!distLocal && distIters > 0)
       val l = localLabels.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val d = distLabels.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(l == d, s"missing=${(d -- l).take(5)} extra=${(l -- d).take(5)}")
@@ -129,7 +130,7 @@ class DedupSpec extends SparkSpec {
     try {
       val chain = (0L until 32L).flatMap(i => Seq((i, i + 1), (i + 1, i)))
         .toDF("src", "dst")
-      val (labels, iters) =
+      val Dedup.Components(labels, iters, _) =
         Dedup.connectedComponents(chain, maxIters = 100, localMaxEdges = 0)
       assert(labels.filter(col("cluster_id") =!= 0L).count() == 0,
         "reliable-checkpoint run did not converge to the component min")
@@ -152,8 +153,8 @@ class DedupSpec extends SparkSpec {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val chain = (0L until 24L).flatMap(i => Seq((i, i + 1), (i + 1, i)))
       .toDF("src", "dst")
-    val (labels, _) =
-      Dedup.connectedComponents(chain, maxIters = 100, localMaxEdges = 0)
+    val labels =
+      Dedup.connectedComponents(chain, maxIters = 100, localMaxEdges = 0).labels
     assert(labels.filter(col("cluster_id") =!= 0L).count() == 0)
     Dedup.releaseLabels(labels)
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before

@@ -890,4 +890,19 @@ class EventAnalyticsSpec extends SparkSpec {
     assert(local.exceptAll(dist).isEmpty && dist.exceptAll(local).isEmpty)
   }
 
+  test("local walk rows keep long and int item types; others reject by name") {
+    import org.apache.spark.sql.types.{IntegerType, LongType, ShortType}
+    val rows = Seq((2L, 1L), (1L, 0L))
+    val asLong = EventAnalytics.localPathsDF(spark, LongType, LongType, rows)
+    assert(asLong.schema("item").dataType == LongType)
+    assert(asLong.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ==
+      Seq((1L, 0L), (2L, 1L)))
+    val asInt = EventAnalytics.localPathsDF(spark, IntegerType, LongType, rows)
+    assert(asInt.collect().map(r => (r.getInt(0), r.getLong(1))).toSeq ==
+      Seq((1, 0L), (2, 1L)))
+    val ex = intercept[IllegalArgumentException] {
+      EventAnalytics.localPathsDF(spark, ShortType, LongType, rows)
+    }
+    assert(ex.getMessage.contains("ShortType"))
+  }
 }

@@ -316,6 +316,18 @@ class TextAnalysisSpec extends SparkSpec {
       s"template corpus should fit β≈0, got ${rows.head._4}")
   }
 
+  test("text_heaps_law: the ranking cell is exact above 2^53") {
+    val sess = spark
+    import sess.implicits._
+    // 2^62 - 1 has no exact double: a double quotient rounds it up to
+    // 2^62 and floors into cell 2^42; the true cell is 2^42 - 1
+    val ids = Seq((1L << 62) - 1, 1L << 62, (1L << 20) - 1, 1L << 20)
+    val cells = ids.toDF("doc_id").select(TextAnalysis.heapsCell)
+      .collect().map(_.getLong(0)).toSeq
+    assert(cells == ids.map(_ / 1048576L))
+    assert(cells.head == (1L << 42) - 1)
+  }
+
   test("corpus_weighted_sample: integer priorities replay, sample is size-biased") {
     val docs = tables.documents.select(col("doc_id"), col("text")).collect()
       .map { r =>

@@ -11,7 +11,7 @@ import graft.sources.shard.{ShardFormat, ShardOps}
 /** OPTIMISTIC-CONCURRENCY commit for gshard (r15 verdict task #1):
   * `publishManifest` carries the generation the mutation PLANNED
   * against (`basedOn`) and fails loudly when the head moved — the
-  * MergeTarget lost-race discipline, closing the engine's last
+  * lost-race discipline, closing the engine's last
   * silent-data-loss path (two independent writers both reading gen N
   * used to last-writer-wins each other).
   *

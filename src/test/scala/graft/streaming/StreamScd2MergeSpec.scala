@@ -4,18 +4,19 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.operators.Scale
-import graft.sources.{MergeTarget, SourceOps}
+import graft.sources.SourceOps
+import graft.sources.shard.{ShardFormat, ShardOps}
 
 /** The streaming CDC fold must equal the batch merge AND must really
   * run as a sequence of per-day micro-batches — if maxFilesPerTrigger
   * were silently ignored, a single-batch drain would still match the
   * oracle (split-invariance) but would not be the daily-merge shape
-  * the operator exists to demonstrate. Bucketing is ADAPTIVE (~1M
-  * rows per bucket, the Delta/Iceberg file-sizing analog): the spec
-  * pins both ends — the small spec-SF dimension takes the unbucketed
-  * fast path, and a forced-8-bucket replay of the same five daily
-  * merges reproduces the streamed dimension with touched-only
-  * per-bucket version chains.
+  * the operator exists to demonstrate. The running dimension is a
+  * keyed 8-shard gshard table, so the spec reads the commit history
+  * off its manifest: one generation per daily merge, the batch id in
+  * the stream's txn slot, and — replaying the five daily merges on a
+  * fresh 8-shard seed — only the shard files whose key range a day
+  * touched are replaced.
   */
 class StreamScd2MergeSpec extends SparkSpec {
 
@@ -33,65 +34,44 @@ class StreamScd2MergeSpec extends SparkSpec {
     assert(streamed == batch)
 
     // each of the 5 per-day micro-batches must have committed its own
-    // version on top of the v=0 seed (if maxFilesPerTrigger were
-    // ignored, one big batch would leave only versions 0 and 1), and
-    // the pointer's HEAD line must resolve to the final daily merge
-    val tag = s"${SourceOps.runId}_${SourceOps.dirTag(tables.dir)}_25"
-    val root = new java.io.File(SourceOps.staging(s"stream_scd2_target_$tag"))
-    val allLines = new String(java.nio.file.Files.readAllBytes(
-      root.toPath.resolve("_latest"))).trim.split("\n").toSeq
-    // ADAPTIVE bucket sizing: the spec-SF dimension is far below one
-    // bucket's worth of rows, so the stream must have chosen the
-    // unbucketed fast path (per-commit cost = ONE write job)
-    assert(allLines.head == "buckets 1 -",
-      s"adaptive sizing picked the wrong layout: ${allLines.head}")
-    // the pointer carries the table schema (empty-bucket reads plan
-    // with it instead of failing inference)
-    assert(allLines.exists(_.startsWith("schema ")),
-      s"pointer lacks the schema header:\n${allLines.mkString("\n")}")
-    val lines = allLines.filterNot(_.startsWith("schema "))
-    assert(lines.size == 7, // header + seed + 5 daily commits
-      s"expected 6 committed versions, got:\n${lines.mkString("\n")}")
-    val head = lines.last.split(" ")
-    assert(head(0) == "5" && head(1) == "4", // version 5, last batch id 4
-      s"head line '${lines.last}' does not resolve to the final daily merge")
+    // generation on top of the gen-0 seed (if maxFilesPerTrigger were
+    // ignored, one big batch would leave only generations 0 and 1),
+    // and the head's txn slot must name the final daily batch
+    val head = ShardFormat.readManifest(Streaming.scd2TargetDir(tables, 25))
+    assert(head.gen == 5L, s"expected 5 daily commits past the seed: ${head.gen}")
+    assert(head.txns == Map(Streaming.Scd2TxnApp -> 4L),
+      s"txn slot does not name the final daily batch: ${head.txns}")
   }
 
   test("a forced-8-bucket replay of the five daily merges reproduces " +
       "the stream's dimension with touched-only version chains") {
-    val dim = spark.table(Scale.scd2State(tables, 25))
-    val rootStr = SourceOps.staging("scd2_spec_8bucket")
-    val target = MergeTarget.create(spark, rootStr, dim, "user_id", 8)
+    val dir = SourceOps.staging("scd2_spec_8shard")
+    ShardFormat.write(spark.table(Scale.scd2State(tables, 25)), dir,
+      "user_id", 8)
+    assert(ShardFormat.readManifest(dir).entries.size == 8)
     val incr = Scale.scd2Events(tables).filter(col("day") >= 25)
     val days = incr.select(col("day")).distinct()
       .collect().map(_.getInt(0)).sorted
     assert(days.length == 5, s"expected 5 CDC days, got ${days.toSeq}")
     days.zipWithIndex.foreach { case (d, i) =>
-      assert(target.merge(i.toLong)(Scale.scd2MergeOf)(
-        incr.filter(col("day") === d)))
+      val day = incr.filter(col("day") === d)
+      val users = day.select(col("user_id")).distinct()
+        .collect().map(_.getLong(0))
+      val before = ShardFormat.readManifest(dir)
+      ShardOps.merge(spark, dir, day, "user_id", 0, i.toLong,
+        Some("spec"))(Scale.scd2MergeOf)
+      val after = ShardFormat.readManifest(dir)
+      assert(after.gen == before.gen + 1)
+      // replaced = exactly the files whose key range holds a user
+      // active that day; every other file survives by name
+      val touched = before.entries.filter(e => users.exists(u =>
+        e.zMin("user_id") <= u && u <= e.zMax("user_id"))).map(_.file).toSet
+      val old = before.entries.map(_.file).toSet
+      assert(old -- after.entries.map(_.file) == touched,
+        s"day $d replaced the wrong files")
     }
-    // bucketed daily merges == the one-shot batch rebuild
-    assert(dimSet(target.read()) == dimSet(Scale.qScd2Merge(tables)))
-    // layout: 8 bucket dirs, and only TOUCHED buckets gained versions
-    // (each bucket's on-disk dirs are exactly the distinct versions
-    // its pointer column went through — untouched days share dirs)
-    val root = new java.io.File(rootStr)
-    val buckets = root.listFiles().map(_.getName)
-      .filter(_.startsWith("b=")).sorted
-    assert(buckets.toSeq == (0 until 8).map(b => s"b=$b"),
-      s"expected 8 bucket dirs, got ${buckets.toSeq}")
-    val lines = new String(java.nio.file.Files.readAllBytes(
-      root.toPath.resolve("_latest"))).trim.split("\n").toSeq
-      .filterNot(l => l.startsWith("schema ") || l.startsWith("buckets "))
-    assert(lines.size == 6) // seed + 5 daily commits
-    val perBucket = lines.map(_.split(" ").drop(2).map(_.toLong))
-    (0 until 8).foreach { b =>
-      val expect = perBucket.map(_(b)).distinct.sorted
-      val onDisk = new java.io.File(root, s"b=$b").listFiles()
-        .map(_.getName).filter(_.startsWith("v="))
-        .map(_.stripPrefix("v=").toLong).sorted.toSeq
-      assert(onDisk == expect,
-        s"bucket $b: dirs $onDisk != pointer history ${expect}")
-    }
+    // daily merges on the shard seed == the one-shot batch rebuild
+    assert(dimSet(spark.read.format("gshard").load(dir)) ==
+      dimSet(Scale.qScd2Merge(tables)))
   }
 }
