@@ -906,12 +906,11 @@ object Streaming {
     * DAY's rows only; the boundary decision is one user-keyed join of
     * the daily-active users against the stored open versions; the
     * pass-through is a scan of the touched files + broadcast anti-join.
-    * State lives in a
-    * keyed gshard table that each micro-batch MERGEs into
-    * ([[graft.sources.shard.ShardOps.merge]]: only the files whose key
-    * range the day touches are rewritten, every commit is a readable
-    * generation, and the batch id rides the table's txn slot, so a
-    * replayed micro-batch is a no-op) — NEVER in driver memory or
+    * State lives in a keyed gshard table that each micro-batch MERGEs
+    * into ([[graft.sources.shard.ShardOps.merge]]: only the files whose
+    * key range the day touches are rewritten, every commit is a
+    * readable generation, and the batch id rides the table's txn slot,
+    * so a replayed micro-batch is a no-op) — NEVER in driver memory or
     * streaming state stores: the merge scales with the day + touched
     * users at any history size. */
   def streamScd2Merge(t: Tables, splitDay: Int = 25): DataFrame = {
