@@ -706,43 +706,33 @@ object SparkEntry {
     * queries share it), the frozen history index (the incremental /
     * compaction / drift lifecycle family), and the stored near-dup
     * cluster state (band index + CC labels that
-    * `dedup_clusters_incremental` merges against). All are memoized
-    * per (session, dataset), so consumers pay lookups only. */
-  def stateBuilds: Map[String, (SparkSession, String) => Unit] = Map(
-    "_build_band_pairs" ->
-      ((s, dir) => Dedup.prebuildMinhashPairs(Tables(s, dir))),
-    "_build_pq_index" ->
-      ((s, dir) => { Similarity.pqIndex(Tables(s, dir)); () }),
-    "_build_history_index" ->
-      ((s, dir) => { Similarity.historyIndex(Tables(s, dir)); () }),
-    "_build_cc_state" ->
-      ((s, dir) => Dedup.prebuildClusterState(Tables(s, dir))),
-    "_build_scd2_state" ->
-      ((s, dir) => Scale.prebuildScd2State(Tables(s, dir))),
-    "_build_pca_cov" ->
-      ((s, dir) => Similarity.prebuildPcaCov(Tables(s, dir))),
-    "_build_er_pairs" ->
-      ((s, dir) => Governance.prebuildErPairs(Tables(s, dir))),
-    "_build_er_state" ->
-      ((s, dir) => Governance.prebuildErState(Tables(s, dir))),
-    "_build_scd2_cdc" ->
-      ((s, dir) => graft.streaming.Streaming.prebuildScd2Cdc(Tables(s, dir))),
-    "_build_knn_graph" ->
-      ((s, dir) => { Similarity.knnGraphEdges(Tables(s, dir), 8); () }),
-    "_build_bloom_file_index" ->
-      ((s, dir) =>
-        graft.sources.SourceOps.prebuildBloomFileIndex(Tables(s, dir))),
-    "_build_join_view" ->
-      ((s, dir) => Scale.prebuildJoinView(Tables(s, dir))),
-    "_build_shard_table" ->
-      ((s, dir) =>
-        graft.sources.SourceOps.prebuildShardTable(Tables(s, dir))),
-    "_build_shard_embed" ->
-      ((s, dir) =>
-        graft.sources.SourceOps.prebuildShardEmbed(Tables(s, dir))),
-    "_build_shard_ivf" ->
-      ((s, dir) => Similarity.prebuildShardIvf(Tables(s, dir))),
-  )
+    * `dedup_clusters_incremental` merges against). Each is staged once
+    * (`SourceOps.staged`, or `ShardFormat.ensureStaged` for gshard
+    * tables), so consumers pay lookups only. */
+  def stateBuilds: Map[String, (SparkSession, String) => Unit] = {
+    def build(f: Tables => Any): (SparkSession, String) => Unit =
+      (s, dir) => { f(Tables(s, dir)); () }
+    Map(
+      "_build_band_pairs" -> build(Dedup.minhashPairs),
+      "_build_pq_index" -> build(Similarity.pqIndex),
+      "_build_history_index" -> build(Similarity.historyIndex),
+      "_build_cc_state" -> build(Dedup.historyClusterState(_, 400)),
+      "_build_scd2_state" -> build(Scale.scd2State(_, 25)),
+      "_build_pca_cov" -> build(Similarity.covMatrix(_, 64)),
+      "_build_er_pairs" -> build(Governance.erPairs),
+      "_build_er_state" -> build(Governance.erState),
+      "_build_scd2_cdc" ->
+        build(graft.streaming.Streaming.stageScd2IncrementDaily(_, 25)),
+      "_build_knn_graph" -> build(Similarity.knnGraphEdges(_, 8)),
+      "_build_bloom_file_index" ->
+        build(graft.sources.SourceOps.bloomFileIndex),
+      "_build_join_view" -> build(Scale.joinViewState),
+      "_build_shard_table" -> build(graft.sources.SourceOps.shardTable),
+      "_build_shard_embed" ->
+        build(graft.sources.SourceOps.shardEmbeddings),
+      "_build_shard_ivf" -> build(Similarity.shardIvfDir(_)),
+    )
+  }
 
   /** DuckDB fragment: normalized word tokens of `text` (kept in exact
     * sync with [[graft.operators.TextAnalysis.tokens]]). */

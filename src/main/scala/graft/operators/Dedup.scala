@@ -267,37 +267,23 @@ object Dedup {
     * signature depends only on its own shingles, so
     * pairs(slice) = pairs(full) restricted to both endpoints in the
     * slice. Bench cost is visible as the `_build_band_pairs` entry. */
-  private val minhashPairsCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), String]
-
-  private[operators] def minhashPairs(t: Tables): DataFrame = {
-    // .synchronized like the ER pair stage: two cold consumers racing
-    // the same staged overwrite-write would tear the directory
-    val path = minhashPairsCache.synchronized {
-      minhashPairsCache.getOrElseUpdate(
-        (graft.sources.SourceOps.sessionTag(t.spark), t.dir), {
-          val p = graft.sources.SourceOps.staging(
-            s"dedup_pairs_${graft.sources.SourceOps.dirTag(t.dir)}")
-          val bands = minhashBands(shingleSet(t))
-          bands.as("a")
-            .join(bands.as("b"),
-              col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-                col("a.doc_id") < col("b.doc_id"))
-            .select(col("a.doc_id").as("doc_id_1"),
-              col("b.doc_id").as("doc_id_2"))
-            .distinct()
-            .write.mode("overwrite").parquet(p)
-          bands.unpersist()
-          p
-        })
+  private[graft] def minhashPairs(t: Tables): DataFrame = {
+    val path = graft.sources.SourceOps.staged(t, "dedup_pairs") {
+      val p = graft.sources.SourceOps.staging(
+        s"dedup_pairs_${graft.sources.SourceOps.dirTag(t.dir)}")
+      val bands = minhashBands(shingleSet(t))
+      bands.as("a")
+        .join(bands.as("b"),
+          col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
+            col("a.doc_id") < col("b.doc_id"))
+        .select(col("a.doc_id").as("doc_id_1"),
+          col("b.doc_id").as("doc_id_2"))
+        .distinct()
+        .write.mode("overwrite").parquet(p)
+      bands.unpersist()
+      p
     }
     t.spark.read.parquet(path)
-  }
-
-  /** Force the staged pair set for the bench's explicit state-build
-    * step (`_build_band_pairs` sorts ahead of every consumer). */
-  private[graft] def prebuildMinhashPairs(t: Tables): Unit = {
-    minhashPairs(t); ()
   }
 
   /** D4 — SimHash near-dup pairs (32-bit, hamming ≤ 3).
@@ -922,56 +908,42 @@ object Dedup {
 
   // ---- D14: incremental connected components ------------------------
 
-  // stored near-dup cluster state: the history band index and the
-  // history CC labels, each a bucketed catalog table — built once per
-  // (session, dataset, split) like the ANN history index
-  // ([[Similarity.historyIndex]]), standing in for yesterday's
-  // scheduled cluster build
-  private val ccStateCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Long), (String, String)]
-
-  /** Force the stored cluster state (band index + CC labels) for the
-    * bench's explicit state-build step: "yesterday's" scheduled build
-    * is a separate job in production, so its cost must be a separate
-    * bench entry, not attributed to whichever incremental query runs
-    * first. Memoized — consumers after the build pay lookups only. */
-  private[graft] def prebuildClusterState(t: Tables, splitId: Long = 400): Unit = {
-    historyClusterState(t, splitId); ()
-  }
-
-  private def historyClusterState(t: Tables, splitId: Long): (String, String) =
-    ccStateCache.synchronized {
+  /** The stored near-dup cluster state (the history band index and the
+    * history CC labels, each a bucketed catalog table), standing in for
+    * yesterday's scheduled cluster build: a separate job in production,
+    * so `_build_cc_state` makes its cost a separate bench entry rather
+    * than attributing it to whichever incremental query runs first. */
+  private[graft] def historyClusterState(t: Tables,
+      splitId: Long): (String, String) =
+    graft.sources.SourceOps.staged(t, s"cc_state_$splitId") {
       import graft.sources.{SourceOps, Sources}
-      ccStateCache.getOrElseUpdate(
-        (SourceOps.sessionTag(t.spark), t.dir, splitId), {
-          val tag = s"${SourceOps.runId}_${SourceOps.dirTag(t.dir)}_$splitId"
-          // single consumer now (the bucketed write) — no need to
-          // materialize the band cache
-          val bands = minhashBands(
-            shingleSetOf(t.documents.filter(col("doc_id") < splitId)),
-            materialize = false)
-          val bandTable = s"graft_cc_bands_$tag"
-          Sources.writeBucketed(bands, bandTable, Seq("band", "bh"), nBuckets = 8,
-            sortCols = Seq("band", "bh"),
-            path = Some(SourceOps.staging(s"cc_bands_$tag")))
-          // history pairs = the staged full pair set restricted to
-          // both endpoints < split (exact: signatures are per-doc;
-          // doc_id_1 < doc_id_2, so both < split ⇔ doc_id_2 < split)
-          // — the band self-join never re-runs over history
-          val pairs = minhashPairs(t).filter(col("doc_id_2") < splitId)
-            .select(col("doc_id_1").as("src"), col("doc_id_2").as("dst"))
-          val edges = pairs
-            .union(pairs.select(col("dst").as("src"), col("src").as("dst")))
-            .persist()
-          edges.count()
-          val labels =
-            try connectedComponents(edges).labels finally edges.unpersist()
-          val labelTable = s"graft_cc_labels_$tag"
-          Sources.writeBucketed(labels, labelTable, Seq("doc_id"), nBuckets = 8,
-            sortCols = Seq("doc_id"),
-            path = Some(SourceOps.staging(s"cc_labels_$tag")))
-          (bandTable, labelTable)
-        })
+      val tag = s"${SourceOps.runId}_${SourceOps.dirTag(t.dir)}_$splitId"
+      // single consumer now (the bucketed write) — no need to
+      // materialize the band cache
+      val bands = minhashBands(
+        shingleSetOf(t.documents.filter(col("doc_id") < splitId)),
+        materialize = false)
+      val bandTable = s"graft_cc_bands_$tag"
+      Sources.writeBucketed(bands, bandTable, Seq("band", "bh"), nBuckets = 8,
+        sortCols = Seq("band", "bh"),
+        path = Some(SourceOps.staging(s"cc_bands_$tag")))
+      // history pairs = the staged full pair set restricted to
+      // both endpoints < split (exact: signatures are per-doc;
+      // doc_id_1 < doc_id_2, so both < split ⇔ doc_id_2 < split)
+      // — the band self-join never re-runs over history
+      val pairs = minhashPairs(t).filter(col("doc_id_2") < splitId)
+        .select(col("doc_id_1").as("src"), col("doc_id_2").as("dst"))
+      val edges = pairs
+        .union(pairs.select(col("dst").as("src"), col("src").as("dst")))
+        .persist()
+      edges.count()
+      val labels =
+        try connectedComponents(edges).labels finally edges.unpersist()
+      val labelTable = s"graft_cc_labels_$tag"
+      Sources.writeBucketed(labels, labelTable, Seq("doc_id"), nBuckets = 8,
+        sortCols = Seq("doc_id"),
+        path = Some(SourceOps.staging(s"cc_labels_$tag")))
+      (bandTable, labelTable)
     }
 
   /** The increment's NEW edge set (un-symmetrized), with history

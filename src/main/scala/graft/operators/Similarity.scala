@@ -38,8 +38,7 @@ object Similarity {
     */
   def annBruteForceTopK(t: Tables): DataFrame = {
     // the embeddings are served THROUGH the gshard catalog table
-    // (CTAS'd once per (process, sf) by `_build_shard_embed`,
-    // memoized behind its manifest): the flagship connector stores
+    // (CTAS'd by `_build_shard_embed`): the flagship connector stores
     // the engine's own vector workload, and this query's UNCHANGED
     // oracle — raw parquet — hash-checks the vector roundtrip inside
     // a real ANN consumer, not just in a dedicated roundtrip query
@@ -438,9 +437,8 @@ object Similarity {
       .filter(col("rnk") <= TopK)
   }
 
-  /** The staged cell-clustered gshard IVF index (memoized behind its
-    * manifest, like every layout build; `_build_shard_ivf` makes the
-    * cost a visible bench entry). */
+  /** The staged cell-clustered gshard IVF index (`_build_shard_ivf`
+    * makes the cost a visible bench entry). */
   private[graft] def shardIvfDir(t: Tables, k: Int = 16,
       nIters: Int = 4): String = {
     import graft.sources.SourceOps
@@ -454,10 +452,6 @@ object Similarity {
       graft.sources.shard.ShardFormat.write(assigned, dir, "cell", 8)
     }
     dir
-  }
-
-  private[graft] def prebuildShardIvf(t: Tables): Unit = {
-    shardIvfDir(t); ()
   }
 
   private def annIvfWith(t: Tables, cents: Seq[(Int, Seq[Double])],
@@ -586,17 +580,12 @@ object Similarity {
     */
   // converged centroids are a model artifact like the PQ codebooks:
   // five operators (embed_kmeans, ann_ivf_kmeans/table, embed_outliers,
-  // the PQ index build) share one training run per (session, dataset,
-  // k, iters) instead of each re-running the Lloyd loop. Deterministic
-  // training ⇒ a memo is semantics-free; a TrieMap race at worst
-  // recomputes the same value.
-  private val kmeansCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Int, Int), Seq[(Int, Seq[Double])]]
-
+  // the PQ index build) share one training run instead of each
+  // re-running the Lloyd loop
   private[operators] def kmeansCentroids(t: Tables, k: Int, nIters: Int): Seq[(Int, Seq[Double])] =
-    kmeansCache.getOrElseUpdate(
-      (graft.sources.SourceOps.sessionTag(t.spark), t.dir, k, nIters),
-      kmeansCentroidsOf(corpusEmb(t), k, nIters))
+    graft.sources.SourceOps.staged(t, s"kmeans_${k}_$nIters") {
+      kmeansCentroidsOf(corpusEmb(t), k, nIters)
+    }
 
   private[operators] def kmeansCentroidsOf(trainSet: DataFrame, k: Int,
       nIters: Int,
@@ -709,14 +698,12 @@ object Similarity {
     * [[embedSemdedup]]; the oracle replays the HISTORY-trained Lloyd
     * chain, full-corpus assignment, and the asymmetric partner rule.
     */
-  private val semdedupHistCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Seq[(Int, Seq[Double])]]
-
   def embedSemdedupIncremental(t: Tables, k: Int = 16, nIters: Int = 4,
       tau: Double = 0.4): DataFrame = {
-    val cents = semdedupHistCache.getOrElseUpdate(
-      (graft.sources.SourceOps.sessionTag(t.spark), t.dir),
-      kmeansCentroidsOf(corpusEmb(t).filter(col("vec_id") % 5 =!= 0), k, nIters))
+    val cents = graft.sources.SourceOps.staged(t,
+        s"semdedup_hist_${k}_$nIters") {
+      kmeansCentroidsOf(corpusEmb(t).filter(col("vec_id") % 5 =!= 0), k, nIters)
+    }
     val assigned = corpusEmb(t)
       .withColumn("cell", cellOf(col("emb"), cents))
     val inc = assigned.filter(col("vec_id") % 5 === 0)
@@ -1018,24 +1005,13 @@ object Similarity {
     * per row, partial-agg before the (i,j) shuffle), 6-dp
     * exact-integer means; returns (per-dim means, covariance), None
     * on an empty slice. */
-  // the covariance is likewise trained once per (session, dataset):
-  // embed_pca_power / embed_pca_topk / embed_whiten all read the same
-  // matrix, and the dims² collect is their dominant distributed cost
-  private val covCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Int), Option[(Map[Int, Double], Map[(Int, Int), Double])]]
-
-  private def covMatrix(t: Tables, dims: Int)
+  // the covariance is likewise trained once: embed_pca_power /
+  // embed_pca_topk / embed_whiten all read the same matrix, and the
+  // dims² collect is their dominant distributed cost — model training
+  // is a scheduled job, so `_build_pca_cov` times it, not the queries
+  private[graft] def covMatrix(t: Tables, dims: Int)
       : Option[(Map[Int, Double], Map[(Int, Int), Double])] =
-    covCache.getOrElseUpdate(
-      (graft.sources.SourceOps.sessionTag(t.spark), t.dir, dims), covMatrixOf(t, dims))
-
-  /** Force the shared PCA covariance (the dims²-bounded collect all
-    * three PCA-family operators read) for the bench's explicit
-    * state-build step — model training is a scheduled job, not
-    * query cost. */
-  private[graft] def prebuildPcaCov(t: Tables, dims: Int = 64): Unit = {
-    covMatrix(t, dims); ()
-  }
+    graft.sources.SourceOps.staged(t, s"pca_cov_$dims")(covMatrixOf(t, dims))
 
   private def covMatrixOf(t: Tables, dims: Int)
       : Option[(Map[Int, Double], Map[(Int, Int), Double])] = {
@@ -1245,11 +1221,6 @@ object Similarity {
       cents: Seq[(Int, Seq[Double])],
       codesTable: String)
 
-  // one stored index per (session, dataset): train/encode ONCE, serve
-  // every PQ query in the session from the catalog tables
-  private val pqIndexCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), PqIndexHandle]
-
   /** Build-once / serve-many PQ index (the `ann_ivf_table` pattern,
     * upgraded to the full FAISS-style artifact): converged-k-means
     * coarse centroids ([[kmeansCentroidsOf]]) and trained per-subspace
@@ -1264,10 +1235,7 @@ object Similarity {
     * queries here share one build the same way.
     */
   private[graft] def pqIndex(t: Tables): PqIndexHandle =
-    pqIndexCache.synchronized {
-      pqIndexCache.getOrElseUpdate(
-        (graft.sources.SourceOps.sessionTag(t.spark), t.dir), buildPqIndex(t))
-    }
+    graft.sources.SourceOps.staged(t, "pq_index")(buildPqIndex(t))
 
   /** Encode a corpus slice against FROZEN centroids + codebooks:
     * map-only (vec_id, cell, c0..c{m−1}) — the per-row work of both
@@ -1493,32 +1461,25 @@ object Similarity {
     corpusEmb(t).filter(col("vec_id") % 5 === 0)
 
   // the history build (frozen models + stored bucketed code table) is
-  // one offline job serving every incremental-lifecycle demo query —
-  // built once per (session, dataset), like [[pqIndex]]
-  private val historyIndexCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), PqIndexHandle]
-
+  // one offline job serving every incremental-lifecycle demo query
   private[graft] def historyIndex(t: Tables): PqIndexHandle =
-    historyIndexCache.synchronized {
-      historyIndexCache.getOrElseUpdate(
-        (graft.sources.SourceOps.sessionTag(t.spark), t.dir), {
-          import graft.sources.{SourceOps, Sources}
-          val hist = historyEmb(t)
-          // ONE deterministic first-K seed collect feeds both the
-          // coarse k-means init and the codebook init (identical by
-          // definition — both are centroidSeqOf over the same slice)
-          val seed = centroidSeqOf(hist, PqCells)
-          val cents = kmeansCentroidsOf(hist, PqCells, nIters = 4,
-            initCents = Some(seed))
-          val books = pqCodebooksOf(hist, PqM, PqCells, PqSubDims,
-            nIters = 3, initCents = Some(seed))
-          val dirTag = graft.sources.SourceOps.dirTag(t.dir)
-          val histTable = s"graft_pq_hist_index_${SourceOps.runId}_$dirTag"
-          Sources.writeBucketed(pqEncode(hist, cents, books), histTable,
-            Seq("cell"), nBuckets = 8, sortCols = Seq("cell"),
-            path = Some(SourceOps.staging(s"pq_hist_index_$dirTag")))
-          PqIndexHandle(books, cents, histTable)
-        })
+    graft.sources.SourceOps.staged(t, "pq_history_index") {
+      import graft.sources.{SourceOps, Sources}
+      val hist = historyEmb(t)
+      // ONE deterministic first-K seed collect feeds both the
+      // coarse k-means init and the codebook init (identical by
+      // definition — both are centroidSeqOf over the same slice)
+      val seed = centroidSeqOf(hist, PqCells)
+      val cents = kmeansCentroidsOf(hist, PqCells, nIters = 4,
+        initCents = Some(seed))
+      val books = pqCodebooksOf(hist, PqM, PqCells, PqSubDims,
+        nIters = 3, initCents = Some(seed))
+      val dirTag = graft.sources.SourceOps.dirTag(t.dir)
+      val histTable = s"graft_pq_hist_index_${SourceOps.runId}_$dirTag"
+      Sources.writeBucketed(pqEncode(hist, cents, books), histTable,
+        Seq("cell"), nBuckets = 8, sortCols = Seq("cell"),
+        path = Some(SourceOps.staging(s"pq_hist_index_$dirTag")))
+      PqIndexHandle(books, cents, histTable)
     }
 
   /** The shared IVF-PQ serving path: coarse probe (bucket-pruned) →
@@ -1987,38 +1948,33 @@ object Similarity {
     * joins are keyed (neighbor expansion is an equi-join on the beam
     * node id); queries broadcast; nothing all-pairs at serve time. */
   /** The stored exact-kNN subgraph — the graph-ANN INDEX ARTIFACT —
-    * built ONCE per (session, dataset, graphK) and staged to parquet:
-    * the E129/E86 stored-index discipline applied to graph serving.
+    * built ONCE per graphK and staged to parquet: the E129/E86 stored-index discipline applied to graph serving.
     * The beam-sweep recall eval walks the graph at three beam widths;
     * before this memo each walk re-ranked the sample kNN from
     * scratch (the §8h note predicted this split "if it ever
     * matters"). Staged, not cached: Verify/Bench clear the cache
     * between queries, a parquet artifact survives — and it IS what
     * production stores. */
-  private val knnGraphCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Int), String]
-
   private[graft] def knnGraphEdges(t: Tables, graphK: Int): DataFrame = {
-    val path = knnGraphCache.synchronized { knnGraphCache.getOrElseUpdate(
-      (graft.sources.SourceOps.sessionTag(t.spark), t.dir, graphK), {
-        val e = withEmb(t)
-        val nodes = e
-          .filter(col("vec_id") >= NumQueries && col("vec_id") % 4 === 0)
-          .select(col("vec_id"), col("emb"))
-        val knn = nodes.select(col("vec_id").as("src"), col("emb").as("src_emb"))
-          .join(broadcast(nodes.select(col("vec_id").as("dst"),
-            col("emb").as("dst_emb"))), col("src") =!= col("dst"))
-          .select(col("src"), col("dst"),
-            round(cosineSimilarity(col("src_emb"), col("dst_emb")), 4).as("g_sim"))
-          .withColumn("rnk", row_number().over(
-            Window.partitionBy(col("src")).orderBy(desc("g_sim"), asc("dst"))))
-          .filter(col("rnk") <= graphK)
-          .select(col("src"), col("dst"))
-        val p = graft.sources.SourceOps.staging(
-          s"knn_graph_${graft.sources.SourceOps.dirTag(t.dir)}_$graphK")
-        knn.write.mode("overwrite").parquet(p)
-        p
-      }) }
+    val path = graft.sources.SourceOps.staged(t, s"knn_graph_$graphK") {
+      val e = withEmb(t)
+      val nodes = e
+        .filter(col("vec_id") >= NumQueries && col("vec_id") % 4 === 0)
+        .select(col("vec_id"), col("emb"))
+      val knn = nodes.select(col("vec_id").as("src"), col("emb").as("src_emb"))
+        .join(broadcast(nodes.select(col("vec_id").as("dst"),
+          col("emb").as("dst_emb"))), col("src") =!= col("dst"))
+        .select(col("src"), col("dst"),
+          round(cosineSimilarity(col("src_emb"), col("dst_emb")), 4).as("g_sim"))
+        .withColumn("rnk", row_number().over(
+          Window.partitionBy(col("src")).orderBy(desc("g_sim"), asc("dst"))))
+        .filter(col("rnk") <= graphK)
+        .select(col("src"), col("dst"))
+      val p = graft.sources.SourceOps.staging(
+        s"knn_graph_${graft.sources.SourceOps.dirTag(t.dir)}_$graphK")
+      knn.write.mode("overwrite").parquet(p)
+      p
+    }
     t.spark.read.parquet(path)
   }
 
@@ -2029,27 +1985,24 @@ object Similarity {
     * size; the previous 1/32 stride sample made the seed stage a
     * constant-factor brute force (O(Q·N/128)) that would dominate at
     * 100× and defeat the point of the graph index. Derived from the
-    * staged edges (one metadata-scale agg), staged once, memoized. */
-  private val knnEntriesCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Int, Int), String]
-
+    * staged edges (one metadata-scale agg) and staged itself. */
   private[graft] def knnGraphEntries(t: Tables, graphK: Int,
       nEntries: Int = 64): DataFrame = {
     // keyed (and pathed) on nEntries too: a caller asking for a
     // different entry-set size must not silently receive the staged
     // default-64 hub artifact
-    val path = knnEntriesCache.synchronized { knnEntriesCache.getOrElseUpdate(
-      (graft.sources.SourceOps.sessionTag(t.spark), t.dir, graphK, nEntries), {
-        val ent = knnGraphEdges(t, graphK)
-          .groupBy(col("dst")).agg(count(lit(1)).as("deg"))
-          .orderBy(desc("deg"), asc("dst")).limit(nEntries)
-          .select(col("dst").as("vec_id"))
-        val p = graft.sources.SourceOps.staging(
-          s"knn_entries_${graft.sources.SourceOps.dirTag(t.dir)}_" +
-            s"${graphK}_$nEntries")
-        ent.write.mode("overwrite").parquet(p)
-        p
-      }) }
+    val path = graft.sources.SourceOps.staged(t,
+        s"knn_entries_${graphK}_$nEntries") {
+      val ent = knnGraphEdges(t, graphK)
+        .groupBy(col("dst")).agg(count(lit(1)).as("deg"))
+        .orderBy(desc("deg"), asc("dst")).limit(nEntries)
+        .select(col("dst").as("vec_id"))
+      val p = graft.sources.SourceOps.staging(
+        s"knn_entries_${graft.sources.SourceOps.dirTag(t.dir)}_" +
+          s"${graphK}_$nEntries")
+      ent.write.mode("overwrite").parquet(p)
+      p
+    }
     t.spark.read.parquet(path)
   }
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{FileAlreadyExistsException, Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.DataFrame
@@ -11,6 +11,7 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType}
 import org.apache.spark.sql.graft.PlanBridge
 
 import graft.Tables
+import graft.sources.SourceOps
 
 /** Structured-Streaming operators (SURVEY.md §2.7).
   *
@@ -27,16 +28,46 @@ object Streaming {
   private val runSeq = new AtomicInteger(0)
 
   /** FileStreamSource needs a directory: stage the single parquet file
-    * behind a symlink in a per-sf temp dir (idempotent). */
-  private def stageDir(sfDir: String, table: String): String = {
-    val safe = sfDir.replaceAll("[^a-zA-Z0-9]", "_")
-    val dir = Paths.get(sys.props("java.io.tmpdir"), s"graft_stream_$safe", table)
-    if (!Files.exists(dir.resolve(s"$table.parquet"))) {
+    * behind a symlink in a staging dir. */
+  private[streaming] def stageDir(t: Tables, table: String): String =
+    SourceOps.staged(t, s"stream_src_$table") {
+      val dir = Paths.get(
+        SourceOps.staging(s"stream_${table}_${SourceOps.dirTag(t.dir)}"))
       Files.createDirectories(dir)
-      Files.createSymbolicLink(dir.resolve(s"$table.parquet"),
-        Paths.get(s"$sfDir/$table.parquet"))
+      // an earlier session's link already points at the same file
+      try Files.createSymbolicLink(dir.resolve(s"$table.parquet"),
+        Paths.get(t.dir, s"$table.parquet").toAbsolutePath)
+      catch { case _: FileAlreadyExistsException => () }
+      dir.toString
     }
-    dir.toString
+
+  /** Write `df` into a cleared `dir` as ONE parquet file per distinct
+    * value of the integer column `day`, with strictly ascending
+    * modification times in day order, so a file source replays the
+    * days in calendar order (the daily-drop shape). Clearing first
+    * keeps a rebuild from replaying an earlier build's files. */
+  private def writeDayFiles(df: DataFrame, day: String, dir: String): String = {
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get(dir)
+    SourceOps.deleteTree(root)
+    Files.createDirectories(root)
+    val days = df.select(col(day).cast("long")).distinct()
+      .collect().map(_.getLong(0)).sorted // bounded: days in the corpus
+    days.zipWithIndex.foreach { case (d, i) =>
+      val tmp = root.resolve(s"_tmp_$i")
+      df.filter(col(day) === d).coalesce(1)
+        .write.mode("overwrite").parquet(tmp.toString)
+      val part = Files.list(tmp).iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      val dest = root.resolve(f"day_$i%05d.parquet")
+      Files.move(part, dest)
+      Files.setLastModifiedTime(dest,
+        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
+      // scrub the leftover _SUCCESS/_tmp dir so the source sees
+      // exactly one file per day
+      SourceOps.deleteTree(tmp)
+    }
+    dir
   }
 
   /** events as a stream with `ts` normalized to TIMESTAMP_NTZ exactly
@@ -44,7 +75,7 @@ object Streaming {
   private def eventsStream(t: Tables): DataFrame = {
     val schema = t.raw("events").schema
     val src = t.spark.readStream.schema(schema)
-      .parquet(stageDir(t.dir, "events"))
+      .parquet(stageDir(t, "events"))
     schema("ts").dataType match {
       case LongType =>
         src.withColumn("ts",
@@ -159,7 +190,7 @@ object Streaming {
   def streamIntegrityAudit(t: Tables): DataFrame = {
     val schema = t.raw("documents").schema
     val docsStream = t.spark.readStream.schema(schema)
-      .parquet(stageDir(t.dir, "documents"))
+      .parquet(stageDir(t, "documents"))
     drainToTable(
       graft.operators.Multimodal.integrityAuditOf(docsStream), "append")
   }
@@ -174,7 +205,7 @@ object Streaming {
   def streamMojibake(t: Tables): DataFrame = {
     val schema = t.raw("documents").schema
     val docsStream = t.spark.readStream.schema(schema)
-      .parquet(stageDir(t.dir, "documents"))
+      .parquet(stageDir(t, "documents"))
     drainToTable(
       graft.operators.TextAnalysis.mojibakeOf(docsStream), "append")
   }
@@ -557,7 +588,7 @@ object Streaming {
   def streamUpsertLatest(t: Tables): DataFrame = {
     val schema = t.raw("orders").schema
     val orders = t.spark.readStream.schema(schema)
-      .parquet(stageDir(t.dir, "orders"))
+      .parquet(stageDir(t, "orders"))
     val base = orders.select(col("o_orderkey"), col("o_orderpriority"),
       col("o_totalprice"), lit(0).as("version"))
     val ch = orders.filter(col("o_orderkey") % 10 === 0)
@@ -705,7 +736,7 @@ object Streaming {
     val h = Similarity.historyIndex(t)
     val schema = t.raw("embeddings").schema
     val incStream = t.spark.readStream.schema(schema)
-      .parquet(stageDir(t.dir, "embeddings"))
+      .parquet(stageDir(t, "embeddings"))
       .filter(col("vec_id") >= Similarity.NumQueries && col("vec_id") % 5 === 0)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
     val appended = drainToTable(
@@ -727,7 +758,7 @@ object Streaming {
   def streamModalityRouter(t: Tables): DataFrame = {
     val schema = t.raw("documents").schema
     val docsStream = t.spark.readStream.schema(schema)
-      .parquet(stageDir(t.dir, "documents"))
+      .parquet(stageDir(t, "documents"))
     drainToTable(graft.operators.Multimodal.modalityRouterOf(docsStream),
       "complete")
   }
@@ -749,7 +780,7 @@ object Streaming {
   def streamFrameDedup(t: Tables, window: Int = 64): DataFrame = {
     val schema = t.raw("documents").schema
     val docsStream = t.spark.readStream.schema(schema)
-      .parquet(stageDir(t.dir, "documents"))
+      .parquet(stageDir(t, "documents"))
     val agg = graft.operators.Multimodal.frameContents(docsStream, window)
       .groupBy(col("frame_hash"))
       .agg(count(lit(1)).as("n_occ"),
@@ -771,7 +802,7 @@ object Streaming {
   def streamPiiScrub(t: Tables): DataFrame = {
     val schema = t.raw("documents").schema
     val docsStream = t.spark.readStream.schema(schema)
-      .parquet(stageDir(t.dir, "documents"))
+      .parquet(stageDir(t, "documents"))
     drainToTable(graft.operators.TextAnalysis.piiScrubOf(docsStream),
       "append")
   }
@@ -787,27 +818,22 @@ object Streaming {
   def streamWatermarkDetect(t: Tables): DataFrame = {
     val schema = t.raw("documents").schema
     val docsStream = t.spark.readStream.schema(schema)
-      .parquet(stageDir(t.dir, "documents"))
+      .parquet(stageDir(t, "documents"))
     drainToTable(
       graft.operators.TextAnalysis.watermarkDetectOf(docsStream), "append")
   }
 
   /** Stage the bot-screen input feed (real events + the deterministic
     * injection, [[graft.operators.EventAnalytics.botFeed]]) as a
-    * parquet dir once per sf — input-feed construction, not operator
-    * work (a production screen consumes the raw event stream).
-    * Idempotent. */
-  private def stageBotFeed(t: Tables): String = {
-    val safe = t.dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val dir = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_stream_$safe", "bot_feed")
-    if (!Files.exists(dir) || !Files.list(dir).iterator().hasNext) {
-      Files.createDirectories(dir)
+    * parquet dir — input-feed construction, not operator work (a
+    * production screen consumes the raw event stream). */
+  private[streaming] def stageBotFeed(t: Tables): String =
+    SourceOps.staged(t, "bot_feed") {
+      val dir = SourceOps.staging(s"bot_feed_${SourceOps.dirTag(t.dir)}")
       graft.operators.EventAnalytics.botFeed(t)
-        .coalesce(1).write.mode("overwrite").parquet(dir.toString)
+        .coalesce(1).write.mode("overwrite").parquet(dir)
+      dir
     }
-    dir.toString
-  }
 
   /** X22 — `stream_bot_detect`: the automation screen as a CONTINUOUS
     * query — the deployment shape an abuse filter actually runs in
@@ -831,57 +857,18 @@ object Streaming {
 
   /** Stage the SCD2 increment (projected events, day ≥ splitDay) as
     * ONE parquet file PER DAY — the daily CDC drop a warehouse's
-    * dimension-maintenance job actually consumes — with strictly
-    * ascending modification times so the file source replays the days
-    * in calendar order. Idempotent per (sf, splitDay). */
-  private def stageScd2IncrementDaily(t: Tables, splitDay: Int): String = {
-    import graft.operators.Scale
-    import scala.jdk.CollectionConverters._
-    val safe = t.dir.replaceAll("[^a-zA-Z0-9]", "_")
-    // staged under the PER-RUN id: the old per-(sf, splitDay) path
-    // survived across processes, so after the first-ever machine run
-    // the bench's `_build_scd2_cdc` entry timed a directory-exists
-    // check (0.000 s in every artifact) — the build-entry contract is
-    // "cost visible", so the drop must be rebuilt once per process
-    val dir = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_stream_$safe",
-      s"scd2_cdc_${graft.sources.SourceOps.runId}_$splitDay")
-    if (!Files.exists(dir) || !Files.list(dir).iterator().hasNext) {
-      Files.createDirectories(dir)
-      val incr = Scale.scd2Events(t).filter(col("day") >= splitDay)
-      val days = incr.select(col("day")).distinct()
-        .collect().map(_.getInt(0)).sorted
-      days.zipWithIndex.foreach { case (d, i) =>
-        val tmp = dir.resolve(s"_tmp_$d")
-        incr.filter(col("day") === d).coalesce(1)
-          .write.mode("overwrite").parquet(tmp.toString)
-        val part = Files.list(tmp).iterator().asScala
-          .find(_.getFileName.toString.endsWith(".parquet")).get
-        val dest = dir.resolve(f"day_$d%05d.parquet")
-        Files.move(part, dest,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        Files.setLastModifiedTime(dest,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-        // scrub the leftover _SUCCESS/_tmp dir so the source sees
-        // exactly one file per day
-        Files.walk(tmp).iterator().asScala.toSeq.reverse
-          .foreach(p => Files.deleteIfExists(p))
-      }
+    * dimension-maintenance job actually consumes. The drop files are an
+    * INPUT artifact (the feed a production job consumes), so
+    * `_build_scd2_cdc` times their construction, not the merge query. */
+  private[graft] def stageScd2IncrementDaily(t: Tables, splitDay: Int): String =
+    SourceOps.staged(t, s"scd2_cdc_$splitDay") {
+      writeDayFiles(
+        graft.operators.Scale.scd2Events(t).filter(col("day") >= splitDay),
+        "day", SourceOps.staging(s"scd2_cdc_${SourceOps.dirTag(t.dir)}_$splitDay"))
     }
-    dir.toString
-  }
-
-  /** Force the per-day CDC file staging for the bench's explicit
-    * state-build step — the daily drop files are an INPUT artifact
-    * (the feed a production job consumes), so their construction must
-    * not be charged to the merge query. */
-  private[graft] def prebuildScd2Cdc(t: Tables, splitDay: Int = 25): Unit = {
-    stageScd2IncrementDaily(t, splitDay); ()
-  }
 
   /** The running dimension table `stream_scd2_merge` maintains. */
   private[graft] def scd2TargetDir(t: Tables, splitDay: Int): String = {
-    import graft.sources.SourceOps
     SourceOps.staging(s"stream_scd2_target_" +
       s"${SourceOps.runId}_${SourceOps.dirTag(t.dir)}_$splitDay")
   }
@@ -951,7 +938,7 @@ object Streaming {
     import graft.operators.TextAnalysis
     val schema = t.raw("documents").schema
     val docsStream = t.spark.readStream.schema(schema)
-      .parquet(stageDir(t.dir, "documents"))
+      .parquet(stageDir(t, "documents"))
     val units = regexp_extract_all(col("word"),
       lit(TextAnalysis.bpeRegex), lit(0))
     val counts = docsStream
@@ -1028,6 +1015,17 @@ object Streaming {
   final case class RetiredWeeks(emitted: DataFrame, stateRows: Seq[Long],
       finalStateRows: Long)
 
+  /** The day-ordered growth feed (one file per day, so the watermark
+    * advances in calendar order). Files carry the integer day `d` they
+    * were split on; the stream's schema leaves it out. */
+  private[streaming] def growthFeed(t: Tables): String =
+    SourceOps.staged(t, "growth_feed") {
+      writeDayFiles(t.events.select(col("user_id"),
+          col("ts").cast("timestamp").as("ts"),
+          unix_date(to_date(col("ts"))).as("d")), "d",
+        SourceOps.staging(s"growth_feed_${SourceOps.dirTag(t.dir)}"))
+    }
+
   /** X41 — WEEK RETIREMENT for the growth-accounting state, exercised:
     * the production shape X34's scaladoc promises. The (user, week)
     * activity set runs in APPEND mode with a 7-day watermark on the
@@ -1040,44 +1038,15 @@ object Streaming {
     * open weeks still in state — nothing lost, spec-pinned against
     * the state-store metrics AND a batch recompute. */
   def growthWeeksRetired(t: Tables): RetiredWeeks = {
-    import scala.jdk.CollectionConverters._
-    // day-ordered feed: one file per day with ascending mod times, so
-    // the watermark advances in calendar order (the CDC-drop shape)
-    val safe = t.dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val dir = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_stream_$safe",
-      s"growth_feed_${graft.sources.SourceOps.runId}")
-    val proj = t.events.select(col("user_id"),
-      col("ts").cast("timestamp").as("ts"),
-      to_date(col("ts")).as("d"))
-    if (!Files.exists(dir) || !Files.list(dir).iterator().hasNext) {
-      Files.createDirectories(dir)
-      val days = proj.select(col("d")).distinct()
-        .collect().map(_.getDate(0).toString).sorted
-      days.zipWithIndex.foreach { case (d, i) =>
-        val tmp = dir.resolve(s"_tmp_$i")
-        proj.filter(col("d") === lit(d)).drop("d").coalesce(1)
-          .write.mode("overwrite").parquet(tmp.toString)
-        val part = Files.list(tmp).iterator().asScala
-          .find(_.getFileName.toString.endsWith(".parquet")).get
-        val dest = dir.resolve(f"day_$i%05d.parquet")
-        Files.move(part, dest,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        Files.setLastModifiedTime(dest,
-          java.nio.file.attribute.FileTime
-            .fromMillis(1000000000000L + i * 60000L))
-        Files.walk(tmp).iterator().asScala.toSeq.reverse
-          .foreach(p => Files.deleteIfExists(p))
-      }
-    }
-    val schema = proj.drop("d").schema
+    val schema = t.events.select(col("user_id"),
+      col("ts").cast("timestamp").as("ts")).schema
     val weeks = t.spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 5).parquet(dir.toString)
+      .option("maxFilesPerTrigger", 5).parquet(growthFeed(t))
       .select(col("user_id"), date_trunc("week", col("ts")).as("week"))
       .withWatermark("week", "7 days")
       .groupBy(col("user_id"), col("week"))
       .agg(count(lit(1)).as("n"))
-    val table = s"growth_retired_${graft.sources.SourceOps.runId}_$safe"
+    val table = s"growth_retired_${SourceOps.runId}_${SourceOps.dirTag(t.dir)}"
     val q = weeks.writeStream.trigger(Trigger.AvailableNow())
       .outputMode("append").format("memory").queryName(table).start()
     q.awaitTermination()
@@ -1307,7 +1276,7 @@ object Streaming {
   def streamGopherRules(t: Tables): DataFrame = {
     val schema = t.raw("documents").schema
     val docs = t.spark.readStream.schema(schema)
-      .parquet(stageDir(t.dir, "documents"))
+      .parquet(stageDir(t, "documents"))
     drainToTable(
       graft.operators.TextAnalysis.textGopherRulesOf(docs), "append")
   }
@@ -1347,7 +1316,7 @@ object Streaming {
   def streamBenford(t: Tables): DataFrame = {
     val schema = t.raw("lineitem").schema
     val li = t.spark.readStream.schema(schema)
-      .parquet(stageDir(t.dir, "lineitem"))
+      .parquet(stageDir(t, "lineitem"))
     val cents = floor(col("l_extendedprice") * lit(100) + lit(0.5))
       .cast("long")
     val digits = li
@@ -1387,7 +1356,7 @@ object Streaming {
     import graft.operators.TextAnalysis
     val schema = t.raw("documents").schema
     val docs = t.spark.readStream.schema(schema)
-      .parquet(stageDir(t.dir, "documents"))
+      .parquet(stageDir(t, "documents"))
     val sentinel = "\u0001" // not producible by the tokenizer ([a-z0-9]+ only)
     val counts = docs
       .select(col("source"),
@@ -1494,7 +1463,7 @@ object Streaming {
     import graft.operators.TextAnalysis
     val schema = t.raw("documents").schema
     val docs = t.spark.readStream.schema(schema)
-      .parquet(stageDir(t.dir, "documents"))
+      .parquet(stageDir(t, "documents"))
     val counts = docs
       .select(explode(TextAnalysis.tokens(col("text"))).as("token"))
       .groupBy(col("token"))
@@ -1531,7 +1500,7 @@ object Streaming {
     import spark.implicits._
     val schema = t.raw("documents").schema
     val docs = spark.readStream.schema(schema)
-      .parquet(stageDir(t.dir, "documents"))
+      .parquet(stageDir(t, "documents"))
     val toks = docs
       .select(explode(TextAnalysis.tokens(col("text"))).as("token"))
       .select(conv(substring(md5(col("token")), 1, 1), 16, 10)
@@ -1571,7 +1540,7 @@ object Streaming {
     import graft.operators.TextAnalysis
     val schema = t.raw("documents").schema
     val docs = t.spark.readStream.schema(schema)
-      .parquet(stageDir(t.dir, "documents"))
+      .parquet(stageDir(t, "documents"))
     val rollup = docs
       .select(col("source"),
         size(TextAnalysis.tokens(col("text"))).cast("long").as("n_toks"))
@@ -1629,7 +1598,7 @@ object Streaming {
     val idx = Similarity.pqIndex(t)
     val schema = t.raw("embeddings").schema
     val qStream = t.spark.readStream.schema(schema)
-      .parquet(stageDir(t.dir, "embeddings"))
+      .parquet(stageDir(t, "embeddings"))
       .filter(col("vec_id") < Similarity.NumQueries)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
     val codes = t.spark.table(idx.codesTable)
@@ -1674,7 +1643,7 @@ object Streaming {
     import graft.operators.TextAnalysis
     val schema = t.raw("documents").schema
     val docs = t.spark.readStream.schema(schema)
-      .parquet(stageDir(t.dir, "documents"))
+      .parquet(stageDir(t, "documents"))
     val eval = TextAnalysis.nbInjectOf(docs).filter(col("doc_id") % 10 >= 8)
     val scores = TextAnalysis.nbScoresOf(eval, TextAnalysis.nbModel(t))
     val drained = drainToTable(scores, "complete")
@@ -1698,13 +1667,10 @@ object Streaming {
   /** Stage events as ONE parquet file per week-of-month bucket so the
     * file stream genuinely delivers MULTIPLE micro-batches (a single
     * staged file would drain in one batch and never exercise the
-    * sink's append/manifest-merge path). Idempotent per sf. */
-  private def stageEventsWeekly(t: Tables): String = {
-    val safe = t.dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val dir = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_stream_$safe", "events_weekly")
-    if (!Files.exists(dir) || !Files.list(dir).iterator().hasNext) {
-      Files.createDirectories(dir)
+    * sink's append/manifest-merge path). */
+  private[streaming] def stageEventsWeekly(t: Tables): String =
+    SourceOps.staged(t, "events_weekly") {
+      val dir = SourceOps.staging(s"events_weekly_${SourceOps.dirTag(t.dir)}")
       val ev = t.events.select(col("user_id"), col("event_type"),
         floor(col("value") * 100 + lit(0.5)).cast("long").as("cents"),
         (datediff(col("ts").cast("date"),
@@ -1717,12 +1683,10 @@ object Streaming {
         ev.filter(col("wk") === w).drop("wk").coalesce(1)
           .write.mode("overwrite").parquet(s"$dir/w$w")
       }
+      dir
     }
-    dir.toString
-  }
 
   def streamShardSink(t: Tables): DataFrame = {
-    import graft.sources.SourceOps
     val dir = SourceOps.staging(
       s"gshard_sink_${SourceOps.dirTag(t.dir)}_${runSeq.getAndIncrement()}")
     val staged = stageEventsWeekly(t)
@@ -1797,8 +1761,8 @@ object Streaming {
     * change rows. */
   def streamShardCdc(t: Tables): DataFrame = {
     import graft.sources.shard.ShardCdc
-    graft.sources.SourceOps.qShardMerge(t) // stage: gen 0 + merged head
-    val dir = graft.sources.SourceOps.shardMergeDir(t)
+    SourceOps.qShardMerge(t) // stage: gen 0 + merged head
+    val dir = SourceOps.shardMergeDir(t)
     val feed = t.spark.readStream.format("gshard-cdc")
       .option("startingversion", "0").load(dir)
     val drained = drainToTable(feed, "append")
@@ -1819,8 +1783,8 @@ object Streaming {
     * time-travel diff == file-grain feed == row-grain feed. */
   def streamShardCdcRows(t: Tables): DataFrame = {
     import graft.sources.shard.ShardCdc
-    graft.sources.SourceOps.qShardMerge(t) // stage: gen 0 + merged head
-    val dir = graft.sources.SourceOps.shardMergeDir(t)
+    SourceOps.qShardMerge(t) // stage: gen 0 + merged head
+    val dir = SourceOps.shardMergeDir(t)
     val feed = t.spark.readStream.format("gshard-cdc")
       .option("rowlevel", "true")
       .option("startingversion", "0").load(dir)
@@ -1832,7 +1796,7 @@ object Streaming {
   }
 
   def streamShardSource(t: Tables): DataFrame = {
-    val dir = graft.sources.SourceOps.shardTable(t)
+    val dir = SourceOps.shardTable(t)
     val src = t.spark.readStream.format("gshard")
       .option("maxfilespertrigger", "4").load(dir)
     val agg = src.groupBy(col("event_type"))
@@ -1853,7 +1817,7 @@ object Streaming {
   def streamDpRelease(t: Tables): DataFrame = {
     val schema = t.raw("documents").schema
     val docs = t.spark.readStream.schema(schema)
-      .parquet(stageDir(t.dir, "documents"))
+      .parquet(stageDir(t, "documents"))
     val counts = docs.groupBy(col("source"), col("lang"))
       .agg(count(lit(1)).as("n"))
     val drained = drainToTable(counts, "complete")

@@ -7,9 +7,13 @@ import org.apache.spark.scheduler._
 import graft.{GraftSession, SparkEntry, Tables}
 
 /** Dev utility: run one named SparkEntry query (bench-style: warmup at
-  * sf0.001, clearCache+gc, timed count) and print the empirical shape
-  * the optimization loop needs — number of Spark jobs, stages, tasks,
-  * shuffle bytes read/written, peak task time — via a SparkListener.
+  * the sibling sf0.001 dir, clearCache+gc, timed full materialization
+  * into the `noop` sink) and print the empirical shape the optimization
+  * loop needs — number of Spark jobs, stages, tasks, shuffle bytes
+  * read/written, peak task time — via a SparkListener. The first run's
+  * formatted plan is printed before that run executes, outside the
+  * timing. A `noop` write computes every output column; a `.count()`
+  * would let Catalyst prune the ones it does not need.
   * Usage: runMain graft.tools.ProfileQuery <query> [sfDir] [repeat]
   */
 object ProfileQuery {
@@ -51,7 +55,11 @@ object ProfileQuery {
         }
       }
     }
-    fn(spark, "/root/testdata/sf0.001").count() // warmup: JIT + codegen
+    def materialize(df: org.apache.spark.sql.DataFrame): Unit =
+      df.write.format("noop").mode("overwrite").save()
+    // warmup: JIT + codegen
+    materialize(fn(spark,
+      java.nio.file.Paths.get(sfDir).resolveSibling("sf0.001").toString))
     (1 to repeat).foreach { i =>
       spark.catalog.clearCache()
       System.gc()
@@ -59,12 +67,16 @@ object ProfileQuery {
       shufRead.set(0L); shufWrite.set(0L); taskTime.set(0L)
       spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
-      val n = fn(spark, sfDir).count()
-      val sec = (System.nanoTime() - t0) / 1e9
+      val df = fn(spark, sfDir)
+      val built = System.nanoTime()
+      if (i == 1) df.explain("formatted")
+      val t1 = System.nanoTime()
+      materialize(df)
+      val sec = (built - t0 + System.nanoTime() - t1) / 1e9
       // listener events are async: drain the bus before reading counters
       org.apache.spark.sql.graft.PlanBridge.drainListenerBus(spark)
       spark.sparkContext.removeSparkListener(listener)
-      println(f"run$i rows=$n sec=$sec%.3f jobs=${jobs.get} " +
+      println(f"run$i sec=$sec%.3f jobs=${jobs.get} " +
         f"stages=${stages.get} tasks=${tasks.get} " +
         f"shufRead=${shufRead.get / 1024}KB shufWrite=${shufWrite.get / 1024}KB " +
         f"taskTime=${taskTime.get}ms")
