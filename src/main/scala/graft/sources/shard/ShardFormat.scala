@@ -706,13 +706,17 @@ object ShardFormat {
   /** The range-clustered DATA write alone — shard files land in `dir`
     * (named `part-<prefix><shard>.gshard`) and their manifest entries
     * return to the caller, who decides how to publish them (fresh
-    * manifest for [[write]], entry merge for [[ShardOps.upsert]]).
-    * Nothing is visible to readers until a manifest names the files. */
+    * manifest for [[write]], entry merge for [[ShardOps.merge]]).
+    * Nothing is visible to readers until a manifest names the files.
+    * A caller that already knows the clustering key's range passes
+    * `bounds` and skips the min/max job; the shard id is clamped into
+    * [0, nShards), so bounds that miss some keys cost locality only. */
   private[shard] def writeData(df: DataFrame, dir: String, rangeCol: String,
       nShards: Int, chunkRows: Int = DefaultChunkRows,
       prefix: String = "", bloomCols: Set[String] = Set.empty,
       rangeExpr: Option[Column] = None,
-      namePrefix: String = "part-")
+      namePrefix: String = "part-",
+      bounds: Option[(Long, Long)] = None)
       : Seq[ShardEntry] = {
     val schema = df.schema
     // the CLUSTERING key as a storage long: the column itself for the
@@ -730,90 +734,170 @@ object ShardFormat {
           s"(got ${schema(rangeCol).dataType}); string keys need an " +
           "explicit rangeExpr")
     val rk = rangeExpr.getOrElse(col(rangeCol)).cast("long")
-    val bounds = df.agg(min(rk), max(rk)).head()
-    // NULL bounds must mean an EMPTY input (zero shard files), never
-    // an uncastable range expression silently emptying the table
-    if (bounds.isNullAt(0)) {
-      require(df.isEmpty,
-        s"gshard: range key $rangeCol evaluated NULL on a non-empty " +
-          "frame — the clustering expression does not cover the data")
-      return Seq.empty
+    val known = bounds.orElse {
+      val b = df.agg(min(rk), max(rk)).head()
+      // NULL bounds must mean an EMPTY input (zero shard files), never
+      // an uncastable range expression silently emptying the table
+      if (b.isNullAt(0)) {
+        require(df.isEmpty,
+          s"gshard: range key $rangeCol evaluated NULL on a non-empty " +
+            "frame — the clustering expression does not cover the data")
+        None
+      } else Some((b.getLong(0), b.getLong(1)))
     }
-    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-    val width = math.max(1L, (hi - lo) / nShards + 1)
-
-    val names = schema.fieldNames.toSeq
-    val statRows = df
-      // integer DIV, not double division: a double quotient loses
-      // exactness past 2^53 and would misassign shards at key scale
-      .withColumn("__rk", rk)
-      .withColumn("__shard",
-        expr(s"CAST((__rk - ${lo}L) DIV ${width}L AS INT)"))
-      .drop("__rk")
-      .repartition(nShards, col("__shard"))
-      .sortWithinPartitions(col("__shard") +: names.map(col): _*)
-      .mapPartitions { it =>
+    known.fold(Seq.empty[ShardEntry]) { case (lo, hi) =>
+      clusteredWrite(df, rk, lo, hi, nShards,
+        schema.fieldNames.toSeq.map(col)) { it =>
         writeTaskShards(it, dir, schema, chunkRows, prefix, bloomCols,
           namePrefix)
-      }(Encoders.stats)
-      .collect()
-
-    statRows.sortBy(_._1).map {
-      case (file, rows, mins, maxs, smins, smaxs, nulls, dmins, dmaxs,
-          sums, blooms, bpvs) =>
-        ShardEntry(file, rows, mins, maxs, smins, smaxs, nulls,
-          bloom = blooms, bloomBpv = bpvs,
-          dMin = dmins, dMax = dmaxs, sums = sums)
-    }.toSeq
+      }
+    }
   }
+
+  /** Name prefix of a commit's row-grain change files. */
+  private[shard] val ChangePrefix = "chg-"
+
+  /** The fused MERGE rewrite — the data files AND the commit's change
+    * files in one clustered write. `tagged` holds the table's PHYSICAL
+    * columns plus a trailing `_change_side`: +1 on the merge output,
+    * −1 on the touched rows it replaces. Rows sort by (shard, visible
+    * columns, side), so rows equal under Spark's grouping equality are
+    * adjacent, and each task streams its +1 rows into the shard's data
+    * file and every group's NON-ZERO net count into the shard's `chg-`
+    * file: pass-through rows cancel, a changed row leaves its −1
+    * preimage and +1 postimage, a duplicated old row the rewrite lands
+    * once leaves one −1. `bounds` come from metadata (no min/max job).
+    * Returns (data entries, change entries). */
+  private[shard] def writeMerge(tagged: DataFrame, dir: String,
+      rangeExpr: Column, nShards: Int, bounds: (Long, Long), prefix: String,
+      bloomCols: Set[String]): (Seq[ShardEntry], Seq[ShardEntry]) = {
+    val schema = StructType(tagged.schema.fields.dropRight(1))
+    val sortCols = (visible(schema).fieldNames.toSeq :+
+      tagged.schema.fields.last.name).map(col)
+    clusteredWrite(tagged, rangeExpr.cast("long"), bounds._1, bounds._2,
+      nShards, sortCols) { it =>
+      writeTaskShards(it, dir, schema, DefaultChunkRows, prefix, bloomCols,
+        capture = true)
+    }.partition(e => !e.file.startsWith(ChangePrefix))
+  }
+
+  /** One range shuffle on the storage-long `rk` into `nShards` shard
+    * ids of equal width over [lo, hi] (clamped), sorted within shard by
+    * `sortCols`, each task streaming its rows through `task`; only the
+    * per-file stat rows return to the driver. */
+  private def clusteredWrite(df: DataFrame, rk: Column, lo: Long, hi: Long,
+      nShards: Int, sortCols: Seq[Column])(
+      task: Iterator[Row] => Iterator[StatRow]): Seq[ShardEntry] = {
+    val width = math.max(1L, (hi - lo) / nShards + 1)
+    df
+      // integer DIV, not double division: a double quotient loses
+      // exactness past 2^53 and would misassign shards at key scale;
+      // a NULL key stays NULL (the task rejects it loudly)
+      .withColumn("__rk", rk)
+      .withColumn("__shard", expr(s"CAST(CASE WHEN __rk < ${lo}L THEN 0L " +
+        s"WHEN __rk > ${hi}L THEN ${nShards - 1}L " +
+        s"ELSE (__rk - ${lo}L) DIV ${width}L END AS INT)"))
+      .drop("__rk")
+      .repartition(nShards, col("__shard"))
+      .sortWithinPartitions(col("__shard") +: sortCols: _*)
+      .mapPartitions(task)(Encoders.stats)
+      .collect()
+      .sortBy(_._1).map {
+        case (file, rows, mins, maxs, smins, smaxs, nulls, dmins, dmaxs,
+            sums, blooms, bpvs) =>
+          ShardEntry(file, rows, mins, maxs, smins, smaxs, nulls,
+            bloom = blooms, bloomBpv = bpvs,
+            dMin = dmins, dMax = dmaxs, sums = sums)
+      }.toSeq
+  }
+
+  /** A writer task's per-file stats: (file, rows, long zone maps, string
+    * zone maps, null counts, double zone maps, sums, blooms, bloom
+    * bits-per-value). */
+  private type StatRow = (String, Long, Map[String, Long], Map[String, Long],
+    Map[String, String], Map[String, String], Map[String, Long],
+    Map[String, Double], Map[String, Double], Map[String, Long],
+    Map[String, String], Map[String, Long])
 
   private object Encoders {
     import org.apache.spark.sql.Encoder
     import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-    implicit val stats: Encoder[(String, Long, Map[String, Long],
-        Map[String, Long], Map[String, String], Map[String, String],
-        Map[String, Long], Map[String, Double], Map[String, Double],
-        Map[String, Long], Map[String, String], Map[String, Long])] =
-      ExpressionEncoder()
+    implicit val stats: Encoder[StatRow] = ExpressionEncoder()
+  }
+
+  /** A storage value as Spark's grouping sees it — −0.0 as 0.0, every
+    * NaN as the canonical NaN (its NormalizeFloatingNumbers), also
+    * inside float/double arrays — so that two cells are in one group
+    * exactly when their canonical forms are `deepEquals`. */
+  private def canonical(v: Any): Any = v match {
+    case d: Double => if (d == 0.0) 0.0 else if (d.isNaN) Double.NaN else d
+    case a: Array[Double] =>
+      a.map(d => if (d == 0.0) 0.0 else if (d.isNaN) Double.NaN else d)
+    case a: Array[Float] =>
+      a.map(f => if (f == 0.0f) 0.0f else if (f.isNaN) Float.NaN else f)
+    case other => other
   }
 
   /** Executor side: stream this task's rows (sorted by `__shard`) into
     * one file per shard id through the chunked writer — peak memory is
-    * one chunk, regardless of shard size. */
+    * one chunk, regardless of shard size. With `capture` (the
+    * [[writeMerge]] layout) each row carries a trailing ±1 side before
+    * `__shard`: +1 rows go to the data file, and each run of equal
+    * visible columns leaves its net count in the shard's change file —
+    * held as one row and a counter, never the run itself. */
   private def writeTaskShards(
       it: Iterator[Row], dir: String, schema: StructType, chunkRows: Int,
       prefix: String = "", bloomCols: Set[String] = Set.empty,
-      namePrefix: String = "part-")
-      : Iterator[(String, Long, Map[String, Long], Map[String, Long],
-        Map[String, String], Map[String, String], Map[String, Long],
-        Map[String, Double], Map[String, Double], Map[String, Long],
-        Map[String, String], Map[String, Long])] = {
+      namePrefix: String = "part-", capture: Boolean = false)
+      : Iterator[StatRow] = {
     val nCols = schema.length
-    val out = mutable.ArrayBuffer.empty[(String, Long, Map[String, Long],
-      Map[String, Long], Map[String, String], Map[String, String],
-      Map[String, Long], Map[String, Double], Map[String, Double],
-      Map[String, Long], Map[String, String], Map[String, Long])]
+    val shardAt = if (capture) nCols + 1 else nCols
+    val out = mutable.ArrayBuffer.empty[StatRow]
+    val visIdx = schema.fields.indices
+      .filterNot(i => isTombstone(schema(i).name)).toArray
+    val chgSchema = StructType(visIdx.map(schema(_)).toSeq :+
+      StructField(ShardCdc.SideCol, IntegerType, nullable = false))
 
     var shard = -1
     var writer: ShardFileWriter = null
-    var file: String = null
-    def flush(): Unit = if (writer != null) {
-      val stats = writer.close()
+    var chgWriter: ShardFileWriter = null
+    // the current group's canonical visible cells and its net side count
+    var group: Array[Any] = null
+    var net = 0L
+    def fileName(pre: String) = f"$pre$shard%05d.gshard"
+    def close(w: ShardFileWriter, file: String): Unit = {
+      val stats = w.close()
       if (stats.rows > 0)
         out += ((file, stats.rows, stats.zMin, stats.zMax,
           stats.sMin, stats.sMax, stats.nullCnt, stats.dMin, stats.dMax,
           stats.sums, stats.bloom, stats.bloomBpv))
+    }
+    def flushGroup(): Unit = {
+      if (net != 0L) {
+        val row = group :+ (math.signum(net): Any)
+        var n = math.abs(net)
+        while (n > 0) { chgWriter.add(row); n -= 1 }
+      }
+      group = null; net = 0L
+    }
+    def flush(): Unit = if (writer != null) {
+      close(writer, fileName(namePrefix + prefix))
+      if (capture) {
+        flushGroup()
+        close(chgWriter, fileName(s"${ChangePrefix}c$prefix"))
+      }
       writer = null
     }
     it.foreach { r =>
-      require(!r.isNullAt(nCols),
+      require(!r.isNullAt(shardAt),
         "gshard: range column must be non-null")
-      val s = r.getInt(nCols) // trailing __shard column
+      val s = r.getInt(shardAt) // trailing __shard column
       if (s != shard) {
         flush(); shard = s
-        file = f"$namePrefix$prefix$shard%05d.gshard"
-        writer = new ShardFileWriter(s"$dir/$file", schema, chunkRows,
-          bloomCols)
+        writer = new ShardFileWriter(s"$dir/${fileName(namePrefix + prefix)}",
+          schema, chunkRows, bloomCols)
+        if (capture) chgWriter = new ShardFileWriter(
+          s"$dir/${fileName(s"${ChangePrefix}c$prefix")}", chgSchema, chunkRows)
       }
       val values = new Array[Any](nCols)
       var i = 0
@@ -878,7 +962,17 @@ object ShardFormat {
           }
         i += 1
       }
-      writer.add(values)
+      if (!capture) writer.add(values)
+      else {
+        val cells = visIdx.map(i => canonical(values(i)))
+        if (group != null && !java.util.Arrays.deepEquals(
+            group.asInstanceOf[Array[AnyRef]], cells.asInstanceOf[Array[AnyRef]]))
+          flushGroup()
+        if (group == null) group = cells
+        val side = r.getInt(nCols)
+        net += side
+        if (side > 0) writer.add(values)
+      }
     }
     flush()
     out.iterator

@@ -1,6 +1,6 @@
 package graft.sources.shard
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Row-level mutation through the gshard catalog — what DELETE's
@@ -137,11 +137,14 @@ object ShardOps {
     // change set (side −1) — written as this generation's change
     // files so the rowlevel CDC feed streams exactly them
     import graft.sources.shard.ShardCdc.{SideCol => ChangeSide}
+    // one shard over the constant key 0: the bounds are known, so no
+    // min/max job runs over the matched rows
     val changeEntries = ShardFormat.writeData(
       matchedFull.select(visCols.map(col) :+ lit(-1).as(ChangeSide): _*),
       dir, visCols.head, 1,
       prefix = s"d${java.util.UUID.randomUUID.toString.take(8)}-",
-      rangeExpr = Some(lit(0L)), namePrefix = "chg-")
+      rangeExpr = Some(lit(0L)), namePrefix = ShardFormat.ChangePrefix,
+      bounds = Some((0L, 0L)))
     ShardFormat.publishManifest(dir,
       ShardFormat.Manifest(head.schema, entries, head.lastTxn, head.txns,
         changes = changeEntries.map(e => (e.file, e.rows)), cdf = true),
@@ -160,24 +163,18 @@ object ShardOps {
     * THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *`, the CDC apply
     * shape: [[merge]] with "touched rows minus the updated keys, plus
     * every update" as the merge function. Source cardinality is
-    * ENFORCED first (the Delta duplicate-source-row check): two
-    * updates for one key would make the result order-dependent, so
-    * the upsert fails loudly instead. */
+    * ENFORCED (the Delta duplicate-source-row check, run in the merge's
+    * source pass before any file is written): two updates for one key
+    * would make the result order-dependent, so the upsert fails loudly
+    * instead. NULL keys reject too: a NULL can never equi-match, so an
+    * "insert" with a NULL key would dodge idempotent re-merge. */
   def upsert(spark: SparkSession, dir: String, updates: DataFrame,
       keyCol: String, nShards: Int = 0,
-      txnId: Long = -1L, txnApp: Option[String] = None): Unit = {
-    // also rejects NULL keys: a NULL can never equi-match, so an
-    // "insert" with a NULL key would dodge idempotent re-merge
-    val dup = updates.groupBy(col(keyCol)).agg(count(lit(1)).as("c"))
-      .filter(col("c") > 1 || col(keyCol).isNull)
-      .limit(1).collect()
-    require(dup.isEmpty,
-      s"gshard merge: duplicate or NULL key in updates " +
-        s"(${if (dup.isEmpty) "" else dup(0).toString})")
-    merge(spark, dir, updates, keyCol, nShards, txnId, txnApp) { (tr, u) =>
+      txnId: Long = -1L, txnApp: Option[String] = None): Unit =
+    merge(spark, dir, updates, keyCol, nShards, txnId, txnApp,
+      uniqueKeys = true) { (tr, u) =>
       tr.join(u.select(col(keyCol)), Seq(keyCol), "left_anti").unionByName(u)
     }
-  }
 
   /** Copy-on-write MERGE of `source` into the table at `dir` through
     * `mergeFn(touchedRows, source)`, which must be KEY-LOCAL in
@@ -185,23 +182,29 @@ object ShardOps {
     * unchanged, and no key's output depends on another key's rows
     * (true of [[upsert]] and of the SCD2 close/extend/append merge).
     * `source` may have any schema; the function's output must carry
-    * the table's visible columns. One call:
+    * the table's visible columns. One call runs two Spark actions:
     *
-    *  1. discovers TOUCHED files off the manifest's per-file key zone
-    *     maps (≤ #files rows, broadcast): a file is rewritten only if
-    *     some source key falls inside its [min,max] — everything else
-    *     is untouched (zero read, zero write), which is sound exactly
-    *     because `mergeFn` is key-local;
-    *  2. reads the touched rows back through the NORMAL connector scan
-    *     (a `files`-restricted read — pruning, projection and delete
-    *     masks all apply);
-    *  3. applies `mergeFn`, checks its output against the table's
-    *     visible schema, and rewrites it as fresh key-clustered shards;
-    *  4. captures the commit's row-level changes as the NET multiset
-    *     difference of touched rows (−1 preimages) and output (+1
-    *     postimages) — pass-through rows cancel, so a CDC consumer
-    *     streams O(changed rows) per commit;
-    *  5. publishes generationally with the txn slot advanced: the
+    *  1. the SOURCE PASS — one query over the source keys that returns
+    *     the TOUCHED files (each key matched on the executors against
+    *     the manifest's per-file key zone maps, which are
+    *     metadata-sized: a file is rewritten only if some source key
+    *     falls inside its [min,max] — everything else is untouched,
+    *     zero read, zero write, sound exactly because `mergeFn` is
+    *     key-local), the keys' clustering range, and with
+    *     `uniqueKeys` the first duplicate or NULL key, which fails the
+    *     merge before any file is written;
+    *  2. the FUSED REWRITE — the touched rows, read back through the
+    *     NORMAL connector scan (a `files`-restricted read — pruning,
+    *     projection and delete masks all apply), tagged −1, and the
+    *     `mergeFn` output, checked against the table's visible schema
+    *     and tagged +1, go through ONE key-clustered write
+    *     ([[ShardFormat.writeMerge]]): +1 rows land in fresh shard
+    *     files, and each shard's NET multiset difference lands in its
+    *     `chg-` change file — pass-through rows cancel, so a CDC
+    *     consumer streams O(changed rows) per commit. The shard range
+    *     comes from the touched files' zone maps and the source pass,
+    *     so no min/max job runs;
+    *  3. the generational publish with the txn slot advanced: the
     *     head archives (VERSION AS OF still reads the pre-merge
     *     table), replaced bytes reclaim at [[ShardFormat.vacuum]], and
     *     the publish is OPTIMISTIC — a concurrent commit since this
@@ -212,7 +215,8 @@ object ShardOps {
     * no-op — the property restarting CDC appliers and `foreachBatch`
     * sinks rely on. */
   def merge(spark: SparkSession, dir: String, source: DataFrame,
-      keyCol: String, nShards: Int, txnId: Long, txnApp: Option[String])(
+      keyCol: String, nShards: Int, txnId: Long, txnApp: Option[String],
+      uniqueKeys: Boolean = false)(
       mergeFn: (DataFrame, DataFrame) => DataFrame): Unit = {
     val head = ShardFormat.readManifest(dir)
 
@@ -233,72 +237,87 @@ object ShardOps {
     import org.apache.spark.sql.types._
     val keyType = head.schema(keyCol).dataType
     val isStringKey = keyType == StringType
-    // the key's EXACT storage-long encoding as a column expression —
-    // the domain the manifest zone maps hold, so the touched-file
-    // range join below compares like with like
-    def storageKey(c: org.apache.spark.sql.Column)
-        : org.apache.spark.sql.Column = keyType match {
-      case LongType | IntegerType => c.cast("long")
-      case TimestampType => unix_micros(c)
-      case DateType => unix_date(c).cast("long")
+    // clustering expression for the rewrite: the exact storage long
+    // for long-encoded keys (the domain the manifest zone maps hold);
+    // for STRING keys a big-endian 7-byte prefix (hex left-justified,
+    // zero-padded — monotone in UTF-8 byte order, see [[prefixLong]]),
+    // which drives LOCALITY only: correctness always comes from the
+    // real string zone maps the writer folds per file
+    val clusterExpr: org.apache.spark.sql.Column = keyType match {
+      case StringType =>
+        conv(rpad(substring(hex(encode(col(keyCol), "UTF-8")), 1, 14),
+          14, "0"), 16, 10).cast("long")
+      case LongType | IntegerType => col(keyCol).cast("long")
+      case TimestampType => unix_micros(col(keyCol))
+      case DateType => unix_date(col(keyCol)).cast("long")
       case d: DecimalType if d.precision <= 18 =>
-        (c * lit(new java.math.BigDecimal(
+        (col(keyCol) * lit(new java.math.BigDecimal(
           java.math.BigInteger.TEN.pow(d.scale)))).cast("long")
       case other => throw new IllegalArgumentException(
         s"gshard merge key $keyCol must be long/int/timestamp/date/" +
           s"decimal(<=18)/string, got $other")
     }
-    if (!isStringKey) storageKey(lit(null).cast(keyType)) // validate type
 
-    // 1. touched files off the manifest zone maps (metadata-scale):
-    // files with NO recorded key bounds (all-null, pre-stats, or a
-    // cap-degraded string bound) are conservatively touched — they
-    // may hold anything. Long-encoded keys range-join in the storage
-    // long domain; string keys in the lexicographic domain (Spark's
-    // string comparison is UTF-8 binary order — the same order the
-    // string zone maps were folded in, so the join is exact).
-    import spark.implicits._
-    val unbounded = head.entries.filter(e =>
-      if (isStringKey) !e.sMin.contains(keyCol)
-      else !e.zMin.contains(keyCol)).map(_.file)
-    val rangesDf =
-      if (isStringKey) head.entries
-        .flatMap(e => e.sMin.get(keyCol).map(lo =>
-          (e.file,
-            new String(ShardFormat.unb64(lo),
-              java.nio.charset.StandardCharsets.UTF_8),
-            new String(ShardFormat.unb64(e.sMax(keyCol)),
-              java.nio.charset.StandardCharsets.UTF_8))))
-        .toDF("file", "lo", "hi")
-      else head.entries
-        .flatMap(e => e.zMin.get(keyCol).map(lo =>
-          (e.file, lo, e.zMax(keyCol))))
-        .toDF("file", "lo", "hi")
-    val keysDf =
-      if (isStringKey) source.select(col(keyCol).as("k"))
-      else source.select(storageKey(col(keyCol)).as("k"))
-    val touchedBounded: Seq[String] =
-      if (head.entries.isEmpty) Seq.empty
-      else keysDf
-        .join(broadcast(rangesDf),
-          col("k") >= col("lo") && col("k") <= col("hi"))
-        .select(col("file")).distinct().as[String].collect().toSeq
-    val touched = (touchedBounded ++ unbounded).distinct.sorted
+    // 1. the source pass. Files with NO recorded key bounds (all-null,
+    // pre-stats, or a cap-degraded string bound) are conservatively
+    // touched — they may hold anything. Long-encoded keys match in the
+    // storage-long domain; string keys in UTF-8 byte order, the order
+    // the string zone maps were folded in, so the match is exact.
+    val (bounded, unbounded) = head.entries.toIndexedSeq.partition(e =>
+      (if (isStringKey) e.sMin else e.zMin).contains(keyCol))
+    // marks, in a bit set over `bounded`, the files a source key falls in
+    val mark: (Row, java.util.BitSet) => Unit =
+      if (isStringKey) {
+        val zones = bounded.map(e => (ShardFormat.unb64(e.sMin(keyCol)),
+          ShardFormat.unb64(e.sMax(keyCol))))
+        (r, hit) => markZones(zones,
+          r.getString(0).getBytes(java.nio.charset.StandardCharsets.UTF_8),
+          hit)(Utf8Order)
+      } else {
+        val zones = bounded.map(e => (e.zMin(keyCol), e.zMax(keyCol)))
+        (r, hit) => markZones(zones, r.getLong(1), hit)
+      }
+    val keyed =
+      if (uniqueKeys) source.groupBy(col(keyCol)).agg(count(lit(1)).as("n"))
+      else source.select(col(keyCol), lit(1L).as("n"))
+    val parts = keyed.select(col(keyCol), clusterExpr, col("n")).rdd
+      .mapPartitions { it =>
+        val hit = new java.util.BitSet
+        var lo = Long.MaxValue
+        var hi = Long.MinValue
+        var bad: Option[String] = None
+        it.foreach { r =>
+          val dup = r.getLong(2) > 1 || (uniqueKeys && r.isNullAt(0))
+          if (bad.isEmpty && dup)
+            bad = Some(Row(r.get(0), r.getLong(2)).toString)
+          if (!r.isNullAt(0) && !r.isNullAt(1)) {
+            lo = math.min(lo, r.getLong(1))
+            hi = math.max(hi, r.getLong(1))
+            mark(r, hit)
+          }
+        }
+        Iterator((hit, lo, hi, bad))
+      }.collect() // one summary per source partition
+    val bad = parts.flatMap(_._4).headOption
+    require(bad.isEmpty,
+      s"gshard merge: duplicate or NULL key in updates (${bad.getOrElse("")})")
+    val hit = new java.util.BitSet
+    parts.foreach(p => hit.or(p._1))
+    val touchedEntries = (bounded.zipWithIndex.collect {
+      case (e, i) if hit.get(i) => e } ++ unbounded).sortBy(_.file)
+    val touched = touchedEntries.map(_.file)
 
-    // 2./3. the touched rows through the connector's files-restricted
-    // scan — the one data pass, persisted: the rewrite AND the change
-    // capture below both consume it, and writeData runs two jobs on
-    // top. No touched file: the merge function sees an empty table.
+    // 2. the fused rewrite over the touched rows (−1) and the merge
+    // output (+1). No touched file: the merge function sees an empty
+    // table and every output row is an insert.
     val visSchema = ShardFormat.visible(head.schema)
-    val visCols = visSchema.fieldNames.toSeq
     val touchedRows: Option[DataFrame] =
       if (touched.isEmpty) None
       else Some(spark.read.format("gshard")
         .option("files", touched.mkString(","))
-        .load(dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .load(dir))
     val out = mergeFn(touchedRows.getOrElse(spark.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      java.util.Collections.emptyList[Row](),
       visSchema)), source)
     // the output must match the table by name and storage tag (the
     // append discipline), on the VISIBLE surface — drop tombstones
@@ -308,6 +327,30 @@ object ShardOps {
     require(tags(out.schema) == tags(visSchema),
       s"gshard merge schema mismatch: table=${visSchema.catalogString} " +
         s"merged=${out.schema.catalogString}")
+    // PHYSICALIZE: the rewrite keeps every physical slot — visible
+    // columns by name, tombstone slots as null blocks — so rewritten
+    // files stay positionally compatible with old ones
+    import graft.sources.shard.ShardCdc.{SideCol => ChangeSide}
+    def physical(df: DataFrame, side: Int) =
+      df.select(head.schema.fields.toIndexedSeq.map { f =>
+        if (ShardFormat.isTombstone(f.name))
+          lit(null).cast(f.dataType).as(f.name)
+        else col(f.name)
+      } :+ lit(side).as(ChangeSide): _*)
+    val tagged = touchedRows.fold(physical(out, 1))(tr =>
+      physical(tr, -1).union(physical(out, 1)))
+    // shard range: every output key is a touched row's key or a source
+    // key, so the touched files' zone maps and the source pass's range
+    // cover it (the writer clamps what they miss)
+    val ranges = touchedEntries.flatMap(e =>
+      if (isStringKey) e.sMin.get(keyCol).map(lo =>
+        (prefixLong(ShardFormat.unb64(lo)),
+          prefixLong(ShardFormat.unb64(e.sMax(keyCol)))))
+      else e.zMin.get(keyCol).map(lo => (lo, e.zMax(keyCol)))) ++
+      parts.collect { case (_, lo, hi, _) if lo <= hi => (lo, hi) }
+    val bounds =
+      if (ranges.isEmpty) (0L, 0L)
+      else (ranges.map(_._1).min, ranges.map(_._2).max)
     val shards = if (nShards > 0) nShards else math.max(1, touched.size + 1)
     // fresh file prefix: gen for debuggability PLUS a random token —
     // two concurrent merges that both planned at gen N must never
@@ -318,76 +361,12 @@ object ShardOps {
     // invariant unconditionally
     val prefix = s"m${head.gen + 1}x" +
       java.util.UUID.randomUUID.toString.take(8) + "-"
-    // persist around writeData's two jobs (range bounds, then the
-    // clustered write) and the change capture: without it the
-    // touched-file scan + merge — the dominant cost — executes again
-    // per consumer.
-    // PHYSICALIZE: the rewrite keeps every physical slot — visible
-    // columns from the merged frame, tombstone slots as null blocks —
-    // so rewritten files stay positionally compatible with old ones
-    val outAligned = out
-      .select(head.schema.fields.toIndexedSeq.map { f =>
-        if (ShardFormat.isTombstone(f.name))
-          lit(null).cast(f.dataType).as(f.name)
-        else col(f.name)
-      }: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // clustering expression for the rewrite: the exact storage long
-    // for long-encoded keys; for STRING keys a big-endian 7-byte
-    // prefix (hex left-justified, zero-padded — monotone in UTF-8
-    // byte order), which drives LOCALITY only: correctness always
-    // comes from the real string zone maps the writer folds per file
-    val clusterExpr =
-      if (isStringKey)
-        conv(rpad(substring(hex(encode(col(keyCol), "UTF-8")), 1, 14),
-          14, "0"), 16, 10).cast("long")
-      else storageKey(col(keyCol))
-    import graft.sources.shard.ShardCdc.{SideCol => ChangeSide}
-    val (fresh, changeEntries) =
-      try {
-        val fresh = ShardFormat.writeData(outAligned, dir, keyCol, shards,
-          prefix = prefix,
-          // rewritten files keep the table's bloom set (manifest-derived)
-          bloomCols = head.entries.flatMap(_.bloom.keys).toSet,
-          rangeExpr = Some(clusterExpr))
-        // 4. ROW-GRAIN CHANGE CAPTURE at commit (the Delta CDF choice):
-        // the net multiset difference, touched rows −1 and output +1 —
-        // unchanged pass-through rows cancel, a duplicated old row
-        // that the rewrite lands once leaves one −1. The `gshard-cdc`
-        // rowlevel feed reads these files, falling back to the ±file
-        // diff for generations without them (appends, SQL row-level
-        // rewrites).
-        def side(df: DataFrame, s: Int) =
-          df.select(visCols.map(col) :+ lit(s).as(ChangeSide): _*)
-        val changesDf = touchedRows match {
-          case None => side(outAligned, 1) // every output row is an insert
-          case Some(tr) =>
-            // rows of keys absent from the source cancel by
-            // key-locality, so the diff reads only the source's keys:
-            // change-sized, not touched-file-sized
-            val keys = broadcast(source.select(col(keyCol)))
-            def ofKeys(df: DataFrame) = df.join(keys, Seq(keyCol), "left_semi")
-            side(ofKeys(tr), -1).unionByName(side(ofKeys(outAligned), 1))
-              .groupBy(visCols.map(col): _*)
-              .agg(sum(col(ChangeSide)).as("__net"))
-              .filter(col("__net") =!= 0L)
-              .select(visCols.map(col) :+
-                signum(col("__net")).cast("int").as(ChangeSide) :+
-                explode(sequence(lit(1L), abs(col("__net")))).as("__n"): _*)
-              .drop("__n")
-              // one diff for writeData's two jobs
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        }
-        try (fresh, ShardFormat.writeData(changesDf, dir, keyCol,
-          math.max(1, math.min(4, shards)), prefix = s"c$prefix",
-          rangeExpr = Some(clusterExpr), namePrefix = "chg-"))
-        finally changesDf.unpersist()
-      } finally {
-        outAligned.unpersist()
-        touchedRows.foreach(_.unpersist())
-      }
+    val (fresh, changeEntries) = ShardFormat.writeMerge(tagged, dir,
+      clusterExpr, shards, bounds, prefix,
+      // rewritten files keep the table's bloom set (manifest-derived)
+      bloomCols = head.entries.flatMap(_.bloom.keys).toSet)
 
-    // 5. generational publish with the txn slot advanced
+    // 3. generational publish with the txn slot advanced
     val (nextLast, nextTxns) = txnApp match {
       case None =>
         (if (txnId < 0) head.lastTxn else math.max(txnId, head.lastTxn),
@@ -397,7 +376,7 @@ object ShardOps {
         else (head.lastTxn,
           head.txns + (app -> math.max(txnId, head.txns.getOrElse(app, -1L))))
     }
-    val untouched = head.entries.filterNot(e => touched.contains(e.file))
+    val untouched = head.entries.filterNot(touchedEntries.toSet)
     // OPTIMISTIC publish: this merge planned (touched files, touched
     // read, txn slots) against head.gen — if a concurrent writer
     // moved the head since, publish throws and the fresh files stay
@@ -410,4 +389,26 @@ object ShardOps {
         cdf = true),
       basedOn = head.gen)
   }
+
+  /** The string clustering long on the driver: the key's first 7 UTF-8
+    * bytes, zero-padded, big-endian — the value the rewrite's
+    * `conv(rpad(substring(hex(...), 1, 14), 14, '0'), 16, 10)` gives. */
+  private def prefixLong(b: Array[Byte]): Long =
+    (0 until 7).foldLeft(0L)((acc, i) =>
+      (acc << 8) | (if (i < b.length) b(i) & 0xffL else 0L))
+
+  /** Unsigned byte order — `UTF8String`'s order, and the string zone
+    * maps'. */
+  private object Utf8Order extends Ordering[Array[Byte]] {
+    def compare(a: Array[Byte], b: Array[Byte]): Int =
+      java.util.Arrays.compareUnsigned(a, b)
+  }
+
+  /** Sets the position of every zone `[lo, hi]` that holds `k` — a
+    * scan over the manifest's zones, which are metadata-sized. */
+  private def markZones[K](zones: IndexedSeq[(K, K)], k: K,
+      hit: java.util.BitSet)(implicit ord: Ordering[K]): Unit =
+    zones.indices.foreach { j =>
+      if (ord.lteq(zones(j)._1, k) && ord.lteq(k, zones(j)._2)) hit.set(j)
+    }
 }

@@ -1,12 +1,10 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.SparkSpec
 import graft.sources.shard.{ShardCdc, ShardFormat, ShardOps}
+import graft.sources.shard.tests.ChangeProbe
 
 /** Streaming CHANGE DATA FEED over gshard generations (r15 verdict
   * task #5): `readStream.format("gshard-cdc")` — offsets ARE
@@ -15,10 +13,7 @@ import graft.sources.shard.{ShardCdc, ShardFormat, ShardOps}
   * B60's insert/update/delete rows. Checkpoint resume across upserts
   * is the load-bearing property: each commit's changes are emitted
   * EXACTLY ONCE across restarts. */
-class ShardCdcSpec extends SparkSpec {
-
-  private def tmp(tag: String): String =
-    Files.createTempDirectory(s"gshard_cdc_$tag").toString
+class ShardCdcSpec extends ShardTempRoot {
 
   private def base(n: Int) = {
     val sess = spark
@@ -391,4 +386,111 @@ class ShardCdcSpec extends SparkSpec {
     assert(r2.count(_._2 == 2L) == 2)
     assert(drainFile().size == r2.size)
   }
+
+  // ── change capture in the fused rewrite ───────────────────────────
+
+  /** The commit's net change multiset as Spark's own grouping computes
+    * it: the previous generation's rows −1 and the head's +1, grouped
+    * on every visible column, non-zero nets kept. */
+  private def sparkNet(d: String): Seq[String] = {
+    val g = ShardFormat.readManifest(d).gen
+    val post = spark.read.format("gshard").load(d)
+    val pre = spark.read.format("gshard")
+      .option("versionAsOf", (g - 1).toString).load(d)
+    val cols = post.columns.toSeq.map(col)
+    pre.select(cols :+ lit(-1L).as("s"): _*)
+      .union(post.select(cols :+ lit(1L).as("s"): _*))
+      .groupBy(cols: _*).agg(sum(col("s")).as("net"))
+      .filter(col("net") =!= 0L)
+      .collect().toSeq.flatMap { r =>
+        val net = r.getLong(cols.size)
+        Seq.fill(math.abs(net).toInt)(ChangeProbe.show(
+          (0 until cols.size).map(r.get) :+ math.signum(net)))
+      }.sorted
+  }
+
+  private def changes(d: String): Seq[String] =
+    ChangeProbe.headRows(d).map(ChangeProbe.show).sorted
+
+  test("a value-identical re-upsert writes zero change rows and still " +
+      "marks the commit captured (cdf 1)") {
+    val d = tmp("cdf0")
+    ShardFormat.write(base(100), d, "id", 2)
+    val sess = spark
+    import sess.implicits._
+    ShardOps.upsert(spark, d,
+      Seq((7L, "v7", 70L), (8L, "v8", 80L)).toDF("id", "tag", "score"), "id")
+    val m = ShardFormat.readManifest(d)
+    assert(m.gen == 1L && m.cdf)
+    assert(m.changes.isEmpty, m.changes.toString)
+    assert(java.nio.file.Files.readAllLines(
+      java.nio.file.Paths.get(d, "_manifest.gshard")).contains("cdf 1"))
+  }
+
+  test("change capture groups doubles as Spark does: NaN = NaN and " +
+      "−0.0 = 0.0 net out, the data keeps the written value") {
+    val d = tmp("nan")
+    val sess = spark
+    import sess.implicits._
+    Seq((1L, Double.NaN), (2L, -0.0), (3L, 0.0), (4L, 1.5), (5L, 2.5))
+      .toDF("id", "x")
+      .write.format("gshard").option("rangecol", "id")
+      .mode("overwrite").save(d)
+    ShardOps.upsert(spark, d, Seq((1L, Double.NaN), (2L, 0.0), (3L, -0.0),
+      (4L, Double.NaN), (6L, -0.0)).toDF("id", "x"), "id")
+    // Seq[Any]: a Seq(4L, 1.5) literal would widen the longs to doubles
+    val want = Seq(Seq[Any](4L, 1.5, -1L), Seq[Any](4L, Double.NaN, 1L),
+      Seq[Any](6L, 0.0, 1L)).map(ChangeProbe.show).sorted
+    assert(changes(d) == want)
+    assert(sparkNet(d) == want)
+    val x = spark.read.format("gshard").load(d).collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(1.0 / x(2L) > 0 && 1.0 / x(3L) < 0 && 1.0 / x(6L) < 0)
+    assert(x(1L).isNaN && x(4L).isNaN && x(5L) == 2.5)
+  }
+
+  test("change capture on a STRING merge key") {
+    val d = tmp("strkey")
+    val sess = spark
+    import sess.implicits._
+    (0 until 200).map(i => (f"k$i%03d", s"v$i", i.toLong))
+      .toDF("key", "tag", "n")
+      .write.format("gshard").option("rangecol", "key")
+      .option("shards", 4).mode("overwrite").save(d)
+    ShardOps.upsert(spark, d, Seq(("k005", "X", 5L), ("k006", "v6", 6L),
+      ("zzz", "new", 1L)).toDF("key", "tag", "n"), "key")
+    val want = Seq(Seq("k005", "v5", 5L, -1L), Seq("k005", "X", 5L, 1L),
+      Seq("zzz", "new", 1L, 1L)).map(ChangeProbe.show).sorted
+    assert(changes(d) == want)
+    assert(sparkNet(d) == want)
+  }
+
+  test("change capture on a table with a DROPPED (tombstoned) column: " +
+      "change rows carry the visible columns only") {
+    val wh = tmp("evo_wh")
+    spark.conf.set("spark.sql.catalog.gshard_cdc_evo",
+      "graft.sources.shard.ShardCatalog")
+    spark.conf.set("spark.sql.catalog.gshard_cdc_evo.warehouse", wh)
+    base(100).createOrReplaceTempView("cdc_evo_src")
+    spark.sql("DROP TABLE IF EXISTS gshard_cdc_evo.main.t")
+    spark.sql("CREATE TABLE gshard_cdc_evo.main.t AS SELECT * FROM cdc_evo_src")
+    spark.sql("ALTER TABLE gshard_cdc_evo.main.t DROP COLUMN tag")
+    val d = s"$wh/main/t"
+    assert(ShardFormat.readManifest(d).schema.fieldNames
+      .exists(_.startsWith("__dropped_")))
+    val sess = spark
+    import sess.implicits._
+    ShardOps.upsert(spark, d,
+      Seq((5L, -5L), (6L, 60L), (500L, 1L)).toDF("id", "score"), "id")
+    val want = Seq(Seq(5L, 50L, -1L), Seq(5L, -5L, 1L), Seq(500L, 1L, 1L))
+      .map(ChangeProbe.show).sorted
+    assert(changes(d) == want)
+    assert(sparkNet(d) == want)
+    val got = spark.table("gshard_cdc_evo.main.t").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got.size == 101 && got(5L) == -5L && got(500L) == 1L &&
+      got(7L) == 70L)
+  }
+
+  leavesNoTempDirs()
 }

@@ -5,7 +5,6 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.SparkSpec
 import graft.sources.shard.{ShardCdc, ShardFormat, ShardOps}
 
 /** MERGE-ON-READ DELETE via position-delete sidecars (r16 verdict
@@ -15,10 +14,7 @@ import graft.sources.shard.{ShardCdc, ShardFormat, ShardOps}
   * through both reader paths, sidecar merging across deletes, time
   * travel per-generation masks, CDC net emission, compaction
   * materialization, and vacuum reclamation. */
-class ShardDeleteMorSpec extends SparkSpec {
-
-  private def tmp(tag: String): String =
-    Files.createTempDirectory(s"gshard_mor_$tag").toString
+class ShardDeleteMorSpec extends ShardTempRoot {
 
   private def base(n: Int) = {
     val sess = spark
@@ -182,4 +178,16 @@ class ShardDeleteMorSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(c == Set((7L, "delete"), (8L, "delete")), c.toString)
   }
+
+  test("job budget: a 1-row DELETE runs at most 5 Spark jobs — " +
+      "the change file's constant bounds cost no min/max job") {
+    val d = tmp("jobs")
+    ShardFormat.write(base(1000), d, "id", 4)
+    val jobs = JobCount(spark)(
+      assert(ShardOps.deleteMor(spark, d, col("id") === 137L) == 1L))
+    assert(ShardFormat.readManifest(d).changes.map(_._2) == Seq(1L))
+    assert(jobs <= 5, s"delete ran $jobs Spark jobs")
+  }
+
+  leavesNoTempDirs()
 }

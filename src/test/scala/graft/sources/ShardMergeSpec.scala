@@ -6,7 +6,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.SparkSpec
 import graft.operators.Scale
 import graft.sources.shard.{ShardCdc, ShardFormat, ShardOps}
 
@@ -20,10 +19,7 @@ import graft.sources.shard.{ShardCdc, ShardFormat, ShardOps}
   * functions other than the upsert — the versioned-sink contract a
   * `foreachBatch` CDC consumer relies on: atomic commit, pinned
   * reads, replay no-ops, crash invisibility, lost-race detection. */
-class ShardMergeSpec extends SparkSpec {
-
-  private def tmp(tag: String): String =
-    Files.createTempDirectory(s"gshard_merge_$tag").toString
+class ShardMergeSpec extends ShardTempRoot {
 
   private def base(n: Int) = {
     val sess = spark
@@ -570,4 +566,46 @@ class ShardMergeSpec extends SparkSpec {
     assert(side == Set((1L, 0, -1), (1L, 0, 1), (1L, 10, 1), (3L, 10, 1)),
       side.toString)
   }
+
+  // ── per-commit job budget ─────────────────────────────────────────
+
+  test("job budget: an upsert into an 8-file table with untouched " +
+      "files runs at most 7 Spark jobs (one source pass, one fused " +
+      "rewrite)") {
+    val sess = spark
+    import sess.implicits._
+    val d = tmp("jobs_upsert")
+    ShardFormat.write(base(1000), d, "id", 8)
+    val before = ShardFormat.readManifest(d).entries.map(_.file).toSet
+    val updates = (990L until 1010L).map(i => (i, s"UPD$i", i * 100L))
+      .toDF("id", "tag", "score")
+    val jobs = JobCount(spark)(ShardOps.upsert(spark, d, updates, "id"))
+    val after = ShardFormat.readManifest(d)
+    assert(before.size == 8 &&
+      after.entries.map(_.file).toSet.intersect(before).size == 7)
+    assert(after.changes.map(_._2).sum == 30L) // 10 updated ×2, 10 new
+    assert(jobs <= 7, s"upsert ran $jobs Spark jobs")
+  }
+
+  test("job budget: the SCD2 merge (Scale.scd2MergeOf) runs at most " +
+      "11 Spark jobs") {
+    val sess = spark
+    import sess.implicits._
+    val d = tmp("jobs_scd2")
+    val dim = (1L to 40L).map(u => (u, "a", 0, u))
+      .toDF("user_id", "status", "valid_from", "n_days_observed")
+      .select(col("user_id"), col("status"), col("valid_from"),
+        lit(null).cast("int").as("valid_to"), lit(true).as("is_current"),
+        col("n_days_observed"))
+    ShardFormat.write(dim, d, "user_id", 8)
+    val incr = Seq((1L, 10, "b", 1L, 1L), (2L, 10, "a", 2L, 2L),
+      (90L, 10, "a", 3L, 3L))
+      .toDF("user_id", "day", "event_type", "us", "event_id")
+    val jobs = JobCount(spark)(ShardOps.merge(spark, d, incr, "user_id", 0,
+      -1L, None)(Scale.scd2MergeOf))
+    assert(spark.read.format("gshard").load(d).count() == 42L)
+    assert(jobs <= 11, s"SCD2 merge ran $jobs Spark jobs")
+  }
+
+  leavesNoTempDirs()
 }

@@ -1,13 +1,11 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import scala.collection.mutable
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
 import graft.sources.shard.{ShardFormat, ShardOps}
+import graft.sources.shard.tests.ChangeProbe
 
 /** Seeded MUTATION FUZZ over the gshard lifecycle: random sequences of
   * API upserts, SQL UPDATEs, SQL DELETEs (metadata-decidable or not),
@@ -18,17 +16,32 @@ import graft.sources.shard.{ShardFormat, ShardOps}
   * the per-feature specs: it exercises the INTERLEAVINGS (merge after
   * delete, update over appended generations, …) no single-feature
   * test hits. */
-class ShardMutationFuzzSpec extends SparkSpec {
+class ShardMutationFuzzSpec extends ShardTempRoot {
 
   private val ns = "gshard_fuzz.main"
 
   private def setupCatalog(): String = {
-    val wh = Files.createTempDirectory("gshard_fuzz_wh_").toString
+    val wh = tmp("fuzz_wh_")
     spark.conf.set("spark.sql.catalog.gshard_fuzz",
       "graft.sources.shard.ShardCatalog")
     spark.conf.set("spark.sql.catalog.gshard_fuzz.warehouse", wh)
     wh
   }
+
+  /** The head generation's change rows, comparable with [[netDiff]]. */
+  private def changeRows(dir: String): Seq[String] =
+    ChangeProbe.headRows(dir).map(ChangeProbe.show).sorted
+
+  /** The net row diff between two model snapshots as change rows
+    * (columns…, side): a key whose row changed leaves its old row −1
+    * and its new row +1. */
+  private def netDiff[V](prev: Map[Long, V], next: Map[Long, V])(
+      row: (Long, V) => Seq[Any]): Seq[String] =
+    (prev.keySet ++ next.keySet).toSeq.flatMap { k =>
+      if (prev.get(k) == next.get(k)) Nil
+      else prev.get(k).map(v => row(k, v) :+ -1L).toSeq ++
+        next.get(k).map(v => row(k, v) :+ 1L)
+    }.map(ChangeProbe.show).sorted
 
   test("randomized upsert/update/delete/append sequences match a " +
       "driver-side model at every step; retained generations replay " +
@@ -68,8 +81,13 @@ class ShardMutationFuzzSpec extends SparkSpec {
             val ks = Seq.fill(1 + rnd.nextInt(30))(
               rnd.nextInt(n0 * 2).toLong).distinct
             val rows = ks.map(k => (k, s"u$step-$k", rnd.nextInt(1000).toLong))
+            val prev = model.toMap
             ShardOps.upsert(spark, dir, df(rows), "id")
             rows.foreach { case (k, tag, s) => model(k) = (tag, s) }
+            assert(changeRows(dir) == netDiff(prev, model.toMap) {
+              case (k, (tag, s)) => Seq(k, tag, s) },
+              s"scenario $scenario step $step: change rows diverged " +
+                "from the model's net diff")
           case 1 => // SQL UPDATE over a random key band
             val lo = rnd.nextInt(n0 * 2).toLong
             val hi = lo + rnd.nextInt(n0)
@@ -126,7 +144,7 @@ class ShardMutationFuzzSpec extends SparkSpec {
     // a FRESH catalog name: Spark caches catalog instances per
     // session, so re-registering gshard_fuzz with a new warehouse
     // would silently keep pointing at the first test's directory
-    val wh = Files.createTempDirectory("gshard_fuzz_tok_wh_").toString
+    val wh = tmp("fuzz_tok_wh_")
     spark.conf.set("spark.sql.catalog.gshard_fuzz_tok",
       "graft.sources.shard.ShardCatalog")
     spark.conf.set("spark.sql.catalog.gshard_fuzz_tok.warehouse", wh)
@@ -159,8 +177,13 @@ class ShardMutationFuzzSpec extends SparkSpec {
           val ks = Seq.fill(1 + rnd.nextInt(25))(
             rnd.nextInt(n0 * 2).toLong).distinct
           val rows = ks.map(k => (k, toks(k, step)))
+          val prev = model.toMap
           ShardOps.upsert(spark, dir, df(rows), "id")
           rows.foreach { case (k, tk) => model(k) = tk }
+          assert(changeRows(dir) ==
+            netDiff(prev, model.toMap)((k, tk) => Seq(k, tk)),
+            s"token fuzz step $step: change rows diverged from the " +
+              "model's net diff")
         case 1 => // SQL DELETE band
           val lo = rnd.nextInt(n0 * 2).toLong
           val hi = lo + rnd.nextInt(n0 / 2)
@@ -186,4 +209,6 @@ class ShardMutationFuzzSpec extends SparkSpec {
       assert(got == want, s"token fuzz gen $gen replay diverged")
     }
   }
+
+  leavesNoTempDirs()
 }
