@@ -662,7 +662,7 @@ object SparkEntry {
     "q_shard_generation_diff" ->
       q(t => graft.sources.SourceOps.qShardGenerationDiff(t)),
     // the WIDENED type surface (v3): timestamp/date/int/boolean CTAS
-    // through the catalog, both reader paths, micros zone pruning
+    // through the catalog, read by path and by name, micros zone pruning
     "q_shard_types_roundtrip" -> q(t => graft.sources.SourceOps.qShardTypesRoundtrip(t)),
     // TYPED metadata-only stats: min/max of timestamp/date/int answer
     // from the manifest zone maps, zero files read (plan-pinned)
@@ -5823,8 +5823,8 @@ object SparkEntry {
         | CAST(MAX(EXTRACT(hour FROM CAST(ts AS TIMESTAMP))) AS BIGINT) AS hh_max
         |FROM events""".stripMargin,
     // the widened type surface: timestamp/date/int/boolean roundtrip
-    // through the v3 long block — both reader paths must land the
-    // identical typed rollup under the timestamp cutoff
+    // through the v3 long block — the path read and the catalog read
+    // must land the identical typed rollup under the timestamp cutoff
     "q_shard_types_roundtrip" ->
       """WITH p AS (SELECT CAST(ts AS TIMESTAMP) AS ts,
         |  CAST(ts AS DATE) AS day,
@@ -5843,7 +5843,7 @@ object SparkEntry {
         | 'columnar' AS fmt FROM r
         |UNION ALL
         |SELECT day, is_click, n_events, value_cents, ts_min, hh_max,
-        | 'row' AS fmt FROM r""".stripMargin,
+        | 'catalog' AS fmt FROM r""".stripMargin,
     // the streaming-sink twin: every micro-batch appended through the
     // connector must land the identical table (pair #24)
     "stream_shard_sink" -> shardRollupSql,

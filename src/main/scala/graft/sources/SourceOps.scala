@@ -1378,7 +1378,7 @@ object SourceOps {
     * end to end: timestamp_ntz / date / int / boolean columns CTAS'd
     * into a gshard table from PURE SQL — the exact path that used to
     * die at `typeTag` on the first `ts` column a user wrote — then
-    * read back through BOTH reader paths (vectorized + row) under a
+    * read back both by path and through the SQL catalog under a
     * TIMESTAMP predicate the scan normalizes to micros for zone-map
     * skipping. All four logical types ride the physically-long block
     * (micros / days / int / 0-1 — the parquet logical-type idea), so
@@ -1410,8 +1410,7 @@ object SourceOps {
     val cutoff =
       if (minTs.isNullAt(0)) java.time.LocalDateTime.of(2024, 1, 1, 0, 0)
       else minTs.getAs[java.time.LocalDateTime](0).plusDays(7)
-    def roll(columnar: Boolean, fmt: String) = spark.read.format("gshard")
-      .option("columnar", columnar.toString).load(s"$wh/main/$tblName")
+    def roll(src: DataFrame, fmt: String) = src
       .filter(col("ts") >= lit(cutoff))
       .groupBy(col("day").cast("timestamp").as("day"), col("is_click"))
       .agg(count(lit(1)).as("n_events"),
@@ -1419,8 +1418,8 @@ object SourceOps {
         min(col("ts")).as("ts_min"),
         max(col("hh")).cast("long").as("hh_max"))
       .withColumn("fmt", lit(fmt))
-    roll(columnar = true, "columnar")
-      .unionByName(roll(columnar = false, "row"))
+    roll(spark.read.format("gshard").load(s"$wh/main/$tblName"), "columnar")
+      .unionByName(roll(spark.table(tbl), "catalog"))
   }
 
   /** `q_shard_stats_typed` — the metadata-only aggregate path over

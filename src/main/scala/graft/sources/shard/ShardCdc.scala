@@ -3,12 +3,11 @@ package graft.sources.shard
 import java.util
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table,
   TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition,
-  PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+  PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField,
   StructType}
@@ -146,6 +145,8 @@ private[shard] class ShardCdcTable(dir: String, schema: StructType,
       : ScanBuilder = new ScanBuilder {
     override def build(): Scan = new Scan {
       override def readSchema(): StructType = schema
+      override def columnarSupportMode(): Scan.ColumnarSupportMode =
+        Scan.ColumnarSupportMode.SUPPORTED
       override def toMicroBatchStream(checkpointLocation: String)
           : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
         new ShardCdcMicroBatchStream(dir, schema, startingVersion, rowLevel)
@@ -198,7 +199,7 @@ private[shard] class ShardCdcMicroBatchStream(dir: String,
     * feed columns it predates (appended AFTER the physical fields so
     * the file-prefix decode rule is untouched — a file's own header
     * width governs which slots it carries; the padded names resolve
-    * in the readers and decode as all-NULL). Without the padding, a
+    * in the reader and decode as all-NULL). Without the padding, a
     * replay across a later ADD COLUMN would crash the reader on the
     * unresolvable name instead of reading NULL. */
   private def padTags(fields: Seq[(String, String)])
@@ -297,10 +298,9 @@ private[shard] class ShardCdcMicroBatchStream(dir: String,
             (f.name, ShardFormat.typeTag(f.dataType))) :+
             ((ShardCdc.SideCol, "int"))).toArray
         mg.changes.map { case (f, _) =>
-          ShardCdcRowsPartition(
-            ShardInputPartition(s"$dir/$f", tags,
-              tableSchema.fieldNames :+ ShardCdc.SideCol),
-            g): InputPartition
+          ShardInputPartition(s"$dir/$f", tags,
+            tableSchema.fieldNames :+ ShardCdc.SideCol,
+            constants = Seq(LongType -> g)): InputPartition
         }
       } else diffParts(g - 1, g, g).toSeq
     }.toArray
@@ -336,70 +336,18 @@ private[shard] class ShardCdcMicroBatchStream(dir: String,
         ids: Set[(String, Option[String])], side: Int)
         : Seq[InputPartition] =
       m.entries.filter(e => ids(ident(e))).map { e =>
-        ShardCdcInputPartition(
-          ShardInputPartition(s"$dir/${e.file}", tags,
-            tableSchema.fieldNames,
-            dvPath = e.dv.map(d => s"$dir/${d._1}").orNull),
-          side, version)
+        ShardInputPartition(s"$dir/${e.file}", tags,
+          tableSchema.fieldNames,
+          dvPath = e.dv.map(d => s"$dir/${d._1}").orNull,
+          constants = Seq(IntegerType -> side, LongType -> version))
       }
     (parts(mb, bIds -- aIds, 1) ++
       parts(ma, aIds -- bIds, -1)).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new ShardCdcReaderFactory(
-      tableSchema.fields.map(f => ShardFormat.typeTag(f.dataType)))
+    ShardReaderFactory
 
   override def commit(end: SOffset): Unit = ()
   override def stop(): Unit = ()
-}
-
-private[shard] final case class ShardCdcInputPartition(
-    inner: ShardInputPartition, side: Int, version: Long)
-  extends InputPartition
-
-/** A commit's own change file: side rides IN the data (last column),
-  * only the version is partition-constant. */
-private[shard] final case class ShardCdcRowsPartition(
-    inner: ShardInputPartition, version: Long)
-  extends InputPartition
-
-private[shard] class ShardCdcReaderFactory(tableTags: Array[String])
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition)
-      : PartitionReader[InternalRow] = {
-    val types = tableTags.map(ShardFormat.dataTypeOf)
-    val n = tableTags.length
-    // one projection body for both partition kinds; the only delta is
-    // where the side comes from (partition constant vs the change
-    // file's own `_change_side` column)
-    def wrap(inner: ShardPartitionReader, version: Long,
-        side: InternalRow => Int): PartitionReader[InternalRow] =
-      new PartitionReader[InternalRow] {
-        override def next(): Boolean = inner.next()
-        override def get(): InternalRow = {
-          val r = inner.get()
-          val out = new Array[Any](n + 2)
-          var i = 0
-          while (i < n) {
-            out(i) = if (r.isNullAt(i)) null else r.get(i, types(i))
-            i += 1
-          }
-          out(n) = side(r)
-          out(n + 1) = version
-          // consume the array directly — fromSeq would wrap + copy
-          // it once per row on the feed's hot path
-          new org.apache.spark.sql.catalyst.expressions
-            .GenericInternalRow(out)
-        }
-        override def close(): Unit = inner.close()
-      }
-    partition match {
-      case p: ShardCdcInputPartition =>
-        wrap(new ShardPartitionReader(p.inner), p.version, _ => p.side)
-      case p: ShardCdcRowsPartition =>
-        wrap(new ShardPartitionReader(p.inner), p.version, _.getInt(n))
-      case other => throw new IllegalStateException(other.toString)
-    }
-  }
 }

@@ -86,7 +86,7 @@ private[shard] class ShardTable(dir: String, tableSchema: StructType,
 
   /** `_file` — the shard-file metadata column (the Iceberg/Delta
     * `_file`/`input_file_name` idea): constant per input partition,
-    * synthesized by the readers, filterable at FILE grain (an
+    * synthesized by the reader, filterable at FILE grain (an
     * In(_file, …) runtime filter admits exactly the named entries).
     * It is what the group-based row-level rewrites group on. */
   override def metadataColumns()
@@ -365,15 +365,8 @@ private[shard] class ShardWrite(dir: String, schema: StructType,
     truncateFirst, queryId, chunkRows, txnId, bloomCols, txnApp)
 }
 
-private[shard] final case class ShardCommitMessage(file: String, rows: Long,
-    mins: Map[String, Long], maxs: Map[String, Long],
-    sMins: Map[String, String], sMaxs: Map[String, String],
-    nulls: Map[String, Long], blooms: Map[String, String] = Map.empty,
-    bloomBpv: Map[String, Long] = Map.empty,
-    dMins: Map[String, Double] = Map.empty,
-    dMaxs: Map[String, Double] = Map.empty,
-    sums: Map[String, Long] = Map.empty)
-  extends WriterCommitMessage
+private[shard] final case class ShardCommitMessage(
+    entry: ShardFormat.ShardEntry) extends WriterCommitMessage
 
 private[shard] class ShardBatchWrite(dir: String, schema: StructType,
     truncateFirst: Boolean, queryId: String, chunkRows: Int, txnId: Long,
@@ -400,9 +393,6 @@ private[shard] class ShardBatchWrite(dir: String, schema: StructType,
       info: PhysicalWriteInfo): DataWriterFactory = {
     val phys = physicalSchema
     ShardWriterFactory(dir,
-      // typeTag, not typeName: ArrayType.typeName is just "array"
-      // (element type lost); the tag is the format's canonical
-      // spelling and dataTypeOf accepts both
       phys.fields.map(f => (f.name, ShardFormat.typeTag(f.dataType))),
       queryId.take(8), chunkRows, bloomCols,
       rowIdx = phys.fields.map(f =>
@@ -417,10 +407,8 @@ private[shard] class ShardBatchWrite(dir: String, schema: StructType,
     ShardFormat.tableLock(dir).synchronized {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
     val fresh = messages.collect {
-      case m: ShardCommitMessage if m.rows > 0 => // empty partitions emit no file
-        ShardFormat.ShardEntry(m.file, m.rows, m.mins, m.maxs,
-          m.sMins, m.sMaxs, m.nulls, m.blooms, m.bloomBpv,
-          m.dMins, m.dMaxs, m.sums)
+      // empty partitions emit no file
+      case m: ShardCommitMessage if m.entry.rows > 0 => m.entry
     }.sortBy(_.file).toSeq
     val existing =
       if (ShardFormat.hasManifest(dir)) Some(ShardFormat.readManifest(dir))
@@ -501,7 +489,7 @@ private[shard] class ShardBatchWrite(dir: String, schema: StructType,
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     messages.collect { case m: ShardCommitMessage =>
       java.nio.file.Files.deleteIfExists(
-        java.nio.file.Paths.get(dir, m.file))
+        java.nio.file.Paths.get(dir, m.entry.file))
     }
 }
 
@@ -518,9 +506,10 @@ private[shard] final case class ShardWriterFactory(dir: String,
 
 /** Streams its (range-disjoint) partition through the chunked file
   * writer — peak memory is ONE CHUNK, not the whole shard — and
-  * reports the zone maps upward at task commit. Spark's commit
-  * coordinator guarantees one winner per partition. NULL fields
-  * roundtrip through the format's null bitmaps. */
+  * reports the zone maps upward at task commit. Cells encode through
+  * [[ShardFormat.storageValue]]. Spark's commit coordinator guarantees
+  * one winner per partition. NULL fields roundtrip through the
+  * format's null bitmaps. */
 private[shard] class ShardDataWriter(dir: String,
     fileSchema: Array[(String, String)], writeTag: String, partitionId: Int,
     chunkRows: Int, bloomCols: Set[String] = Set.empty,
@@ -529,6 +518,7 @@ private[shard] class ShardDataWriter(dir: String,
 
   private val schema = StructType(fileSchema.toIndexedSeq.map { case (n, t) =>
     org.apache.spark.sql.types.StructField(n, ShardFormat.dataTypeOf(t)) })
+  private val types = schema.fields.map(_.dataType)
   // physical position → incoming row ordinal; -1 = a DROP tombstone
   // slot (written as an all-null block, keeping old files' positional
   // decode valid)
@@ -548,84 +538,7 @@ private[shard] class ShardDataWriter(dir: String,
     var j = 0
     while (j < schema.length) {
       val i = rowIdx(j)
-      values(j) =
-        if (i < 0 || row.isNullAt(i)) null
-        else schema(j).dataType match {
-          case LongType => row.getLong(i)
-          case DoubleType => row.getDouble(i)
-          case StringType => row.getUTF8String(i).getBytes
-          // logical types ride the long block in their CATALYST
-          // internal encodings (micros / days / int / 0-1) — exactly
-          // what InternalRow already holds, so no conversion cost
-          case TimestampType | TimestampNTZType => row.getLong(i)
-          case DateType => row.getInt(i).toLong
-          case IntegerType => row.getInt(i).toLong
-          case BooleanType => if (row.getBoolean(i)) 1L else 0L
-          case d: org.apache.spark.sql.types.DecimalType =>
-            row.getDecimal(i, d.precision, d.scale).toUnscaledLong
-          // vectors: copy out to a primitive array (the ArrayData may
-          // be an UnsafeArrayData view into a reused row buffer);
-          // null ELEMENTS reject loudly — the format stores none
-          case org.apache.spark.sql.types.ArrayType(
-              org.apache.spark.sql.types.FloatType, _) =>
-            val ad = row.getArray(i)
-            val m = ad.numElements()
-            val a = new Array[Float](m)
-            var j = 0
-            while (j < m) {
-              require(!ad.isNullAt(j), "gshard: null vector element")
-              a(j) = ad.getFloat(j); j += 1
-            }
-            a
-          case org.apache.spark.sql.types.ArrayType(
-              org.apache.spark.sql.types.DoubleType, _) =>
-            val ad = row.getArray(i)
-            val m = ad.numElements()
-            val a = new Array[Double](m)
-            var j = 0
-            while (j < m) {
-              require(!ad.isNullAt(j), "gshard: null vector element")
-              a(j) = ad.getDouble(j); j += 1
-            }
-            a
-          // string lists: copy each element's UTF-8 bytes out (the
-          // ArrayData may be a view into a reused row buffer)
-          case org.apache.spark.sql.types.ArrayType(
-              org.apache.spark.sql.types.StringType, _) =>
-            val ad = row.getArray(i)
-            val m = ad.numElements()
-            val a = new Array[Array[Byte]](m)
-            var j = 0
-            while (j < m) {
-              require(!ad.isNullAt(j), "gshard: null string-list element")
-              a(j) = ad.getUTF8String(j).getBytes; j += 1
-            }
-            a
-          // token-id lists: primitive copies out of the array view
-          case org.apache.spark.sql.types.ArrayType(
-              org.apache.spark.sql.types.IntegerType, _) =>
-            val ad = row.getArray(i)
-            val m = ad.numElements()
-            val a = new Array[Int](m)
-            var j = 0
-            while (j < m) {
-              require(!ad.isNullAt(j), "gshard: null token-id element")
-              a(j) = ad.getInt(j); j += 1
-            }
-            a
-          case org.apache.spark.sql.types.ArrayType(
-              org.apache.spark.sql.types.LongType, _) =>
-            val ad = row.getArray(i)
-            val m = ad.numElements()
-            val a = new Array[Long](m)
-            var j = 0
-            while (j < m) {
-              require(!ad.isNullAt(j), "gshard: null token-id element")
-              a(j) = ad.getLong(j); j += 1
-            }
-            a
-          case other => throw new IllegalStateException(other.toString)
-        }
+      if (i >= 0) values(j) = ShardFormat.storageValue(row, i, types(j))
       j += 1
     }
     writer.add(values)
@@ -633,13 +546,11 @@ private[shard] class ShardDataWriter(dir: String,
 
   override def commit(): WriterCommitMessage = {
     if (writer == null)
-      return ShardCommitMessage("", 0L, Map.empty, Map.empty,
-        Map.empty, Map.empty, Map.empty)
-    val stats = writer.close()
+      return ShardCommitMessage(ShardFormat.ShardEntry("", 0L, Map.empty,
+        Map.empty))
+    val entry = writer.close()
     writer = null
-    ShardCommitMessage(file, stats.rows, stats.zMin, stats.zMax,
-      stats.sMin, stats.sMax, stats.nullCnt, stats.bloom, stats.bloomBpv,
-      stats.dMin, stats.dMax, stats.sums)
+    ShardCommitMessage(entry)
   }
 
   override def abort(): Unit = ()
@@ -936,7 +847,6 @@ private[shard] class ShardScanBuilder(dir: String,
     case None =>
       new ShardScan(dir, manifest, required, pushed,
         Option(options.get("maxfilespertrigger")).map(_.toInt),
-        Option(options.get("columnar")).forall(_.toBoolean),
         pushedLimit, pushedTopN, onPlan,
         groupFilterOnly = onPlan != null)
   }
@@ -967,7 +877,7 @@ private[shard] class ShardAggScan(dir: String,
           java.lang.Double.doubleToRawLongBits(v.doubleValue())
       },
       answers.map(_._1 == null),
-      answers.map(_._2.typeName)))
+      answers.map(a => ShardFormat.typeTag(a._2))))
 
   override def createReaderFactory(): PartitionReaderFactory =
     new ShardAggReaderFactory
@@ -1004,7 +914,6 @@ private[shard] class ShardAggReaderFactory extends PartitionReaderFactory {
 private[shard] class ShardScan(dir: String, manifest: ShardFormat.Manifest,
     required: StructType, pushed: Array[Filter],
     maxFilesPerTrigger: Option[Int] = None,
-    columnar: Boolean = true,
     limitRows: Option[Int] = None,
     topN: Option[(String, Boolean, Int)] = None,
     onPlan: Seq[String] => Unit = null,
@@ -1014,6 +923,9 @@ private[shard] class ShardScan(dir: String, manifest: ShardFormat.Manifest,
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
+  // every partition decodes columnar, including an empty scan's none
+  override def columnarSupportMode(): Scan.ColumnarSupportMode =
+    Scan.ColumnarSupportMode.SUPPORTED
 
   /** RUNTIME file skipping (the DSv2 dynamic-pruning hook): when this
     * table is the probe side of a join whose build side is selective,
@@ -1214,7 +1126,7 @@ private[shard] class ShardScan(dir: String, manifest: ShardFormat.Manifest,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new ShardReaderFactory(columnar)
+    ShardReaderFactory
 
   // surfaced in explain(): pruning and pushdown are auditable from the
   // plan text, the same way parquet scans surface PushedFilters; bloom
@@ -1324,46 +1236,50 @@ private[shard] class ShardMicroBatchStream(dir: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new ShardReaderFactory
+    ShardReaderFactory
 
   override def commit(end: SOffset): Unit = ()
   override def stop(): Unit = ()
 }
 
 /** Serializable task payload: one shard file + the full file schema
-  * (name, typeName) + the columns to materialize + the pushed
+  * (name, [[ShardFormat.typeTag]]) + the columns to materialize + the pushed
   * conjuncts the reader may use for CHUNK skipping (sound: residual
-  * re-evaluation backs every skip). */
+  * re-evaluation backs every skip). `constants` are (type, Catalyst
+  * value) columns appended after `required`, the same on every row —
+  * the CDC feed's `_change_side` and `_commit_version`. */
 private[shard] final case class ShardInputPartition(path: String,
     fileSchema: Array[(String, String)], required: Array[String],
     filters: Array[Filter] = Array.empty,
-    dvPath: String = null)
+    dvPath: String = null,
+    constants: Seq[(org.apache.spark.sql.types.DataType, Any)] = Nil)
   extends InputPartition
 
-private[shard] class ShardReaderFactory(columnar: Boolean = true)
-    extends PartitionReaderFactory {
+/** gshard scans decode columnar only ([[ShardColumnarReader]]); Spark
+  * adds the one `ColumnarToRow` where a row consumer needs it. */
+private[shard] object ShardReaderFactory extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new ShardPartitionReader(p.asInstanceOf[ShardInputPartition])
-  // VECTORIZED path: the columnar file layout decodes straight into
-  // column vectors — the row reader exists as the escape hatch
-  // (option columnar=false) and for exotic consumers
-  override def supportColumnarReads(p: InputPartition): Boolean = columnar
+    throw new UnsupportedOperationException("gshard scans are columnar")
+  override def supportColumnarReads(p: InputPartition): Boolean = true
   override def createColumnarReader(p: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     new ShardColumnarReader(p.asInstanceOf[ShardInputPartition])
 }
 
-/** Columnar reader: the decoded column arrays refill a fixed set of
-  * 4096-row on-heap vectors batch by batch — downstream operators
-  * consume `ColumnarBatch`es and Spark inserts the one
-  * `ColumnarToRow` transition where rows are genuinely needed,
-  * instead of this reader materializing per-row `InternalRow`s.
-  * NULL slots surface through the vectors' null bits. */
+/** The one gshard decode path: the decoded column arrays refill a
+  * fixed set of 4096-row on-heap vectors batch by batch — downstream
+  * operators consume `ColumnarBatch`es and Spark inserts the one
+  * `ColumnarToRow` transition where rows are genuinely needed. NULL
+  * slots surface through the vectors' null bits. It inverts
+  * [[ShardFormat.storageValue]]. The `_file` metadata column and the
+  * partition's `constants` are `ConstantColumnVector`s, set once per
+  * partition. */
 private[shard] class ShardColumnarReader(p: ShardInputPartition)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
 
-  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-  import org.apache.spark.sql.vectorized.ColumnarBatch
+  import org.apache.spark.sql.execution.vectorized.{ColumnVectorUtils,
+    ConstantColumnVector, OnHeapColumnVector}
+  import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
   private val fileSchema = StructType(p.fileSchema.toIndexedSeq.map {
     case (n, t) => org.apache.spark.sql.types.StructField(n,
@@ -1398,15 +1314,26 @@ private[shard] class ShardColumnarReader(p: ShardInputPartition)
   // synthesized metadata slots)
   private val cols: Array[Array[Any]] =
     dataIdx.map(j => if (j < 0) null else decoded.cols(j))
-  private val fileNameBytes =
-    new java.io.File(p.path).getName.getBytes(
-      java.nio.charset.StandardCharsets.UTF_8)
 
   private val ChunkRows = 4096
-  private val vectors = required.fields
-    .map(f => new OnHeapColumnVector(ChunkRows, f.dataType))
+  // the refilled vectors, null at the constant `_file` slot
+  private val vectors: Array[OnHeapColumnVector] =
+    required.fields.zip(dataIdx).map {
+      case (_, -1) => null
+      case (f, _) => new OnHeapColumnVector(ChunkRows, f.dataType)
+    }
+  private def constant(dt: org.apache.spark.sql.types.DataType,
+      value: Any): ColumnVector = {
+    val v = new ConstantColumnVector(ChunkRows, dt)
+    ColumnVectorUtils.populate(v, InternalRow(value), 0)
+    v
+  }
+  private val fileName =
+    UTF8String.fromString(new java.io.File(p.path).getName)
   private val batch = new ColumnarBatch(
-    vectors.toArray[org.apache.spark.sql.vectorized.ColumnVector])
+    (vectors.toSeq.map(v =>
+      if (v != null) v else constant(StringType, fileName)) ++
+      p.constants.map { case (dt, value) => constant(dt, value) }).toArray)
   private var pos = 0
 
   override def next(): Boolean = {
@@ -1415,243 +1342,130 @@ private[shard] class ShardColumnarReader(p: ShardInputPartition)
     var c = 0
     while (c < vectors.length) {
       val v = vectors(c)
-      v.reset()
-      if (dataIdx(c) == -1) { // synthesized `_file`: one constant
-        var i = 0
-        while (i < n) {
-          v.putByteArray(i, fileNameBytes, 0, fileNameBytes.length)
-          i += 1
-        }
-        c += 1
-      } else if (dataIdx(c) == -2) { // synthesized `_pos`
-        var i = 0
-        while (i < n) {
-          v.putLong(i, decoded.positions(pos + i))
-          i += 1
-        }
-        c += 1
-      } else {
-      required(c).dataType match {
-        // timestamps share the long vector path: the stored micros ARE
-        // the catalyst internal encoding
-        case LongType | TimestampType | TimestampNTZType =>
+      if (v != null) { // null = the constant `_file`
+        v.reset()
+        if (dataIdx(c) == -2) { // synthesized `_pos`
           var i = 0
           while (i < n) {
-            cols(c)(pos + i) match {
-              case null => v.putNull(i)
-              case x => v.putLong(i, x.asInstanceOf[Long])
-            }
+            v.putLong(i, decoded.positions(pos + i))
             i += 1
           }
-        case DateType | IntegerType =>
-          var i = 0
-          while (i < n) {
-            cols(c)(pos + i) match {
-              case null => v.putNull(i)
-              case x => v.putInt(i, x.asInstanceOf[Long].toInt)
-            }
-            i += 1
-          }
-        case BooleanType =>
-          var i = 0
-          while (i < n) {
-            cols(c)(pos + i) match {
-              case null => v.putNull(i)
-              case x => v.putBoolean(i, x.asInstanceOf[Long] != 0L)
-            }
-            i += 1
-          }
-        case d: org.apache.spark.sql.types.DecimalType =>
-          var i = 0
-          while (i < n) {
-            cols(c)(pos + i) match {
-              case null => v.putNull(i)
-              case x => v.putDecimal(i,
-                org.apache.spark.sql.types.Decimal(
-                  x.asInstanceOf[Long], d.precision, d.scale), d.precision)
-            }
-            i += 1
-          }
-        case DoubleType =>
-          var i = 0
-          while (i < n) {
-            cols(c)(pos + i) match {
-              case null => v.putNull(i)
-              case x => v.putDouble(i, x.asInstanceOf[Double])
-            }
-            i += 1
-          }
-        case StringType =>
-          var i = 0
-          while (i < n) {
-            cols(c)(pos + i) match {
-              case null => v.putNull(i)
-              case x =>
-                val b = x.asInstanceOf[Array[Byte]]
-                v.putByteArray(i, b, 0, b.length)
-            }
-            i += 1
-          }
-        // vector columns: elements land in the array vector's CHILD
-        // (reset() above cleared it with the parent), each row's slot
-        // is (offset, length) into that child — the arrow-style
-        // columnar array layout, zero per-row boxing
-        case org.apache.spark.sql.types.ArrayType(et, _) =>
-          val child = v.arrayData()
-          var off = 0
-          var i = 0
-          while (i < n) {
-            cols(c)(pos + i) match {
-              case null => v.putNull(i)
-              case a: Array[Float] =>
-                child.reserve(off + a.length)
-                var j = 0
-                while (j < a.length) {
-                  child.putFloat(off + j, a(j)); j += 1
-                }
-                v.putArray(i, off, a.length)
-                off += a.length
-              case a: Array[Double] =>
-                child.reserve(off + a.length)
-                var j = 0
-                while (j < a.length) {
-                  child.putDouble(off + j, a(j)); j += 1
-                }
-                v.putArray(i, off, a.length)
-                off += a.length
-              case a: Array[Array[Byte]] =>
-                child.reserve(off + a.length)
-                var j = 0
-                while (j < a.length) {
-                  child.putByteArray(off + j, a(j), 0, a(j).length); j += 1
-                }
-                v.putArray(i, off, a.length)
-                off += a.length
-              case a: Array[Int] =>
-                child.reserve(off + a.length)
-                var j = 0
-                while (j < a.length) {
-                  child.putInt(off + j, a(j)); j += 1
-                }
-                v.putArray(i, off, a.length)
-                off += a.length
-              case a: Array[Long] =>
-                child.reserve(off + a.length)
-                var j = 0
-                while (j < a.length) {
-                  child.putLong(off + j, a(j)); j += 1
-                }
-                v.putArray(i, off, a.length)
-                off += a.length
-            }
-            i += 1
-          }
-        case other => throw new IllegalStateException(other.toString)
+        } else fill(v, cols(c), required(c).dataType, n)
       }
       c += 1
-      }
     }
     batch.setNumRows(n)
     pos += n
     true
   }
 
+  /** Rows [pos, pos + n) of the decoded column `col` into `v`. */
+  private def fill(v: OnHeapColumnVector, col: Array[Any],
+      dt: org.apache.spark.sql.types.DataType, n: Int): Unit =
+    dt match {
+      // timestamps share the long vector path: the stored micros ARE
+      // the catalyst internal encoding
+      case LongType | TimestampType | TimestampNTZType =>
+        var i = 0
+        while (i < n) {
+          col(pos + i) match {
+            case null => v.putNull(i)
+            case x => v.putLong(i, x.asInstanceOf[Long])
+          }
+          i += 1
+        }
+      case DateType | IntegerType =>
+        var i = 0
+        while (i < n) {
+          col(pos + i) match {
+            case null => v.putNull(i)
+            case x => v.putInt(i, x.asInstanceOf[Long].toInt)
+          }
+          i += 1
+        }
+      case BooleanType =>
+        var i = 0
+        while (i < n) {
+          col(pos + i) match {
+            case null => v.putNull(i)
+            case x => v.putBoolean(i, x.asInstanceOf[Long] != 0L)
+          }
+          i += 1
+        }
+      case d: org.apache.spark.sql.types.DecimalType =>
+        var i = 0
+        while (i < n) {
+          col(pos + i) match {
+            case null => v.putNull(i)
+            case x => v.putDecimal(i,
+              org.apache.spark.sql.types.Decimal(
+                x.asInstanceOf[Long], d.precision, d.scale), d.precision)
+          }
+          i += 1
+        }
+      case DoubleType =>
+        var i = 0
+        while (i < n) {
+          col(pos + i) match {
+            case null => v.putNull(i)
+            case x => v.putDouble(i, x.asInstanceOf[Double])
+          }
+          i += 1
+        }
+      case StringType =>
+        var i = 0
+        while (i < n) {
+          col(pos + i) match {
+            case null => v.putNull(i)
+            case x =>
+              val b = x.asInstanceOf[Array[Byte]]
+              v.putByteArray(i, b, 0, b.length)
+          }
+          i += 1
+        }
+      // vector columns: elements land in the array vector's CHILD
+      // (reset() above cleared it with the parent), each row's slot
+      // is (offset, length) into that child — the arrow-style
+      // columnar array layout, zero per-row boxing
+      case _: org.apache.spark.sql.types.ArrayType =>
+        val child = v.arrayData()
+        var off = 0
+        var i = 0
+        while (i < n) {
+          col(pos + i) match {
+            case null => v.putNull(i)
+            case a =>
+              val len = a match {
+                case x: Array[Float] =>
+                  child.reserve(off + x.length)
+                  child.putFloats(off, x.length, x, 0); x.length
+                case x: Array[Double] =>
+                  child.reserve(off + x.length)
+                  child.putDoubles(off, x.length, x, 0); x.length
+                case x: Array[Int] =>
+                  child.reserve(off + x.length)
+                  child.putInts(off, x.length, x, 0); x.length
+                case x: Array[Long] =>
+                  child.reserve(off + x.length)
+                  child.putLongs(off, x.length, x, 0); x.length
+                case x: Array[Array[Byte]] =>
+                  child.reserve(off + x.length)
+                  var j = 0
+                  while (j < x.length) {
+                    child.putByteArray(off + j, x(j)); j += 1
+                  }
+                  x.length
+              }
+              v.putArray(i, off, len)
+              off += len
+          }
+          i += 1
+        }
+      case other => throw new IllegalStateException(other.toString)
+    }
+
   override def get(): ColumnarBatch = batch
   override def close(): Unit = batch.close()
-}
-
-private[shard] class ShardPartitionReader(p: ShardInputPartition)
-    extends PartitionReader[InternalRow] {
-
-  private val schema = StructType(p.fileSchema.toIndexedSeq.map {
-    case (n, t) => org.apache.spark.sql.types.StructField(n,
-      ShardFormat.dataTypeOf(t))
-  })
-  private val decoded =
-    ShardFormat.readShardFile(p.path, schema,
-      p.required.filterNot(n => n == "_file" || n == "_pos").toIndexedSeq,
-      p.filters.toIndexedSeq,
-      deleted =
-        if (p.dvPath == null) null else ShardFormat.readDeleteVector(p.dvPath),
-      wantPositions = p.required.contains("_pos"))
-  private val nRows = decoded.nRows
-  // decoded columns re-slotted to required positions (the synthesized
-  // `_file` / `_pos` metadata columns hold no decoded block)
-  private val cols: Array[Array[Any]] = {
-    var j = -1
-    p.required.map(n =>
-      if (n == "_file" || n == "_pos") null else { j += 1; decoded.cols(j) })
-  }
-  private val fileNameUtf8 = UTF8String.fromString(
-    new java.io.File(p.path).getName)
-  // per-column decode kind: 0 pass-through (long/timestamp/double),
-  // 1 string bytes → UTF8String, 2 long → int (date/int), 3 boolean,
-  // 4 unscaled long → Decimal, 5 primitive array → GenericArrayData,
-  // 6 synthesized `_file` constant, 7 synthesized `_pos`
-  private val kind: Array[Int] = p.required.map {
-    case "_file" => 6
-    case "_pos" => 7
-    case n => schema(n).dataType match {
-      case StringType => 1
-      case DateType | IntegerType => 2
-      case BooleanType => 3
-      case _: org.apache.spark.sql.types.DecimalType => 4
-      case _: org.apache.spark.sql.types.ArrayType => 5
-      case _ => 0
-    }
-  }
-  private val decOf: Array[org.apache.spark.sql.types.DecimalType] =
-    p.required.map {
-      case "_file" | "_pos" => null
-      case n => schema(n).dataType match {
-        case d: org.apache.spark.sql.types.DecimalType => d
-        case _ => null
-      }
-    }
-  private var i = -1
-
-  override def next(): Boolean = { i += 1; i < nRows }
-
-  override def get(): InternalRow = {
-    val values = new Array[Any](p.required.length)
-    var c = 0
-    while (c < values.length) {
-      values(c) = if (kind(c) == 6) fileNameUtf8
-      else if (kind(c) == 7) decoded.positions(i)
-      else cols(c)(i) match {
-        case null => null
-        case v => kind(c) match {
-          case 0 => v
-          case 1 => UTF8String.fromBytes(v.asInstanceOf[Array[Byte]])
-          case 2 => v.asInstanceOf[Long].toInt
-          case 3 => v.asInstanceOf[Long] != 0L
-          case 4 => org.apache.spark.sql.types.Decimal(
-            v.asInstanceOf[Long], decOf(c).precision, decOf(c).scale)
-          case 5 => v match { // primitive-array overloads: no boxing
-            case a: Array[Float] =>
-              new org.apache.spark.sql.catalyst.util.GenericArrayData(a)
-            case a: Array[Double] =>
-              new org.apache.spark.sql.catalyst.util.GenericArrayData(a)
-            case a: Array[Int] =>
-              new org.apache.spark.sql.catalyst.util.GenericArrayData(a)
-            case a: Array[Long] =>
-              new org.apache.spark.sql.catalyst.util.GenericArrayData(a)
-            case a: Array[Array[Byte]] =>
-              val u = new Array[Any](a.length)
-              var j = 0
-              while (j < a.length) {
-                u(j) = UTF8String.fromBytes(a(j)); j += 1
-              }
-              new org.apache.spark.sql.catalyst.util.GenericArrayData(u)
-          }
-        }
-      }
-      c += 1
-    }
-    InternalRow.fromSeq(values.toIndexedSeq)
-  }
-
-  override def close(): Unit = ()
 }
 
 /** GROUP-BASED (copy-on-write) row-level operation — the engine
@@ -1771,10 +1585,7 @@ private[shard] class ShardReplaceWrite(dir: String, schema: StructType,
       require(a == b, s"gshard rewrite schema mismatch: " +
         s"table=${head.schema.catalogString} write=${schema.catalogString}")
       val fresh = messages.collect {
-        case m: ShardCommitMessage if m.rows > 0 =>
-          ShardFormat.ShardEntry(m.file, m.rows, m.mins, m.maxs,
-            m.sMins, m.sMaxs, m.nulls, m.blooms, m.bloomBpv,
-            m.dMins, m.dMaxs, m.sums)
+        case m: ShardCommitMessage if m.entry.rows > 0 => m.entry
       }.sortBy(_.file).toSeq
       val plannedSet = planned.toSet
       val keep = head.entries.filterNot(e => plannedSet(e.file))
@@ -1788,7 +1599,7 @@ private[shard] class ShardReplaceWrite(dir: String, schema: StructType,
     override def abort(messages: Array[WriterCommitMessage]): Unit =
       messages.collect { case m: ShardCommitMessage =>
         java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(dir, m.file))
+          java.nio.file.Paths.get(dir, m.entry.file))
       }
   }
 }

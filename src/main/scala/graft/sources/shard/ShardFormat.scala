@@ -8,8 +8,10 @@ import java.util.Base64
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan,
   GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
@@ -243,23 +245,19 @@ object ShardFormat {
   }
 
   private val DecimalTag = """decimal_(\d+)_(\d+)""".r
-  // Spark's DataType.typeName spelling (task payloads serialize it)
-  private val DecimalTypeName = """decimal\((\d+),(\d+)\)""".r
 
-  /** Tag → type; accepts both the manifest tags and Spark's
-    * `DataType.typeName` spellings (the task payloads serialize the
-    * latter). */
+  /** Tag → type, the inverse of [[typeTag]]: manifests and task
+    * payloads spell every type by its tag. */
   private[shard] def dataTypeOf(tag: String): DataType = tag match {
     case "long" => LongType
     case "double" => DoubleType
     case "string" => StringType
     case "timestamp" => TimestampType
-    case "timestampntz" | "timestamp_ntz" => TimestampNTZType
+    case "timestampntz" => TimestampNTZType
     case "date" => DateType
-    case "int" | "integer" => IntegerType
+    case "int" => IntegerType
     case "boolean" => BooleanType
     case DecimalTag(p, s) => DecimalType(p.toInt, s.toInt)
-    case DecimalTypeName(p, s) => DecimalType(p.toInt, s.toInt)
     // write-time enforcement of no-null-elements makes containsNull =
     // false the honest read schema (tighter codegen downstream)
     case "vecf" => ArrayType(FloatType, containsNull = false)
@@ -373,7 +371,13 @@ object ShardFormat {
     * columns as (min, max) longs, string columns as base64(UTF-8)
     * bounds in unsigned-byte order. A column ABSENT from the maps
     * held no non-null value in the file (or predates the map);
-    * pruning keeps such files. */
+    * pruning keeps such files. `nullCnt` carries EVERY column (zero
+    * included): a column absent from it means the count is UNKNOWN (a
+    * pre-nullcount manifest), which delete coverage treats as
+    * not-provably-null-free. `bloomBpv` records each bloom's ACHIEVED
+    * bits-per-value — the sizing audit that makes a capped
+    * (degraded-FP) bloom visible instead of silently admitting
+    * everything. */
   /** `dv` — the file's DELETE VECTOR (merge-on-read row-level
     * deletes): `Some((sidecarName, deletedCount))` when a position-
     * delete sidecar masks rows of this file at read time. `rows`
@@ -423,23 +427,6 @@ object ShardFormat {
       lastTxn: Long = -1L, txns: Map[String, Long] = Map.empty,
       gen: Long = 0L, changes: Seq[(String, Long)] = Seq.empty,
       cdf: Boolean = false)
-
-  /** Per-file writer stats, reported from tasks to the manifest.
-    * `nullCnt` carries EVERY column (zero included): a column absent
-    * from an entry's map means the count is UNKNOWN (a pre-nullcount
-    * manifest), which delete coverage treats as not-provably-null-free.
-    * `bloomBpv` records each bloom's ACHIEVED bits-per-value — the
-    * sizing audit that makes a capped (degraded-FP) bloom visible in
-    * the manifest instead of silently admitting everything. */
-  final case class ShardStats(rows: Long,
-      zMin: Map[String, Long], zMax: Map[String, Long],
-      sMin: Map[String, String], sMax: Map[String, String],
-      nullCnt: Map[String, Long],
-      bloom: Map[String, String] = Map.empty,
-      bloomBpv: Map[String, Long] = Map.empty,
-      dMin: Map[String, Double] = Map.empty,
-      dMax: Map[String, Double] = Map.empty,
-      sums: Map[String, Long] = Map.empty)
 
   /** Per-file BLOOM filters for point lookups on columns the range
     * clustering does NOT order — where zone maps cannot prune because
@@ -679,8 +666,8 @@ object ShardFormat {
   private[shard] val MaxChunkStringBound = 64
 
   /** Write `df` as `nShards` range-clustered shard files + manifest.
-    * `rangeCol` must be a non-null long column; all columns
-    * long/double/string (nullable — nulls roundtrip exactly). */
+    * `rangeCol` must be a non-null long column; every column must have
+    * a [[typeTag]] (nullable — nulls roundtrip exactly). */
   def write(df: DataFrame, dir: String, rangeCol: String,
       nShards: Int, chunkRows: Int = DefaultChunkRows): Manifest = {
     val schema = df.schema
@@ -783,13 +770,14 @@ object ShardFormat {
 
   /** One range shuffle on the storage-long `rk` into `nShards` shard
     * ids of equal width over [lo, hi] (clamped), sorted within shard by
-    * `sortCols`, each task streaming its rows through `task`; only the
-    * per-file stat rows return to the driver. */
+    * `sortCols`, each task streaming its Catalyst rows through `task`
+    * (one SQL execution, so listeners see the write like any action);
+    * only the manifest entries return to the driver. */
   private def clusteredWrite(df: DataFrame, rk: Column, lo: Long, hi: Long,
       nShards: Int, sortCols: Seq[Column])(
-      task: Iterator[Row] => Iterator[StatRow]): Seq[ShardEntry] = {
+      task: Iterator[InternalRow] => Iterator[ShardEntry]): Seq[ShardEntry] = {
     val width = math.max(1L, (hi - lo) / nShards + 1)
-    df
+    val clustered = df
       // integer DIV, not double division: a double quotient loses
       // exactness past 2^53 and would misassign shards at key scale;
       // a NULL key stays NULL (the task rejects it loudly)
@@ -800,29 +788,8 @@ object ShardFormat {
       .drop("__rk")
       .repartition(nShards, col("__shard"))
       .sortWithinPartitions(col("__shard") +: sortCols: _*)
-      .mapPartitions(task)(Encoders.stats)
-      .collect()
-      .sortBy(_._1).map {
-        case (file, rows, mins, maxs, smins, smaxs, nulls, dmins, dmaxs,
-            sums, blooms, bpvs) =>
-          ShardEntry(file, rows, mins, maxs, smins, smaxs, nulls,
-            bloom = blooms, bloomBpv = bpvs,
-            dMin = dmins, dMax = dmaxs, sums = sums)
-      }.toSeq
-  }
-
-  /** A writer task's per-file stats: (file, rows, long zone maps, string
-    * zone maps, null counts, double zone maps, sums, blooms, bloom
-    * bits-per-value). */
-  private type StatRow = (String, Long, Map[String, Long], Map[String, Long],
-    Map[String, String], Map[String, String], Map[String, Long],
-    Map[String, Double], Map[String, Double], Map[String, Long],
-    Map[String, String], Map[String, Long])
-
-  private object Encoders {
-    import org.apache.spark.sql.Encoder
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-    implicit val stats: Encoder[StatRow] = ExpressionEncoder()
+    PlanBridge.collectPartitions(clustered, "gshard write")(task)
+      .sortBy(_.file).toSeq
   }
 
   /** A storage value as Spark's grouping sees it — −0.0 as 0.0, every
@@ -846,13 +813,14 @@ object ShardFormat {
     * visible columns leaves its net count in the shard's change file —
     * held as one row and a counter, never the run itself. */
   private def writeTaskShards(
-      it: Iterator[Row], dir: String, schema: StructType, chunkRows: Int,
-      prefix: String = "", bloomCols: Set[String] = Set.empty,
+      it: Iterator[InternalRow], dir: String, schema: StructType,
+      chunkRows: Int, prefix: String = "", bloomCols: Set[String] = Set.empty,
       namePrefix: String = "part-", capture: Boolean = false)
-      : Iterator[StatRow] = {
+      : Iterator[ShardEntry] = {
     val nCols = schema.length
+    val types = schema.fields.map(_.dataType)
     val shardAt = if (capture) nCols + 1 else nCols
-    val out = mutable.ArrayBuffer.empty[StatRow]
+    val out = mutable.ArrayBuffer.empty[ShardEntry]
     val visIdx = schema.fields.indices
       .filterNot(i => isTombstone(schema(i).name)).toArray
     val chgSchema = StructType(visIdx.map(schema(_)).toSeq :+
@@ -864,13 +832,10 @@ object ShardFormat {
     // the current group's canonical visible cells and its net side count
     var group: Array[Any] = null
     var net = 0L
-    def fileName(pre: String) = f"$pre$shard%05d.gshard"
-    def close(w: ShardFileWriter, file: String): Unit = {
-      val stats = w.close()
-      if (stats.rows > 0)
-        out += ((file, stats.rows, stats.zMin, stats.zMax,
-          stats.sMin, stats.sMax, stats.nullCnt, stats.dMin, stats.dMax,
-          stats.sums, stats.bloom, stats.bloomBpv))
+    def fileName(pre: String) = f"$dir/$pre$shard%05d.gshard"
+    def close(w: ShardFileWriter): Unit = {
+      val e = w.close()
+      if (e.rows > 0) out += e
     }
     def flushGroup(): Unit = {
       if (net != 0L) {
@@ -881,11 +846,8 @@ object ShardFormat {
       group = null; net = 0L
     }
     def flush(): Unit = if (writer != null) {
-      close(writer, fileName(namePrefix + prefix))
-      if (capture) {
-        flushGroup()
-        close(chgWriter, fileName(s"${ChangePrefix}c$prefix"))
-      }
+      close(writer)
+      if (capture) { flushGroup(); close(chgWriter) }
       writer = null
     }
     it.foreach { r =>
@@ -894,74 +856,14 @@ object ShardFormat {
       val s = r.getInt(shardAt) // trailing __shard column
       if (s != shard) {
         flush(); shard = s
-        writer = new ShardFileWriter(s"$dir/${fileName(namePrefix + prefix)}",
-          schema, chunkRows, bloomCols)
+        writer = new ShardFileWriter(fileName(namePrefix + prefix), schema,
+          chunkRows, bloomCols)
         if (capture) chgWriter = new ShardFileWriter(
-          s"$dir/${fileName(s"${ChangePrefix}c$prefix")}", chgSchema, chunkRows)
+          fileName(s"${ChangePrefix}c$prefix"), chgSchema, chunkRows)
       }
       val values = new Array[Any](nCols)
       var i = 0
-      while (i < nCols) {
-        values(i) =
-          if (r.isNullAt(i)) null
-          else schema(i).dataType match {
-            case LongType => r.getLong(i)
-            case DoubleType => r.getDouble(i)
-            case StringType => r.getString(i).getBytes(StandardCharsets.UTF_8)
-            case ArrayType(FloatType, _) =>
-              val s = r.getSeq[Any](i)
-              val a = new Array[Float](s.length)
-              var j = 0
-              s.foreach { e =>
-                require(e != null, "gshard: null vector element")
-                a(j) = e.asInstanceOf[Float]; j += 1
-              }
-              a
-            case ArrayType(DoubleType, _) =>
-              val s = r.getSeq[Any](i)
-              val a = new Array[Double](s.length)
-              var j = 0
-              s.foreach { e =>
-                require(e != null, "gshard: null vector element")
-                a(j) = e.asInstanceOf[Double]; j += 1
-              }
-              a
-            case ArrayType(StringType, _) =>
-              val s = r.getSeq[Any](i)
-              val a = new Array[Array[Byte]](s.length)
-              var j = 0
-              s.foreach { e =>
-                require(e != null, "gshard: null string-list element")
-                a(j) = e.asInstanceOf[String]
-                  .getBytes(StandardCharsets.UTF_8)
-                j += 1
-              }
-              a
-            case ArrayType(IntegerType, _) =>
-              val s = r.getSeq[Any](i)
-              val a = new Array[Int](s.length)
-              var j = 0
-              s.foreach { e =>
-                require(e != null, "gshard: null token-id element")
-                a(j) = e.asInstanceOf[Int]; j += 1
-              }
-              a
-            case ArrayType(LongType, _) =>
-              val s = r.getSeq[Any](i)
-              val a = new Array[Long](s.length)
-              var j = 0
-              s.foreach { e =>
-                require(e != null, "gshard: null token-id element")
-                a(j) = e.asInstanceOf[Long]; j += 1
-              }
-              a
-            case dt if physicallyLong(dt) =>
-              toPhysLong(dt, r.get(i)).getOrElse(throw new IllegalStateException(
-                s"gshard: can't encode ${r.get(i)} as $dt"))
-            case other => throw new IllegalStateException(other.toString)
-          }
-        i += 1
-      }
+      while (i < nCols) { values(i) = storageValue(r, i, types(i)); i += 1 }
       if (!capture) writer.add(values)
       else {
         val cells = visIdx.map(i => canonical(values(i)))
@@ -978,13 +880,64 @@ object ShardFormat {
     out.iterator
   }
 
+  /** THE STORAGE-VALUE CONTRACT — the one map from a Spark cell to the
+    * value [[ShardFileWriter.add]] takes, called by both writers (the
+    * DSv2 [[ShardDataWriter]] and [[writeTaskShards]]). The input is
+    * Catalyst's internal encoding, which the long block already
+    * matches for every logical type:
+    *  - NULL → `null` (the block's null bitmap);
+    *  - long, timestamp, timestamp_ntz (micros), date (days), int,
+    *    boolean (0/1), decimal(p ≤ 18) (the unscaled value) → `Long`;
+    *  - double → `Double`;
+    *  - string → its UTF-8 `Array[Byte]`;
+    *  - array<float|double|int|long> → a primitive array of the element
+    *    type, array<string> → `Array[Array[Byte]]`; a NULL ELEMENT
+    *    rejects (the list blocks are offset-only).
+    * Every value is copied out, so a reused `UnsafeRow` buffer may be
+    * overwritten after the call. [[ShardColumnarReader]] is the inverse:
+    * it decodes the same values into Catalyst column vectors. */
+  private[shard] def storageValue(row: InternalRow, i: Int,
+      dt: DataType): Any =
+    if (row.isNullAt(i)) null
+    else dt match {
+      case LongType | TimestampType | TimestampNTZType => row.getLong(i)
+      case DateType | IntegerType => row.getInt(i).toLong
+      case BooleanType => if (row.getBoolean(i)) 1L else 0L
+      case d: DecimalType =>
+        row.getDecimal(i, d.precision, d.scale).toUnscaledLong
+      case DoubleType => row.getDouble(i)
+      case StringType => row.getUTF8String(i).getBytes
+      case ArrayType(et, _) =>
+        val a = row.getArray(i)
+        val n = a.numElements()
+        var j = 0
+        while (j < n) {
+          require(!a.isNullAt(j), s"gshard: null ${et match {
+            case FloatType | DoubleType => "vector"
+            case StringType => "string-list"
+            case _ => "token-id"
+          }} element")
+          j += 1
+        }
+        et match {
+          case FloatType => a.toFloatArray()
+          case DoubleType => a.toDoubleArray()
+          case IntegerType => a.toIntArray()
+          case LongType => a.toLongArray()
+          case StringType => Array.tabulate(n)(a.getUTF8String(_).getBytes)
+          case other => throw new IllegalStateException(other.toString)
+        }
+      case other => throw new IllegalStateException(other.toString)
+    }
+
   /** Streaming chunked shard-file writer: callers [[add]] one row at a
-    * time as `Array[Any]` (Long / Double / UTF-8 `Array[Byte]` / null
-    * per the schema); a chunk flushes to disk every `chunkRows` rows,
+    * time as `Array[Any]` of storage values ([[storageValue]]); a chunk
+    * flushes to disk every `chunkRows` rows,
     * so writer memory is bounded by the chunk, not the shard — the
     * property that lets a DSv2 write task emit an arbitrarily large
-    * range partition. [[close]] returns the file-level zone maps
-    * (non-null values only; an all-null column is absent from them).
+    * range partition. [[close]] returns the file's manifest entry with
+    * its zone maps (non-null values only; an all-null column is absent
+    * from them).
     */
   private[shard] final class ShardFileWriter(path: String,
       schema: StructType, chunkRows: Int = DefaultChunkRows,
@@ -1602,9 +1555,9 @@ object ShardFormat {
       buf.clear()
     }
 
-    /** Flush the tail chunk and return the file's stats. A writer that
-      * never saw a row leaves NO file behind (rows=0). */
-    def close(): ShardStats = {
+    /** Flush the tail chunk and return the file's manifest entry. A
+      * writer that never saw a row leaves NO file behind (rows=0). */
+    def close(): ShardEntry = {
       flushChunk()
       if (dos != null) dos.close()
       val zMin = longIdx.indices.collect {
@@ -1643,10 +1596,9 @@ object ShardFormat {
           Some((schema(i).name, b64(bits), 8L * bits.length / log.size))
         }
       }
-      ShardStats(totalRows, zMin, zMax, sMin, sMax, nulls,
-        built.map(t => t._1 -> t._2).toMap,
-        built.map(t => t._1 -> t._3).toMap,
-        dMin, dMax, sums)
+      ShardEntry(Paths.get(path).getFileName.toString, totalRows, zMin, zMax,
+        sMin, sMax, nulls, built.map(t => t._1 -> t._2).toMap,
+        built.map(t => t._1 -> t._3).toMap, dMin, dMax, sums)
     }
   }
 

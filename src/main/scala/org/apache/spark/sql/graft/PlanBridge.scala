@@ -1,8 +1,12 @@
 package org.apache.spark.sql.graft
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
+import org.apache.spark.sql.execution.SQLExecution
 
 /** Bridge from a raw Catalyst [[LogicalPlan]] to a public DataFrame —
   * the `Dataset.ofRows` constructor is `private[sql]` in Spark 4, so
@@ -30,4 +34,16 @@ object PlanBridge {
     * delivered (`listenerBus` is `private[spark]`). */
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** Run `f` over each partition of `df`'s Catalyst rows and collect
+    * the results: one SQL execution named `name`, like a Dataset
+    * action, but with no conversion to external `Row`s. The rows may be
+    * one reused buffer, so `f` must copy out what it keeps. */
+  def collectPartitions[T: ClassTag](df: DataFrame, name: String)(
+      f: Iterator[InternalRow] => Iterator[T]): Array[T] = {
+    val qe = df.asInstanceOf[classic.Dataset[_]].queryExecution
+    SQLExecution.withNewExecutionId(qe, Some(name)) {
+      qe.toRdd.mapPartitions(f).collect()
+    }
+  }
 }

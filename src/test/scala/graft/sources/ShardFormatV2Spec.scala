@@ -6,15 +6,14 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.SparkSpec
 import graft.sources.shard.ShardFormat
 
 /** The gshard v2 format contract: NULL roundtrip through the null
-  * bitmaps (both reader paths), chunked row groups with bounded
+  * bitmaps, chunked row groups with bounded
   * writer memory and intra-file chunk skipping, string zone maps with
   * file pruning, replay-idempotent txn appends, the per-trigger
   * manifest cache, and the EOF-safe skip on corrupt files. */
-class ShardFormatV2Spec extends SparkSpec {
+class ShardFormatV2Spec extends ShardTempRoot {
 
   // ── nulls ──────────────────────────────────────────────────────────
 
@@ -38,27 +37,25 @@ class ShardFormatV2Spec extends SparkSpec {
           if (r.isNullAt(3)) None else Some(r.getDouble(3)))
       }.toSet
 
-  test("nulls roundtrip exactly through the manual writer, both reader paths") {
-    val d = Files.createTempDirectory("graft_gshard_null_").toString
+  test("nulls roundtrip exactly through the manual writer") {
+    val d = tmp("graft_gshard_null_")
     ShardFormat.write(nullable, d, "user_id", 6)
     val want = rowsOf(nullable)
     assert(want.exists(_._2.isEmpty) && want.exists(_._3.isEmpty) &&
       want.exists(_._4.isEmpty), "degenerate: no nulls in the fixture")
-    val viaColumnar = spark.read.format("gshard").load(d)
-    val viaRow = spark.read.format("gshard").option("columnar", "false").load(d)
-    assert(rowsOf(viaColumnar) == want, "vectorized path corrupted nulls")
-    assert(rowsOf(viaRow) == want, "row path corrupted nulls")
+    assert(rowsOf(spark.read.format("gshard").load(d)) == want,
+      "the columnar reader corrupted nulls")
   }
 
   test("nulls roundtrip exactly through the DSv2 write path") {
-    val d = Files.createTempDirectory("graft_gshard_nullw_").toString
+    val d = tmp("graft_gshard_nullw_")
     nullable.write.format("gshard").option("rangecol", "user_id")
       .option("shards", 6).mode("overwrite").save(d)
     assert(rowsOf(spark.read.format("gshard").load(d)) == rowsOf(nullable))
   }
 
   test("zone maps cover only non-null values; null-heavy skipping stays sound") {
-    val d = Files.createTempDirectory("graft_gshard_nullz_").toString
+    val d = tmp("graft_gshard_nullz_")
     ShardFormat.write(nullable, d, "user_id", 6)
     val m = ShardFormat.readManifest(d)
     // cents has nulls but also values in every shard at this SF: the
@@ -74,7 +71,7 @@ class ShardFormatV2Spec extends SparkSpec {
   test("metadata-only min/max ignore nulls; an all-null column answers NULL") {
     val sess = spark
     import sess.implicits._
-    val d = Files.createTempDirectory("graft_gshard_nullagg_").toString
+    val d = tmp("graft_gshard_nullagg_")
     val df = Seq((1L, Option.empty[Long]), (2L, Option.empty[Long]),
       (3L, Option.empty[Long])).toDF("k", "v")
     df.write.format("gshard").option("rangecol", "k").option("shards", 1)
@@ -93,7 +90,7 @@ class ShardFormatV2Spec extends SparkSpec {
     val sess = spark
     import sess.implicits._
     val df = Seq((Option.empty[Long], 1L), (Some(2L), 2L)).toDF("k", "v")
-    val d = Files.createTempDirectory("graft_gshard_nullrc_").toString
+    val d = tmp("graft_gshard_nullrc_")
     val e = intercept[org.apache.spark.SparkException] {
       ShardFormat.write(df, d, "k", 2)
     }
@@ -105,7 +102,7 @@ class ShardFormatV2Spec extends SparkSpec {
   // ── chunked row groups ─────────────────────────────────────────────
 
   test("chunked writer: bounded memory, multiple chunks, byte-equal roundtrip") {
-    val d = Files.createTempDirectory("graft_gshard_chunks_").toString
+    val d = tmp("graft_gshard_chunks_")
     val li = tables.lineitem.select(col("l_orderkey"), col("l_returnflag"),
       floor(col("l_extendedprice") * 100 + lit(0.5)).cast("long").as("cents"))
     // one shard ≫ chunk size: the writer must flush per 512 rows, so
@@ -128,7 +125,7 @@ class ShardFormatV2Spec extends SparkSpec {
   }
 
   test("point lookups read fewer chunks than the file holds (chunk skipping)") {
-    val d = Files.createTempDirectory("graft_gshard_cskip_").toString
+    val d = tmp("graft_gshard_cskip_")
     val li = tables.lineitem.select(col("l_orderkey"),
       floor(col("l_extendedprice") * 100 + lit(0.5)).cast("long").as("cents"))
     ShardFormat.write(li, d, "l_orderkey", 1, chunkRows = 512)
@@ -157,7 +154,7 @@ class ShardFormatV2Spec extends SparkSpec {
   }
 
   test("DSv2 chunkrows option streams multi-chunk files") {
-    val d = Files.createTempDirectory("graft_gshard_wchunk_").toString
+    val d = tmp("graft_gshard_wchunk_")
     val li = tables.lineitem.select(col("l_orderkey"),
       floor(col("l_extendedprice") * 100 + lit(0.5)).cast("long").as("cents"))
     li.write.format("gshard").option("rangecol", "l_orderkey")
@@ -180,7 +177,7 @@ class ShardFormatV2Spec extends SparkSpec {
       floor(col("value") * 100 + lit(0.5)).cast("long").as("cents"))
 
   test("manifest carries string zone maps in unsigned-byte order") {
-    val d = Files.createTempDirectory("graft_gshard_str_").toString
+    val d = tmp("graft_gshard_str_")
     ShardFormat.write(tagged, d, "user_id", 8)
     val m = ShardFormat.readManifest(d)
     m.entries.foreach { e =>
@@ -196,7 +193,7 @@ class ShardFormatV2Spec extends SparkSpec {
   }
 
   test("string predicates prune files at planning time, values exact") {
-    val d = Files.createTempDirectory("graft_gshard_strp_").toString
+    val d = tmp("graft_gshard_strp_")
     ShardFormat.write(tagged, d, "user_id", 8)
     val m = ShardFormat.readManifest(d)
     assert(m.entries.size >= 4, "degenerate: too few files")
@@ -214,7 +211,7 @@ class ShardFormatV2Spec extends SparkSpec {
   }
 
   test("string skipping is sound for every comparison shape") {
-    val d = Files.createTempDirectory("graft_gshard_strs_").toString
+    val d = tmp("graft_gshard_strs_")
     ShardFormat.write(tagged, d, "user_id", 8)
     val via = spark.read.format("gshard").load(d)
     val mid = tagged.agg(max(col("user_tag"))).head.getString(0)
@@ -236,7 +233,7 @@ class ShardFormatV2Spec extends SparkSpec {
   // ── txn idempotence ────────────────────────────────────────────────
 
   test("a replayed txnid append is a no-op with no orphan files") {
-    val d = Files.createTempDirectory("graft_gshard_txn_").toString
+    val d = tmp("graft_gshard_txn_")
     val ev = tagged.select(col("user_id"), col("cents"))
     def append(txn: Long, half: Int): Unit =
       ev.filter(col("user_id") % 2 === half).write.format("gshard")
@@ -267,7 +264,7 @@ class ShardFormatV2Spec extends SparkSpec {
   // ── manifest caching in the streaming source ───────────────────────
 
   test("the streaming source reads the manifest O(1) times per drain, not per call") {
-    val d = Files.createTempDirectory("graft_gshard_mcache_").toString
+    val d = tmp("graft_gshard_mcache_")
     tagged.select(col("user_id"), col("cents")).write.format("gshard")
       .option("rangecol", "user_id").option("shards", 8)
       .mode("overwrite").save(d)
@@ -297,7 +294,7 @@ class ShardFormatV2Spec extends SparkSpec {
   // ── corruption safety ──────────────────────────────────────────────
 
   test("a truncated shard file fails loudly instead of hanging") {
-    val d = Files.createTempDirectory("graft_gshard_trunc_").toString
+    val d = tmp("graft_gshard_trunc_")
     ShardFormat.write(tagged, d, "user_id", 1, chunkRows = 512)
     val m = ShardFormat.readManifest(d)
     val f = Paths.get(d, m.entries.head.file)
@@ -315,7 +312,7 @@ class ShardFormatV2Spec extends SparkSpec {
   // ── bloom filters ──────────────────────────────────────────────────
 
   test("blooms have NO false negatives and genuinely prune mid-range ids") {
-    val dir = Files.createTempDirectory("gshard_bloom_spec_").toString
+    val dir = tmp("gshard_bloom_spec_")
     val proj = tables.events.select(col("user_id"), col("event_id"))
     proj.write.format("gshard").option("rangecol", "user_id")
       .option("shards", 8).option("bloomcol", "event_id")
@@ -353,7 +350,7 @@ class ShardFormatV2Spec extends SparkSpec {
 
   test("low-cardinality string chunks dictionary-encode; exact roundtrip " +
       "through both reader paths; high-cardinality stays plain") {
-    val dir = Files.createTempDirectory("gshard_dict_").toString
+    val dir = tmp("gshard_dict_")
     // 30-byte tags from a 5-value set over the events slice: a plain
     // chunk costs ≥30 B/row, the dictionary costs ~1 B/row + 150 B once
     val src = tables.events.select(col("user_id"),
@@ -374,19 +371,17 @@ class ShardFormatV2Spec extends SparkSpec {
     // in well under that — only the dictionary can achieve it
     assert(total < 30L * n,
       s"dictionary never engaged: $total bytes for $n rows")
-    // value-exact roundtrip, vectorized AND row paths
-    def read(columnar: Boolean) = spark.read.format("gshard")
-      .option("columnar", columnar.toString).load(dir)
+    // value-exact roundtrip against the input frame
+    val got = spark.read.format("gshard").load(dir)
       .select(col("user_id"), col("tag"), col("nullable_tag"))
       .collect().map(r => (r.getLong(0), r.getString(1),
         Option(r.getString(2)))).toSet
     val want = src.collect().map(r => (r.getLong(0), r.getString(1),
       Option(r.getString(2)))).toSet
-    assert(read(columnar = true) == want)
-    assert(read(columnar = false) == want)
+    assert(got == want)
     // high-cardinality strings must NOT pay the dictionary probe's
     // failure: md5 tags (all distinct) still roundtrip exactly
-    val dir2 = Files.createTempDirectory("gshard_plain_").toString
+    val dir2 = tmp("gshard_plain_")
     val hi = tables.events.select(col("user_id"),
       md5(col("event_id").cast("string")).as("tag"))
     hi.write.format("gshard").option("rangecol", "user_id")
@@ -397,4 +392,6 @@ class ShardFormatV2Spec extends SparkSpec {
     assert(got2 == hi.collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet)
   }
+
+  leavesNoTempDirs()
 }

@@ -6,7 +6,6 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.SparkSpec
 import graft.sources.shard.ShardFormat
 
 /** The gshard v3 format contract on top of v2's (ShardFormatV2Spec):
@@ -19,7 +18,7 @@ import graft.sources.shard.ShardFormat
   * namespacing (independent writers never dedupe each other), the
   * truncate-bypasses-replay rule, and the loud rejection of v1/v2
   * manifests. */
-class ShardFormatV3Spec extends SparkSpec {
+class ShardFormatV3Spec extends ShardTempRoot {
 
   // ── widened type surface ───────────────────────────────────────────
 
@@ -52,16 +51,15 @@ class ShardFormatV3Spec extends SparkSpec {
       want.exists(_._4.isEmpty) && want.exists(_._5.isEmpty),
       "degenerate: no nulls planted")
     // DSv2 write path
-    val d1 = Files.createTempDirectory("gshard_typed_w_").toString
+    val d1 = tmp("gshard_typed_w_")
     typed.write.format("gshard").option("rangecol", "event_id")
       .option("shards", 6).mode("overwrite").save(d1)
-    // manual (Row-based) write path
-    val d2 = Files.createTempDirectory("gshard_typed_m_").toString
+    // manual (ShardFormat.write) path
+    val d2 = tmp("gshard_typed_m_")
     ShardFormat.write(typed, d2, "event_id", 6)
-    for (d <- Seq(d1, d2); columnar <- Seq(true, false)) {
-      val got = rowsOf(spark.read.format("gshard")
-        .option("columnar", columnar.toString).load(d))
-      assert(got == want, s"divergence: dir=$d columnar=$columnar")
+    for (d <- Seq(d1, d2)) {
+      val got = rowsOf(spark.read.format("gshard").load(d))
+      assert(got == want, s"divergence: dir=$d")
     }
     // the manifest schema line carries the logical tags
     val m = ShardFormat.readManifest(d1)
@@ -72,7 +70,7 @@ class ShardFormatV3Spec extends SparkSpec {
   }
 
   test("a TIMESTAMP predicate prunes files off micros zone maps, exact") {
-    val d = Files.createTempDirectory("gshard_typed_p_").toString
+    val d = tmp("gshard_typed_p_")
     // ts correlates with event_id in the corpus, so range clustering
     // on event_id separates the micros bounds across files
     typed.filter(col("ts").isNotNull).write.format("gshard")
@@ -102,7 +100,7 @@ class ShardFormatV3Spec extends SparkSpec {
 
   test("DECIMAL(p≤18, s) rides the long block: exact roundtrip with " +
       "nulls, both reader paths, zone pruning, filter normalization") {
-    val d = Files.createTempDirectory("gshard_dec_").toString
+    val d = tmp("gshard_dec_")
     // exact cents → DECIMAL(12,2): unscaled = the cents themselves
     val src = tables.events.select(col("event_id"),
       when(col("event_id") % 6 =!= 0,
@@ -116,11 +114,7 @@ class ShardFormatV3Spec extends SparkSpec {
       (r.getLong(0), Option(r.getDecimal(1)).map(_.toPlainString))).toSet
     val want = rows(src)
     assert(want.exists(_._2.isEmpty), "degenerate: no nulls planted")
-    for (columnar <- Seq(true, false)) {
-      val got = rows(spark.read.format("gshard")
-        .option("columnar", columnar.toString).load(d))
-      assert(got == want, s"columnar=$columnar diverged")
-    }
+    assert(rows(spark.read.format("gshard").load(d)) == want)
     // a decimal predicate normalizes to the unscaled-long domain and
     // stays value-exact; unscaled zone maps exist in the manifest
     assert(m.entries.exists(_.zMin.contains("price")))
@@ -137,7 +131,7 @@ class ShardFormatV3Spec extends SparkSpec {
   }
 
   test("IsNull/IsNotNull prune files off the manifest null counts") {
-    val d = Files.createTempDirectory("gshard_nullskip_").toString
+    val d = tmp("gshard_nullskip_")
     // cluster on event_id so null-ness of `v` SEPARATES by file: the
     // low event range is all-null, the high range null-free
     val src = tables.events.select(col("event_id"),
@@ -168,7 +162,7 @@ class ShardFormatV3Spec extends SparkSpec {
 
   test("typed metadata-only min/max: timestamp/date/int answers come " +
       "back in their logical types, zero files read") {
-    val d = Files.createTempDirectory("gshard_typedagg_").toString
+    val d = tmp("gshard_typedagg_")
     tables.events.select(col("event_id"), col("ts"),
         col("ts").cast("date").as("day"), hour(col("ts")).as("hh"))
       .write.format("gshard").option("rangecol", "event_id")
@@ -195,7 +189,7 @@ class ShardFormatV3Spec extends SparkSpec {
   // ── chunk-level string zone maps ───────────────────────────────────
 
   test("a string predicate skips CHUNKS inside a surviving file, exact") {
-    val d = Files.createTempDirectory("gshard_strchunk_").toString
+    val d = tmp("gshard_strchunk_")
     // one file, many chunks; tag clusters with the range column so
     // per-chunk string bounds genuinely separate
     val df = tables.events.select(col("user_id"),
@@ -222,7 +216,7 @@ class ShardFormatV3Spec extends SparkSpec {
   }
 
   test("oversized string bounds degrade to admit-always, never unsound") {
-    val d = Files.createTempDirectory("gshard_strbig_").toString
+    val d = tmp("gshard_strbig_")
     val df = tables.events.limit(2000).select(col("user_id"),
       // > 64-byte values: the chunk slots must write hasValues=0
       concat(format_string("u%06d", col("user_id")),
@@ -252,7 +246,7 @@ class ShardFormatV3Spec extends SparkSpec {
     val n = 50000
     val df = spark.range(n.toLong).select(col("id").as("k"),
       xxhash64(col("id")).as("noise"))
-    val d = Files.createTempDirectory("gshard_delta_").toString
+    val d = tmp("gshard_delta_")
     ShardFormat.write(df, d, "k", 1, chunkRows = 8192)
     val m = ShardFormat.readManifest(d)
     val fileBytes = Files.size(Paths.get(d, m.entries.head.file))
@@ -265,16 +259,13 @@ class ShardFormatV3Spec extends SparkSpec {
     // and the noise column kept its 8 B/row (plain): the file can't
     // be SMALLER than that, proving no lossy trick
     assert(fileBytes > 8L * n, s"impossible: $fileBytes bytes for $n rows")
-    // byte-exact roundtrip through both reader paths
+    // byte-exact roundtrip against the input frame
     val want = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    for (columnar <- Seq(true, false)) {
-      val got = spark.read.format("gshard")
-        .option("columnar", columnar.toString).load(d)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(got == want, s"columnar=$columnar diverged")
-    }
+    val got = spark.read.format("gshard").load(d)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(got == want)
     // negatives and irregular gaps (zigzag path) roundtrip too
-    val d2 = Files.createTempDirectory("gshard_delta_neg_").toString
+    val d2 = tmp("gshard_delta_neg_")
     val df2 = Seq((0L, -5L), (1L, 5000000000L), (2L, -5000000000L),
       (3L, 0L), (4L, Long.MaxValue / 2), (5L, Long.MinValue / 2))
       .toDF("k", "v")
@@ -288,7 +279,7 @@ class ShardFormatV3Spec extends SparkSpec {
 
   test("the manifest records achieved bloom bits-per-value and the " +
       "scan description reports expected FP") {
-    val d = Files.createTempDirectory("gshard_bpv_").toString
+    val d = tmp("gshard_bpv_")
     tables.events.select(col("user_id"), col("event_id"))
       .write.format("gshard").option("rangecol", "user_id")
       .option("shards", 4).option("bloomcol", "event_id")
@@ -317,7 +308,7 @@ class ShardFormatV3Spec extends SparkSpec {
 
   test("two writers with independent txnid sequences never dedupe " +
       "each other; a same-app replay still no-ops") {
-    val d = Files.createTempDirectory("gshard_txnapp_").toString
+    val d = tmp("gshard_txnapp_")
     val ev = tables.events.select(col("user_id"),
       floor(col("value") * 100 + lit(0.5)).cast("long").as("cents"))
     def append(app: String, txn: Long, gate: Int): Unit =
@@ -350,7 +341,7 @@ class ShardFormatV3Spec extends SparkSpec {
 
   test("a truncating write bypasses the replay no-op: a fresh query " +
       "restarting at batch 0 with overwrite wins over stale state") {
-    val d = Files.createTempDirectory("gshard_txntrunc_").toString
+    val d = tmp("gshard_txntrunc_")
     val ev = tables.events.select(col("user_id"),
       floor(col("value") * 100 + lit(0.5)).cast("long").as("cents"))
     def write(mode: String, txn: Long, gate: Int): Unit =
@@ -376,7 +367,7 @@ class ShardFormatV3Spec extends SparkSpec {
 
   test("randomized TYPED predicate sweep: 48 seeded timestamp/date/int/" +
       "boolean filters stay value-exact through normalization + skipping") {
-    val d = Files.createTempDirectory("gshard_typed_sweep_").toString
+    val d = tmp("gshard_typed_sweep_")
     val src = typed.filter(col("ts").isNotNull)
     src.write.format("gshard").option("rangecol", "event_id")
       .option("shards", 8).mode("overwrite").save(d)
@@ -417,7 +408,7 @@ class ShardFormatV3Spec extends SparkSpec {
 
   test("LIMIT plans a file prefix; TOP-N on the range column plans the " +
       "sorted end; both exact") {
-    val d = Files.createTempDirectory("gshard_topn_").toString
+    val d = tmp("gshard_topn_")
     val src = tables.events.select(col("event_id"),
       floor(col("value") * 100 + lit(0.5)).cast("long").as("cents"))
     src.write.format("gshard").option("rangecol", "event_id")
@@ -454,7 +445,7 @@ class ShardFormatV3Spec extends SparkSpec {
     import sess.implicits._
     // overlapping generations: two appends each spanning the full key
     // range -> files overlap -> the file prefix can't bound the top-N
-    val d = Files.createTempDirectory("gshard_topn_ref_").toString
+    val d = tmp("gshard_topn_ref_")
     val ev = tables.events.select(col("event_id"),
       floor(col("value") * 100 + lit(0.5)).cast("long").as("cents"))
     ev.filter(col("event_id") % 2 === 0).write.format("gshard")
@@ -474,7 +465,7 @@ class ShardFormatV3Spec extends SparkSpec {
       ev.orderBy(asc("event_id")).limit(10).collect()
         .map(_.getLong(0)).toSeq)
     // nullable sort key: refuse (null ordering can't be proven)
-    val d2 = Files.createTempDirectory("gshard_topn_null_").toString
+    val d2 = tmp("gshard_topn_null_")
     tables.events.select(col("event_id"),
         when(col("event_id") % 7 =!= 0, col("user_id")).as("v"))
       .write.format("gshard").option("rangecol", "event_id")
@@ -490,7 +481,7 @@ class ShardFormatV3Spec extends SparkSpec {
 
   test("v1/v2 manifests are rejected up front with a rewrite-required " +
       "error, not accepted into a mid-scan failure") {
-    val d = Files.createTempDirectory("gshard_v2rej_").toString
+    val d = tmp("gshard_v2rej_")
     Files.write(Paths.get(d, "_manifest.gshard"),
       "gshard v2\nschema k:long\nfile part-00000.gshard 10 k=0:9\n"
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -500,4 +491,6 @@ class ShardFormatV3Spec extends SparkSpec {
     assert(e.getMessage.contains("rewrite required"),
       s"unhelpful error: ${e.getMessage}")
   }
+
+  leavesNoTempDirs()
 }

@@ -6,7 +6,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.SparkSpec
 import graft.sources.shard.ShardFormat
 
 /** The gshard v4 format contract on top of v3's (ShardFormatV3Spec):
@@ -20,7 +19,7 @@ import graft.sources.shard.ShardFormat
   * BIT/row, a constant column at ~0 bytes, both chosen by MEASURED
   * size against plain and delta-varint. Older manifest generations
   * (now including v3) reject up front. */
-class ShardFormatV4Spec extends SparkSpec {
+class ShardFormatV4Spec extends ShardTempRoot {
 
   // ── double zone maps: file-level pruning ───────────────────────────
 
@@ -33,7 +32,7 @@ class ShardFormatV4Spec extends SparkSpec {
 
   test("double zone maps prune shard files at planning time and the " +
       "filtered read stays exact") {
-    val d = Files.createTempDirectory("gshard_dbl_prune_").toString
+    val d = tmp("gshard_dbl_prune_")
     priced.write.format("gshard").option("rangecol", "cents")
       .option("shards", 8).mode("overwrite").save(d)
     val m = ShardFormat.readManifest(d)
@@ -74,7 +73,7 @@ class ShardFormatV4Spec extends SparkSpec {
       when(col("id") === (2L * 8192 + 17), lit(Double.NaN))
         .when(col("id") === (4L * 8192 + 23), lit(null).cast("double"))
         .otherwise(col("id").cast("double")).as("v"))
-    val d = Files.createTempDirectory("gshard_dbl_chunk_").toString
+    val d = tmp("gshard_dbl_chunk_")
     ShardFormat.write(df, d, "k", 1, chunkRows = 8192)
     val m = ShardFormat.readManifest(d)
     // the NaN poisons the FILE bounds (sound: no entry, always admit)
@@ -113,7 +112,7 @@ class ShardFormatV4Spec extends SparkSpec {
       ShardFormat.ShardEntry(f"part-$i%05d.gshard", 1L,
         Map.empty, Map.empty, dMin = Map("v" -> x), dMax = Map("v" -> x))
     }
-    val d = Files.createTempDirectory("gshard_dbl_bits_").toString
+    val d = tmp("gshard_dbl_bits_")
     ShardFormat.writeManifest(d, ShardFormat.Manifest(schema, entries))
     val back = ShardFormat.readManifest(d)
     tricky.zipWithIndex.foreach { case (x, i) =>
@@ -131,7 +130,7 @@ class ShardFormatV4Spec extends SparkSpec {
     val df = spark.range(n.toLong).select(col("id").as("k"),
       when(col("id") % 11 =!= 0, col("id") % 3 === 0).as("flag"),
       lit(42L).as("konst"))
-    val d = Files.createTempDirectory("gshard_bitpack_").toString
+    val d = tmp("gshard_bitpack_")
     ShardFormat.write(df, d, "k", 1, chunkRows = 8192)
     val m = ShardFormat.readManifest(d)
     val fileBytes = Files.size(Paths.get(d, m.entries.head.file))
@@ -150,11 +149,7 @@ class ShardFormatV4Spec extends SparkSpec {
     }.toSet
     val want = rows(df)
     assert(want.exists(_._2.isEmpty), "degenerate: no nulls planted")
-    for (columnar <- Seq(true, false)) {
-      val got = rows(spark.read.format("gshard")
-        .option("columnar", columnar.toString).load(d))
-      assert(got == want, s"columnar=$columnar diverged")
-    }
+    assert(rows(spark.read.format("gshard").load(d)) == want)
   }
 
   test("bitpack handles wide offsets, negative bases, and all-null " +
@@ -166,14 +161,14 @@ class ShardFormatV4Spec extends SparkSpec {
       (i.toLong, -1000000L + (i.toLong * 524L) % 1048575L,
         Option.empty[Long])
     }.toDF("k", "v", "allnull")
-    val d = Files.createTempDirectory("gshard_bitpack_wide_").toString
+    val d = tmp("gshard_bitpack_wide_")
     ShardFormat.write(df, d, "k", 1)
     val back = spark.read.format("gshard").load(d)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.isNullAt(2))).toSet
     assert(back == df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.isNullAt(2))).toSet)
     // full-range longs (width 64) must stay plain-sized, not corrupt
-    val d2 = Files.createTempDirectory("gshard_bitpack_full_").toString
+    val d2 = tmp("gshard_bitpack_full_")
     val df2 = Seq((0L, Long.MinValue), (1L, Long.MaxValue), (2L, 0L))
       .toDF("k", "v")
     ShardFormat.write(df2, d2, "k", 1)
@@ -187,7 +182,7 @@ class ShardFormatV4Spec extends SparkSpec {
   test("metadata DELETE decides double predicates from the double " +
       "bounds: file-aligned drops, straddling rejects") {
     val cat = "gshard_v4del"
-    val wh = Files.createTempDirectory("gshard_v4del_").toString
+    val wh = tmp("gshard_v4del_")
     spark.conf.set(s"spark.sql.catalog.$cat",
       "graft.sources.shard.ShardCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
@@ -238,7 +233,7 @@ class ShardFormatV4Spec extends SparkSpec {
       "files read NULL through both readers, pruning still fires, " +
       "and every non-appendable ALTER rejects") {
     val cat = "gshard_v4evo"
-    val wh = Files.createTempDirectory("gshard_v4evo_").toString
+    val wh = tmp("gshard_v4evo_")
     spark.conf.set(s"spark.sql.catalog.$cat",
       "graft.sources.shard.ShardCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
@@ -257,15 +252,11 @@ class ShardFormatV4Spec extends SparkSpec {
       Files.size(Paths.get(tdir, f)) == sz })
     spark.sql(s"INSERT INTO $cat.main.te " +
       "SELECT k, g, k * 10 AS extra FROM v4evo_src WHERE k >= 500")
-    for (columnar <- Seq(true, false)) {
-      val back = spark.read.format("gshard")
-        .option("columnar", columnar.toString).load(tdir)
-      assert(back.count() == 1000L)
-      // the old generation reads NULL, the new one its values
-      assert(back.filter(col("extra").isNull).count() == 500L,
-        s"columnar=$columnar")
-      assert(back.filter(col("extra") === col("k") * 10).count() == 500L)
-    }
+    val back = spark.read.format("gshard").load(tdir)
+    assert(back.count() == 1000L)
+    // the old generation reads NULL, the new one its values
+    assert(back.filter(col("extra").isNull).count() == 500L)
+    assert(back.filter(col("extra") === col("k") * 10).count() == 500L)
     // zone pruning on the ORIGINAL column still fires across mixed
     // generations
     val q = spark.table(s"$cat.main.te").filter(col("k") < 100)
@@ -299,7 +290,7 @@ class ShardFormatV4Spec extends SparkSpec {
   test("compaction heals an evolved table: the rewrite materializes " +
       "the NULLs, every file carries the full schema, and the " +
       "metadata COUNT answers again") {
-    val d = Files.createTempDirectory("gshard_evo_heal_").toString
+    val d = tmp("gshard_evo_heal_")
     val sess = spark
     import sess.implicits._
     // generation 1: narrow (written via the path API, schema k only)
@@ -339,7 +330,7 @@ class ShardFormatV4Spec extends SparkSpec {
   }
 
   test("a v3 manifest rejects up front with the rewrite-required error") {
-    val d = Files.createTempDirectory("gshard_v3_reject_").toString
+    val d = tmp("gshard_v3_reject_")
     Files.write(Paths.get(d, "_manifest.gshard"),
       "gshard v3\nschema k:long\nfile part-00000.gshard 10 k=0:9\n"
         .getBytes("UTF-8"))
@@ -353,7 +344,7 @@ class ShardFormatV4Spec extends SparkSpec {
       "provably NaN-free; a NaN anywhere forces the scan and keeps " +
       "Spark's NaN-max semantics") {
     // clean table: every file carries double bounds -> pushdown fires
-    val d1 = Files.createTempDirectory("gshard_dbl_agg_").toString
+    val d1 = tmp("gshard_dbl_agg_")
     priced.write.format("gshard").option("rangecol", "cents")
       .option("shards", 6).mode("overwrite").save(d1)
     val q1 = spark.read.format("gshard").load(d1)
@@ -371,7 +362,7 @@ class ShardFormatV4Spec extends SparkSpec {
     // poisoned table: one NaN -> that file has NO bounds and is not
     // provably all-null -> the aggregate must SCAN (refusing is what
     // keeps max = NaN under Spark's ordering)
-    val d2 = Files.createTempDirectory("gshard_dbl_agg_nan_").toString
+    val d2 = tmp("gshard_dbl_agg_nan_")
     ShardFormat.write(
       spark.range(1000).select(col("id").as("k"),
         when(col("id") === 500, lit(Double.NaN))
@@ -394,7 +385,7 @@ class ShardFormatV4Spec extends SparkSpec {
       (col("id") * -3 + lit(7)).as("v"),
       when(col("id") % 2 === 0, col("id") * 2).as("half"),
       lit(null).cast("long").as("dead"))
-    val d = Files.createTempDirectory("gshard_sum_").toString
+    val d = tmp("gshard_sum_")
     df.write.format("gshard").option("rangecol", "k")
       .option("shards", 4).mode("overwrite").save(d)
     val q = spark.read.format("gshard").load(d)
@@ -446,23 +437,19 @@ class ShardFormatV4Spec extends SparkSpec {
       }
       val df = vals.zipWithIndex
         .map { case (v, k) => (k.toLong, v) }.toDF("k", "v")
-      val d = Files.createTempDirectory(s"gshard_encsweep_$i").toString
+      val d = tmp(s"gshard_encsweep_$i")
       ShardFormat.write(df, d, "k", 1, chunkRows = 256 + rnd.nextInt(2048))
       val want = vals.zipWithIndex.map { case (v, k) => (k.toLong, v) }.toSet
-      for (columnar <- Seq(true, false)) {
-        val got = spark.read.format("gshard")
-          .option("columnar", columnar.toString).load(d)
-          .collect().map(r => (r.getLong(0),
-            if (r.isNullAt(1)) None else Some(r.getLong(1)))).toSet
-        assert(got == want,
-          s"case #$i shape=$shape nulls=$nullDen columnar=$columnar diverged")
-      }
+      val got = spark.read.format("gshard").load(d)
+        .collect().map(r => (r.getLong(0),
+          if (r.isNullAt(1)) None else Some(r.getLong(1)))).toSet
+      assert(got == want, s"case #$i shape=$shape nulls=$nullDen diverged")
     }
   }
 
   test("randomized double predicates never diverge from the parquet " +
       "truth (seeded sweep over pruned scans)") {
-    val d = Files.createTempDirectory("gshard_dbl_sweep_").toString
+    val d = tmp("gshard_dbl_sweep_")
     priced.write.format("gshard").option("rangecol", "cents")
       .option("shards", 8).mode("overwrite").save(d)
     val via = spark.read.format("gshard").load(d)
@@ -489,4 +476,6 @@ class ShardFormatV4Spec extends SparkSpec {
       assert(agg(f(via)) == agg(f(src)), s"case #$i diverged at t=$t")
     }
   }
+
+  leavesNoTempDirs()
 }

@@ -4,19 +4,18 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
 import graft.sources.shard.ShardFormat
 
 /** The round's gshard features COMPOSED in one lifecycle — nullable
   * dictionary-encoded strings, per-file blooms, idempotent appends,
-  * metadata-only DELETE, both reader paths — because features that
+  * metadata-only DELETE, the columnar read — because features that
   * pass alone can still disagree about the bytes when stacked. */
-class ShardLifecycleSpec extends SparkSpec {
+class ShardLifecycleSpec extends ShardTempRoot {
 
   test("nullable dict strings + blooms + append + DELETE compose exactly") {
     // path-written table inside a catalog warehouse so the SQL DELETE
     // can address it (the catalog maps cat.main.t -> wh/main/t)
-    val wh = Files.createTempDirectory("gshard_life_wh_").toString
+    val wh = tmp("gshard_life_wh_")
     val dir = s"$wh/main/life1"
     spark.conf.set("spark.sql.catalog.gshard_life",
       "graft.sources.shard.ShardCatalog")
@@ -46,9 +45,8 @@ class ShardLifecycleSpec extends SparkSpec {
     spark.sql(s"DELETE FROM gshard_life.main.life1 WHERE user_id < $thr")
     val kept = proj.filter(col("user_id") >= thr)
 
-    // value-exact read-back through BOTH reader paths, nulls included
-    def read(columnar: Boolean) = spark.read.format("gshard")
-      .option("columnar", columnar.toString).load(dir)
+    // value-exact read-back against the input frame, nulls included
+    val got = spark.read.format("gshard").load(dir)
       .select(col("user_id"), col("event_id"), col("tag"), col("cents"))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), Option(r.getString(2)),
@@ -56,8 +54,7 @@ class ShardLifecycleSpec extends SparkSpec {
     val want = kept.collect()
       .map(r => (r.getLong(0), r.getLong(1), Option(r.getString(2)),
         r.getLong(3))).toSet
-    assert(read(columnar = true) == want)
-    assert(read(columnar = false) == want)
+    assert(got == want)
 
     // blooms survive the delete: a surviving event id prunes to ≤2 of
     // the remaining files
@@ -72,4 +69,6 @@ class ShardLifecycleSpec extends SparkSpec {
     }
     assert(admits >= 1 && admits <= 2, s"bloom admits $admits files")
   }
+
+  leavesNoTempDirs()
 }

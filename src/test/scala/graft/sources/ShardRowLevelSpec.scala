@@ -1,10 +1,7 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
 import graft.sources.shard.ShardFormat
 
 /** SQL row-level operations on gshard tables — the group-based
@@ -15,10 +12,10 @@ import graft.sources.shard.ShardFormat
   * time travel reads the pre-op table). File-aligned DELETEs still
   * take the metadata-only path via OptimizeMetadataOnlyDeleteFromTable.
   */
-class ShardRowLevelSpec extends SparkSpec {
+class ShardRowLevelSpec extends ShardTempRoot {
 
   private lazy val warehouse: String = {
-    val wh = Files.createTempDirectory("gshard_rls_wh_").toString
+    val wh = tmp("gshard_rls_wh_")
     spark.conf.set("spark.sql.catalog.gshard_rls",
       "graft.sources.shard.ShardCatalog")
     spark.conf.set("spark.sql.catalog.gshard_rls.warehouse", wh)
@@ -155,23 +152,19 @@ class ShardRowLevelSpec extends SparkSpec {
     val ex = intercept[IllegalArgumentException] {
       bad.write.format("gshard").option("rangecol", "id")
         .mode("overwrite").save(
-          Files.createTempDirectory("gshard_rls_badname").toString)
+          tmp("gshard_rls_badname"))
     }
     assert(ex.getMessage.contains("reserved metadata column"))
   }
 
-  test("_file metadata column projects through both readers and " +
-      "matches the manifest entries") {
+  test("_file metadata column matches the manifest entries") {
     val t = freshTable("meta", 300)
     val d = s"$warehouse/main/meta"
     val entries = ShardFormat.readManifest(d).entries.map(_.file).toSet
-    for (columnar <- Seq("true", "false")) {
-      val got = spark.read.format("gshard")
-        .option("columnar", columnar).load(d)
-        .select(col("_file")).distinct()
-        .collect().map(_.getString(0)).toSet
-      assert(got == entries, s"columnar=$columnar _file mismatch")
-    }
+    val got = spark.read.format("gshard").load(d)
+      .select(col("_file")).distinct()
+      .collect().map(_.getString(0)).toSet
+    assert(got == entries, "_file mismatch")
     // per-file row counts via _file agree with the manifest
     val counts = spark.table(t).groupBy(col("_file")).count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -228,4 +221,6 @@ class ShardRowLevelSpec extends SparkSpec {
     assert(got(10L) == "stale" && got(39L) == "stale" && got(55L) == "stale")
     assert(got(45L) == "S45")
   }
+
+  leavesNoTempDirs()
 }

@@ -1,21 +1,18 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
-import graft.SparkSpec
 import graft.sources.shard.ShardFormat
 
 /** B20 — the gshard DSv2 connector: byte-level roundtrip, zone-map
   * file skipping (soundness AND effectiveness), column pruning, and
   * the empty-table edge. */
-class ShardSourceSpec extends SparkSpec {
+class ShardSourceSpec extends ShardTempRoot {
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft_gshard_spec_").toString
+    val d = tmp("graft_gshard_spec_")
     ShardFormat.write(eventsProjected, d, "user_id", 8)
     d
   }
@@ -108,7 +105,7 @@ class ShardSourceSpec extends SparkSpec {
   }
 
   test("an empty table writes a valid zero-file manifest and reads back empty") {
-    val d = Files.createTempDirectory("graft_gshard_empty_").toString
+    val d = tmp("graft_gshard_empty_")
     ShardFormat.write(eventsProjected.limit(0), d, "user_id", 8)
     val back = spark.read.format("gshard").load(d)
     assert(back.schema.fieldNames.toSeq ==
@@ -117,7 +114,7 @@ class ShardSourceSpec extends SparkSpec {
   }
 
   test("deterministic bytes: writing twice yields identical manifests") {
-    val d2 = Files.createTempDirectory("graft_gshard_det_").toString
+    val d2 = tmp("graft_gshard_det_")
     ShardFormat.write(eventsProjected, d2, "user_id", 8)
     assert(ShardFormat.readManifest(d2) == ShardFormat.readManifest(dir))
   }
@@ -128,7 +125,7 @@ class ShardSourceSpec extends SparkSpec {
       .option("shards", 8).mode(mode).save(d)
 
   test("DSv2 write roundtrip: Spark-planned range exchange, values exact") {
-    val d = Files.createTempDirectory("graft_gshard_w_").toString
+    val d = tmp("graft_gshard_w_")
     writeVia(eventsProjected, d, "overwrite")
     assert(rowsOf(spark.read.format("gshard").load(d)
       .select(col("user_id"), col("event_type"), col("cents")))
@@ -136,7 +133,7 @@ class ShardSourceSpec extends SparkSpec {
   }
 
   test("DSv2-written zone maps are range-disjoint (the required distribution held)") {
-    val d = Files.createTempDirectory("graft_gshard_wz_").toString
+    val d = tmp("graft_gshard_wz_")
     writeVia(eventsProjected, d, "overwrite")
     val m = ShardFormat.readManifest(d)
     assert(m.entries.size > 1, "degenerate: one shard")
@@ -149,7 +146,7 @@ class ShardSourceSpec extends SparkSpec {
   }
 
   test("append mode merges manifests; overwrite truncates the old generation") {
-    val d = Files.createTempDirectory("graft_gshard_am_").toString
+    val d = tmp("graft_gshard_am_")
     val lo = eventsProjected.filter(col("user_id") % 2 === 0)
     val hi = eventsProjected.filter(col("user_id") % 2 === 1)
     writeVia(lo, d, "append")
@@ -174,7 +171,7 @@ class ShardSourceSpec extends SparkSpec {
   }
 
   test("the freshly written table serves skipping scans like the manual one") {
-    val d = Files.createTempDirectory("graft_gshard_ws_").toString
+    val d = tmp("graft_gshard_ws_")
     writeVia(eventsProjected, d, "overwrite")
     val m = ShardFormat.readManifest(d)
     val thr = m.entries.map(_.zMax("user_id")).max / 2
@@ -187,7 +184,7 @@ class ShardSourceSpec extends SparkSpec {
   }
 
   test("compaction: fragmented appends -> fewer files, disjoint maps, same bytes") {
-    val d = Files.createTempDirectory("graft_gshard_cm_").toString
+    val d = tmp("graft_gshard_cm_")
     // two independently-ranged generations: overlapping maps by design
     writeVia(eventsProjected.filter(col("user_id") % 2 === 0), d, "overwrite")
     writeVia(eventsProjected.filter(col("user_id") % 2 === 1), d, "append")
@@ -223,8 +220,8 @@ class ShardSourceSpec extends SparkSpec {
   // ── streaming SOURCE path ──────────────────────────────────────────
 
   test("streaming source: admission control paces batches; offsets resume across appends") {
-    val d = Files.createTempDirectory("graft_gshard_src_").toString
-    val cp = Files.createTempDirectory("graft_gshard_srccp_").toString
+    val d = tmp("graft_gshard_src_")
+    val cp = tmp("graft_gshard_srccp_")
     val gen1 = eventsProjected.filter(col("user_id") % 2 === 0)
     val gen2 = eventsProjected.filter(col("user_id") % 2 === 1)
     writeVia(gen1, d, "overwrite")
@@ -266,28 +263,19 @@ class ShardSourceSpec extends SparkSpec {
 
   // ── columnar (vectorized) read path ────────────────────────────────
 
-  test("columnar scan is active by default and byte-equal to the row path") {
+  test("columnar scan is the only read path and equals the input frame") {
     val colDf = viaShard.select(col("user_id"), col("event_type"), col("cents"))
-    colDf.collect()
+    val got = rowsOf(colDf)
     val p = colDf.queryExecution.executedPlan.toString
     assert(p.contains("ColumnarToRow"),
       s"vectorized path not active (no ColumnarToRow transition):\n$p")
-    val rowDf = spark.read.format("gshard").option("columnar", "false")
-      .load(dir).select(col("user_id"), col("event_type"), col("cents"))
-    rowDf.collect()
-    val p2 = rowDf.queryExecution.executedPlan.toString
-    assert(!p2.contains("ColumnarToRow"),
-      s"columnar=false escape hatch ignored:\n$p2")
-    assert(rowsOf(colDf) == rowsOf(rowDf))
-    // chunking boundary: the per-file row counts here exceed one 4096
-    // chunk at this SF? If not, the equality above still covers the
-    // single-chunk path; count() exercises the empty-projection batch
-    assert(viaShard.count() ==
-      spark.read.format("gshard").option("columnar", "false").load(dir).count())
+    assert(got == rowsOf(eventsProjected))
+    // count() exercises the empty-projection batch
+    assert(viaShard.count() == eventsProjected.count())
   }
 
   test("columnar chunking: a file larger than one 4096-row batch survives") {
-    val d = Files.createTempDirectory("graft_gshard_chunk_").toString
+    val d = tmp("graft_gshard_chunk_")
     // lineitem (~6k rows at this SF) into ONE file crosses the 4096 boundary
     val li = tables.lineitem.select(col("l_orderkey"), col("l_returnflag"),
       floor(col("l_extendedprice") * 100 + lit(0.5)).cast("long").as("cents"))
@@ -341,7 +329,7 @@ class ShardSourceSpec extends SparkSpec {
   }
 
   test("metadata-only aggregates on an empty table: count 0, null min/max") {
-    val d = Files.createTempDirectory("graft_gshard_aggempty_").toString
+    val d = tmp("graft_gshard_aggempty_")
     ShardFormat.write(eventsProjected.limit(0), d, "user_id", 4)
     val row = spark.read.format("gshard").load(d)
       .agg(count(lit(1)), min(col("user_id")), max(col("user_id"))).head
@@ -354,7 +342,7 @@ class ShardSourceSpec extends SparkSpec {
     // SupportsReportStatistics the DSv2 scan defaults to the
     // worst-case size and the planner picks sort-merge; with the
     // manifest stats it broadcasts
-    val d = Files.createTempDirectory("graft_gshard_stats_").toString
+    val d = tmp("graft_gshard_stats_")
     val dim = tables.events.select(col("user_id")).distinct()
       .withColumn("seg", (col("user_id") % 5).cast("long"))
     ShardFormat.write(dim, d, "user_id", 2)
@@ -424,4 +412,5 @@ class ShardSourceSpec extends SparkSpec {
     }
   }
 
+  leavesNoTempDirs()
 }

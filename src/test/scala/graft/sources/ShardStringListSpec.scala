@@ -6,7 +6,6 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.SparkSpec
 import graft.sources.shard.{ShardFormat, ShardOps}
 
 /** STRING-LIST (`array<string>`, tag `liststr`) columns in the gshard
@@ -16,13 +15,10 @@ import graft.sources.shard.{ShardFormat, ShardOps}
   * element offsets over ONE flattened plain string block. Row-grain
   * null bitmap as everywhere; null/EMPTY rows hold zero elements;
   * null ELEMENTS reject loudly at write (offset-only blocks). Both
-  * write paths (ShardFormat.write, DSv2) and both read paths
-  * (columnar + row) are exercised, plus mutations over tables
-  * carrying a string-list column. */
-class ShardStringListSpec extends SparkSpec {
-
-  private def tmp(tag: String): String =
-    Files.createTempDirectory(s"gshard_lstr_$tag").toString
+  * write paths (ShardFormat.write, DSv2) are exercised through the
+  * columnar read path, plus mutations over tables carrying a
+  * string-list column. */
+class ShardStringListSpec extends ShardTempRoot {
 
   private val schema = StructType(Seq(
     StructField("id", LongType, nullable = false),
@@ -59,9 +55,8 @@ class ShardStringListSpec extends SparkSpec {
       (i.toLong, toks)
     }
 
-  private def readBack(d: String, columnar: Boolean): Seq[(Long, Seq[String])] =
-    spark.read.format("gshard").option("columnar", columnar.toString)
-      .load(d).collect().toSeq
+  private def readBack(d: String): Seq[(Long, Seq[String])] =
+    spark.read.format("gshard").load(d).collect().toSeq
       .map(r => (r.getLong(0),
         if (r.isNullAt(1)) null else r.getSeq[String](1)))
       .sortBy(_._1)
@@ -75,14 +70,12 @@ class ShardStringListSpec extends SparkSpec {
     // boundaries through every shape
     val d1 = tmp("path")
     ShardFormat.write(mixed(n), d1, "id", 4, chunkRows = 37)
-    assert(readBack(d1, columnar = true) == want)
-    assert(readBack(d1, columnar = false) == want)
+    assert(readBack(d1) == want)
     // DSv2 write path
     val d2 = tmp("dsv2")
     mixed(n).write.format("gshard").option("rangecol", "id")
       .option("shards", 4).mode("overwrite").save(d2)
-    assert(readBack(d2, columnar = true) == want)
-    assert(readBack(d2, columnar = false) == want)
+    assert(readBack(d2) == want)
   }
 
   test("null ELEMENTS reject loudly on both write paths") {
@@ -210,8 +203,7 @@ class ShardStringListSpec extends SparkSpec {
       .toMap
     assert(readBack(dOn) == want)
     assert(readBack(dOff) == want)
-    // row reader path too
-    assert(spark.read.format("gshard").option("columnar", "false")
-      .load(dOn).count() == 3000L)
   }
+
+  leavesNoTempDirs()
 }

@@ -4,7 +4,6 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
 import graft.sources.shard.{ShardFormat, ShardOps}
 
 /** TOKEN-ID LIST columns (`array<int>` / `array<long>`, tags
@@ -15,10 +14,7 @@ import graft.sources.shard.{ShardFormat, ShardOps}
   * BITS per token. Null policy as for every list type: row-grain
   * bitmap, null/empty rows hold zero elements, NULL ELEMENTS reject
   * on both write paths. */
-class ShardTokenIdSpec extends SparkSpec {
-
-  private def tmp(tag: String): String =
-    Files.createTempDirectory(s"gshard_tok_$tag").toString
+class ShardTokenIdSpec extends ShardTempRoot {
 
   private def intRows(n: Int) = {
     val sess = spark
@@ -37,16 +33,10 @@ class ShardTokenIdSpec extends SparkSpec {
     val d = tmp("int")
     // chunkRows 64 forces many chunks over 1000 rows
     ShardFormat.write(intRows(1000), d, "id", 3, chunkRows = 64)
-    def readBack(columnar: Boolean): Map[Long, Seq[Int]] =
-      spark.read.format("gshard").option("columnar", columnar.toString)
-        .load(d).collect()
-        .map(r => r.getLong(0) ->
-          (if (r.isNullAt(1)) null else r.getSeq[Int](1))).toMap
-    val want = intRows(1000).collect()
-      .map(r => r.getLong(0) ->
+    def rows(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Int]] =
+      df.collect().map(r => r.getLong(0) ->
         (if (r.isNullAt(1)) null else r.getSeq[Int](1))).toMap
-    assert(readBack(columnar = true) == want)
-    assert(readBack(columnar = false) == want)
+    assert(rows(spark.read.format("gshard").load(d)) == rows(intRows(1000)))
     // read schema surfaces array<int> (containsNull=false: the format
     // stores no null elements)
     val f = spark.read.format("gshard").load(d).schema("toks")
@@ -147,4 +137,6 @@ class ShardTokenIdSpec extends SparkSpec {
     assert(after.getSeq[Int](1) == Seq(9, 9, 9))
     assert(spark.table("gtok.main.t").count() == 300L)
   }
+
+  leavesNoTempDirs()
 }

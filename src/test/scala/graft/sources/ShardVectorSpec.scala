@@ -1,12 +1,9 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.SparkSpec
 import graft.sources.shard.ShardFormat
 
 /** VECTOR (embedding) columns in the gshard format — the column type
@@ -17,13 +14,10 @@ import graft.sources.shard.ShardFormat
   * overhead) and an element-offset table otherwise. No zone maps —
   * vectors have no meaningful order — and NO null elements (rejected
   * loudly at write, which keeps blocks offset-only). Both write paths
-  * (ShardFormat.write and the DSv2 writer) and both read paths
-  * (columnar and row) are exercised, plus the catalog CTAS surface.
+  * (ShardFormat.write and the DSv2 writer) are exercised through the
+  * columnar read path, plus the catalog CTAS surface.
   */
-class ShardVectorSpec extends SparkSpec {
-
-  private def tmp(tag: String): String =
-    Files.createTempDirectory(s"gshard_vec_$tag").toString
+class ShardVectorSpec extends ShardTempRoot {
 
   private val vecSchema = StructType(Seq(
     StructField("id", LongType, nullable = false),
@@ -72,14 +66,12 @@ class ShardVectorSpec extends SparkSpec {
       .option("shards", 3).option("chunkrows", "64")
       .mode("overwrite").save(d2)
 
-    for (d <- Seq(d1, d2); columnar <- Seq(true, false)) {
-      val got = spark.read.format("gshard")
-        .option("columnar", columnar.toString).load(d)
+    for (d <- Seq(d1, d2)) {
+      val got = spark.read.format("gshard").load(d)
         .collect().map(asKey).toSet
-      assert(got == want, s"dir=$d columnar=$columnar diverged")
+      assert(got == want, s"dir=$d diverged")
       // float bits must be EXACT: compare raw bits of one weird row
-      val bits = spark.read.format("gshard")
-        .option("columnar", columnar.toString).load(d)
+      val bits = spark.read.format("gshard").load(d)
         .filter(col("id") === 0L).head.getSeq[Float](1)
         .map(java.lang.Float.floatToRawIntBits)
       assert(bits(0) == java.lang.Float.floatToRawIntBits(-0.0f))
@@ -214,15 +206,14 @@ class ShardVectorSpec extends SparkSpec {
       val want = df.collect()
         .map(r => (r.getLong(0),
           if (r.isNullAt(1)) null else r.getSeq[Any](1))).toSet
-      for (columnar <- Seq(true, false)) {
-        val got = spark.read.format("gshard")
-          .option("columnar", columnar.toString).load(d)
-          .collect().map(r => (r.getLong(0),
-            if (r.isNullAt(1)) null else r.getSeq[Any](1))).toSet
-        assert(got == want,
-          s"case #$i dim=$dim variable=$variable nulls=$nullDen " +
-            s"float=$isFloat columnar=$columnar diverged")
-      }
+      val got = spark.read.format("gshard").load(d)
+        .collect().map(r => (r.getLong(0),
+          if (r.isNullAt(1)) null else r.getSeq[Any](1))).toSet
+      assert(got == want,
+        s"case #$i dim=$dim variable=$variable nulls=$nullDen " +
+          s"float=$isFloat diverged")
     }
   }
+
+  leavesNoTempDirs()
 }
