@@ -20,9 +20,8 @@ import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter,
   WriterCommitMessage}
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan,
   GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual}
-import org.apache.spark.sql.types.{BooleanType, DateType, DoubleType,
-  IntegerType, LongType, StringType, StructType, TimestampNTZType,
-  TimestampType}
+import org.apache.spark.sql.types.{DateType, DoubleType, IntegerType,
+  LongType, StringType, StructType, TimestampNTZType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -1266,206 +1265,62 @@ private[shard] object ShardReaderFactory extends PartitionReaderFactory {
     new ShardColumnarReader(p.asInstanceOf[ShardInputPartition])
 }
 
-/** The one gshard decode path: the decoded column arrays refill a
-  * fixed set of 4096-row on-heap vectors batch by batch — downstream
+/** The one gshard decode path: a [[ShardFormat.ChunkReader]] decodes
+  * each surviving chunk of the partition's file straight into this
+  * reader's on-heap vectors, so one batch holds exactly one chunk's
+  * unmasked rows and reader memory is one chunk per column. Downstream
   * operators consume `ColumnarBatch`es and Spark inserts the one
   * `ColumnarToRow` transition where rows are genuinely needed. NULL
-  * slots surface through the vectors' null bits. It inverts
-  * [[ShardFormat.storageValue]]. The `_file` metadata column and the
-  * partition's `constants` are `ConstantColumnVector`s, set once per
-  * partition. */
+  * slots surface through the vectors' null bits. The `_file` metadata
+  * column and the partition's `constants` are `ConstantColumnVector`s,
+  * set once per partition. */
 private[shard] class ShardColumnarReader(p: ShardInputPartition)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
 
   import org.apache.spark.sql.execution.vectorized.{ColumnVectorUtils,
-    ConstantColumnVector, OnHeapColumnVector}
+    ConstantColumnVector, OnHeapColumnVector, WritableColumnVector}
   import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
   private val fileSchema = StructType(p.fileSchema.toIndexedSeq.map {
     case (n, t) => org.apache.spark.sql.types.StructField(n,
       ShardFormat.dataTypeOf(t)) })
-  private val required = StructType(p.required.toIndexedSeq.map {
-    case "_file" => org.apache.spark.sql.types.StructField("_file",
-      StringType, nullable = false)
-    case "_pos" => org.apache.spark.sql.types.StructField("_pos",
-      LongType, nullable = false)
-    case n => fileSchema(n)
-  })
-  // `_file` / `_pos` (metadata columns) are synthesized, never decoded
-  private val dataRequired =
-    p.required.filterNot(n => n == "_file" || n == "_pos")
-  private val decoded =
-    ShardFormat.readShardFile(p.path, fileSchema, dataRequired.toIndexedSeq,
-      p.filters.toIndexedSeq,
-      deleted =
-        if (p.dvPath == null) null else ShardFormat.readDeleteVector(p.dvPath),
-      wantPositions = p.required.contains("_pos"))
-  private val nRows = decoded.nRows
-  // required index → decoded column index (-1 `_file`, -2 `_pos`)
-  private val dataIdx: Array[Int] = {
-    var j = -1
-    p.required.map {
-      case "_file" => -1
-      case "_pos" => -2
-      case _ => j += 1; j
-    }
+  // vectors start at 4096 rows and grow to the largest chunk read
+  private val InitialRows = 4096
+  // every required column but the constant `_file` decodes; the chunk
+  // reader synthesizes `_pos`
+  private val decoded = p.required.filterNot(_ == "_file")
+  private val vectors: Array[WritableColumnVector] = decoded.map { n =>
+    new OnHeapColumnVector(InitialRows,
+      if (n == "_pos") LongType else fileSchema(n).dataType)
   }
-  // decoded columns re-slotted to required positions (null at the
-  // synthesized metadata slots)
-  private val cols: Array[Array[Any]] =
-    dataIdx.map(j => if (j < 0) null else decoded.cols(j))
+  private val chunks = new ShardFormat.ChunkReader(p.path, fileSchema,
+    decoded.toIndexedSeq, p.filters.toIndexedSeq,
+    if (p.dvPath == null) null else ShardFormat.readDeleteVector(p.dvPath))
 
-  private val ChunkRows = 4096
-  // the refilled vectors, null at the constant `_file` slot
-  private val vectors: Array[OnHeapColumnVector] =
-    required.fields.zip(dataIdx).map {
-      case (_, -1) => null
-      case (f, _) => new OnHeapColumnVector(ChunkRows, f.dataType)
-    }
+  /** The chunk audit of the file read so far. */
+  def chunksRead: Int = chunks.chunksRead
+  def chunksTotal: Int = chunks.chunksTotal
+
   private def constant(dt: org.apache.spark.sql.types.DataType,
       value: Any): ColumnVector = {
-    val v = new ConstantColumnVector(ChunkRows, dt)
+    val v = new ConstantColumnVector(InitialRows, dt)
     ColumnVectorUtils.populate(v, InternalRow(value), 0)
     v
   }
-  private val fileName =
-    UTF8String.fromString(new java.io.File(p.path).getName)
-  private val batch = new ColumnarBatch(
-    (vectors.toSeq.map(v =>
-      if (v != null) v else constant(StringType, fileName)) ++
-      p.constants.map { case (dt, value) => constant(dt, value) }).toArray)
-  private var pos = 0
+  private val batch = new ColumnarBatch((p.required.toSeq.map {
+      case "_file" => constant(StringType,
+        UTF8String.fromString(new java.io.File(p.path).getName))
+      case n => vectors(decoded.indexOf(n))
+    } ++ p.constants.map { case (dt, value) => constant(dt, value) }).toArray)
 
   override def next(): Boolean = {
-    if (pos >= nRows) return false
-    val n = math.min(ChunkRows, nRows - pos)
-    var c = 0
-    while (c < vectors.length) {
-      val v = vectors(c)
-      if (v != null) { // null = the constant `_file`
-        v.reset()
-        if (dataIdx(c) == -2) { // synthesized `_pos`
-          var i = 0
-          while (i < n) {
-            v.putLong(i, decoded.positions(pos + i))
-            i += 1
-          }
-        } else fill(v, cols(c), required(c).dataType, n)
-      }
-      c += 1
-    }
-    batch.setNumRows(n)
-    pos += n
-    true
+    val n = chunks.next(vectors)
+    if (n >= 0) batch.setNumRows(n)
+    n >= 0
   }
 
-  /** Rows [pos, pos + n) of the decoded column `col` into `v`. */
-  private def fill(v: OnHeapColumnVector, col: Array[Any],
-      dt: org.apache.spark.sql.types.DataType, n: Int): Unit =
-    dt match {
-      // timestamps share the long vector path: the stored micros ARE
-      // the catalyst internal encoding
-      case LongType | TimestampType | TimestampNTZType =>
-        var i = 0
-        while (i < n) {
-          col(pos + i) match {
-            case null => v.putNull(i)
-            case x => v.putLong(i, x.asInstanceOf[Long])
-          }
-          i += 1
-        }
-      case DateType | IntegerType =>
-        var i = 0
-        while (i < n) {
-          col(pos + i) match {
-            case null => v.putNull(i)
-            case x => v.putInt(i, x.asInstanceOf[Long].toInt)
-          }
-          i += 1
-        }
-      case BooleanType =>
-        var i = 0
-        while (i < n) {
-          col(pos + i) match {
-            case null => v.putNull(i)
-            case x => v.putBoolean(i, x.asInstanceOf[Long] != 0L)
-          }
-          i += 1
-        }
-      case d: org.apache.spark.sql.types.DecimalType =>
-        var i = 0
-        while (i < n) {
-          col(pos + i) match {
-            case null => v.putNull(i)
-            case x => v.putDecimal(i,
-              org.apache.spark.sql.types.Decimal(
-                x.asInstanceOf[Long], d.precision, d.scale), d.precision)
-          }
-          i += 1
-        }
-      case DoubleType =>
-        var i = 0
-        while (i < n) {
-          col(pos + i) match {
-            case null => v.putNull(i)
-            case x => v.putDouble(i, x.asInstanceOf[Double])
-          }
-          i += 1
-        }
-      case StringType =>
-        var i = 0
-        while (i < n) {
-          col(pos + i) match {
-            case null => v.putNull(i)
-            case x =>
-              val b = x.asInstanceOf[Array[Byte]]
-              v.putByteArray(i, b, 0, b.length)
-          }
-          i += 1
-        }
-      // vector columns: elements land in the array vector's CHILD
-      // (reset() above cleared it with the parent), each row's slot
-      // is (offset, length) into that child — the arrow-style
-      // columnar array layout, zero per-row boxing
-      case _: org.apache.spark.sql.types.ArrayType =>
-        val child = v.arrayData()
-        var off = 0
-        var i = 0
-        while (i < n) {
-          col(pos + i) match {
-            case null => v.putNull(i)
-            case a =>
-              val len = a match {
-                case x: Array[Float] =>
-                  child.reserve(off + x.length)
-                  child.putFloats(off, x.length, x, 0); x.length
-                case x: Array[Double] =>
-                  child.reserve(off + x.length)
-                  child.putDoubles(off, x.length, x, 0); x.length
-                case x: Array[Int] =>
-                  child.reserve(off + x.length)
-                  child.putInts(off, x.length, x, 0); x.length
-                case x: Array[Long] =>
-                  child.reserve(off + x.length)
-                  child.putLongs(off, x.length, x, 0); x.length
-                case x: Array[Array[Byte]] =>
-                  child.reserve(off + x.length)
-                  var j = 0
-                  while (j < x.length) {
-                    child.putByteArray(off + j, x(j)); j += 1
-                  }
-                  x.length
-              }
-              v.putArray(i, off, len)
-              off += len
-          }
-          i += 1
-        }
-      case other => throw new IllegalStateException(other.toString)
-    }
-
   override def get(): ColumnarBatch = batch
-  override def close(): Unit = batch.close()
+  override def close(): Unit = try chunks.close() finally batch.close()
 }
 
 /** GROUP-BASED (copy-on-write) row-level operation — the engine

@@ -2134,15 +2134,6 @@ object ShardFormat {
     }
   }
 
-  /** Decoded shard columns plus the chunk-skipping audit trail.
-    * `positions` (present when requested) carries each returned
-    * row's PHYSICAL position in the file — stable across chunk
-    * skipping AND delete-vector masking, the `_pos` metadata column
-    * and the coordinate system delete vectors address. */
-  final case class Decoded(nRows: Int, cols: Array[Array[Any]],
-      chunksRead: Int, chunksTotal: Int,
-      positions: Array[Long] = null)
-
   /** Sound zone test shared by file- and chunk-level pruning: may a
     * region with these LONG bounds contain a row satisfying ALL the
     * conjuncts? Columns without bounds (all-null or unknown) and
@@ -2237,31 +2228,54 @@ object ShardFormat {
     }
   }
 
-  /** Decode one shard file, materializing ONLY `required` columns
-    * (others are skipped via their length prefix) from only the
-    * chunks whose zone maps admit `filters` (chunk skipping — the
-    * intra-file analog of manifest file skipping; sound because every
-    * filter is residual). Returns columns in `required` order as
-    * value arrays; strings come back as raw UTF-8 byte arrays so the
-    * caller can wrap them zero-copy; NULL slots are `null`. */
-  def readShardFile(path: String, schema: StructType,
+  /** THE gshard decode, the inverse of [[storageValue]]: one shard
+    * file read chunk by chunk straight into Catalyst column vectors.
+    * The file opens at the first [[next]] and closes once its last
+    * chunk is read (or at [[close]]). Each [[next]] walks chunk headers
+    * and skips every chunk whose zone maps reject `filters` (chunk
+    * skipping — the intra-file analog of manifest file skipping; sound
+    * because every filter is residual) or whose rows the sorted delete
+    * vector `deleted` masks entirely. It decodes the next surviving
+    * chunk's `required` columns into `out` (one vector per name, in
+    * order; the other columns are skipped via their length prefix) and
+    * returns the chunk's unmasked row count. Masking happens in the
+    * same per-row loop as the decode; a required `_pos` receives each
+    * row's PHYSICAL position in the file — stable across chunk skipping
+    * AND masking, the coordinate system delete vectors address — and a
+    * required column the file predates reads all-NULL. Memory is one
+    * chunk per column, the writer's bound. A truncated file fails
+    * loudly ([[skipFully]], `readFully`) while iterating. */
+  private[shard] final class ChunkReader(path: String, schema: StructType,
       required: Seq[String], filters: Seq[Filter] = Nil,
-      deleted: Array[Long] = null,
-      wantPositions: Boolean = false): Decoded = {
-    val want = required.zipWithIndex.toMap
-    // (rows, columns, PHYSICAL row base) per surviving chunk — the
-    // base accumulates over SKIPPED chunks too (their headers carry
-    // nRows), so positions and delete-vector masking stay exact under
-    // chunk skipping
-    val chunks = mutable.ArrayBuffer.empty[(Int, Array[Array[Any]], Long)]
-    var rowBase = 0L
+      deleted: Array[Long] = null) extends java.io.Closeable {
+    import org.apache.spark.sql.execution.vectorized.WritableColumnVector
+
+    /** The chunk audit: chunks decoded, and chunk headers walked. */
+    var chunksRead = 0
     var chunksTotal = 0
-    val dis = new DataInputStream(
-      new java.io.BufferedInputStream(new FileInputStream(path), 1 << 16))
-    try {
-      require(dis.readInt() == Magic, s"bad magic in $path")
-      require(dis.readInt() == Version, s"bad version in $path")
-      val nCols = dis.readInt()
+
+    private val dv = if (deleted == null) Array.emptyLongArray else deleted
+    private val posSlot = required.indexOf("_pos")
+    private var in: DataInputStream = null
+    private var done = false
+    // the file's column PREFIX of the schema; per column its slot in
+    // `required` (-1: skipped); required columns the file predates
+    private var fields: Array[StructField] = null
+    private var slot: Array[Int] = null
+    private var missing: Seq[Int] = null
+    // PHYSICAL position of the next chunk's first row — it advances
+    // over SKIPPED chunks too (their headers carry nRows), so `_pos`
+    // and masking stay exact under chunk skipping; `dvAt` is the first
+    // delete-vector entry at or past it
+    private var rowBase = 0L
+    private var dvAt = 0
+
+    private def open(): Unit = {
+      in = new DataInputStream(
+        new java.io.BufferedInputStream(new FileInputStream(path), 1 << 16))
+      require(in.readInt() == Magic, s"bad magic in $path")
+      require(in.readInt() == Version, s"bad version in $path")
+      val nCols = in.readInt()
       // SCHEMA EVOLUTION: a file may predate trailing ADD COLUMNs —
       // its chunks carry slots and blocks only for its own column
       // PREFIX of the (append-only) table schema; the columns it
@@ -2269,409 +2283,277 @@ object ShardFormat {
       // schema is corruption, not evolution.
       require(nCols <= schema.length,
         s"file/schema column count mismatch in $path")
-      val fileFields = StructType(schema.fields.take(nCols))
-      val longNames = fileFields.fields
-        .filter(f => physicallyLong(f.dataType)).map(_.name)
-      val strNames = fileFields.fields
-        .filter(_.dataType == StringType).map(_.name)
-      val dblNames = fileFields.fields
-        .filter(_.dataType == DoubleType).map(_.name)
-      // required columns the file predates: all-NULL per chunk
-      val missing = required.zipWithIndex
-        .filterNot { case (n, _) => fileFields.fieldNames.contains(n) }
-      var done = false
+      fields = schema.fields.take(nCols)
+      slot = fields.map(f => required.indexOf(f.name))
+      missing = required.indices.filter(o =>
+        o != posSlot && !fields.exists(_.name == required(o)))
+    }
+
+    override def close(): Unit = {
+      done = true
+      if (in != null) { in.close(); in = null }
+    }
+
+    /** Decode the next surviving chunk into `out`; returns its row
+      * count, or -1 once the file is exhausted. */
+    def next(out: Array[WritableColumnVector]): Int = {
+      if (in == null && !done) open()
       while (!done) {
         // chunks are self-delimiting: clean EOF on the first header
         // byte ends the file; EOF anywhere inside a chunk is corruption
-        val b0 = dis.read()
-        if (b0 == -1) done = true
+        val b0 = in.read()
+        if (b0 == -1) close()
         else {
-          val nRows = (b0 << 24) | (dis.readUnsignedByte() << 16) |
-            (dis.readUnsignedByte() << 8) | dis.readUnsignedByte()
-          val restLen = dis.readLong()
+          val nRows = (b0 << 24) | (in.readUnsignedByte() << 16) |
+            (in.readUnsignedByte() << 8) | in.readUnsignedByte()
+          val restLen = in.readLong()
           chunksTotal += 1
           var zoneLen = 0L
           val zHas = mutable.Map.empty[String, (Long, Long)]
-          longNames.foreach { n =>
-            val has = dis.readByte() != 0
-            val mn = dis.readLong(); val mx = dis.readLong()
+          fields.filter(f => physicallyLong(f.dataType)).foreach { f =>
+            val has = in.readByte() != 0
+            val mn = in.readLong(); val mx = in.readLong()
             zoneLen += 17L
-            if (has) zHas(n) = (mn, mx)
+            if (has) zHas(f.name) = (mn, mx)
           }
           val sHas = mutable.Map.empty[String, (Array[Byte], Array[Byte])]
-          strNames.foreach { n =>
-            val has = dis.readByte() != 0
+          fields.filter(_.dataType == StringType).foreach { f =>
+            val has = in.readByte() != 0
             zoneLen += 1L
             if (has) {
-              val mn = new Array[Byte](dis.readInt()); dis.readFully(mn)
-              val mx = new Array[Byte](dis.readInt()); dis.readFully(mx)
+              val mn = new Array[Byte](in.readInt()); in.readFully(mn)
+              val mx = new Array[Byte](in.readInt()); in.readFully(mx)
               zoneLen += 8L + mn.length + mx.length
-              sHas(n) = (mn, mx)
+              sHas(f.name) = (mn, mx)
             }
           }
           val dHas = mutable.Map.empty[String, (Double, Double)]
-          dblNames.foreach { n =>
-            val has = dis.readByte() != 0
-            val mn = dis.readDouble(); val mx = dis.readDouble()
+          fields.filter(_.dataType == DoubleType).foreach { f =>
+            val has = in.readByte() != 0
+            val mn = in.readDouble(); val mx = in.readDouble()
             zoneLen += 17L
-            if (has) dHas(n) = (mn, mx)
+            if (has) dHas(f.name) = (mn, mx)
           }
-          val admit = longZoneAdmits(filters.toSeq,
-              zHas.contains, zHas(_)._1, zHas(_)._2) &&
-            stringZoneAdmits(filters.toSeq,
-              sHas.contains, sHas(_)._1, sHas(_)._2) &&
-            doubleZoneAdmits(filters.toSeq,
-              dHas.contains, dHas(_)._1, dHas(_)._2)
-          if (!admit) skipFully(dis, restLen - zoneLen)
+          val admit =
+            longZoneAdmits(filters, zHas.contains, zHas(_)._1, zHas(_)._2) &&
+              stringZoneAdmits(filters,
+                sHas.contains, sHas(_)._1, sHas(_)._2) &&
+              doubleZoneAdmits(filters,
+                dHas.contains, dHas(_)._1, dHas(_)._2)
+          // this chunk's delete-vector entries: dv(from until dvAt)
+          val base = rowBase
+          rowBase += nRows
+          val from = dvAt
+          while (dvAt < dv.length && dv(dvAt) < rowBase) dvAt += 1
+          val n = nRows - (dvAt - from)
+          if (!admit || n == 0) skipFully(in, restLen - zoneLen)
           else {
-            val cols = new Array[Array[Any]](required.length)
-            val bitmapLen = (nRows + 7) / 8
-            fileFields.fields.foreach { f =>
-              val len = dis.readLong()
-              want.get(f.name) match {
-                case None => skipFully(dis, len)
-                case Some(outIdx) =>
-                  val bitmap = new Array[Byte](bitmapLen)
-                  dis.readFully(bitmap)
-                  def isNull(r: Int): Boolean =
-                    (bitmap(r >> 3) & (1 << (r & 7))) != 0
-                  val arr = new Array[Any](nRows)
-                  f.dataType match {
-                    case dt if physicallyLong(dt) => dis.readByte() match {
-                      case 0 => // plain 8-byte values
-                        var i = 0
-                        while (i < nRows) {
-                          val v = dis.readLong()
-                          arr(i) = if (isNull(i)) null else v
-                          i += 1
-                        }
-                      case 1 => // zigzag-delta varints
-                        var prev = 0L
-                        var i = 0
-                        while (i < nRows) {
-                          prev += unzigzag(readVarint(dis))
-                          arr(i) = if (isNull(i)) null else prev
-                          i += 1
-                        }
-                      case 2 => // FOR-bitpack: base + width + packed
-                        val base = dis.readLong()
-                        val width = dis.readUnsignedByte()
-                        val packed =
-                          new Array[Byte](((nRows.toLong * width + 7) / 8).toInt)
-                        dis.readFully(packed)
-                        val mask = if (width == 0) 0L else (1L << width) - 1L
-                        var acc = 0L; var nb = 0; var bp = 0
-                        var i = 0
-                        while (i < nRows) {
-                          while (nb < width) {
-                            acc |= (packed(bp) & 0xFFL) << nb
-                            bp += 1; nb += 8
-                          }
-                          val v = base + (acc & mask)
-                          acc >>>= width; nb -= width
-                          arr(i) = if (isNull(i)) null else v
-                          i += 1
-                        }
-                      case other => throw new IllegalStateException(
-                        s"gshard: unknown long encoding tag $other")
-                    }
-                    case DoubleType =>
-                      var i = 0
-                      while (i < nRows) {
-                        val v = dis.readDouble()
-                        arr(i) = if (isNull(i)) null else v
-                        i += 1
-                      }
-                    case StringType =>
-                      val t = dis.readByte()
-                      // a compressed payload (tag bit 2) inflates to
-                      // the raw encoding, then parses identically
-                      val in =
-                        if ((t & CompressFlag) != 0) {
-                          val comp =
-                            new Array[Byte]((len - bitmapLen - 1).toInt)
-                          dis.readFully(comp)
-                          new DataInputStream(
-                            new java.io.ByteArrayInputStream(inflate(comp)))
-                        } else dis
-                      (t & ~CompressFlag) match {
-                      case 0 => // plain: offsets + bytes
-                        val offs = new Array[Int](nRows + 1)
-                        var i = 0
-                        while (i <= nRows) { offs(i) = in.readInt(); i += 1 }
-                        val bytes = new Array[Byte](offs(nRows))
-                        in.readFully(bytes)
-                        i = 0
-                        while (i < nRows) {
-                          arr(i) =
-                            if (isNull(i)) null
-                            else java.util.Arrays
-                              .copyOfRange(bytes, offs(i), offs(i + 1))
-                          i += 1
-                        }
-                      case 1 => // dictionary: entries once, u8 indices
-                        val d = in.readUnsignedByte()
-                        val offs = new Array[Int](d + 1)
-                        var i = 0
-                        while (i <= d) { offs(i) = in.readInt(); i += 1 }
-                        val dictBytes = new Array[Byte](offs(d))
-                        in.readFully(dictBytes)
-                        // entries are shared read-only slices: equal
-                        // rows reference ONE array, the dictionary win
-                        val entries = Array.tabulate(d)(k =>
-                          java.util.Arrays.copyOfRange(
-                            dictBytes, offs(k), offs(k + 1)))
-                        val idx = new Array[Byte](nRows)
-                        in.readFully(idx)
-                        i = 0
-                        while (i < nRows) {
-                          arr(i) =
-                            if (isNull(i)) null
-                            else entries(idx(i) & 0xFF)
-                          i += 1
-                        }
-                      case other => throw new IllegalStateException(
-                        s"gshard: unknown string encoding tag $other")
-                    }
-                    case ArrayType(StringType, _) =>
-                      // tag byte (plain / deflated payload), then row
-                      // element offsets, element byte offsets, ONE
-                      // bulk byte read; per-row values are
-                      // Array[Array[Byte]] slices (null rows null)
-                      val t = dis.readByte()
-                      val in =
-                        if ((t & CompressFlag) != 0) {
-                          val comp =
-                            new Array[Byte]((len - bitmapLen - 1).toInt)
-                          dis.readFully(comp)
-                          new DataInputStream(
-                            new java.io.ByteArrayInputStream(inflate(comp)))
-                        } else dis
-                      require((t & ~CompressFlag) == 0,
-                        s"gshard: unknown string-list encoding tag $t")
-                      val rOffs = new Array[Int](nRows + 1)
-                      var i = 0
-                      while (i <= nRows) { rOffs(i) = in.readInt(); i += 1 }
-                      val nElems = rOffs(nRows)
-                      require(nElems >= 0 && nElems <= Int.MaxValue - 64,
-                        s"gshard: corrupt string-list block ($nElems elements)")
-                      val eOffs = new Array[Int](nElems + 1)
-                      i = 0
-                      while (i <= nElems) { eOffs(i) = in.readInt(); i += 1 }
-                      val bytes = new Array[Byte](eOffs(nElems))
-                      in.readFully(bytes)
-                      i = 0
-                      while (i < nRows) {
-                        if (!isNull(i)) {
-                          val out = new Array[Array[Byte]](rOffs(i + 1) - rOffs(i))
-                          var j = 0
-                          while (j < out.length) {
-                            val e = rOffs(i) + j
-                            out(j) = java.util.Arrays.copyOfRange(
-                              bytes, eOffs(e), eOffs(e + 1))
-                            j += 1
-                          }
-                          arr(i) = out
-                        }
-                        i += 1
-                      }
-                    case ArrayType(IntegerType, _) |
-                         ArrayType(LongType, _) =>
-                      // token-id list: row offsets + one flat
-                      // long-seq decode, sliced per row
-                      val isInt = f.dataType match {
-                        case ArrayType(IntegerType, _) => true
-                        case _ => false
-                      }
-                      val rOffs = new Array[Int](nRows + 1)
-                      var i = 0
-                      while (i <= nRows) { rOffs(i) = dis.readInt(); i += 1 }
-                      val nElems = rOffs(nRows)
-                      require(nElems >= 0 &&
-                        nElems.toLong * 8 <= Int.MaxValue - 64,
-                        s"gshard: corrupt token-id block ($nElems elements)")
-                      val flat = readLongSeq(dis, nElems)
-                      i = 0
-                      while (i < nRows) {
-                        if (!isNull(i)) {
-                          val m = rOffs(i + 1) - rOffs(i)
-                          if (isInt) {
-                            val out = new Array[Int](m)
-                            var j = 0
-                            while (j < m) {
-                              out(j) = flat(rOffs(i) + j).toInt; j += 1
-                            }
-                            arr(i) = out
-                          } else {
-                            val out = new Array[Long](m)
-                            var j = 0
-                            while (j < m) {
-                              out(j) = flat(rOffs(i) + j); j += 1
-                            }
-                            arr(i) = out
-                          }
-                        }
-                        i += 1
-                      }
-                    case ArrayType(et, _) =>
-                      // one bulk read of the element payload, then
-                      // per-row slices — raw IEEE bits roundtrip
-                      // exactly (the writer used raw bits too)
-                      val isF = et == FloatType
-                      val esz = if (isF) 4 else 8
-                      val offs: Array[Int] = dis.readByte() match {
-                        case 0 => // fixed-dim: implicit addressing
-                          val dim = dis.readInt()
-                          // a corrupt dim would overflow the Int
-                          // offsets silently — fail loudly instead
-                          require(dim >= 0 &&
-                            nRows.toLong * dim * esz <= Int.MaxValue - 64,
-                            s"gshard: corrupt vector block (dim=$dim)")
-                          Array.tabulate(nRows + 1)(_ * dim)
-                        case 1 => // variable: explicit element offsets
-                          val o = new Array[Int](nRows + 1)
-                          var i = 0
-                          while (i <= nRows) { o(i) = dis.readInt(); i += 1 }
-                          o
-                        case other => throw new IllegalStateException(
-                          s"gshard: unknown vector encoding tag $other")
-                      }
-                      val total = offs(nRows).toLong
-                      require(total >= 0 && total * esz <= Int.MaxValue - 64,
-                        s"gshard: corrupt vector block ($total elements)")
-                      val raw = new Array[Byte]((total * esz).toInt)
-                      dis.readFully(raw)
-                      val bb = java.nio.ByteBuffer.wrap(raw) // big-endian
-                      if (isF) {
-                        val fb = bb.asFloatBuffer()
-                        var i = 0
-                        while (i < nRows) {
-                          if (!isNull(i)) {
-                            val out = new Array[Float](offs(i + 1) - offs(i))
-                            fb.position(offs(i)); fb.get(out)
-                            arr(i) = out
-                          }
-                          i += 1
-                        }
-                      } else {
-                        val db = bb.asDoubleBuffer()
-                        var i = 0
-                        while (i < nRows) {
-                          if (!isNull(i)) {
-                            val out = new Array[Double](offs(i + 1) - offs(i))
-                            db.position(offs(i)); db.get(out)
-                            arr(i) = out
-                          }
-                          i += 1
-                        }
-                      }
-                    case other =>
-                      throw new IllegalStateException(other.toString)
-                  }
-                  cols(outIdx) = arr
+            // the surviving local rows, ascending (null: all survive)
+            val rows =
+              if (n == nRows) null
+              else {
+                val a = new Array[Int](n)
+                var p = from
+                var w = 0
+                var i = 0
+                while (i < nRows) {
+                  if (p < dvAt && dv(p) == base + i) p += 1
+                  else { a(w) = i; w += 1 }
+                  i += 1
+                }
+                a
+              }
+            out.foreach { v => v.reset(); v.reserve(n) }
+            var c = 0
+            while (c < fields.length) {
+              val len = in.readLong()
+              if (slot(c) < 0) skipFully(in, len)
+              else decodeColumn(fields(c).dataType, len, nRows, n, rows,
+                out(slot(c)))
+              c += 1
+            }
+            if (posSlot >= 0) {
+              val v = out(posSlot)
+              var w = 0
+              while (w < n) {
+                v.putLong(w, base + (if (rows == null) w else rows(w)))
+                w += 1
               }
             }
-            missing.foreach { case (_, outIdx) =>
-              cols(outIdx) = new Array[Any](nRows) // all NULL
-            }
-            chunks += ((nRows, cols, rowBase))
+            missing.foreach(o => out(o).putNulls(0, n))
+            chunksRead += 1
+            return n
           }
-          rowBase += nRows
         }
       }
-    } finally dis.close()
-    val dv = if (deleted != null && deleted.nonEmpty) deleted else null
-    if (dv == null && !wantPositions) {
-      // fast path (no mask, no positions): flat concat as ever
-      val total = chunks.iterator.map(_._1).sum
-      val out = new Array[Array[Any]](required.length)
-      var c = 0
-      while (c < required.length) {
-        val arr = new Array[Any](total)
-        var pos = 0
-        chunks.foreach { case (n, cols, _) =>
-          System.arraycopy(cols(c), 0, arr, pos, n); pos += n
+      -1
+    }
+
+    /** One column block (`len` bytes) of an `nRows`-row chunk into `v`:
+      * output row `w` takes the chunk's local row `rows(w)` (`w` when
+      * `rows` is null). */
+    private def decodeColumn(dt: DataType, len: Long, nRows: Int, n: Int,
+        rows: Array[Int], v: WritableColumnVector): Unit = {
+      val nulls = new Array[Byte]((nRows + 7) / 8)
+      in.readFully(nulls)
+      // the per-row loop every block shares: NULL slots set the
+      // vector's null bit, the others `put(w, i)`
+      def each(put: (Int, Int) => Unit): Unit = {
+        var w = 0
+        while (w < n) {
+          val i = if (rows == null) w else rows(w)
+          if ((nulls(i >> 3) & (1 << (i & 7))) != 0) v.putNull(w)
+          else put(w, i)
+          w += 1
         }
-        out(c) = arr
-        c += 1
       }
-      return Decoded(total, out, chunks.length, chunksTotal)
-    }
-    // general path: per-chunk survivor selection against the sorted
-    // delete vector (pointer walk — positions ascend with the scan),
-    // physical positions carried through
-    def lowerBound(a: Array[Long], key: Long): Int = {
-      val i = java.util.Arrays.binarySearch(a, key)
-      if (i >= 0) i else -(i + 1)
-    }
-    // local survivor indices per chunk (null = all survive)
-    val keeps: Seq[Array[Int]] = chunks.toSeq.map { case (n, _, base) =>
-      if (dv == null) null
-      else {
-        val from = lowerBound(dv, base)
-        val to = lowerBound(dv, base + n)
-        if (from == to) null
+      // list rows: row i's elements [offs(i), offs(i + 1)) land in the
+      // child vector at the next free offset, `put(childOffset, i)`
+      def eachList(offs: Array[Int])(put: (Int, Int) => Unit): Unit = {
+        v.arrayData().reserve(offs(nRows))
+        var off = 0
+        each { (w, i) =>
+          val m = offs(i + 1) - offs(i)
+          put(off, i)
+          v.putArray(w, off, m)
+          off += m
+        }
+      }
+      // a string or string-list payload: deflated when the tag's
+      // CompressFlag is set, inflated to the raw encoding, which then
+      // parses identically
+      def payload(tag: Int): DataInputStream =
+        if ((tag & CompressFlag) == 0) in
         else {
-          val out = new Array[Int](n - (to - from))
-          var w = 0
-          var p = from
-          var i = 0
-          while (i < n) {
-            if (p < to && dv(p) == base + i) p += 1
-            else { out(w) = i; w += 1 }
-            i += 1
-          }
-          out
+          val comp = new Array[Byte]((len - nulls.length - 1).toInt)
+          in.readFully(comp)
+          new DataInputStream(new java.io.ByteArrayInputStream(inflate(comp)))
         }
-      }
-    }
-    val total = chunks.indices.map { k =>
-      if (keeps(k) == null) chunks(k)._1 else keeps(k).length
-    }.sum
-    val out = new Array[Array[Any]](required.length)
-    var c = 0
-    while (c < required.length) {
-      val arr = new Array[Any](total)
-      var pos = 0
-      var k = 0
-      while (k < chunks.length) {
-        val (n, cols, _) = chunks(k)
-        val keep = keeps(k)
-        if (keep == null) {
-          System.arraycopy(cols(c), 0, arr, pos, n); pos += n
-        } else {
-          var i = 0
-          while (i < keep.length) {
-            arr(pos) = cols(c)(keep(i)); pos += 1; i += 1
+      dt match {
+        case _ if physicallyLong(dt) =>
+          val x = readLongSeq(in, nRows)
+          dt match {
+            case DateType | IntegerType => each((w, i) => v.putInt(w, x(i).toInt))
+            case BooleanType => each((w, i) => v.putBoolean(w, x(i) != 0L))
+            case d: DecimalType => each((w, i) =>
+              v.putDecimal(w, Decimal(x(i), d.precision, d.scale), d.precision))
+            // long and timestamps: the stored micros ARE the Catalyst
+            // internal encoding
+            case _ => each((w, i) => v.putLong(w, x(i)))
           }
-        }
-        k += 1
-      }
-      out(c) = arr
-      c += 1
-    }
-    val positions: Array[Long] =
-      if (!wantPositions) null
-      else {
-        val ps = new Array[Long](total)
-        var pos = 0
-        var k = 0
-        while (k < chunks.length) {
-          val (n, _, base) = chunks(k)
-          val keep = keeps(k)
-          if (keep == null) {
-            var i = 0
-            while (i < n) { ps(pos) = base + i; pos += 1; i += 1 }
-          } else {
-            var i = 0
-            while (i < keep.length) {
-              ps(pos) = base + keep(i); pos += 1; i += 1
+        case DoubleType =>
+          val raw = new Array[Byte](8 * nRows)
+          in.readFully(raw)
+          val x = new Array[Double](nRows)
+          java.nio.ByteBuffer.wrap(raw).asDoubleBuffer().get(x)
+          each((w, i) => v.putDouble(w, x(i)))
+        case StringType =>
+          val t = in.readByte()
+          val src = payload(t)
+          (t & ~CompressFlag) match {
+            case 0 => // plain: offsets + one byte buffer
+              val offs = readInts(src, nRows + 1)
+              val bytes = new Array[Byte](offs(nRows))
+              src.readFully(bytes)
+              each((w, i) =>
+                v.putByteArray(w, bytes, offs(i), offs(i + 1) - offs(i)))
+            case 1 => // dictionary: entries once in one buffer, u8 indices
+              val d = src.readUnsignedByte()
+              val offs = readInts(src, d + 1)
+              val dict = new Array[Byte](offs(d))
+              src.readFully(dict)
+              val idx = new Array[Byte](nRows)
+              src.readFully(idx)
+              each { (w, i) =>
+                val k = idx(i) & 0xFF
+                v.putByteArray(w, dict, offs(k), offs(k + 1) - offs(k))
+              }
+            case other => throw new IllegalStateException(
+              s"gshard: unknown string encoding tag $other")
+          }
+        case ArrayType(StringType, _) =>
+          // tag byte (plain / deflated payload), then row element
+          // offsets, element byte offsets, ONE bulk byte read
+          val t = in.readByte()
+          val src = payload(t)
+          require((t & ~CompressFlag) == 0,
+            s"gshard: unknown string-list encoding tag $t")
+          val rOffs = readInts(src, nRows + 1)
+          val nElems = rOffs(nRows)
+          require(nElems >= 0 && nElems <= Int.MaxValue - 64,
+            s"gshard: corrupt string-list block ($nElems elements)")
+          val eOffs = readInts(src, nElems + 1)
+          val bytes = new Array[Byte](eOffs(nElems))
+          src.readFully(bytes)
+          val child = v.arrayData()
+          eachList(rOffs) { (off, i) =>
+            var e = rOffs(i)
+            while (e < rOffs(i + 1)) {
+              child.putByteArray(off + e - rOffs(i), bytes, eOffs(e),
+                eOffs(e + 1) - eOffs(e))
+              e += 1
             }
           }
-          k += 1
-        }
-        ps
+        case ArrayType(et @ (IntegerType | LongType), _) =>
+          // token-id list: row offsets + one flat long-seq decode
+          val rOffs = readInts(in, nRows + 1)
+          val nElems = rOffs(nRows)
+          require(nElems >= 0 && nElems.toLong * 8 <= Int.MaxValue - 64,
+            s"gshard: corrupt token-id block ($nElems elements)")
+          val flat = readLongSeq(in, nElems)
+          val child = v.arrayData()
+          if (et == LongType)
+            eachList(rOffs)((off, i) =>
+              child.putLongs(off, rOffs(i + 1) - rOffs(i), flat, rOffs(i)))
+          else {
+            val ints = flat.map(_.toInt)
+            eachList(rOffs)((off, i) =>
+              child.putInts(off, rOffs(i + 1) - rOffs(i), ints, rOffs(i)))
+          }
+        case ArrayType(et, _) =>
+          // vector block: one bulk read of raw (big-endian) IEEE bits —
+          // exact, the writer used raw bits too
+          val esz = if (et == FloatType) 4 else 8
+          val offs: Array[Int] = in.readByte() match {
+            case 0 => // fixed-dim: implicit addressing
+              val dim = in.readInt()
+              // a corrupt dim would overflow the Int offsets silently —
+              // fail loudly instead
+              require(dim >= 0 &&
+                nRows.toLong * dim * esz <= Int.MaxValue - 64,
+                s"gshard: corrupt vector block (dim=$dim)")
+              Array.tabulate(nRows + 1)(_ * dim)
+            case 1 => readInts(in, nRows + 1) // variable: element offsets
+            case other => throw new IllegalStateException(
+              s"gshard: unknown vector encoding tag $other")
+          }
+          val total = offs(nRows).toLong
+          require(total >= 0 && total * esz <= Int.MaxValue - 64,
+            s"gshard: corrupt vector block ($total elements)")
+          val raw = new Array[Byte]((total * esz).toInt)
+          in.readFully(raw)
+          val bb = java.nio.ByteBuffer.wrap(raw)
+          val child = v.arrayData()
+          if (et == FloatType) {
+            val x = new Array[Float](total.toInt)
+            bb.asFloatBuffer().get(x)
+            eachList(offs)((off, i) =>
+              child.putFloats(off, offs(i + 1) - offs(i), x, offs(i)))
+          } else {
+            val x = new Array[Double](total.toInt)
+            bb.asDoubleBuffer().get(x)
+            eachList(offs)((off, i) =>
+              child.putDoubles(off, offs(i + 1) - offs(i), x, offs(i)))
+          }
+        case other => throw new IllegalStateException(other.toString)
       }
-    Decoded(total, out, chunks.length, chunksTotal, positions)
+    }
+  }
+
+  private def readInts(in: DataInputStream, n: Int): Array[Int] = {
+    val out = new Array[Int](n)
+    var i = 0
+    while (i < n) { out(i) = in.readInt(); i += 1 }
+    out
   }
 }

@@ -60,9 +60,9 @@ object ShardOps {
     *  3. The manifest commit swaps each touched entry's `dv` slot; a
     *     file whose every physical row is now masked DROPS from the
     *     manifest outright. Fully-deleted-table edge included.
-    *  4. Readers mask at decode ([[ShardFormat.readShardFile]]) in
-    *     BOTH the row and columnar paths; per-column metadata
-    *     answers refuse on DV-bearing files (COUNT(*) stays exact
+    *  4. The one reader masks at decode ([[ShardFormat.ChunkReader]]),
+    *     in the per-row loop that fills the vectors; per-column
+    *     metadata answers refuse on DV-bearing files (COUNT(*) stays exact
     *     via live counts); compaction (connector read → overwrite)
     *     MATERIALIZES the mask and clears it; vacuum sweeps
     *     unreferenced sidecars under retention.

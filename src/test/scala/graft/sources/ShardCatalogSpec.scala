@@ -1,18 +1,15 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
 import graft.sources.shard.ShardFormat
 
 /** B23 — the gshard `TableCatalog`: the connector reachable from pure
   * SQL (CTAS, INSERT INTO, SELECT with pushdown, DROP TABLE). */
-class ShardCatalogSpec extends SparkSpec {
+class ShardCatalogSpec extends ShardTempRoot {
 
   private lazy val warehouse: String = {
-    val w = Files.createTempDirectory("graft_gshard_cat_").toString
+    val w = tmp("cat_")
     spark.conf.set("spark.sql.catalog.gcat",
       "graft.sources.shard.ShardCatalog")
     spark.conf.set("spark.sql.catalog.gcat.warehouse", w)
@@ -103,4 +100,6 @@ class ShardCatalogSpec extends SparkSpec {
     assert(chain(e2).contains("manifest-reserved"), chain(e2))
     assert(!ShardFormat.hasManifest(s"$warehouse/main/badmark"))
   }
+
+  leavesNoTempDirs()
 }

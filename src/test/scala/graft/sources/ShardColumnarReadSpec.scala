@@ -10,12 +10,14 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.sources.shard.{ShardCdc, ShardFormat, ShardOps}
+import graft.sources.shard.tests.ReadProbe
 
 /** gshard has one decode path, the columnar reader: every read — a
   * batch scan, a `readStream` source, and both `gshard-cdc` feeds —
   * plans a columnar scan under Spark's `ColumnarToRow`, and the CDC
   * feeds, which append their side and version as constant vectors,
-  * stay exact across the reader's 4096-row batches. */
+  * stay exact across the reader's batches. A batch is one surviving
+  * chunk's unmasked rows: the reader never holds more than one chunk. */
 class ShardColumnarReadSpec extends ShardTempRoot {
 
   private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
@@ -120,6 +122,36 @@ class ShardColumnarReadSpec extends ShardTempRoot {
       // the change files hold exactly the net rows, nothing that cancels
       if (rowLevel) assert(feed.count() == want.values.map(math.abs).sum)
     }
+  }
+
+  test("the reader decodes one chunk at a time: one batch per " +
+      "surviving chunk, sized to its unmasked rows; skipped chunks " +
+      "are never decoded") {
+    val sess = spark
+    import sess.implicits._
+    val d = tmp("colread_chunks")
+    // 6 chunks of 1000 rows (the last 500); `g` is 1 only in chunk 2,
+    // so `g = 0` skips it off its zone map
+    val n = 5500L
+    ShardFormat.write((0L until n).map(i => (i, if (i / 1000 == 2) 1L else 0L))
+      .toDF("id", "g"), d, "id", 1, chunkRows = 1000)
+    val masked = Seq(3L, 998L, 3001L, 3500L) // chunks 0 and 3
+    assert(ShardOps.deleteMor(spark, d, col("id").isin(masked: _*)) == 4L)
+    val m = ShardFormat.readManifest(d)
+    val e = m.entries.head
+    assert(m.entries.size == 1 && e.rows == n)
+    val dec = ReadProbe.read(s"$d/${e.file}", m.schema, Seq("id", "_pos"),
+      Seq(org.apache.spark.sql.sources.EqualTo("g", 0L)),
+      dvPath = s"$d/${e.dv.get._1}")
+    val chunks = (0L until n).grouped(1000).toSeq
+    assert(dec.chunksTotal == chunks.size)
+    assert(dec.chunksRead == chunks.size - 1)
+    val survivors = chunks.patch(2, Nil, 1).map(_.filterNot(masked.contains))
+    assert(dec.batchRows == survivors.map(_.size),
+      s"batches ${dec.batchRows} are not the surviving chunks")
+    // the one sorted file: a row's physical position is its id
+    assert(dec.cols(0) == survivors.flatten)
+    assert(dec.cols(1) == survivors.flatten)
   }
 
   leavesNoTempDirs()

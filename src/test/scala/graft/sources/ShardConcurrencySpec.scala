@@ -5,7 +5,6 @@ import java.util.ConcurrentModificationException
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
 import graft.sources.shard.{ShardFormat, ShardOps}
 
 /** OPTIMISTIC-CONCURRENCY commit for gshard (r15 verdict task #1):
@@ -22,10 +21,7 @@ import graft.sources.shard.{ShardFormat, ShardOps}
   * same-table writers additionally serialize on
   * [[ShardFormat.tableLock]], so their read-modify-publish sections
   * can never interleave at all. */
-class ShardConcurrencySpec extends SparkSpec {
-
-  private def tmp(tag: String): String =
-    Files.createTempDirectory(s"gshard_occ_$tag").toString
+class ShardConcurrencySpec extends ShardTempRoot {
 
   private def rows(lo: Long, hi: Long) = {
     val sess = spark
@@ -356,4 +352,6 @@ class ShardConcurrencySpec extends SparkSpec {
     assert(graft.sources.shard.tests.FormatProbe.commitRecordGens(d) ==
       (0L to (base.gen + 2L * n)).toSeq)
   }
+
+  leavesNoTempDirs()
 }

@@ -31,7 +31,7 @@ class ShardDeleteMorSpec extends ShardTempRoot {
     dataFiles(d).map(f => f -> Files.size(Paths.get(d, f))).toMap
 
   test("a 1-row DELETE rewrites ZERO data files: one dv sidecar, one " +
-      "manifest commit, the row is gone through both readers") {
+      "manifest commit, the row is gone") {
     val d = tmp("one")
     ShardFormat.write(base(1000), d, "id", 4)
     val before = fileBytes(d)
@@ -174,6 +174,38 @@ class ShardDeleteMorSpec extends ShardTempRoot {
     val c = ShardCdc.classify(spark.table("mor_cdc"), "id")
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(c == Set((7L, "delete"), (8L, "delete")), c.toString)
+  }
+
+  test("_pos, delete vectors and chunk skipping compose on a " +
+      "multi-chunk file: survivors and positions equal the model") {
+    val sess = spark
+    import sess.implicits._
+    val d = tmp("poschunks")
+    // 5 chunks of 1000 rows; `g` is 1 only in chunk 2, so `g = 0`
+    // skips that chunk off its zone map
+    val n = 5000L
+    ShardFormat.write((0L until n).map(i =>
+        (i, if (i / 1000 == 2) 1L else 0L, s"v$i")).toDF("id", "g", "tag"),
+      d, "id", 1, chunkRows = 1000)
+    def read(filtered: Boolean) = {
+      val all = spark.read.format("gshard").load(d)
+      (if (filtered) all.filter(col("g") === 0L) else all)
+        .select(col("id"), col("_pos"), col("tag")).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq.sorted
+    }
+    // the one sorted file: a row's physical position is its id
+    assert(read(filtered = false) == (0L until n).map(i => (i, i, s"v$i")))
+    val masked = Set(0L, 17L, 999L, 3000L, 3456L, 3999L) // chunks 0 and 3
+    assert(ShardOps.deleteMor(spark, d, col("id").isin(masked.toSeq: _*)) ==
+      masked.size.toLong)
+    val m = ShardFormat.readManifest(d)
+    assert(m.entries.size == 1 && m.entries.head.liveRows == n - masked.size)
+    def model(keep: Long => Boolean) =
+      (0L until n).filter(i => keep(i) && !masked(i)).map(i => (i, i, s"v$i"))
+    val filtered = read(filtered = true)
+    assert(filtered == model(_ / 1000 != 2))
+    assert(read(filtered = false) == model(_ => true))
+    assert(!filtered.exists(r => masked(r._1)))
   }
 
   test("job budget: a 1-row DELETE runs at most 5 Spark jobs — " +

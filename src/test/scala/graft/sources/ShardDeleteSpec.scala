@@ -4,7 +4,6 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
 import graft.sources.shard.ShardFormat
 
 /** B32 — the gshard metadata-only DELETE contract: a `DELETE FROM …
@@ -13,7 +12,7 @@ import graft.sources.shard.ShardFormat
   * anything undecidable — a straddling file, a null in the predicate
   * column, a pre-nullcount manifest — REJECTS loudly instead of
   * silently rewriting data. */
-class ShardDeleteSpec extends SparkSpec {
+class ShardDeleteSpec extends ShardTempRoot {
 
   private val cat = "gshard_delspec"
   private def ns = s"$cat.main"
@@ -22,7 +21,7 @@ class ShardDeleteSpec extends SparkSpec {
   // per session, so re-pointing the conf later would desynchronize the
   // catalog's directory from the one the spec inspects
   private lazy val warehouse: String = {
-    val wh = Files.createTempDirectory("gshard_delspec_").toString
+    val wh = tmp("delspec_")
     spark.conf.set(s"spark.sql.catalog.$cat",
       "graft.sources.shard.ShardCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
@@ -183,4 +182,6 @@ class ShardDeleteSpec extends SparkSpec {
       assert(spark.table(s"$ns.t5").count() == 0L)
     }
   }
+
+  leavesNoTempDirs()
 }

@@ -1,10 +1,7 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
 import graft.sources.shard.{ShardFormat, ShardOps}
 
 /** DROP COLUMN / RENAME COLUMN schema evolution (r15 verdict task
@@ -14,10 +11,10 @@ import graft.sources.shard.{ShardFormat, ShardOps}
   * type kept) so old files still decode, while new files write an
   * all-null block in the slot. Generation-pinned schemas give time
   * travel the pre-evolution shape for free. */
-class ShardDropRenameSpec extends SparkSpec {
+class ShardDropRenameSpec extends ShardTempRoot {
 
   private lazy val warehouse: String = {
-    val wh = Files.createTempDirectory("gshard_evo2_wh_").toString
+    val wh = tmp("evo2_wh_")
     spark.conf.set("spark.sql.catalog.gshard_evo2",
       "graft.sources.shard.ShardCatalog")
     spark.conf.set("spark.sql.catalog.gshard_evo2.warehouse", wh)
@@ -125,7 +122,7 @@ class ShardDropRenameSpec extends SparkSpec {
       Seq((1L, "x")).toDF("id", "__dropped_0")
         .write.format("gshard").option("rangecol", "id")
         .mode("overwrite")
-        .save(Files.createTempDirectory("gshard_evo2_bad").toString)
+        .save(tmp("evo2_bad"))
     }
     assert(ex.getMessage.contains("reserved"))
     val (t2, _) = fresh("lastcol", 10)
@@ -137,4 +134,6 @@ class ShardDropRenameSpec extends SparkSpec {
     }
     assert(ex2.getMessage.contains("last visible column"))
   }
+
+  leavesNoTempDirs()
 }

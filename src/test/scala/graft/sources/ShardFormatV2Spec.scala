@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.sources.shard.ShardFormat
+import graft.sources.shard.tests.ReadProbe
 
 /** The gshard v2 format contract: NULL roundtrip through the null
   * bitmaps, chunked row groups with bounded
@@ -111,7 +112,7 @@ class ShardFormatV2Spec extends ShardTempRoot {
     val m = ShardFormat.readManifest(d)
     assert(m.entries.size == 1 && m.entries.head.rows > 512 * 4)
     val schema = m.schema
-    val dec = ShardFormat.readShardFile(s"$d/${m.entries.head.file}",
+    val dec = ReadProbe.read(s"$d/${m.entries.head.file}",
       schema, schema.fieldNames.toIndexedSeq)
     assert(dec.chunksTotal >= (m.entries.head.rows / 512).toInt,
       s"expected many chunks, got ${dec.chunksTotal}")
@@ -132,7 +133,7 @@ class ShardFormatV2Spec extends ShardTempRoot {
     val m = ShardFormat.readManifest(d)
     val file = s"$d/${m.entries.head.file}"
     val target = li.agg(max(col("l_orderkey"))).head.getLong(0)
-    val dec = ShardFormat.readShardFile(file, m.schema,
+    val dec = ReadProbe.read(file, m.schema,
       m.schema.fieldNames.toIndexedSeq,
       Seq(org.apache.spark.sql.sources.EqualTo("l_orderkey", target)))
     assert(dec.chunksTotal > 4, s"degenerate: ${dec.chunksTotal} chunks")
@@ -161,7 +162,7 @@ class ShardFormatV2Spec extends ShardTempRoot {
       .option("shards", 1).option("chunkrows", "256")
       .mode("overwrite").save(d)
     val m = ShardFormat.readManifest(d)
-    val dec = ShardFormat.readShardFile(s"$d/${m.entries.head.file}",
+    val dec = ReadProbe.read(s"$d/${m.entries.head.file}",
       m.schema, m.schema.fieldNames.toIndexedSeq)
     assert(dec.chunksTotal > 8, s"chunkrows ignored: ${dec.chunksTotal}")
     assert(spark.read.format("gshard").load(d).count() == li.count())
@@ -303,7 +304,7 @@ class ShardFormatV2Spec extends ShardTempRoot {
     val e = intercept[Exception] {
       // prune to a non-string column so the reader SKIPS blocks (the
       // skip path is the one that used to spin on skip()==0 at EOF)
-      ShardFormat.readShardFile(f.toString, m.schema, Seq("cents"))
+      ReadProbe.read(f.toString, m.schema, Seq("cents"))
     }
     assert(e.isInstanceOf[java.io.EOFException] ||
       e.getMessage != null, s"unexpected: $e")
@@ -323,8 +324,8 @@ class ShardFormatV2Spec extends ShardTempRoot {
     // soundness: every id present in a file MUST hit that file's bloom
     import ShardFormat.Bloom
     val perFile = m.entries.map { e =>
-      val ids = ShardFormat
-        .readShardFile(s"$dir/${e.file}", m.schema, Seq("event_id"))
+      val ids = ReadProbe
+        .read(s"$dir/${e.file}", m.schema, Seq("event_id"))
         .cols(0).map(_.asInstanceOf[Long])
       val bits = ShardFormat.unb64(e.bloom("event_id"))
       ids.foreach { id =>

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.sources.shard.ShardFormat
+import graft.sources.shard.tests.ReadProbe
 
 /** The gshard v3 format contract on top of v2's (ShardFormatV2Spec):
   * the WIDENED logical-type surface (timestamp/timestamp_ntz/date/
@@ -45,7 +46,7 @@ class ShardFormatV3Spec extends ShardTempRoot {
       }.toSet
 
   test("timestamp/date/int/boolean roundtrip exactly (with nulls), " +
-      "both reader paths, both write paths") {
+      "both write paths") {
     val want = rowsOf(typed)
     assert(want.exists(_._2.isEmpty) && want.exists(_._3.isEmpty) &&
       want.exists(_._4.isEmpty) && want.exists(_._5.isEmpty),
@@ -99,7 +100,7 @@ class ShardFormatV3Spec extends ShardTempRoot {
   }
 
   test("DECIMAL(p≤18, s) rides the long block: exact roundtrip with " +
-      "nulls, both reader paths, zone pruning, filter normalization") {
+      "nulls, zone pruning, filter normalization") {
     val d = tmp("gshard_dec_")
     // exact cents → DECIMAL(12,2): unscaled = the cents themselves
     val src = tables.events.select(col("event_id"),
@@ -199,7 +200,7 @@ class ShardFormatV3Spec extends ShardTempRoot {
     val m = ShardFormat.readManifest(d)
     val maxUser = m.entries.head.zMax("user_id")
     val thr = "u%06d".format(maxUser - maxUser / 8)
-    val dec = ShardFormat.readShardFile(s"$d/${m.entries.head.file}",
+    val dec = ReadProbe.read(s"$d/${m.entries.head.file}",
       m.schema, m.schema.fieldNames.toIndexedSeq,
       Seq(org.apache.spark.sql.sources.GreaterThan("tag", thr)))
     assert(dec.chunksTotal > 4, s"degenerate: ${dec.chunksTotal} chunks")
@@ -224,7 +225,7 @@ class ShardFormatV3Spec extends ShardTempRoot {
     ShardFormat.write(df, d, "user_id", 1, chunkRows = 256)
     val m = ShardFormat.readManifest(d)
     val thr = "u000000" + ("x" * 80)
-    val dec = ShardFormat.readShardFile(s"$d/${m.entries.head.file}",
+    val dec = ReadProbe.read(s"$d/${m.entries.head.file}",
       m.schema, m.schema.fieldNames.toIndexedSeq,
       Seq(org.apache.spark.sql.sources.GreaterThan("tag", thr)))
     // no chunk bounds -> nothing skipped, and every row decodes

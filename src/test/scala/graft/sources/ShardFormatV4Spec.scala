@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.sources.shard.ShardFormat
+import graft.sources.shard.tests.ReadProbe
 
 /** The gshard v4 format contract on top of v3's (ShardFormatV3Spec):
   * DOUBLE zone maps at both grains (file-level manifest bounds as raw
@@ -83,7 +84,7 @@ class ShardFormatV4Spec extends ShardTempRoot {
     val path = s"$d/${m.entries.head.file}"
     // a selective predicate reads only the matching chunks — the NaN
     // chunk admits too (its slot is empty), everything else skips
-    val dec = ShardFormat.readShardFile(path, schema, Seq("k", "v"),
+    val dec = ReadProbe.read(path, schema, Seq("k", "v"),
       Seq(org.apache.spark.sql.sources.GreaterThan("v", (n - 100).toDouble)))
     assert(dec.chunksTotal == (n + 8191) / 8192)
     // surviving: the last chunk (matches) + the NaN chunk (no bounds)

@@ -1,8 +1,13 @@
 package graft.sources.shard.tests
 
-import org.apache.spark.sql.sources.Filter
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
-import graft.sources.shard.{ShardFormat, ShardTable}
+import org.apache.spark.sql.sources.Filter
+import org.apache.spark.sql.types.{LongType, StructType}
+
+import graft.sources.shard.{ShardColumnarReader, ShardFormat,
+  ShardInputPartition, ShardTable}
 
 /** Test-only handle onto the package-private [[ShardTable]] API —
   * lets specs outside the shard package probe the metadata-delete
@@ -34,10 +39,45 @@ object FormatProbe {
     ShardFormat.inflate(comp)
 }
 
+/** Test-side decode of one shard file through the production reader,
+  * [[ShardColumnarReader]]: every batch drained, each cell mapped back
+  * to its storage value ([[ShardFormat.storageValue]]: long-block types
+  * as Long, strings as UTF-8 bytes, lists as arrays), plus the size of
+  * each batch and the reader's chunk audit. `_pos` may be required. */
+object ReadProbe {
+  final case class FileRead(cols: IndexedSeq[IndexedSeq[Any]],
+      batchRows: Seq[Int], chunksRead: Int, chunksTotal: Int) {
+    def nRows: Int = batchRows.sum
+  }
+
+  def read(path: String, schema: StructType, required: Seq[String],
+      filters: Seq[Filter] = Nil, dvPath: String = null): FileRead = {
+    val types = required.map {
+      case "_pos" => LongType
+      case n => schema(n).dataType
+    }.toIndexedSeq
+    val r = new ShardColumnarReader(ShardInputPartition(path,
+      schema.fields.map(f => (f.name, ShardFormat.typeTag(f.dataType))),
+      required.toArray, filters.toArray, dvPath))
+    try {
+      val rows = ArrayBuffer.empty[IndexedSeq[Any]]
+      val sizes = ArrayBuffer.empty[Int]
+      while (r.next()) {
+        val b = r.get()
+        sizes += b.numRows()
+        b.rowIterator().asScala.foreach(row => rows +=
+          types.indices.map(c => ShardFormat.storageValue(row, c, types(c))))
+      }
+      FileRead(types.indices.map(c => rows.map(_(c)).toIndexedSeq),
+        sizes.toSeq, r.chunksRead, r.chunksTotal)
+    } finally r.close()
+  }
+}
+
 /** Test-side reads of a commit's row-grain change files. */
 object ChangeProbe {
   import java.nio.charset.StandardCharsets
-  import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+  import org.apache.spark.sql.types.{IntegerType, StructField}
   import graft.sources.shard.ShardCdc
 
   /** The head generation's change rows, decoded straight from its
@@ -49,9 +89,9 @@ object ChangeProbe {
     val schema = StructType(ShardFormat.visible(m.schema).fields :+
       StructField(ShardCdc.SideCol, IntegerType))
     m.changes.flatMap { case (f, _) =>
-      val dec = ShardFormat.readShardFile(s"$dir/$f", schema,
+      val dec = ReadProbe.read(s"$dir/$f", schema,
         schema.fieldNames.toIndexedSeq)
-      (0 until dec.nRows).map(r => dec.cols.toSeq.map(c => external(c(r))))
+      (0 until dec.nRows).map(r => dec.cols.map(c => external(c(r))))
     }
   }
 
