@@ -3,9 +3,13 @@ package graft.streaming
 import java.nio.file.{FileAlreadyExistsException, Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.streaming.StreamingRelationV2
+import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQueryProgress, Trigger}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType}
 
 import org.apache.spark.sql.graft.PlanBridge
@@ -85,26 +89,30 @@ object Streaming {
   }
 
   /** Drain `df` through a streaming query into a memory sink and
-    * return the sink table.
+    * return the sink table with the run's progress reports.
     *
     * State-partition sizing: a streaming query pins its state-store
-    * partition count to `spark.sql.shuffle.partitions` AT FIRST START,
-    * and every micro-batch then pays per-partition state-store setup
-    * for each stateful operator. That count should track the stream's
-    * state volume, not the batch-analytics default —
-    * `graft.streaming.statePartitions` (default 8 on the local rig)
-    * scopes it for the query's start; a production deploy sets it to
-    * ~1-2x executor count. The stream runs in a CHILD session (own
-    * SQLConf, shared SparkContext and cache) carrying that count, so
-    * the caller's conf is never mutated — batch queries on other
-    * threads cannot observe a transient setting.
+    * partition count to `spark.sql.shuffle.partitions` at first start,
+    * because keyed state cannot be reshuffled once it is checkpointed,
+    * and every micro-batch then pays a fixed per-partition cost (a
+    * state-store instance, its snapshot and checkpoint files) for each
+    * stateful operator. A drain here is a bounded `AvailableNow` run
+    * from an empty, throwaway checkpoint, so nothing is ever restored
+    * under the count and each drain may choose its own:
+    * [[statePartitions]] gives one partition per
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes` (AQE's target
+    * post-shuffle partition size) of source bytes, capped at the
+    * session's `spark.sql.shuffle.partitions`. The stream runs in a
+    * CHILD session (own SQLConf, shared SparkContext and cache)
+    * carrying that count, so the caller's conf is never mutated —
+    * batch queries on other threads cannot observe a transient
+    * setting.
     */
-  private def drainToTable(df: DataFrame, mode: String,
-      extraConf: Map[String, String] = Map.empty): DataFrame = {
+  private[streaming] def drain(df: DataFrame, mode: String,
+      extraConf: Map[String, String] = Map.empty)
+      : (DataFrame, Seq[StreamingQueryProgress]) = {
     val parent = df.sparkSession
     val name = s"graft_stream_${runSeq.getAndIncrement()}"
-    val stateParts = parent.conf.getOption("graft.streaming.statePartitions")
-      .getOrElse("8")
     val child = parent.newSession()
     // newSession starts from the SparkConf defaults: carry over the
     // parent's runtime conf (e.g. the nanosAsLong parquet flag the
@@ -112,7 +120,7 @@ object Streaming {
     parent.conf.getAll.foreach { case (k, v) =>
       try child.conf.set(k, v) catch { case _: Exception => () }
     }
-    child.conf.set("spark.sql.shuffle.partitions", stateParts)
+    child.conf.set("spark.sql.shuffle.partitions", statePartitions(df).toString)
     extraConf.foreach { case (k, v) => child.conf.set(k, v) }
     val q = PlanBridge.ofRows(child, PlanBridge.logicalPlan(df))
       .writeStream
@@ -122,7 +130,40 @@ object Streaming {
       .queryName(name)
       .start()
     q.awaitTermination()
-    child.table(name)
+    (child.table(name), q.recentProgress.toSeq)
+  }
+
+  private def drainToTable(df: DataFrame, mode: String,
+      extraConf: Map[String, String] = Map.empty): DataFrame =
+    drain(df, mode, extraConf)._1
+
+  /** `clamp(ceil(sourceBytes / advisory), 1, shufflePartitions)` for a
+    * drain of `df`: the bytes under every streaming leaf's path (globs
+    * expanded; a stream-stream join reads, and counts, both sides). A
+    * leaf without a path (a `MemoryStream`, a rate source) has no size
+    * to go by, so the drain keeps the session's shuffle partitions. */
+  private def statePartitions(df: DataFrame): Int = {
+    val spark = df.sparkSession
+    val maxParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val paths = PlanBridge.logicalPlan(df).collectLeaves()
+      .filter(_.isStreaming).map {
+        case r: StreamingRelation => r.dataSource.options.get("path")
+        case r: StreamingRelationV2 => Option(r.extraOptions.get("path"))
+        case _ => None
+      }
+    if (paths.contains(None)) maxParts
+    else {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val bytes = paths.flatten.map { p =>
+        val path = new HPath(p)
+        val fs = path.getFileSystem(conf)
+        Option(fs.globStatus(path)).toSeq.flatten
+          .map(s => fs.getContentSummary(s.getPath).getLength).sum
+      }.sum
+      val advisory = JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+      math.min(maxParts, math.max(1L, (bytes + advisory - 1) / advisory)).toInt
+    }
   }
 
   /** X1 — `stream_window_agg`: tumbling 1-hour event-time window with a
@@ -1046,14 +1087,10 @@ object Streaming {
       .withWatermark("week", "7 days")
       .groupBy(col("user_id"), col("week"))
       .agg(count(lit(1)).as("n"))
-    val table = s"growth_retired_${SourceOps.runId}_${SourceOps.dirTag(t.dir)}"
-    val q = weeks.writeStream.trigger(Trigger.AvailableNow())
-      .outputMode("append").format("memory").queryName(table).start()
-    q.awaitTermination()
-    val state = q.recentProgress.toSeq
+    val (emitted, progress) = drain(weeks, "append")
+    val state = progress
       .flatMap(p => p.stateOperators.headOption.map(_.numRowsTotal))
-    RetiredWeeks(t.spark.table(table),
-      state, state.lastOption.getOrElse(-1L))
+    RetiredWeeks(emitted, state, state.lastOption.getOrElse(-1L))
   }
 
   /** X40 — `stream_wow_change`: the week-over-week report maintained

@@ -274,7 +274,7 @@ class ShardSourceSpec extends ShardTempRoot {
     assert(viaShard.count() == eventsProjected.count())
   }
 
-  test("columnar chunking: a file larger than one 4096-row batch survives") {
+  test("columnar scan: a one-file table of ~6k rows reads back exactly") {
     val d = tmp("graft_gshard_chunk_")
     // lineitem (~6k rows at this SF) into ONE file crosses the 4096 boundary
     val li = tables.lineitem.select(col("l_orderkey"), col("l_returnflag"),

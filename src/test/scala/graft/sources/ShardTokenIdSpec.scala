@@ -28,7 +28,7 @@ class ShardTokenIdSpec extends ShardTempRoot {
     }.toDF("id", "toks")
   }
 
-  test("array<int> round-trips exactly through write + BOTH readers " +
+  test("array<int> round-trips exactly through write + the reader " +
       "(nulls, empty lists, chunk boundaries)") {
     val d = tmp("int")
     // chunkRows 64 forces many chunks over 1000 rows

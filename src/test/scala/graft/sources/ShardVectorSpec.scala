@@ -52,7 +52,7 @@ class ShardVectorSpec extends ShardTempRoot {
     if (r.isNullAt(2)) null else r.getSeq[Double](2))
 
   test("vectors roundtrip bit-exact through both write paths and " +
-      "both readers (fixed-dim floats, variable doubles, null rows, " +
+      "the reader (fixed-dim floats, variable doubles, null rows, " +
       "empty arrays, subnormals, negative zero)") {
     val df = mixed(503)
     val want = df.collect().map(asKey).toSet

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.SparkSpec
+import graft.sources.ShardTempRoot
 
 /** Exactly-once incremental processing across restarts — the property
   * a production backfill-then-tail deployment lives on: a checkpointed
@@ -15,10 +15,10 @@ import graft.SparkSpec
   * offset log in the checkpoint is what carries the read position
   * between runs.
   */
-class CheckpointResumeSpec extends SparkSpec {
+class CheckpointResumeSpec extends ShardTempRoot {
 
   test("restart with the same checkpoint processes only new files") {
-    val base = Files.createTempDirectory("graft_ckpt_").toString
+    val base = tmp("ckpt_")
     val srcDir = s"$base/src"
     val ckpt = s"$base/ckpt"
     Files.createDirectories(Paths.get(srcDir))
@@ -62,4 +62,6 @@ class CheckpointResumeSpec extends SparkSpec {
     assert(sinkIds() == (0L until 15L).toSeq,
       s"resume reprocessed or skipped: ${sinkIds().mkString(",")}")
   }
+
+  leavesNoTempDirs()
 }

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.SparkSpec
+import graft.sources.ShardTempRoot
 
 /** E204 — the soak proof the replay-only streaming suite lacked:
   * every other stream spec drains `Trigger.AvailableNow()` (the right
@@ -27,13 +27,13 @@ import graft.SparkSpec
   * row-for-row (the stream/batch equivalence discipline, now under a
   * live trigger).
   */
-class ProcessingTimeSoakSpec extends SparkSpec {
+class ProcessingTimeSoakSpec extends ShardTempRoot {
 
   test("processing-time trigger: ≥5 micro-batches, bounded state, batch-equal") {
     val events = tables.events
       .select(col("user_id"), col("event_type"), col("value"))
     // six staged files — one per micro-batch under maxFilesPerTrigger=1
-    val dir = Files.createTempDirectory("graft_soak_")
+    val dir = Paths.get(tmp("soak_"))
     (0 until 6).foreach { i =>
       val tmp = dir.resolve(s"_tmp_$i")
       events.filter(pmod(col("user_id"), lit(6)) === i)
@@ -83,4 +83,6 @@ class ProcessingTimeSoakSpec extends SparkSpec {
       s"drift: ${(streamed -- batch).take(3)} vs ${(batch -- streamed).take(3)}")
     assert(batch.nonEmpty)
   }
+
+  leavesNoTempDirs()
 }

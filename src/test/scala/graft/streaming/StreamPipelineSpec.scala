@@ -6,15 +6,15 @@ import scala.concurrent.duration._
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.sources.ShardTempRoot
 import graft.pipeline.{CloseReason, NeedCancel, PipelineConfig}
 
-class StreamPipelineSpec extends SparkSpec {
+class StreamPipelineSpec extends ShardTempRoot {
 
   // FileStreamSource requires a directory; stage the single parquet
   // file behind a symlink in a temp dir.
   private lazy val eventsDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-events")
+    val dir = java.nio.file.Paths.get(tmp("stream-events"))
     java.nio.file.Files.createSymbolicLink(
       dir.resolve("events.parquet"),
       java.nio.file.Paths.get(s"$sfDir/events.parquet"))
@@ -51,4 +51,6 @@ class StreamPipelineSpec extends SparkSpec {
     val (_, errors) = sp.run(eventsStream, (_, _) => sys.error("batch boom"))
     assert(errors.nonEmpty)
   }
+
+  leavesNoTempDirs()
 }

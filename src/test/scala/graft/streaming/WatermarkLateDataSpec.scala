@@ -6,7 +6,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.SparkSpec
+import graft.sources.ShardTempRoot
 
 /** Watermark semantics under restart — the contract bounded streaming
   * state rests on: an event-time window finalizes (append-mode emit)
@@ -17,10 +17,10 @@ import graft.SparkSpec
   * The watermark itself persists in the checkpoint, so the late row is
   * rejected by a RESUMED query, proving the bound survives restarts.
   */
-class WatermarkLateDataSpec extends SparkSpec {
+class WatermarkLateDataSpec extends ShardTempRoot {
 
   test("append-mode window emits once closed and drops sub-watermark late rows") {
-    val base = Files.createTempDirectory("graft_wm_").toString
+    val base = tmp("wm_")
     val srcDir = s"$base/src"
     Files.createDirectories(Paths.get(srcDir))
     val sess = spark
@@ -70,4 +70,6 @@ class WatermarkLateDataSpec extends SparkSpec {
     // the 11:00 window is still open (watermark 10:55) — not emitted
     assert(!out.keys.exists(_.startsWith("2024-03-01 11:00")), out.toString)
   }
+
+  leavesNoTempDirs()
 }
