@@ -1,10 +1,13 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.Tables
+import graft.sources.shard.{ShardFormat, ShardOps}
 
 /** Scale-technique operators: the shuffle-shaping tools a 100 TB
   * deployment reaches for when the default hash partitioning isn't
@@ -330,30 +333,23 @@ object Scale {
     * build, the warehouse companion to [[qUpsertLatest]]'s SCD1
     * latest-wins: each user's daily observed status (their day's last
     * event type, ties broken by event id — deterministic argmax) is
-    * run-length compressed into `[valid_from, valid_to)` versions via
-    * gaps-and-islands (change flag → running-sum island id → per-run
-    * rollup), with `valid_to` = the NEXT version's start (exclusive;
-    * a version stays valid across unobserved days) and the open
-    * version flagged `is_current` — the dimension-table shape every
+    * run-length compressed into `[valid_from, valid_to)` versions
+    * ([[scd2Fold]]), with `valid_to` = the NEXT version's start
+    * (exclusive; a version stays valid across unobserved days) and the
+    * open version flagged `is_current` — the dimension-table shape every
     * point-in-time join consumes.
     *
-    * Shape: every window is partitioned by `user_id` (the argmax, the
-    * change flag, the island running sum, the lead) — one user-keyed
-    * shuffle then co-partitioned window passes, per-user state O(days
-    * per user); no global window anywhere, so the build scales as
-    * users do. Days are integer offsets and the change/island chain
-    * is integer-exact — bit-identical cross-engine.
+    * Shape: one user-keyed shuffle, then the fold once per user —
+    * per-user state O(events per user), no window, so the build scales
+    * as users do. Days are integer offsets and the run chain is
+    * integer-exact — bit-identical cross-engine.
     */
   def qScd2History(t: Tables): DataFrame =
-    finishDim(runsOf(dayStatus(scd2Events(t))))
-      .orderBy(col("user_id"), col("valid_from"))
+    foldDim(None, scd2Events(t)).orderBy(col("user_id"), col("valid_from"))
 
-  /** Events projected to the SCD2 build's working columns (day index,
-    * status candidate, tiebreak keys). A day-range filter between this
-    * projection and the windows is free: every window below partitions
-    * by (at least) `user_id`, and [[dayStatus]]'s argmax partitions by
-    * (user_id, day), so filtering whole days never cuts a window
-    * partition in half. */
+  /** Events projected to the SCD2 fold's inputs ([[Scd2Event]]: day
+    * index, status candidate, argmax keys). The fold groups by user, then
+    * by day, so a whole-day filter on this projection is free. */
   private[graft] def scd2Events(t: Tables): DataFrame =
     t.events.select(col("user_id"),
       datediff(col("ts").cast("date"),
@@ -361,45 +357,78 @@ object Scale {
       col("event_type"),
       unix_micros(col("ts").cast("timestamp")).as("us"), col("event_id"))
 
-  /** (user_id, day, status): each user's daily observed status — the
-    * day's LAST event type, event-id tiebroken (deterministic argmax). */
-  private def dayStatus(proj: DataFrame): DataFrame =
-    proj
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("user_id"), col("day"))
-          .orderBy(desc("us"), desc("event_id"))))
-      .filter(col("rn") === 1)
-      .select(col("user_id"), col("day"), col("event_type").as("status"))
+  /** One SCD2 dimension row: a version of a user, valid from
+    * `valid_from` until `valid_to` (exclusive; `None` on the open,
+    * `is_current` version). Field names are the dimension's columns. */
+  final case class Scd2Version(user_id: Long, status: String,
+      valid_from: Int, valid_to: Option[Int], is_current: Boolean,
+      n_days_observed: Long)
 
-  /** Gaps-and-islands run-length compression of the daily statuses:
-    * (user_id, status, valid_from, n_days_observed), one row per
-    * maximal same-status run. All windows user-partitioned. */
-  private def runsOf(daily: DataFrame): DataFrame = {
-    val byDay = Window.partitionBy(col("user_id")).orderBy(col("day"))
-    daily
-      .withColumn("chg",
-        when(lag(col("status"), 1).over(byDay).isNull ||
-          lag(col("status"), 1).over(byDay) =!= col("status"), 1).otherwise(0))
-      .withColumn("island", sum(col("chg")).over(
-        byDay.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy(col("user_id"), col("island"), col("status"))
-      .agg(min(col("day")).as("valid_from"),
-        count(lit(1)).as("n_days_observed"))
-      .select(col("user_id"), col("status"), col("valid_from"),
-        col("n_days_observed"))
+  /** One [[scd2Events]] row. */
+  final case class Scd2Event(user_id: Long, day: Int, event_type: String,
+      us: Long, event_id: Long)
+
+  /** THE SCD2 fold of one user: stored versions and new events (all on
+    * later days — the CDC contract) → versions. A day's status is its
+    * last event (by time, then event id); equal consecutive statuses
+    * compress into one run; the first run EXTENDS the open version if
+    * the status is unchanged (inheriting `valid_from`, adding observed
+    * days) and CLOSES it at the run's start otherwise; the runs chain,
+    * each valid until the next starts. A function value, so the
+    * closures that run it capture no object. */
+  val scd2Fold: (Seq[Scd2Version], Seq[Scd2Event]) => Seq[Scd2Version] =
+    (stored, events) => if (events.isEmpty) stored else {
+      val daily = events.groupBy(_.day).toSeq.sortBy(_._1)
+        .map { case (day, es) => (day, es.maxBy(e => (e.us, e.event_id))) }
+      val runs = daily.foldLeft(Vector.empty[Scd2Version]) {
+        case (acc, (day, e)) =>
+          if (acc.lastOption.exists(_.status == e.event_type)) acc.init :+
+            acc.last.copy(n_days_observed = acc.last.n_days_observed + 1)
+          else acc :+ Scd2Version(e.user_id, e.event_type, day, None, true, 1L)
+      }
+      val (closed, open) = stored.partition(!_.is_current)
+      val (kept, first) = open.headOption match {
+        case Some(o) if o.status == runs.head.status =>
+          (Nil, runs.head.copy(valid_from = o.valid_from,
+            n_days_observed = o.n_days_observed + runs.head.n_days_observed))
+        case Some(o) => (Seq(o.copy(valid_to = Some(runs.head.valid_from),
+          is_current = false)), runs.head)
+        case None => (Nil, runs.head)
+      }
+      val chain = first +: runs.tail
+      closed ++ kept ++ chain.zip(chain.tail).map { case (v, next) =>
+        v.copy(valid_to = Some(next.valid_from), is_current = false)
+      } :+ chain.last
+    }
+
+  /** [[scd2Fold]] over whole frames: the `stored` dimension (none for
+    * a full build) cogrouped by user with the [[scd2Events]] rows. */
+  private def foldDim(stored: Option[DataFrame], events: DataFrame): DataFrame = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    val fold = scd2Fold
+    val ev = events.groupBy(col("user_id")).as[Long, Scd2Event]
+    (stored match {
+      case None => ev.flatMapGroups((_, es) => fold(Nil, es.toSeq))
+      case Some(dim) => dim.groupBy(col("user_id")).as[Long, Scd2Version]
+        .cogroup(ev)((_, vs, es) => fold(vs.toSeq, es.toSeq))
+    }).toDF()
   }
 
-  /** Chain the runs into the dimension shape: `valid_to` = next
-    * version's start (exclusive), open version flagged `is_current`. */
-  private def finishDim(runs: DataFrame): DataFrame = {
-    val byFrom = Window.partitionBy(col("user_id")).orderBy(col("valid_from"))
-    runs
-      .withColumn("valid_to", lead(col("valid_from"), 1).over(byFrom))
-      .select(col("user_id"), col("status"),
-        col("valid_from").cast("int").as("valid_from"),
-        col("valid_to").cast("int").as("valid_to"),
-        col("valid_to").isNull.as("is_current"),
-        col("n_days_observed"))
+  /** [[scd2Fold]] as a gshard MERGE's per-key function: the touched rows
+    * are dimension rows, the source rows [[scd2Events]] rows. */
+  private[graft] val scd2PerKey: ShardOps.PerKey = (touched, events) => {
+    def str(r: InternalRow, i: Int) =
+      Option(r.getUTF8String(i)).map(_.toString).orNull
+    scd2Fold(
+      touched.map(r => Scd2Version(r.getLong(0), str(r, 1), r.getInt(2),
+        if (r.isNullAt(3)) None else Some(r.getInt(3)), r.getBoolean(4),
+        r.getLong(5))),
+      events.map(r => Scd2Event(r.getLong(0), r.getInt(1), str(r, 2),
+        r.getLong(3), r.getLong(4)))
+    ).map(v => InternalRow(v.user_id, UTF8String.fromString(v.status),
+      v.valid_from, v.valid_to.getOrElse(null), v.is_current,
+      v.n_days_observed))
   }
 
   /** The stored SCD2 dimension: "yesterday's" scheduled dimension
@@ -412,8 +441,7 @@ object Scale {
       import graft.sources.{SourceOps, Sources}
       val tag = s"${SourceOps.runId}_${SourceOps.dirTag(t.dir)}_$splitDay"
       val table = s"graft_scd2_dim_$tag"
-      val hist = finishDim(runsOf(dayStatus(
-        scd2Events(t).filter(col("day") < splitDay))))
+      val hist = foldDim(None, scd2Events(t).filter(col("day") < splitDay))
       Sources.writeBucketed(hist, table, Seq("user_id"), nBuckets = 8,
         sortCols = Seq("user_id"),
         path = Some(SourceOps.staging(s"scd2_dim_$tag")))
@@ -429,19 +457,10 @@ object Scale {
     * a warehouse refuses to run, while this merge's cost scales with
     * the increment plus the touched slice of the dimension.
     *
-    * Per touched user, only the OPEN version can change (closed
-    * versions' `[valid_from, valid_to)` chains never cross the day
-    * boundary, because every history day < `splitDay` ≤ every
-    * increment day):
-    *
-    *  - first increment run has the SAME status → the open version
-    *    EXTENDS: the run inherits its `valid_from` and adds its
-    *    observed-day count (run-length compression can't see the
-    *    boundary);
-    *  - different status → the open version CLOSES at the first run's
-    *    start and the runs append as new versions;
-    *  - users absent from the increment pass through untouched; brand
-    *    new users simply append.
+    * Per touched user only the OPEN version can change — it extends or
+    * closes ([[scd2Fold]]) — because every history day < `splitDay` ≤
+    * every increment day; users absent from the increment pass through
+    * untouched, brand-new users append.
     *
     * Merge == recompute by construction (the full rebuild's island
     * sequence is the history islands plus the increment islands, with
@@ -450,76 +469,14 @@ object Scale {
     * gate, the same discipline as `dedup_clusters_incremental` and
     * `q_incremental_rollup`.
     *
-    * Shape: the increment's windows partition by user over increment
-    * rows only; the boundary decision is one user-keyed equi-join of
-    * the (daily-active-sized) first-run frame against the stored open
-    * versions; untouched history is a bucketed scan plus one
-    * broadcast anti-join on the touched-user set. Nothing scales with
-    * history size except the pass-through scan — which production
-    * writes straight back out as the new dimension. */
+    * Shape: the stored dimension and the increment cogroup by user —
+    * one user-keyed exchange per side, no window and no join — and the
+    * one [[scd2Fold]] runs once per user, so a user's state is its own
+    * versions and increment events. */
   def qScd2Merge(t: Tables, splitDay: Int = 25): DataFrame =
-    scd2MergeOf(t.spark.table(scd2State(t, splitDay)),
+    foldDim(Some(t.spark.table(scd2State(t, splitDay))),
         scd2Events(t).filter(col("day") >= splitDay))
       .orderBy(col("user_id"), col("valid_from"))
-
-  /** The merge CORE: stored dimension + increment events (already in
-    * the [[scd2Events]] projection; every increment day must be ≥
-    * every `stored` day — the CDC contract) → merged dimension,
-    * unordered. Shared by the batch query and the streaming per-day
-    * CDC twin, which folds one micro-batch at a time through this. */
-  private[graft] def scd2MergeOf(stored: DataFrame, incr: DataFrame): DataFrame = {
-    val byFrom = Window.partitionBy(col("user_id")).orderBy(col("valid_from"))
-    // `marked` feeds three consumers below, but its repeated subtree
-    // is shuffle-rooted and Catalyst's ReusedExchange already dedupes
-    // it inside the one write job (measured: an explicit persist +
-    // eager count ADDS a job per commit and reads slower)
-    val marked = runsOf(dayStatus(incr))
-      .withColumn("rk", row_number().over(byFrom))
-    val open = stored.filter(col("is_current"))
-      .select(col("user_id"), col("status").as("open_status"),
-        col("valid_from").as("open_from"),
-        col("n_days_observed").as("open_n"))
-    val first = marked.filter(col("rk") === 1)
-      .select(col("user_id"), col("status").as("first_status"),
-        col("valid_from").as("first_from"))
-      .join(open, Seq("user_id"), "left")
-    // status changed at the boundary → close the open version there
-    val closedOpen = first
-      .filter(col("open_status").isNotNull &&
-        col("open_status") =!= col("first_status"))
-      .select(col("user_id"), col("open_status").as("status"),
-        col("open_from").as("valid_from"),
-        col("first_from").cast("int").as("valid_to"),
-        lit(false).as("is_current"), col("open_n").as("n_days_observed"))
-    // status unchanged → the first run absorbs the open version
-    val extendInfo = first
-      .filter(col("open_status").isNotNull &&
-        col("open_status") === col("first_status"))
-      .select(col("user_id"), col("open_from"), col("open_n"))
-    // extendInfo is CHANGE-sized (a subset of the batch's users):
-    // broadcast it so `marked` keeps its window partitioning instead
-    // of reshuffling for the join — sound at any table size because
-    // the bound is the CDC day, not the dimension
-    val newRuns = marked.join(broadcast(extendInfo), Seq("user_id"), "left")
-      .select(col("user_id"), col("status"),
-        when(col("rk") === 1 && col("open_from").isNotNull, col("open_from"))
-          .otherwise(col("valid_from")).as("valid_from"),
-        (col("n_days_observed") +
-          when(col("rk") === 1 && col("open_n").isNotNull, col("open_n"))
-            .otherwise(lit(0L))).as("n_days_observed"))
-    val newPart = newRuns
-      .withColumn("valid_to", lead(col("valid_from"), 1).over(byFrom))
-      .select(col("user_id"), col("status"),
-        col("valid_from").cast("int").as("valid_from"),
-        col("valid_to").cast("int").as("valid_to"),
-        col("valid_to").isNull.as("is_current"), col("n_days_observed"))
-    val touched = marked.select(col("user_id")).distinct()
-    stored.filter(!col("is_current"))
-      .unionByName(stored.filter(col("is_current"))
-        .join(broadcast(touched), Seq("user_id"), "left_anti"))
-      .unionByName(closedOpen)
-      .unionByName(newPart)
-  }
 
   /** E210 — `q_join_view_maintenance`: incremental maintenance of a
     * JOIN view — the classic IVM delta identity (Blakeley–Larson–
@@ -589,17 +546,16 @@ object Scale {
 
   /** The stored pre-CDC dimension seeded as a keyed gshard table
     * (generation 0, the 8-shard keyed-stats shape `q_shard_merge`
-    * uses), the whole increment MERGEd through [[scd2MergeOf]]
+    * uses), the whole increment MERGEd through [[scd2PerKey]]
     * (generation 1); returns (generation 0, head) as pinned reads. */
   private def mergedScd2Versions(t: Tables, name: String,
       splitDay: Int): (DataFrame, DataFrame) = {
     import graft.sources.SourceOps
-    import graft.sources.shard.{ShardFormat, ShardOps}
     val dir = SourceOps.staging(
       s"${name}_${SourceOps.runId}_${SourceOps.dirTag(t.dir)}_$splitDay")
     ShardFormat.write(t.spark.table(scd2State(t, splitDay)), dir, "user_id", 8)
     ShardOps.merge(t.spark, dir, scd2Events(t).filter(col("day") >= splitDay),
-      "user_id", nShards = 0, txnId = -1L, txnApp = None)(scd2MergeOf)
+      "user_id", nShards = 0, txnId = -1L, txnApp = None)(scd2PerKey)
     (t.spark.read.format("gshard").option("versionAsOf", "0").load(dir),
       t.spark.read.format("gshard").load(dir))
   }
@@ -625,7 +581,7 @@ object Scale {
     * left-complete full-outer join on (user, valid_from) — spec-
     * pinned by the no-vanished-rows assertion.
     *
-    * Shape: one CDC merge (the `q_scd2_merge` plan verbatim), two
+    * Shape: one CDC merge (the one [[scd2Fold]] per touched user), two
     * pinned version scans, one user-keyed full-outer join on the
     * metadata-scale dimension, one 4-row rollup. The oracle rebuilds
     * both snapshots from raw events (truncated and full SCD2 chains)

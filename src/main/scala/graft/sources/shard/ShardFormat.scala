@@ -267,12 +267,6 @@ object ShardFormat {
     case "listl" => ArrayType(LongType, containsNull = false)
   }
 
-  /** Vector (embedding) columns: float/double element arrays. */
-  private[shard] def isVector(dt: DataType): Boolean = dt match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-
   /** Types that ride the physically-long block (and therefore get
     * zone maps, delta encoding, blooms, and metadata-DELETE coverage
     * for free — their long encodings order exactly as the logical
@@ -744,27 +738,24 @@ object ShardFormat {
   /** Name prefix of a commit's row-grain change files. */
   private[shard] val ChangePrefix = "chg-"
 
-  /** The fused MERGE rewrite — the data files AND the commit's change
-    * files in one clustered write. `tagged` holds the table's PHYSICAL
-    * columns plus a trailing `_change_side`: +1 on the merge output,
-    * −1 on the touched rows it replaces. Rows sort by (shard, visible
-    * columns, side), so rows equal under Spark's grouping equality are
-    * adjacent, and each task streams its +1 rows into the shard's data
-    * file and every group's NON-ZERO net count into the shard's `chg-`
-    * file: pass-through rows cancel, a changed row leaves its −1
-    * preimage and +1 postimage, a duplicated old row the rewrite lands
-    * once leaves one −1. `bounds` come from metadata (no min/max job).
-    * Returns (data entries, change entries). */
+  /** Input sides of a MERGE rewrite row: sorted source rows first. */
+  private[shard] val SourceSide = 0
+  private[shard] val TouchedSide = 1
+
+  /** The fused MERGE rewrite: one clustered write of `tagged` (key,
+    * input side, touched row as a struct of the visible columns, source
+    * row as a struct), sorted by (shard, key, side) for
+    * [[mergeTaskShards]]. Returns (data entries, change entries). */
   private[shard] def writeMerge(tagged: DataFrame, dir: String,
-      rangeExpr: Column, nShards: Int, bounds: (Long, Long), prefix: String,
-      bloomCols: Set[String]): (Seq[ShardEntry], Seq[ShardEntry]) = {
-    val schema = StructType(tagged.schema.fields.dropRight(1))
-    val sortCols = (visible(schema).fieldNames.toSeq :+
-      tagged.schema.fields.last.name).map(col)
+      schema: StructType, rangeExpr: Column, nShards: Int,
+      bounds: (Long, Long), prefix: String, bloomCols: Set[String],
+      perKey: ShardOps.PerKey): (Seq[ShardEntry], Seq[ShardEntry]) = {
+    val keyAt = visible(schema).fieldIndex(tagged.columns.head)
+    val srcWidth = tagged.schema(3).dataType.asInstanceOf[StructType].length
     clusteredWrite(tagged, rangeExpr.cast("long"), bounds._1, bounds._2,
-      nShards, sortCols) { it =>
-      writeTaskShards(it, dir, schema, DefaultChunkRows, prefix, bloomCols,
-        capture = true)
+      nShards, tagged.columns.toSeq.take(2).map(col)) { it =>
+      mergeTaskShards(it, dir, schema, keyAt, srcWidth, prefix, bloomCols,
+        perKey)
     }.partition(e => !e.file.startsWith(ChangePrefix))
   }
 
@@ -794,8 +785,8 @@ object ShardFormat {
 
   /** A storage value as Spark's grouping sees it — −0.0 as 0.0, every
     * NaN as the canonical NaN (its NormalizeFloatingNumbers), also
-    * inside float/double arrays — so that two cells are in one group
-    * exactly when their canonical forms are `deepEquals`. */
+    * inside float/double arrays: the cells a MERGE change row carries
+    * for its run of equal rows. */
   private def canonical(v: Any): Any = v match {
     case d: Double => if (d == 0.0) 0.0 else if (d.isNaN) Double.NaN else d
     case a: Array[Double] =>
@@ -807,76 +798,132 @@ object ShardFormat {
 
   /** Executor side: stream this task's rows (sorted by `__shard`) into
     * one file per shard id through the chunked writer — peak memory is
-    * one chunk, regardless of shard size. With `capture` (the
-    * [[writeMerge]] layout) each row carries a trailing ±1 side before
-    * `__shard`: +1 rows go to the data file, and each run of equal
-    * visible columns leaves its net count in the shard's change file —
-    * held as one row and a counter, never the run itself. */
+    * one chunk, regardless of shard size. */
   private def writeTaskShards(
       it: Iterator[InternalRow], dir: String, schema: StructType,
       chunkRows: Int, prefix: String = "", bloomCols: Set[String] = Set.empty,
-      namePrefix: String = "part-", capture: Boolean = false)
+      namePrefix: String = "part-")
       : Iterator[ShardEntry] = {
     val nCols = schema.length
     val types = schema.fields.map(_.dataType)
-    val shardAt = if (capture) nCols + 1 else nCols
     val out = mutable.ArrayBuffer.empty[ShardEntry]
-    val visIdx = schema.fields.indices
-      .filterNot(i => isTombstone(schema(i).name)).toArray
-    val chgSchema = StructType(visIdx.map(schema(_)).toSeq :+
-      StructField(ShardCdc.SideCol, IntegerType, nullable = false))
-
     var shard = -1
     var writer: ShardFileWriter = null
-    var chgWriter: ShardFileWriter = null
-    // the current group's canonical visible cells and its net side count
-    var group: Array[Any] = null
-    var net = 0L
-    def fileName(pre: String) = f"$dir/$pre$shard%05d.gshard"
-    def close(w: ShardFileWriter): Unit = {
-      val e = w.close()
-      if (e.rows > 0) out += e
-    }
-    def flushGroup(): Unit = {
-      if (net != 0L) {
-        val row = group :+ (math.signum(net): Any)
-        var n = math.abs(net)
-        while (n > 0) { chgWriter.add(row); n -= 1 }
-      }
-      group = null; net = 0L
-    }
     def flush(): Unit = if (writer != null) {
-      close(writer)
-      if (capture) { flushGroup(); close(chgWriter) }
+      out ++= Some(writer.close()).filter(_.rows > 0)
       writer = null
     }
     it.foreach { r =>
-      require(!r.isNullAt(shardAt),
-        "gshard: range column must be non-null")
-      val s = r.getInt(shardAt) // trailing __shard column
+      require(!r.isNullAt(nCols), "gshard: range column must be non-null")
+      val s = r.getInt(nCols) // trailing __shard column
       if (s != shard) {
         flush(); shard = s
-        writer = new ShardFileWriter(fileName(namePrefix + prefix), schema,
-          chunkRows, bloomCols)
-        if (capture) chgWriter = new ShardFileWriter(
-          fileName(s"${ChangePrefix}c$prefix"), chgSchema, chunkRows)
+        writer = new ShardFileWriter(f"$dir/$namePrefix$prefix$shard%05d.gshard",
+          schema, chunkRows, bloomCols)
       }
       val values = new Array[Any](nCols)
       var i = 0
       while (i < nCols) { values(i) = storageValue(r, i, types(i)); i += 1 }
-      if (!capture) writer.add(values)
-      else {
-        val cells = visIdx.map(i => canonical(values(i)))
-        if (group != null && !java.util.Arrays.deepEquals(
-            group.asInstanceOf[Array[AnyRef]], cells.asInstanceOf[Array[AnyRef]]))
-          flushGroup()
-        if (group == null) group = cells
-        val side = r.getInt(nCols)
-        net += side
-        if (side > 0) writer.add(values)
-      }
+      writer.add(values)
     }
     flush()
+    out.iterator
+  }
+
+  /** Executor side of [[writeMerge]]: one data and one change file per
+    * shard. A key without source rows streams into the data file; a key
+    * with source rows (at most [[DefaultChunkRows]] with its touched
+    * rows, held in memory) goes through `perKey`, its output into the
+    * data file and, against its touched rows, its non-zero net
+    * differences into the change file. */
+  private def mergeTaskShards(it: Iterator[InternalRow], dir: String,
+      schema: StructType, keyAt: Int, srcWidth: Int, prefix: String,
+      bloomCols: Set[String], perKey: ShardOps.PerKey): Iterator[ShardEntry] = {
+    val visIdx = schema.fields.indices
+      .filterNot(i => isTombstone(schema(i).name)).toArray
+    val visTypes = visIdx.map(schema(_).dataType)
+    val nVis = visIdx.length
+    val keyType = visTypes(keyAt)
+    val chgSchema = StructType(visIdx.map(schema(_)).toSeq :+
+      StructField(ShardCdc.SideCol, IntegerType, nullable = false))
+    val order = org.apache.spark.sql.catalyst.expressions.InterpretedOrdering
+      .forSchema(visTypes.toSeq)
+    val out = mutable.ArrayBuffer.empty[ShardEntry]
+    var shard = -1
+    var writer: ShardFileWriter = null
+    var chgWriter: ShardFileWriter = null
+    // the open key: its key value, touched rows and source rows
+    var key: Any = null
+    val touched = mutable.ArrayBuffer.empty[InternalRow]
+    val source = mutable.ArrayBuffer.empty[InternalRow]
+
+    // a visible row's storage values in the physical slots; tombstone
+    // slots stay null, so rewritten files stay positionally compatible
+    def physical(row: InternalRow): Array[Any] = {
+      val values = new Array[Any](schema.length)
+      var j = 0
+      while (j < nVis) {
+        values(visIdx(j)) = storageValue(row, j, visTypes(j)); j += 1
+      }
+      values
+    }
+    def mergeKey(): Unit = if (source.nonEmpty) {
+      // an output value of the wrong type fails its storage encoding
+      def bad(r: InternalRow) = new IllegalArgumentException(
+        s"gshard merge: an output row of key $key does not match the " +
+          s"table's visible schema ${visible(schema).catalogString}: $r")
+      val merged = perKey(touched.toIndexedSeq, source.toIndexedSeq).map { r =>
+        if (r.numFields != nVis || r.get(keyAt, keyType) != key) throw bad(r)
+        (r, try physical(r) catch { case _: ClassCastException => throw bad(r) }, 1)
+      }
+      val sorted = (touched.map(r => (r, physical(r), -1)) ++ merged)
+        .sortBy(_._1)(order)
+      sorted.foreach { case (_, values, side) => if (side > 0) writer.add(values) }
+      // each run of equal rows (Catalyst's ordering equates what Spark's
+      // grouping does) leaves its canonical cells and net count
+      var from = 0
+      sorted.indices.foreach { i =>
+        if (i + 1 == sorted.length ||
+            !order.equiv(sorted(i)._1, sorted(i + 1)._1)) {
+          val net = (from to i).map(sorted(_)._3).sum
+          val row = visIdx.map(v => canonical(sorted(i)._2(v))) :+
+            (math.signum(net).toLong: Any) // a storage value: int as long
+          (0 until net.abs).foreach(_ => chgWriter.add(row))
+          from = i + 1
+        }
+      }
+      touched.clear(); source.clear()
+    }
+    def closeShard(): Unit = if (writer != null) {
+      mergeKey()
+      out ++= Seq(writer.close(), chgWriter.close()).filter(_.rows > 0)
+    }
+
+    it.foreach { r =>
+      require(!r.isNullAt(4), "gshard: range column must be non-null")
+      val s = r.getInt(4) // trailing __shard column
+      if (s != shard) {
+        closeShard(); shard = s
+        writer = new ShardFileWriter(f"$dir/part-$prefix$shard%05d.gshard",
+          schema, DefaultChunkRows, bloomCols)
+        chgWriter = new ShardFileWriter(
+          f"$dir/${ChangePrefix}c$prefix$shard%05d.gshard", chgSchema)
+      }
+      val k = r.get(0, keyType)
+      val inKey = source.nonEmpty && k == key
+      val isSource = r.getInt(1) == SourceSide
+      if (!inKey) mergeKey()
+      if (!inKey && !isSource) writer.add(physical(r.getStruct(2, nVis)))
+      else if (touched.size + source.size == DefaultChunkRows)
+        throw new IllegalStateException(s"gshard merge: key $k brings " +
+          s"more than $DefaultChunkRows touched and source rows")
+      else if (!isSource) touched += r.getStruct(2, nVis).copy()
+      else {
+        if (!inKey) key = InternalRow.copyValue(k)
+        source += r.getStruct(3, srcWidth).copy()
+      }
+    }
+    closeShard()
     out.iterator
   }
 

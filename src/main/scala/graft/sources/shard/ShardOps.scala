@@ -1,7 +1,9 @@
 package graft.sources.shard
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Row-level mutation through the gshard catalog — what DELETE's
   * metadata-only surgery can't express: the copy-on-write [[merge]]
@@ -161,49 +163,60 @@ object ShardOps {
 
   /** UPSERT — `MERGE INTO t USING u ON t.key = u.key WHEN MATCHED
     * THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *`, the CDC apply
-    * shape: [[merge]] with "touched rows minus the updated keys, plus
-    * every update" as the merge function. Source cardinality is
-    * ENFORCED (the Delta duplicate-source-row check, run in the merge's
-    * source pass before any file is written): two updates for one key
-    * would make the result order-dependent, so the upsert fails loudly
-    * instead. NULL keys reject too: a NULL can never equi-match, so an
-    * "insert" with a NULL key would dodge idempotent re-merge. */
+    * shape: [[merge]] with "the key's update" as the per-key function.
+    * The updates must match the table's VISIBLE columns by name and
+    * storage tag (the append discipline), checked before any job runs.
+    * Source cardinality is ENFORCED in the merge's source pass (the
+    * Delta duplicate-source-row check): two updates for one key would
+    * make the result order-dependent, and a NULL key, which can never
+    * equi-match, would dodge idempotent re-merge — both fail loudly. */
   def upsert(spark: SparkSession, dir: String, updates: DataFrame,
       keyCol: String, nShards: Int = 0,
-      txnId: Long = -1L, txnApp: Option[String] = None): Unit =
-    merge(spark, dir, updates, keyCol, nShards, txnId, txnApp,
-      uniqueKeys = true) { (tr, u) =>
-      tr.join(u.select(col(keyCol)), Seq(keyCol), "left_anti").unionByName(u)
-    }
+      txnId: Long = -1L, txnApp: Option[String] = None): Unit = {
+    val vis = ShardFormat.visible(ShardFormat.readManifest(dir).schema)
+    def tags(st: StructType) =
+      st.fields.map(f => (f.name, ShardFormat.typeTag(f.dataType))).sorted.toSeq
+    require(tags(updates.schema) == tags(vis),
+      s"gshard merge schema mismatch: table=${vis.catalogString} " +
+        s"updates=${updates.schema.catalogString}")
+    // in the table's visible order, each update IS its key's output row
+    merge(spark, dir, updates.select(vis.fieldNames.toSeq.map(col): _*),
+      keyCol, nShards, txnId, txnApp, uniqueKeys = true)((_, update) => update)
+  }
 
-  /** Copy-on-write MERGE of `source` into the table at `dir` through
-    * `mergeFn(touchedRows, source)`, which must be KEY-LOCAL in
-    * `keyCol`: rows whose key does not occur in `source` pass through
-    * unchanged, and no key's output depends on another key's rows
-    * (true of [[upsert]] and of the SCD2 close/extend/append merge).
-    * `source` may have any schema; the function's output must carry
-    * the table's visible columns. One call runs two Spark actions:
+  /** One key's MERGE: (its touched rows, its source rows) ⇒ its output
+    * rows — Catalyst rows, the touched and output ones in the table's
+    * visible column order, the source ones in the source's. */
+  type PerKey = (IndexedSeq[InternalRow], IndexedSeq[InternalRow]) =>
+    Seq[InternalRow]
+
+  /** Copy-on-write MERGE of `source` into the table at `dir`, one key
+    * of `keyCol` at a time: `perKey` runs only for the keys present in
+    * `source` and sees only that key's rows, and its output replaces
+    * the key's rows; every other key passes through unchanged. `source`
+    * may have any schema; each output row must carry its key and the
+    * table's visible columns, or the commit fails before it publishes.
+    * One call runs two Spark actions:
     *
     *  1. the SOURCE PASS — one query over the source keys that returns
     *     the TOUCHED files (each key matched on the executors against
     *     the manifest's per-file key zone maps, which are
     *     metadata-sized: a file is rewritten only if some source key
     *     falls inside its [min,max] — everything else is untouched,
-    *     zero read, zero write, sound exactly because `mergeFn` is
-    *     key-local), the keys' clustering range, and with
+    *     zero read, zero write), the keys' clustering range, and with
     *     `uniqueKeys` the first duplicate or NULL key, which fails the
     *     merge before any file is written;
-    *  2. the FUSED REWRITE — the touched rows, read back through the
-    *     NORMAL connector scan (a `files`-restricted read — pruning,
-    *     projection and delete masks all apply), tagged −1, and the
-    *     `mergeFn` output, checked against the table's visible schema
-    *     and tagged +1, go through ONE key-clustered write
-    *     ([[ShardFormat.writeMerge]]): +1 rows land in fresh shard
-    *     files, and each shard's NET multiset difference lands in its
-    *     `chg-` change file — pass-through rows cancel, so a CDC
-    *     consumer streams O(changed rows) per commit. The shard range
-    *     comes from the touched files' zone maps and the source pass,
-    *     so no min/max job runs;
+    *  2. the FUSED REWRITE ([[ShardFormat.writeMerge]]) — the touched
+    *     rows (a `files`-restricted connector scan: pruning, projection
+    *     and delete masks apply) and the source rows go through ONE
+    *     key-clustered shuffle; each write task streams a key without
+    *     source rows into the shard's data file and runs `perKey` on a
+    *     key with them (at most [[ShardFormat.DefaultChunkRows]] rows,
+    *     or the commit fails naming the key): its output lands in the
+    *     data file, its NET difference against its touched rows in the
+    *     shard's `chg-` change file, so a CDC consumer streams
+    *     O(changed rows) per commit. The touched files' zone maps and
+    *     the source pass give the shard range: no min/max job;
     *  3. the generational publish with the txn slot advanced: the
     *     head archives (VERSION AS OF still reads the pre-merge
     *     table), replaced bytes reclaim at [[ShardFormat.vacuum]], and
@@ -216,8 +229,7 @@ object ShardOps {
     * sinks rely on. */
   def merge(spark: SparkSession, dir: String, source: DataFrame,
       keyCol: String, nShards: Int, txnId: Long, txnApp: Option[String],
-      uniqueKeys: Boolean = false)(
-      mergeFn: (DataFrame, DataFrame) => DataFrame): Unit = {
+      uniqueKeys: Boolean = false)(perKey: PerKey): Unit = {
     val head = ShardFormat.readManifest(dir)
 
     // replay idempotence FIRST (same rule as the append path)
@@ -243,7 +255,7 @@ object ShardOps {
     // zero-padded — monotone in UTF-8 byte order, see [[prefixLong]]),
     // which drives LOCALITY only: correctness always comes from the
     // real string zone maps the writer folds per file
-    val clusterExpr: org.apache.spark.sql.Column = keyType match {
+    val clusterExpr: Column = keyType match {
       case StringType =>
         conv(rpad(substring(hex(encode(col(keyCol), "UTF-8")), 1, 14),
           14, "0"), 16, 10).cast("long")
@@ -307,38 +319,21 @@ object ShardOps {
       case (e, i) if hit.get(i) => e } ++ unbounded).sortBy(_.file)
     val touched = touchedEntries.map(_.file)
 
-    // 2. the fused rewrite over the touched rows (−1) and the merge
-    // output (+1). No touched file: the merge function sees an empty
-    // table and every output row is an insert.
+    // 2. the fused rewrite over the touched rows and the source rows,
+    // each packed as one struct beside its key and input side
     val visSchema = ShardFormat.visible(head.schema)
-    val touchedRows: Option[DataFrame] =
-      if (touched.isEmpty) None
-      else Some(spark.read.format("gshard")
+    val sourceSide = source.select(col(keyCol).cast(keyType).as(keyCol),
+      lit(ShardFormat.SourceSide).as("__side"),
+      lit(null).cast(visSchema).as("__touched"),
+      struct(source.columns.toSeq.map(col): _*).as("__source"))
+    val tagged =
+      if (touched.isEmpty) sourceSide
+      else sourceSide.union(spark.read.format("gshard")
         .option("files", touched.mkString(","))
-        .load(dir))
-    val out = mergeFn(touchedRows.getOrElse(spark.createDataFrame(
-      java.util.Collections.emptyList[Row](),
-      visSchema)), source)
-    // the output must match the table by name and storage tag (the
-    // append discipline), on the VISIBLE surface — drop tombstones
-    // are physical placeholders
-    def tags(st: StructType) =
-      st.fields.map(f => (f.name, ShardFormat.typeTag(f.dataType))).sorted.toSeq
-    require(tags(out.schema) == tags(visSchema),
-      s"gshard merge schema mismatch: table=${visSchema.catalogString} " +
-        s"merged=${out.schema.catalogString}")
-    // PHYSICALIZE: the rewrite keeps every physical slot — visible
-    // columns by name, tombstone slots as null blocks — so rewritten
-    // files stay positionally compatible with old ones
-    import graft.sources.shard.ShardCdc.{SideCol => ChangeSide}
-    def physical(df: DataFrame, side: Int) =
-      df.select(head.schema.fields.toIndexedSeq.map { f =>
-        if (ShardFormat.isTombstone(f.name))
-          lit(null).cast(f.dataType).as(f.name)
-        else col(f.name)
-      } :+ lit(side).as(ChangeSide): _*)
-    val tagged = touchedRows.fold(physical(out, 1))(tr =>
-      physical(tr, -1).union(physical(out, 1)))
+        .load(dir)
+        .select(col(keyCol), lit(ShardFormat.TouchedSide),
+          struct(visSchema.fieldNames.toSeq.map(col): _*),
+          lit(null).cast(source.schema)))
     // shard range: every output key is a touched row's key or a source
     // key, so the touched files' zone maps and the source pass's range
     // cover it (the writer clamps what they miss)
@@ -362,9 +357,9 @@ object ShardOps {
     val prefix = s"m${head.gen + 1}x" +
       java.util.UUID.randomUUID.toString.take(8) + "-"
     val (fresh, changeEntries) = ShardFormat.writeMerge(tagged, dir,
-      clusterExpr, shards, bounds, prefix,
+      head.schema, clusterExpr, shards, bounds, prefix,
       // rewritten files keep the table's bloom set (manifest-derived)
-      bloomCols = head.entries.flatMap(_.bloom.keys).toSet)
+      bloomCols = head.entries.flatMap(_.bloom.keys).toSet, perKey = perKey)
 
     // 3. generational publish with the txn slot advanced
     val (nextLast, nextTxns) = txnApp match {

@@ -922,7 +922,7 @@ object Streaming {
     * merge applied once per arriving day. The increment is staged as
     * one file per day (`maxFilesPerTrigger=1` → each micro-batch IS
     * one day's CDC drop, replayed in calendar order), and every batch
-    * folds through the shared merge core against the running stored
+    * folds through the shared SCD2 fold against the running stored
     * dimension, whose new version is written out and becomes the next
     * batch's state — exactly the daily scheduled-merge cadence, so
     * five sequential merges must reproduce the one-shot rebuild
@@ -930,17 +930,16 @@ object Streaming {
     * design). Shares the full-rebuild oracle verbatim — stream/batch
     * equivalence pair #11.
     *
-    * Shape per batch: increment windows partition by user over THAT
-    * DAY's rows only; the boundary decision is one user-keyed join of
-    * the daily-active users against the stored open versions; the
-    * pass-through is a scan of the touched files + broadcast anti-join.
-    * State lives in a keyed gshard table that each micro-batch MERGEs
-    * into ([[graft.sources.shard.ShardOps.merge]]: only the files whose
-    * key range the day touches are rewritten, every commit is a
-    * readable generation, and the batch id rides the table's txn slot,
-    * so a replayed micro-batch is a no-op) — NEVER in driver memory or
-    * streaming state stores: the merge scales with the day + touched
-    * users at any history size. */
+    * Shape per batch: one MERGE ([[graft.sources.shard.ShardOps.merge]])
+    * shuffles the day's events and the touched files' rows once by user
+    * and folds each active user through the one
+    * [[graft.operators.Scale.scd2Fold]] inside the write — no window,
+    * no join. State lives in the keyed gshard table it writes (only
+    * the files whose key range the day touches are rewritten, every
+    * commit is a readable generation, and the batch id rides the
+    * table's txn slot, so a replayed micro-batch is a no-op) — NEVER
+    * in driver memory or streaming state stores: the merge scales with
+    * the day + touched users at any history size. */
   def streamScd2Merge(t: Tables, splitDay: Int = 25): DataFrame = {
     import graft.operators.Scale
     import graft.sources.shard.{ShardFormat, ShardOps}
@@ -956,7 +955,7 @@ object Streaming {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, id: Long) =>
         ShardOps.merge(t.spark, target, batch, "user_id", nShards = 0,
-          txnId = id, txnApp = Some(Scd2TxnApp))(Scale.scd2MergeOf)
+          txnId = id, txnApp = Some(Scd2TxnApp))(Scale.scd2PerKey)
       }
       .start()
     q.awaitTermination()

@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 import graft.operators._
+import graft.sources.ShardTempRoot
 
 /** Plan-shape audit: asserts the scale-critical physical-plan
   * properties (SURVEY.md §5) hold — filters and projections reach the
@@ -13,7 +14,7 @@ import graft.operators._
   * These are the properties that decide whether a query survives a
   * 100× scale-up, so they're pinned as tests, not just eyeballed.
   */
-class PlanAuditSpec extends SparkSpec {
+class PlanAuditSpec extends ShardTempRoot {
 
   private def plan(df: DataFrame): String = {
     df.collect() // force AQE to finalize the adaptive plan
@@ -282,15 +283,18 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.contains("partial_"), s"no map-side combine on the dup rollup:\n$p")
   }
 
-  test("q_scd2_merge: user-keyed windows/joins only, touched-user set broadcast") {
-    // the merge must never pay a global window or an all-pairs join:
-    // increment windows partition by user, the boundary decision is a
-    // user-keyed equi-join, and the stored open versions anti-join the
-    // (daily-active-sized) touched-user set as a BROADCAST
+  test("q_scd2_merge: one user-keyed cogroup, no window, no all-pairs join") {
+    // the merge must never pay a window or an all-pairs join: the
+    // stored dimension and the increment cogroup by user for the one
+    // SCD2 fold, and every exchange (the final ordering's included) is
+    // keyed by user_id
     val p = plan(Scale.qScd2Merge(tables))
+    assert(!p.contains("Window"), s"window in the merge:\n$p")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
-    assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastExchange"),
-      s"touched-user anti-join not broadcast:\n$p")
+    val exchanges = p.linesIterator.filter(_.contains("Exchange")).toSeq
+    assert(exchanges.nonEmpty &&
+      exchanges.forall(_.contains("partitioning(user_id#")),
+      s"an exchange not keyed by user_id:\n$p")
   }
 
   test("q_point_in_time_join: equi-join on user with interval residual, no range nested-loop") {
@@ -1027,8 +1031,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("timestamp zone maps prune shard files at planning time (files=k/n)") {
     import org.apache.spark.sql.functions.{floor, min, sum}
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ts_prune_").toString
+    val dir = tmp("ts_prune")
     tables.events.select(col("event_id"), col("ts"),
         floor(col("value") * 100 + lit(0.5)).cast("long").as("cents"))
       .write.format("gshard").option("rangecol", "event_id")
@@ -1243,4 +1246,6 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("Join"), s"classify self-joins:\n$p")
     assert(p.contains("partial"), s"no map-side partial:\n$p")
   }
+
+  leavesNoTempDirs()
 }

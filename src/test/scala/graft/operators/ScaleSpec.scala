@@ -1,12 +1,10 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.sources.ShardTempRoot
 
-class ScaleSpec extends SparkSpec {
+class ScaleSpec extends ShardTempRoot {
 
   test("q_interval_overlap: grid join equals the naive all-pairs replay, any grid width") {
     val t = tables
@@ -335,7 +333,7 @@ class ScaleSpec extends SparkSpec {
 
   test("bucketed tables join without a shuffle") {
     val t = tables
-    val wh = Files.createTempDirectory("graft-warehouse").toString
+    val wh = tmp("warehouse")
     val n = 8
     // bucket both sides on the join key → co-located join (via the
     // production writer API)
@@ -517,4 +515,5 @@ class ScaleSpec extends SparkSpec {
     assert(feed.length < v0.size + head.size)
   }
 
+  leavesNoTempDirs()
 }

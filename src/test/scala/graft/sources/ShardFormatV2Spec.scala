@@ -349,8 +349,8 @@ class ShardFormatV2Spec extends ShardTempRoot {
 
   // ── string dictionary encoding ─────────────────────────────────────
 
-  test("low-cardinality string chunks dictionary-encode; exact roundtrip " +
-      "through both reader paths; high-cardinality stays plain") {
+  test("low-cardinality string chunks dictionary-encode; exact roundtrip; " +
+      "high-cardinality stays plain") {
     val dir = tmp("gshard_dict_")
     // 30-byte tags from a 5-value set over the events slice: a plain
     // chunk costs ≥30 B/row, the dictionary costs ~1 B/row + 150 B once

@@ -126,7 +126,7 @@ class ShardFormatV4Spec extends ShardTempRoot {
   // ── FOR-bitpacked long blocks ──────────────────────────────────────
 
   test("boolean columns bitpack to ~1 bit/row and constant columns " +
-      "to ~0; values (with nulls) roundtrip through both readers") {
+      "to ~0; values (with nulls) roundtrip exactly") {
     val n = 50000
     val df = spark.range(n.toLong).select(col("id").as("k"),
       when(col("id") % 11 =!= 0, col("id") % 3 === 0).as("flag"),
@@ -231,7 +231,7 @@ class ShardFormatV4Spec extends ShardTempRoot {
   }
 
   test("ADD COLUMN widens the manifest without touching data: old " +
-      "files read NULL through both readers, pruning still fires, " +
+      "files read NULL, pruning still fires, " +
       "and every non-appendable ALTER rejects") {
     val cat = "gshard_v4evo"
     val wh = tmp("gshard_v4evo_")

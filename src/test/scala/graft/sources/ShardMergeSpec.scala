@@ -2,9 +2,17 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.operators.Scale
 import graft.sources.shard.{ShardCdc, ShardFormat, ShardOps}
@@ -15,11 +23,12 @@ import graft.sources.shard.{ShardCdc, ShardFormat, ShardOps}
   * discovery off the key zone maps), replay is idempotent via the txn
   * slots, every mutation archives a readable generation, and vacuum
   * reclaims bytes under retention with vacuumed versions failing
-  * loudly. The `merge:` cases drive [[ShardOps.merge]] with key-local
+  * loudly. The `merge:` cases drive [[ShardOps.merge]] with per-key
   * functions other than the upsert — the versioned-sink contract a
   * `foreachBatch` CDC consumer relies on: atomic commit, pinned
   * reads, replay no-ops, crash invisibility, lost-race detection. */
 class ShardMergeSpec extends ShardTempRoot {
+  import ShardMergeSpec._
 
   private def base(n: Int) = {
     val sess = spark
@@ -328,7 +337,7 @@ class ShardMergeSpec extends ShardTempRoot {
     assert(ex.getMessage.contains("merge key"))
   }
 
-  // ── ShardOps.merge with general key-local merge functions ──────────
+  // ── ShardOps.merge with general per-key functions ─────────────────
 
   private def kv(rows: (Long, Long)*): DataFrame = {
     val sess = spark
@@ -356,14 +365,57 @@ class ShardMergeSpec extends ShardTempRoot {
   private def files(d: String) =
     ShardFormat.readManifest(d).entries.map(_.file).toSet
 
-  // latest-version-wins: key-local, pass-through for absent keys
-  private val latest: (DataFrame, DataFrame) => DataFrame =
-    (target, source) => target.unionByName(source)
-      .groupBy(col("k")).agg(max(col("v")).as("v"))
-
   private def mergeKv(d: String, rows: Seq[(Long, Long)], txnId: Long = -1L,
       app: Option[String] = None): Unit =
     ShardOps.merge(spark, d, kv(rows: _*), "k", 0, txnId, app)(latest)
+
+  test("merge: the per-key function runs once per source key and sees " +
+      "only that key's touched and source rows") {
+    val d = kvTable("sm_perkey", 64, 4)
+    calls.clear()
+    // key 3 twice in the source, 17 once, 64 is new; the touched files
+    // hold keys 0..31, all but 3 and 17 of them absent from the source
+    ShardOps.merge(spark, d, kv((3L, 1L), (3L, 2L), (17L, 1000L),
+      (64L, 640L)), "k", 0, -1L, None)(logged)
+    val got = calls.asScala.toSeq.sortBy(_._1)
+    assert(got.map(_._1) == Seq(3L, 17L, 64L), got)
+    assert(got == Seq(
+      (3L, Seq((3L, 30L)), Set((3L, 1L), (3L, 2L))),
+      (17L, Seq((17L, 170L)), Set((17L, 1000L))),
+      (64L, Seq.empty, Set((64L, 640L)))), got)
+    val h = head(d).toMap
+    assert(h.size == 65 && h(3L) == 30L && h(17L) == 1000L && h(64L) == 640L)
+    assert((0L until 64L).filterNot(Set(3L, 17L)).forall(k => h(k) == k * 10L))
+  }
+
+  test("merge: a key past the per-key row bound fails the commit, " +
+      "naming the key") {
+    val d = kvTable("sm_bound", 64, 4)
+    val big = spark.range(ShardFormat.DefaultChunkRows.toLong + 1)
+      .select(lit(5L).as("k"), col("id").as("v"))
+    val ex = intercept[Exception] {
+      ShardOps.merge(spark, d, big, "k", 0, -1L, None)(latest)
+    }
+    assert(ex.getMessage.contains(
+      s"key 5 brings more than ${ShardFormat.DefaultChunkRows}"), ex.getMessage)
+    assert(gen(d) == 0L && head(d).toMap.apply(5L) == 50L)
+  }
+
+  test("merge: a per-key output that does not match the table's columns " +
+      "or its key fails the commit") {
+    val d = kvTable("sm_badout", 64, 4)
+    val wrongType: ShardOps.PerKey = (_, s) =>
+      Seq(InternalRow(s.head.getLong(0), UTF8String.fromString("x")))
+    val wrongKey: ShardOps.PerKey = (_, s) =>
+      Seq(InternalRow(s.head.getLong(0) + 1, 1L))
+    Seq(wrongType, wrongKey).foreach { f =>
+      val ex = intercept[Exception] {
+        ShardOps.merge(spark, d, kv((7L, 1L)), "k", 0, -1L, None)(f)
+      }
+      assert(ex.getMessage.contains("does not match"), ex.getMessage)
+    }
+    assert(gen(d) == 0L && head(d).toMap.apply(7L) == 70L)
+  }
 
   test("merge: a key-local function applies and bumps the generation") {
     val d = kvTable("sm_basic", 2, 1)
@@ -396,11 +448,7 @@ class ShardMergeSpec extends ShardTempRoot {
     val before = head(d)
     // the merge dies inside its data write, after the touched read
     intercept[Exception] {
-      ShardOps.merge(spark, d, kv((7L, 777L)), "k", 0, -1L, None) { (t, s) =>
-        latest(t, s).withColumn("v",
-          when(col("k") === 7L, raise_error(lit("crash")))
-            .otherwise(col("v")))
-      }
+      ShardOps.merge(spark, d, kv((7L, 777L)), "k", 0, -1L, None)(crashOn7)
     }
     assert(gen(d) == 0L && head(d) == before)
     mergeKv(d, Seq((7L, 777L)))
@@ -477,14 +525,14 @@ class ShardMergeSpec extends ShardTempRoot {
 
   test("two interleaved merges: the loser fails loudly, the winner stands") {
     val d = kvTable("sm_race", 2, 1)
-    // the lost-update interleaving: A plans against gen 0, then B
-    // commits a whole merge inside A's merge function
-    intercept[java.util.ConcurrentModificationException] {
-      ShardOps.merge(spark, d, kv((3L, 30L)), "k", 0, -1L, None) { (t, s) =>
-        mergeKv(d, Seq((9L, 90L)))
-        latest(t, s)
-      }
-    }
+    // the lost-update interleaving: A plans against gen 0 and waits in
+    // its per-key function while B commits a whole merge
+    val a = Future(intercept[java.util.ConcurrentModificationException] {
+      ShardOps.merge(spark, d, kv((3L, 30L)), "k", 0, -1L, None)(gated)
+    })(ExecutionContext.global)
+    assert(entered.await(2, TimeUnit.MINUTES), "merge A never ran")
+    try mergeKv(d, Seq((9L, 90L))) finally release.countDown()
+    Await.result(a, Duration(2, TimeUnit.MINUTES))
     assert(gen(d) == 1L && head(d) == Set((0L, 0L), (1L, 10L), (9L, 90L)))
     mergeKv(d, Seq((3L, 30L))) // the loser re-plans against the new head
     assert(head(d) == Set((0L, 0L), (1L, 10L), (9L, 90L), (3L, 30L)))
@@ -542,7 +590,7 @@ class ShardMergeSpec extends ShardTempRoot {
     // day 10: user 1 changes status (close + append), user 3 is new
     val incr = Seq((1L, 10, "b", 1L, 1L), (3L, 10, "a", 2L, 2L))
       .toDF("user_id", "day", "event_type", "us", "event_id")
-    ShardOps.merge(spark, d, incr, "user_id", 0, -1L, None)(Scale.scd2MergeOf)
+    ShardOps.merge(spark, d, incr, "user_id", 0, -1L, None)(Scale.scd2PerKey)
     def dimRows(df: DataFrame) = df.collect().map(r => (r.getLong(0),
       r.getString(1), r.getInt(2), Option(r.get(3)), r.getBoolean(4),
       r.getLong(5))).toSet
@@ -570,7 +618,7 @@ class ShardMergeSpec extends ShardTempRoot {
   // ── per-commit job budget ─────────────────────────────────────────
 
   test("job budget: an upsert into an 8-file table with untouched " +
-      "files runs at most 7 Spark jobs (one source pass, one fused " +
+      "files runs at most 4 Spark jobs (one source pass, one fused " +
       "rewrite)") {
     val sess = spark
     import sess.implicits._
@@ -584,11 +632,11 @@ class ShardMergeSpec extends ShardTempRoot {
     assert(before.size == 8 &&
       after.entries.map(_.file).toSet.intersect(before).size == 7)
     assert(after.changes.map(_._2).sum == 30L) // 10 updated ×2, 10 new
-    assert(jobs <= 7, s"upsert ran $jobs Spark jobs")
+    assert(jobs <= 4, s"upsert ran $jobs Spark jobs")
   }
 
-  test("job budget: the SCD2 merge (Scale.scd2MergeOf) runs at most " +
-      "11 Spark jobs") {
+  test("job budget: the SCD2 merge (Scale.scd2PerKey) runs at most " +
+      "3 Spark jobs") {
     val sess = spark
     import sess.implicits._
     val d = tmp("jobs_scd2")
@@ -602,10 +650,49 @@ class ShardMergeSpec extends ShardTempRoot {
       (90L, 10, "a", 3L, 3L))
       .toDF("user_id", "day", "event_type", "us", "event_id")
     val jobs = JobCount(spark)(ShardOps.merge(spark, d, incr, "user_id", 0,
-      -1L, None)(Scale.scd2MergeOf))
+      -1L, None)(Scale.scd2PerKey))
     assert(spark.read.format("gshard").load(d).count() == 42L)
-    assert(jobs <= 11, s"SCD2 merge ran $jobs Spark jobs")
+    assert(jobs <= 3, s"SCD2 merge ran $jobs Spark jobs")
   }
 
   leavesNoTempDirs()
+}
+
+/** The spec's per-key functions. They live outside the suite so a write
+  * task's closure never captures it; local-mode tasks run in the test
+  * JVM, so the call log and the latches are shared with the test. */
+object ShardMergeSpec {
+
+  /** Latest-version-wins over one key of a (k, v) table: one (k, max v)
+    * row. */
+  val latest: ShardOps.PerKey = (touched, source) => {
+    val rows = touched ++ source
+    Seq(InternalRow(rows.head.getLong(0), rows.map(_.getLong(1)).max))
+  }
+
+  /** [[latest]], except that key 7 crashes its write task. */
+  val crashOn7: ShardOps.PerKey = (touched, source) =>
+    if (source.head.getLong(0) == 7L) throw new IllegalStateException("crash")
+    else latest(touched, source)
+
+  /** Every call of [[logged]]: (key, touched (k, v) rows, source (k, v)
+    * rows). */
+  val calls = new ConcurrentLinkedQueue[(Long, Seq[(Long, Long)], Set[(Long, Long)])]
+
+  private def kvs(rows: Seq[InternalRow]) = rows.map(r => (r.getLong(0), r.getLong(1)))
+
+  /** [[latest]], logging each call in [[calls]]. */
+  val logged: ShardOps.PerKey = (touched, source) => {
+    calls.add((source.head.getLong(0), kvs(touched), kvs(source).toSet))
+    latest(touched, source)
+  }
+
+  /** [[latest]] that signals `entered`, then waits for `release`. */
+  val entered = new CountDownLatch(1)
+  val release = new CountDownLatch(1)
+  val gated: ShardOps.PerKey = (touched, source) => {
+    entered.countDown()
+    release.await(2, TimeUnit.MINUTES)
+    latest(touched, source)
+  }
 }

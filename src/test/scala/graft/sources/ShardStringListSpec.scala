@@ -62,8 +62,7 @@ class ShardStringListSpec extends ShardTempRoot {
       .sortBy(_._1)
 
   test("fuzz roundtrip: nulls, empty lists, empty strings, unicode, " +
-      "reserved chars — byte-exact through BOTH readers and BOTH " +
-      "write paths") {
+      "reserved chars — byte-exact through BOTH write paths") {
     val n = 500
     val want = expected(n)
     // path write (ShardFormat.write), small chunks to force chunk

@@ -59,7 +59,7 @@ class StreamScd2MergeSpec extends SparkSpec {
         .collect().map(_.getLong(0))
       val before = ShardFormat.readManifest(dir)
       ShardOps.merge(spark, dir, day, "user_id", 0, i.toLong,
-        Some("spec"))(Scale.scd2MergeOf)
+        Some("spec"))(Scale.scd2PerKey)
       val after = ShardFormat.readManifest(dir)
       assert(after.gen == before.gen + 1)
       // replaced = exactly the files whose key range holds a user
