@@ -735,6 +735,13 @@ object Dedup {
     * resolves in well under a second. */
   private[graft] val LocalCcMaxEdges: Long = 1000000L
 
+  /** The one "local or distributed?" rule of every adaptive graph
+    * loop: a graph of `nEdges` edges runs on the driver iff it is at
+    * or below `localMaxEdges`; `localMaxEdges = 0` forces the
+    * distributed loop, even on an empty graph, and skips the count. */
+  private[graft] def runsLocal(nEdges: => Long, localMaxEdges: Long): Boolean =
+    localMaxEdges > 0 && nEdges <= localMaxEdges
+
   /** Driver union-find over a collected edge list, min-root union so
     * every root is its component's MINIMUM node id — exactly the
     * distributed loop's converged labelling. */
@@ -818,7 +825,7 @@ object Dedup {
     val sess = edges.sparkSession
     // ADAPTIVE: small graphs resolve on the driver (callers persist +
     // count the edge frame already, so this count hits cache)
-    if (localMaxEdges > 0 && edges.count() <= localMaxEdges)
+    if (runsLocal(edges.count(), localMaxEdges))
       return Components(localCc(edges), iters = 0, local = true)
     val reliableDir = sess.conf.getOption("graft.cc.checkpointDir")
     reliableDir.foreach(sess.sparkContext.setCheckpointDir)

@@ -365,8 +365,6 @@ object EventAnalytics {
     val activity = t.events
       .select(col("user_id"), date_trunc("day", col("ts")).as("day"))
       .distinct()
-      .persist()
-    activity.count()
     val dau = activity.groupBy(col("day")).agg(count(lit(1)).as("dau"))
     val lastDay = activity.agg(max(col("day")).as("last_day"))
     val mau = activity
@@ -377,14 +375,10 @@ object EventAnalytics {
           expr("INTERVAL 1 DAY"))).as("day"))
       .groupBy(col("day"))
       .agg(countDistinct(col("user_id")).as("mau"))
-    val out = mau.join(dau, Seq("day"), "left")
+    mau.join(dau, Seq("day"), "left")
       .select(col("day"), coalesce(col("dau"), lit(0L)).as("dau"), col("mau"),
         round(coalesce(col("dau"), lit(0L)).cast("double") /
           col("mau").cast("double") + lit(1e-9), 6).as("stickiness"))
-    // release the cached activity table (the eventsPpr discipline):
-    // leaving it pinned leaks cache in long-lived sessions
-    activity.unpersist()
-    out
   }
 
   /** E202 — `events_markov_entropy_rate`: the ENTROPY RATE of the
@@ -899,23 +893,6 @@ object EventAnalytics {
         ExactAgg.exactMean(col("pred") - col("actual"), 4).as("bias"))
   }
 
-  /** `events_recommend_cooccur` — item-to-item co-occurrence counts
-    * (the "users who bought X also bought Y" primitive), over the
-    * integer item key in `props`: per user the DISTINCT purchased
-    * item set, all within-user pairs, counted across users, top-20.
-    *
-    * Shape: the pair explosion is the classic co-occurrence hazard —
-    * the within-user self-join emits O(d²) pairs for a user with d
-    * distinct items, so ONE bot account with 10⁵ items would push
-    * 5×10⁹ pairs through a single task at 100 TB. The guard is
-    * [[cappedUserItems]]: per-user distinct items are md5-rank-capped
-    * at `maxItemsPerUser` BEFORE pairing — a deterministic unbiased
-    * sample that is EXACT below the threshold (the rank filter keeps
-    * every item of a user with ≤ cap items; test-data max is 25 vs
-    * the default cap 64). Distinct-set dedup and the pair count are
-    * keyed partial-agg shuffles; the final cut is TakeOrdered, never
-    * a global sort.
-    */
   /** Per-user distinct purchased items, md5-rank-capped at
     * `maxItemsPerUser` (hyperactive-user guard; exact when a user has
     * ≤ cap distinct items). Deterministic, so the DuckDB oracle
@@ -931,6 +908,45 @@ object EventAnalytics {
       .filter(col("rk") <= maxItemsPerUser)
       .drop("rk")
   }
+
+  /** The co-purchase item graph every graph operator here reads: one
+    * basket-keyed self-join of a capped `(basket…, item)` set, giving
+    * each canonical pair `(a, b)` with `a < b` and its support `sup`,
+    * the number of baskets holding both. The basket is `user_id` for
+    * the all-time graph ([[cappedUserItems]]) and `(user_id, day)` for
+    * the same-day graph ([[cappedDayItems]]); the cap bounds each
+    * basket's O(d²) pair fan-out. Callers that need only the edge set
+    * select `(a, b)` and Catalyst prunes the count. */
+  private[graft] def itemPairs(items: DataFrame, basket: Seq[String]): DataFrame =
+    items.as("a")
+      .join(items.as("b"), basket.map(k => col(s"a.$k") === col(s"b.$k"))
+        .reduce(_ && _) && col("a.item") < col("b.item"))
+      .groupBy(col("a.item").as("a"), col("b.item").as("b"))
+      .agg(count(lit(1)).as("sup"))
+
+  /** The all-time co-purchase edge set `(a, b)`, `a < b`. */
+  private def coPurchaseEdges(t: Tables, maxItemsPerUser: Int): DataFrame =
+    itemPairs(cappedUserItems(t, maxItemsPerUser), Seq("user_id"))
+      .select(col("a"), col("b"))
+
+  /** The same-day co-purchase edge set `(a, b)`, `a < b`: items one
+    * user bought within one calendar day. */
+  private def dayEdges(t: Tables, maxItemsPerDay: Int): DataFrame =
+    itemPairs(cappedDayItems(t, maxItemsPerDay), Seq("user_id", "day"))
+      .select(col("a"), col("b"))
+
+  /** Symmetric closure of a canonical `(a, b)` edge set: `(src, dst)`
+    * both ways, each row carrying `carry`. Already distinct, because
+    * the canonical pairs are. */
+  private def bothWays(und: DataFrame, carry: Column*): DataFrame =
+    und.select(col("a").as("src") +: col("b").as("dst") +: carry: _*)
+      .unionAll(und.select(col("b").as("src") +: col("a").as("dst") +: carry: _*))
+
+  /** Undirected degree `(node, deg)` of an `(a, b)` edge set. */
+  private def degrees(und: DataFrame): DataFrame =
+    und.select(col("a").as("node"))
+      .unionAll(und.select(col("b").as("node")))
+      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
 
   /** E212 — `events_basket_lift`: ASSOCIATION RULES over the purchase
     * baskets — support, confidence, and LIFT per co-purchased item
@@ -950,19 +966,16 @@ object EventAnalytics {
     * (n_both·n_baskets·1000 stays far inside int64 at any realistic
     * basket count) — no float ratio ever crosses the engine
     * boundary. Shape: the capped basket set ([[cappedUserItems]] —
-    * the cooccur hyperactive-user cap), ONE user-keyed self-join,
-    * broadcast item totals + one-row basket total. */
+    * the cooccur hyperactive-user cap), ONE user-keyed self-join
+    * ([[itemPairs]]), broadcast item totals + one-row basket total. */
   def eventsBasketLift(t: Tables, minCo: Int = 3,
       maxItemsPerUser: Int = 64): DataFrame = {
     val items = cappedUserItems(t, maxItemsPerUser)
     val nBaskets = items.select(col("user_id")).distinct()
       .agg(count(lit(1)).as("n_baskets"))
     val itemN = items.groupBy(col("item")).agg(count(lit(1)).as("n"))
-    items.as("a")
-      .join(items.as("b"),
-        col("a.user_id") === col("b.user_id") && col("a.item") < col("b.item"))
-      .groupBy(col("a.item").as("item_a"), col("b.item").as("item_b"))
-      .agg(count(lit(1)).as("n_both"))
+    itemPairs(items, Seq("user_id"))
+      .select(col("a").as("item_a"), col("b").as("item_b"), col("sup").as("n_both"))
       .filter(col("n_both") >= minCo)
       .join(broadcast(itemN.select(col("item").as("item_a"),
         col("n").as("n_a"))), Seq("item_a"))
@@ -996,8 +1009,7 @@ object EventAnalytics {
     * shuffle-bounded shape as a PageRank round, state O(users +
     * items), never materializing any neighborhood. */
   def eventsHits(t: Tables, maxItemsPerUser: Int = 64): DataFrame = {
-    val ui = cappedUserItems(t, maxItemsPerUser).persist()
-    ui.count()
+    val ui = cappedUserItems(t, maxItemsPerUser)
     val h1 = ui.groupBy(col("user_id"))
       .agg((count(lit(1)) * 1000L).as("h1"))
     val a1 = ui.join(h1, "user_id")
@@ -1007,9 +1019,7 @@ object EventAnalytics {
     val a2 = ui.join(h2, "user_id")
       .groupBy(col("item"))
       .agg(count(lit(1)).as("n_buyers"), sum(col("h2")).as("auth_micro"))
-    val out = a2.select(col("item"), col("n_buyers"), col("auth_micro"))
-    ui.unpersist()
-    out
+    a2.select(col("item"), col("n_buyers"), col("auth_micro"))
   }
 
   /** `events_pagerank` — item centrality over the co-purchase graph:
@@ -1029,22 +1039,16 @@ object EventAnalytics {
     * ranking use). A float PageRank's neighbor sums would legally
     * differ by engine/order at every iteration.
     *
-    * Shape: edges build once from the capped per-user item sets (the
-    * cooccur fan-out guard), then each round is ONE edge-keyed join +
-    * partial-agg sum over (item, long) pairs — the [[graft.operators
-    * .Dedup.connectedComponents]] loop shape with a fixed 3-round
-    * depth (no lineage growth concern at 3; the CC checkpoint lesson
-    * applies at ~60).
+    * Shape: edges are the symmetric closure of the capped per-user
+    * item pairs ([[itemPairs]], the cooccur fan-out guard), then each
+    * round is ONE edge-keyed join + partial-agg sum over (item, long)
+    * pairs — the [[graft.operators.Dedup.connectedComponents]] loop
+    * shape with a fixed 3-round depth (no lineage growth concern at
+    * 3; the CC checkpoint lesson applies at ~60).
     */
   def eventsPagerank(t: Tables, iters: Int = 3,
       maxItemsPerUser: Int = 64): DataFrame = {
-    val items = cappedUserItems(t, maxItemsPerUser)
-    val edges = items.as("a")
-      .join(items.as("b"),
-        col("a.user_id") === col("b.user_id") && col("a.item") =!= col("b.item"))
-      .select(col("a.item").as("src"), col("b.item").as("dst"))
-      .distinct().persist()
-    edges.count()
+    val edges = bothWays(coPurchaseEdges(t, maxItemsPerUser))
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     var r = deg.select(col("src").as("item"), lit(1000000L).as("r"))
     for (_ <- 1 to iters) {
@@ -1056,7 +1060,6 @@ object EventAnalytics {
           (lit(150000L) + expr("(17 * s) DIV 20")).as("pr_micro"))
         .withColumnRenamed("pr_micro", "r")
     }
-    edges.unpersist()
     r.select(col("item"), col("r").as("pr_micro"))
   }
 
@@ -1083,19 +1086,12 @@ object EventAnalytics {
     * back to the node table — state O(nodes), nothing cartesian. */
   def eventsPpr(t: Tables, iters: Int = 3,
       maxItemsPerUser: Int = 64): DataFrame = {
-    val items = cappedUserItems(t, maxItemsPerUser)
-    val edges = items.as("a")
-      .join(items.as("b"),
-        col("a.user_id") === col("b.user_id") && col("a.item") =!= col("b.item"))
-      .select(col("a.item").as("src"), col("b.item").as("dst"))
-      .distinct().persist()
-    edges.count()
+    val edges = bothWays(coPurchaseEdges(t, maxItemsPerUser))
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val seedRow = deg.orderBy(desc("deg"), asc("src")).limit(1).collect()
     if (seedRow.isEmpty) {
-      val sess = edges.sparkSession
+      val sess = t.spark
       import sess.implicits._
-      edges.unpersist()
       return Seq.empty[(Int, Long)].toDF("item", "ppr_micro")
     }
     val seed = seedRow(0).getInt(0)
@@ -1112,9 +1108,7 @@ object EventAnalytics {
           (when(col("item") === seed, lit(150000L)).otherwise(lit(0L)) +
             expr("(17 * coalesce(s, 0L)) DIV 20")).as("r"))
     }
-    val out = r.select(col("item"), col("r").as("ppr_micro"))
-    edges.unpersist()
-    out
+    r.select(col("item"), col("r").as("ppr_micro"))
   }
 
   /** `events_triangles` — per-item triangle participation over the
@@ -1122,23 +1116,10 @@ object EventAnalytics {
     * item sits in — the local clustering signal (bundle detection,
     * community seeds) that pairwise co-occurrence counts
     * ([[eventsRecommendCooccur]]) and global centrality
-    * ([[eventsPagerank]]) both miss.
-    *
-    * Shape: the Schank–Wagner FORWARD algorithm, the distributed
-    * triangle-counting standard. Each undirected edge is oriented
-    * from its (degree, id)-smaller endpoint toward the larger, so
-    * every node's out-degree is O(√m) regardless of skew — the
-    * celebrity node that would generate a degree² wedge explosion
-    * under naive enumeration instead RECEIVES edges and generates no
-    * wedges. Wedges are an out-edge self-join on the source (each
-    * triangle {a,b,c} with a ≺ b ≺ c enumerated exactly once as the
-    * wedge b←a→c), closed by ONE equi-join probing the oriented edge
-    * (b→c) — all keyed joins and partial-agg counts, nothing
-    * cartesian, no driver-side state. Degrees, orientation, and the
-    * wedge order are integer-deterministic, so the DuckDB oracle
-    * replays the identical enumeration; counts are exact int64.
-    * Zero-triangle nodes surface with 0 via a left join from the
-    * degree table (row count == graph nodes, deterministic).
+    * ([[eventsPagerank]]) both miss. Counted by the one forward pass,
+    * [[forwardTriangles]]; zero-triangle nodes surface with 0 via a
+    * left join from the degree table (row count == graph nodes,
+    * deterministic).
     */
   def eventsTriangles(t: Tables, maxItemsPerUser: Int = 64): DataFrame =
     triangleStats(t, maxItemsPerUser)
@@ -1172,36 +1153,14 @@ object EventAnalytics {
     * low here unless their NEIGHBORHOODS agree.
     *
     * Shape: common neighbors of an edge = that edge's triangle
-    * count, so this rides the same degree-oriented Schank–Wagner
-    * forward pass as [[eventsTriangles]] (wedge fan-out bounded by
-    * O(√m) per node regardless of skew) — each found triangle is
-    * exploded to its THREE canonical edges and counted per edge, then
-    * one degree join finishes |union| = deg_a + deg_b − common. All
-    * exact integers until the single §6-rounded ratio. */
+    * count, so this rides the same forward pass as [[eventsTriangles]]
+    * ([[forwardTriangles]]) — each found triangle is exploded to its
+    * THREE canonical edges and counted per edge, then one degree join
+    * finishes |union| = deg_a + deg_b − common. All exact integers
+    * until the single §6-rounded ratio. */
   def eventsNeighborJaccard(t: Tables, maxItemsPerUser: Int = 64): DataFrame = {
-    val items = cappedUserItems(t, maxItemsPerUser)
-    val und = items.as("a")
-      .join(items.as("b"),
-        col("a.user_id") === col("b.user_id") && col("a.item") < col("b.item"))
-      .select(col("a.item").as("a"), col("b.item").as("b"))
-      .distinct()
-    val deg = und.select(col("a").as("node"))
-      .unionAll(und.select(col("b").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-    val oriented = und
-      .join(deg.select(col("node").as("a"), col("deg").as("da")), Seq("a"))
-      .join(deg.select(col("node").as("b"), col("deg").as("db")), Seq("b"))
-      .select(
-        when(col("da") <= col("db"), col("a")).otherwise(col("b")).as("u"),
-        when(col("da") <= col("db"), col("b")).otherwise(col("a")).as("v"),
-        when(col("da") <= col("db"), col("db")).otherwise(col("da")).as("dv"))
-    val wedges = oriented.select(col("u"), col("v").as("x"), col("dv").as("dx"))
-      .join(oriented.select(col("u"), col("v").as("y"), col("dv").as("dy")),
-        Seq("u"))
-      .filter(col("dx") < col("dy") ||
-        (col("dx") === col("dy") && col("x") < col("y")))
-    val tri = wedges.join(
-      oriented.select(col("u").as("x"), col("v").as("y")), Seq("x", "y"))
+    val und = coPurchaseEdges(t, maxItemsPerUser)
+    val (deg, tri) = forwardTriangles(und)
     // each triangle {u, x, y} belongs to 3 canonical (min, max) edges
     val perEdge = tri.select(explode(array(
         struct(least(col("u"), col("x")).as("a"), greatest(col("u"), col("x")).as("b")),
@@ -1220,20 +1179,22 @@ object EventAnalytics {
           + lit(1e-9), 4).as("jaccard"))
   }
 
-  /** Shared forward-algorithm pass behind [[eventsTriangles]] and
-    * [[eventsClusteringCoeff]]: (node, deg, n_triangles) for every
-    * graph node. */
-  private def triangleStats(t: Tables, maxItemsPerUser: Int): DataFrame = {
-    val items = cappedUserItems(t, maxItemsPerUser)
-    // canonical undirected edge set (a < b), distinct
-    val und = items.as("a")
-      .join(items.as("b"),
-        col("a.user_id") === col("b.user_id") && col("a.item") < col("b.item"))
-      .select(col("a.item").as("a"), col("b.item").as("b"))
-      .distinct()
-    val deg = und.select(col("a").as("node"))
-      .unionAll(und.select(col("b").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
+  /** The Schank–Wagner FORWARD pass over a canonical `(a, b)` edge set,
+    * the distributed triangle-counting standard: the degree table
+    * `(node, deg)` and every triangle `(u, x, y)` exactly once. Each
+    * undirected edge is oriented from its (degree, id)-smaller
+    * endpoint toward the larger, so every node's out-degree is O(√m)
+    * regardless of skew — the celebrity node that would generate a
+    * degree² wedge explosion under naive enumeration instead RECEIVES
+    * edges and generates no wedges. Wedges are an out-edge self-join
+    * on the source (each triangle {a,b,c} with a ≺ b ≺ c enumerated
+    * exactly once as the wedge b←a→c), closed by ONE equi-join probing
+    * the oriented edge (b→c) — all keyed joins and partial-agg counts,
+    * nothing cartesian, no driver-side state. Degrees, orientation,
+    * and the wedge order are integer-deterministic, so the DuckDB
+    * oracle replays the identical enumeration. */
+  private def forwardTriangles(und: DataFrame): (DataFrame, DataFrame) = {
+    val deg = degrees(und)
     // orient a→b iff (deg_a, a) ≺ (deg_b, b); a < b makes the tie case
     // collapse to deg_a <= deg_b. Carry the head's degree for the
     // wedge-order comparison below.
@@ -1250,8 +1211,15 @@ object EventAnalytics {
         Seq("u"))
       .filter(col("dx") < col("dy") ||
         (col("dx") === col("dy") && col("x") < col("y")))
-    val tri = wedges.join(
-      oriented.select(col("u").as("x"), col("v").as("y")), Seq("x", "y"))
+    (deg, wedges.join(
+      oriented.select(col("u").as("x"), col("v").as("y")), Seq("x", "y")))
+  }
+
+  /** Per-node readout of [[forwardTriangles]] behind
+    * [[eventsTriangles]] and [[eventsClusteringCoeff]]:
+    * (node, deg, n_triangles) for every graph node. */
+  private def triangleStats(t: Tables, maxItemsPerUser: Int): DataFrame = {
+    val (deg, tri) = forwardTriangles(coPurchaseEdges(t, maxItemsPerUser))
     val perNode = tri
       .select(explode(array(col("u"), col("x"), col("y"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("n"))
@@ -1260,17 +1228,30 @@ object EventAnalytics {
         coalesce(col("n"), lit(0L)).as("n_triangles"))
   }
 
+  /** `events_recommend_cooccur` — item-to-item co-occurrence counts
+    * (the "users who bought X also bought Y" primitive), over the
+    * integer item key in `props`: per user the DISTINCT purchased
+    * item set, all within-user pairs, counted across users, top-20.
+    *
+    * Shape: the pair explosion is the classic co-occurrence hazard —
+    * the within-user self-join emits O(d²) pairs for a user with d
+    * distinct items, so ONE bot account with 10⁵ items would push
+    * 5×10⁹ pairs through a single task at 100 TB. The guard is
+    * [[cappedUserItems]]: per-user distinct items are md5-rank-capped
+    * at `maxItemsPerUser` BEFORE pairing — a deterministic unbiased
+    * sample that is EXACT below the threshold (the rank filter keeps
+    * every item of a user with ≤ cap items; test-data max is 25 vs
+    * the default cap 64). Distinct-set dedup and the pair count
+    * ([[itemPairs]]' support: `(user, item)` is distinct, so it counts
+    * distinct users) are keyed partial-agg shuffles; the final cut is
+    * TakeOrdered, never a global sort.
+    */
   def eventsRecommendCooccur(t: Tables, topK: Int = 20,
-      maxItemsPerUser: Int = 64): DataFrame = {
-    val items = cappedUserItems(t, maxItemsPerUser)
-    items.as("a")
-      .join(items.as("b"),
-        col("a.user_id") === col("b.user_id") && col("a.item") < col("b.item"))
-      .groupBy(col("a.item").as("item_a"), col("b.item").as("item_b"))
-      .agg(countDistinct(col("a.user_id")).as("n_users"))
+      maxItemsPerUser: Int = 64): DataFrame =
+    itemPairs(cappedUserItems(t, maxItemsPerUser), Seq("user_id"))
+      .select(col("a").as("item_a"), col("b").as("item_b"), col("sup").as("n_users"))
       .orderBy(col("n_users").desc, col("item_a"), col("item_b"))
       .limit(topK)
-  }
 
   /** `events_attribution_linear` — linear multi-touch attribution:
     * each purchase's value splits EQUALLY across every view/click in
@@ -1448,19 +1429,12 @@ object EventAnalytics {
   def eventsKcore(t: Tables, k: Int = 5, rounds: Int = 4,
       maxItemsPerDay: Int = 64,
       localMaxEdges: Long = Dedup.LocalCcMaxEdges): DataFrame = {
-    val items = cappedDayItems(t, maxItemsPerDay)
-    val und = items.as("a")
-      .join(items.as("b"),
-        col("a.user_id") === col("b.user_id") && col("a.day") === col("b.day") &&
-          col("a.item") < col("b.item"))
-      .select(col("a.item").as("a"), col("b.item").as("b"))
-      .distinct().persist()
-    val nEdges = und.count()
+    val und = dayEdges(t, maxItemsPerDay).persist()
     // ADAPTIVE LOCAL FALLBACK (the connectedComponents discipline):
     // below the edge ceiling the whole graph fits on the driver and a
     // local peel beats paying 4 rounds of distributed-job latency —
     // the spec proves label parity against the distributed loop
-    if (localMaxEdges > 0 && nEdges <= localMaxEdges) {
+    if (Dedup.runsLocal(und.count(), localMaxEdges)) {
       val sess = und.sparkSession
       import sess.implicits._
       var es = und.select(col("a").cast("long"), col("b").cast("long"))
@@ -1484,10 +1458,7 @@ object EventAnalytics {
     var edges = und
     var r = 0
     while (r < rounds) {
-      val deg = edges.select(col("a").as("node"))
-        .unionAll(edges.select(col("b").as("node")))
-        .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-      val surv = deg.filter(col("deg") >= k)
+      val surv = degrees(edges).filter(col("deg") >= k)
       val next = edges
         .join(surv.select(col("node").as("a")), Seq("a"), "left_semi")
         .join(surv.select(col("node").as("b")), Seq("b"), "left_semi")
@@ -1496,9 +1467,7 @@ object EventAnalytics {
       edges = next
       r += 1
     }
-    val degF = edges.select(col("a").as("item"))
-      .unionAll(edges.select(col("b").as("item")))
-      .groupBy(col("item")).agg(count(lit(1)).as("core_deg"))
+    val degF = degrees(edges).select(col("node").as("item"), col("deg").as("core_deg"))
     val out = allNodes.join(degF, Seq("item"), "left")
       .select(col("item"),
         coalesce(col("core_deg"), lit(0L)).as("core_deg"),
@@ -1704,21 +1673,11 @@ object EventAnalytics {
     * aggregation — no per-node state on the driver, output is a
     * single row. */
   def eventsAssortativity(t: Tables, maxItemsPerUser: Int = 64): DataFrame = {
-    val items = cappedUserItems(t, maxItemsPerUser)
-    val und = items.as("a")
-      .join(items.as("b"),
-        col("a.user_id") === col("b.user_id") && col("a.item") < col("b.item"))
-      .select(col("a.item").as("a"), col("b.item").as("b"))
-      .distinct()
-    val deg = und.select(col("a").as("node"))
-      .unionAll(und.select(col("b").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-    val sym = und.select(col("a").as("x"), col("b").as("y"))
-      .unionAll(und.select(col("b").as("x"), col("a").as("y")))
-    val dec = deg.select(col("node"), col("deg").cast("decimal(38,0)").as("d"))
-    val moments = sym
-      .join(dec.select(col("node").as("x"), col("d").as("dx")), Seq("x"))
-      .join(dec.select(col("node").as("y"), col("d").as("dy")), Seq("y"))
+    val und = coPurchaseEdges(t, maxItemsPerUser)
+    val dec = degrees(und).select(col("node"), col("deg").cast("decimal(38,0)").as("d"))
+    val moments = bothWays(und)
+      .join(dec.select(col("node").as("src"), col("d").as("dx")), Seq("src"))
+      .join(dec.select(col("node").as("dst"), col("d").as("dy")), Seq("dst"))
       .agg(count(lit(1)).as("m"),
         sum(col("dx")).as("sx"),
         sum(col("dx") * col("dy")).as("sxy"),
@@ -1763,17 +1722,7 @@ object EventAnalytics {
     */
   def eventsCommunities(t: Tables, rounds: Int = 3,
       maxItemsPerDay: Int = 64): DataFrame = {
-    val items = cappedDayItems(t, maxItemsPerDay)
-    val und = items.as("a")
-      .join(items.as("b"),
-        col("a.user_id") === col("b.user_id") && col("a.day") === col("b.day") &&
-          col("a.item") < col("b.item"))
-      .select(col("a.item").as("a"), col("b.item").as("b"))
-      .distinct()
-    val edges = und.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(und.select(col("b").as("src"), col("a").as("dst")))
-      .persist()
-    edges.count()
+    val edges = bothWays(dayEdges(t, maxItemsPerDay))
     var labels = edges.select(col("src").as("item"))
       .distinct().withColumn("lbl", col("item"))
     for (_ <- 1 to rounds) {
@@ -1783,12 +1732,10 @@ object EventAnalytics {
         .agg(max(struct(col("c"), (-col("lbl")).as("nl"))).as("m"))
         .select(col("dst").as("item"), (-col("m.nl")).as("lbl"))
     }
-    val out = labels
+    labels
       .withColumn("community_size",
         count(lit(1)).over(Window.partitionBy(col("lbl"))))
       .select(col("item"), col("lbl").as("community"), col("community_size"))
-    edges.unpersist()
-    out
   }
 
   /** `events_seasonality_strength` — per event type, HOW seasonal the
@@ -1869,24 +1816,13 @@ object EventAnalytics {
     */
   def eventsReach(t: Tables, rounds: Int = 3,
       maxItemsPerDay: Int = 64): DataFrame = {
-    val items = cappedDayItems(t, maxItemsPerDay)
-    val und = items.as("a")
-      .join(items.as("b"),
-        col("a.user_id") === col("b.user_id") && col("a.day") === col("b.day") &&
-          col("a.item") < col("b.item"))
-      .select(col("a.item").as("a"), col("b.item").as("b"))
-      .distinct()
-    val edges = und.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(und.select(col("b").as("src"), col("a").as("dst")))
-      .persist()
-    edges.count()
+    val edges = bothWays(dayEdges(t, maxItemsPerDay))
     val deg = edges.groupBy(col("src").as("item")).agg(count(lit(1)).as("deg"))
     // the hub: max degree, min item — one bounded collected row
     val seedRow = deg.orderBy(desc("deg"), asc("item")).limit(1).collect()
     if (seedRow.isEmpty) { // empty slice: no graph, empty result
-      val sess = edges.sparkSession
+      val sess = t.spark
       import sess.implicits._
-      edges.unpersist()
       return Seq.empty[(Int, Long)].toDF("item", "dist")
     }
     val seed = seedRow(0).getInt(0)
@@ -1898,11 +1834,9 @@ object EventAnalytics {
       dist = dist.unionByName(relaxed)
         .groupBy(col("item")).agg(min(col("dist")).as("dist"))
     }
-    val out = deg.select(col("item"))
+    deg.select(col("item"))
       .join(dist, Seq("item"), "left")
       .select(col("item"), coalesce(col("dist"), lit(-1L)).as("dist"))
-    edges.unpersist()
-    out
   }
 
   /** `events_survival` — Kaplan–Meier user-retention curve (public
@@ -2218,138 +2152,19 @@ object EventAnalytics {
     * triangles this completes the graph-primitive set: reachability
     * WITH distances, which none of the others expose.
     *
-    * Shape: frontier BFS as ONE keyed min-agg per level — the Pregel
-    * pattern expressed in DataFrames. Each level joins the current
-    * frontier against the symmetric edge list and folds the
-    * expansions into the settled table via `min(dist)` over
-    * settled ∪ expansions: settled items keep their smaller d,
-    * first-reached items surface at exactly d (their minimum
-    * distance — no anti-join needed), and the next frontier is just
-    * the rows that settled this round. A node is expanded only at
-    * the level it settles, so total work is
-    * O(Σ_level |frontier|·avg-degree) — edges touched at most once
-    * per direction over the whole run, never |V|·|E|. `maxDist`
-    * bounds the rounds (the analytics question is "within k hops";
-    * unbounded BFS on a 100 TB graph is a different product). The
-    * edge list builds once behind the same hyperactive-user cap
-    * as every other graph query ([[cappedUserItems]]) and persists
-    * for the ≤ maxDist probes; the merged settled table
-    * localCheckpoints per level so lineage stays flat. The DuckDB
-    * oracle replays the walk as a recursive CTE with min-dist
-    * semantics — same seeds, same edges, same cut.
-    *
-    * Edges carry a SIGNIFICANCE FLOOR: a pair must co-occur in at
-    * least `max(2, distinct_users/50)` baskets. Without it the raw
-    * co-purchase graph saturates (every popular pair connects and the
-    * whole catalog sits at hop 1 — measured at every test SF), which
-    * both voids the analytics and is the scale hazard: raw
-    * co-occurrence edge count grows ~quadratically in catalog
-    * popularity while SUPPORTED edge count tracks genuine structure.
-    * The floor is corpus-relative so the graph stays comparable
-    * across SFs; items whose every edge falls below it simply don't
-    * appear (disconnected under the significance lens). */
-  /** Driver-local walk results → a DataFrame carrying the distributed
-    * branch's exact schema (native item type, nullable fields),
-    * ordered by item — so the two branches are indistinguishable to
-    * any consumer (pinned by the adaptive-local-walk specs). */
-  private[graft] def localPathsDF(spark: org.apache.spark.sql.SparkSession,
-      itemType: org.apache.spark.sql.types.DataType,
-      distType: org.apache.spark.sql.types.DataType,
-      rows: Seq[(Long, Any)]): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
-    import scala.jdk.CollectionConverters._
-    val schema = StructType(Seq(StructField("item", itemType),
-      StructField("dist", distType)))
-    val toItem: Long => Any = itemType match {
-      case LongType    => i => i
-      case IntegerType => i => i.toInt
-      case other => throw new IllegalArgumentException(
-        s"localPathsDF: item type $other is not long or int — the " +
-          "driver-local walk cannot build rows of it")
-    }
-    val data = rows.map { case (i, d) => Row(toItem(i), d) }
-    spark.createDataFrame(data.asJava, schema).orderBy(col("item"))
-  }
-
+    * BFS is the [[seededWalk]] with every edge cost 1: unit-cost
+    * relaxation reaches each node first in the round equal to its hop
+    * distance and never improves it afterwards, so `maxDist` rounds
+    * under budget `maxDist` are exactly the `maxDist`-hop BFS. `dist`
+    * is cast from the walk's long to int, the type consumers and the
+    * typed-value oracle gate read. The DuckDB oracle replays the walk
+    * as a recursive CTE with min-dist semantics — same seeds, same
+    * edges, same cut. */
   def eventsShortestPaths(t: Tables, maxItemsPerUser: Int = 64,
       maxDist: Int = 4,
-      localMaxEdges: Long = Dedup.LocalCcMaxEdges): DataFrame = {
-    val items = cappedUserItems(t, maxItemsPerUser).persist()
-    val minSup = items.agg(
-      greatest(lit(2L), expr("count(DISTINCT user_id) DIV 50")).as("ms"))
-    val und = items.as("a")
-      .join(items.as("b"),
-        col("a.user_id") === col("b.user_id") && col("a.item") < col("b.item"))
-      .groupBy(col("a.item").as("a"), col("b.item").as("b"))
-      .agg(count(lit(1)).as("sup"))
-      .crossJoin(broadcast(minSup))
-      .filter(col("sup") >= col("ms"))
-    val edges = und.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(und.select(col("b").as("src"), col("a").as("dst")))
-      .persist()
-    val nEdges = edges.count()
-    // ADAPTIVE LOCAL WALK (the Dedup.LocalCcMaxEdges decision applied
-    // to BFS): a significance-floored co-purchase graph at or below
-    // the ceiling collects to the driver (two longs per edge) and the
-    // ≤ maxDist levels run as a hash-map BFS — identical labelling by
-    // construction, no per-level distributed job latency. The
-    // distributed min-agg loop below is the 100 TB path.
-    if (nEdges <= localMaxEdges) {
-      val sess = t.spark
-      import sess.implicits._
-      val itemType = edges.schema("src").dataType
-      val es = edges.select(col("src").cast("long"), col("dst").cast("long"))
-        .as[(Long, Long)].collect()
-      items.unpersist()
-      edges.unpersist()
-      val adj = es.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-      val dist = scala.collection.mutable.LongMap.empty[Int]
-      var frontier = adj.keysIterator.filter(_ % 17 == 0).toArray
-      frontier.foreach(dist.update(_, 0))
-      var d = 1
-      while (d <= maxDist && frontier.nonEmpty) {
-        frontier = frontier.flatMap(s => adj.getOrElse(s, Array.empty[Long]))
-          .distinct.filter(n => !dist.contains(n))
-        frontier.foreach(dist.update(_, d))
-        d += 1
-      }
-      // build with the distributed branch's exact schema (native item
-      // type, nullable fields) so the result is indistinguishable
-      return localPathsDF(sess, itemType, IntegerType,
-        dist.toSeq.map { case (i, dd) => (i, dd: Any) })
-    }
-    val seeds = edges.select(col("src").as("item")).distinct()
-      .filter(col("item") % 17 === 0)
-    // localCheckpoint (eager), NOT persist: an iterated persist chain
-    // reuses the DATA but every level's LOGICAL plan still nests all
-    // previous levels, and Catalyst's per-iteration analysis/cache-
-    // canonicalization cost grows exponentially (measured: levels at
-    // 1.0 → 1.3 → 3.4 → 17 s and a 38 s final action at sf0.1; with
-    // truncated lineage the whole walk is ~1 s/level). Same fix every
-    // iterative Spark algorithm ships — frontier state is already
-    // computed, so checkpointing it loses nothing.
-    var settled = seeds.select(col("item"), lit(0).as("dist"))
-      .localCheckpoint()
-    var frontier = seeds.select(col("item"))
-    for (d <- 1 to maxDist) {
-      // fold expansion + dedup + anti-join into ONE keyed min-agg:
-      // min(dist) over settled ∪ frontier-expansions IS the BFS level
-      // (old items keep their smaller d, new items surface at d), and
-      // the next frontier is just the rows that settled at this round
-      // — one exchange + one checkpoint per round instead of three
-      // jobs (distinct, anti-join, settled-union checkpoint)
-      val expanded = frontier.join(edges, frontier("item") === edges("src"))
-        .select(col("dst").as("item"), lit(d).as("dist"))
-      settled = settled.unionAll(expanded)
-        .groupBy(col("item")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint()
-      frontier = settled.filter(col("dist") === d).select(col("item"))
-    }
-    items.unpersist()
-    edges.unpersist()
-    settled.select(col("item"), col("dist")).orderBy(col("item"))
-  }
+      localMaxEdges: Long = Dedup.LocalCcMaxEdges): DataFrame =
+    seededWalk(t, maxItemsPerUser, lit(1L), maxDist, maxDist.toLong, localMaxEdges)
+      .select(col("item"), col("dist").cast("int").as("dist"))
 
   /** `events_weighted_paths` — WEIGHTED shortest paths over the
     * co-purchase item graph: every item's minimum total COST to the
@@ -2360,54 +2175,62 @@ object EventAnalytics {
     * analytics actually ask). Edge cost is support-derived and
     * integer-exact — `2 + sup % 3` ∈ {2,3,4} — so both engines
     * relax identical integers and the oracle needs no float
-    * tolerance.
-    *
-    * Shape: bounded delta-stepping-style relaxation — the
-    * Meyer–Sanders (2003) observation reduced to its Spark-friendly
-    * core: with integer costs ≥ 2 and budget B, no in-budget
-    * shortest path has more than B/2 edges, so ⌈B/2⌉ synchronous
-    * Bellman-Ford rounds ARE the fixpoint (no convergence probe, no
-    * driver round-trip per test). Each round is one keyed equi-join
-    * of the IMPROVED frontier against the symmetric weighted edge
-    * list, a budget cut, and a min-merge into the settled
-    * distances; a node re-expands only when its distance improves,
-    * so total work is O(Σ rounds |improved|·avg-degree). The merged
-    * min-dist table `localCheckpoint`s per round — the BFS lineage
-    * discipline ([[eventsShortestPaths]]) — and the improved
-    * frontier is a lazy filter over it (settled rows carry
-    * `old` = their pre-round dist, candidates a NULL `old`; the
-    * null-skipping `min(old)` recovers the pre-round distance, so
-    * improvement is a map-side `dist < old` test); the same
-    * significance-floored edge build backs both walks. The DuckDB oracle replays the walk as
-    * a recursive CTE over the identical weighted edges with
+    * tolerance. With integer costs ≥ 2 and budget B, no in-budget
+    * shortest path has more than ⌊B/2⌋ edges, so ⌊B/2⌋ rounds of the
+    * [[seededWalk]] ARE the fixpoint. The DuckDB oracle replays the
+    * walk as a recursive CTE over the identical weighted edges with
     * min-dist semantics and the same budget cut (UNION-deduped, so
     * the enumeration converges on (item, dist) pairs). */
   def eventsWeightedPaths(t: Tables, maxItemsPerUser: Int = 64,
       budget: Long = 9L,
-      localMaxEdges: Long = Dedup.LocalCcMaxEdges): DataFrame = {
+      localMaxEdges: Long = Dedup.LocalCcMaxEdges): DataFrame =
+    seededWalk(t, maxItemsPerUser, lit(2L) + col("sup") % 3,
+      (budget / 2L).toInt, budget, localMaxEdges)
+
+  /** The seeded walk behind [[eventsShortestPaths]] and
+    * [[eventsWeightedPaths]]: `(item, dist)`, ordered by item, the
+    * minimum total `cost` (a column over the pair support `sup`) from
+    * the nearest seed (`item % 17 = 0`), for every item within
+    * `budget`.
+    *
+    * Shape: bounded delta-stepping-style relaxation — the
+    * Meyer–Sanders (2003) observation reduced to its Spark-friendly
+    * core: `rounds` synchronous Bellman-Ford rounds with no
+    * convergence probe and no driver round-trip per test. Each round
+    * is one keyed equi-join of the IMPROVED frontier against the
+    * symmetric weighted edge list, a budget cut, and a min-merge into
+    * the settled distances; a node re-expands only when its distance
+    * improves, so total work is O(Σ rounds |improved|·avg-degree),
+    * never |V|·|E|. The merged min-dist table `localCheckpoint`s per
+    * round, and the improved frontier is a lazy filter over it.
+    *
+    * Edges carry a SIGNIFICANCE FLOOR: a pair must co-occur in at
+    * least `max(2, distinct_users/50)` baskets. Without it the raw
+    * co-purchase graph saturates (every popular pair connects and the
+    * whole catalog sits at hop 1 — measured at every test SF), which
+    * both voids the analytics and is the scale hazard: raw
+    * co-occurrence edge count grows ~quadratically in catalog
+    * popularity while SUPPORTED edge count tracks genuine structure.
+    * The floor is corpus-relative so the graph stays comparable
+    * across SFs; items whose every edge falls below it simply don't
+    * appear (disconnected under the significance lens).
+    *
+    * ADAPTIVE LOCAL WALK (the [[Dedup.runsLocal]] rule): a graph at
+    * or below `localMaxEdges` collects its (src, dst, cost) triples
+    * to the driver and runs the same rounds as hash-map relaxations
+    * with the same synchronous min-merge (improvements land after
+    * each round, exactly the distributed keyed min-agg). The
+    * distributed loop is the 100 TB path. */
+  private def seededWalk(t: Tables, maxItemsPerUser: Int, cost: Column,
+      rounds: Int, budget: Long, localMaxEdges: Long): DataFrame = {
     val items = cappedUserItems(t, maxItemsPerUser).persist()
     val minSup = items.agg(
       greatest(lit(2L), expr("count(DISTINCT user_id) DIV 50")).as("ms"))
-    val und = items.as("a")
-      .join(items.as("b"),
-        col("a.user_id") === col("b.user_id") && col("a.item") < col("b.item"))
-      .groupBy(col("a.item").as("a"), col("b.item").as("b"))
-      .agg(count(lit(1)).as("sup"))
+    val und = itemPairs(items, Seq("user_id"))
       .crossJoin(broadcast(minSup))
       .filter(col("sup") >= col("ms"))
-      .withColumn("cost", lit(2L) + col("sup") % 3)
-    val edges = und.select(col("a").as("src"), col("b").as("dst"), col("cost"))
-      .unionAll(und.select(col("b").as("src"), col("a").as("dst"), col("cost")))
-      .persist()
-    val nEdges = edges.count()
-    // ADAPTIVE LOCAL WALK — the [[eventsShortestPaths]] decision for
-    // the weighted twin: at or below the ceiling the (src, dst, cost)
-    // triples collect to the driver (three longs per edge) and the
-    // bounded Bellman-Ford rounds run as hash-map relaxations with
-    // the same synchronous min-merge semantics (improvements land
-    // after each round, exactly the distributed keyed min-agg). The
-    // distributed loop below is the 100 TB path.
-    if (nEdges <= localMaxEdges) {
+    val edges = bothWays(und, cost.as("cost")).persist()
+    if (Dedup.runsLocal(edges.count(), localMaxEdges)) {
       val sess = t.spark
       import sess.implicits._
       val itemType = edges.schema("src").dataType
@@ -2420,7 +2243,6 @@ object EventAnalytics {
       val dist = scala.collection.mutable.LongMap.empty[Long]
       var frontier = adj.keysIterator.filter(_ % 17 == 0).toArray
       frontier.foreach(dist.update(_, 0L))
-      val rounds = (budget / 2L).toInt
       var r = 0
       while (r < rounds && frontier.nonEmpty) {
         val improved = scala.collection.mutable.LongMap.empty[Long]
@@ -2437,16 +2259,20 @@ object EventAnalytics {
         frontier = improved.keysIterator.toArray
         r += 1
       }
-      // build with the distributed branch's exact schema (native item
-      // type, nullable fields) so the result is indistinguishable
-      return localPathsDF(sess, itemType, LongType,
-        dist.toSeq.map { case (i, dd) => (i, dd: Any) })
+      return localPathsDF(sess, itemType, dist.toSeq)
     }
     val seeds = edges.select(col("src").as("item")).distinct()
       .filter(col("item") % 17 === 0)
+    // localCheckpoint (eager), NOT persist: an iterated persist chain
+    // reuses the DATA but every round's LOGICAL plan still nests all
+    // previous rounds, and Catalyst's per-iteration analysis/cache-
+    // canonicalization cost grows exponentially (measured: levels at
+    // 1.0 → 1.3 → 3.4 → 17 s and a 38 s final action at sf0.1; with
+    // truncated lineage the whole walk is ~1 s/level). Same fix every
+    // iterative Spark algorithm ships — the state is already
+    // computed, so checkpointing it loses nothing.
     var dist = seeds.select(col("item"), lit(0L).as("dist")).localCheckpoint()
     var frontier = dist
-    val rounds = (budget / 2L).toInt // min edge cost 2 bounds path length
     for (_ <- 1 to rounds) {
       // ONE min-agg carries both readouts: candidates enter with a
       // NULL `old`, settled rows with old = their current dist, so
@@ -2471,6 +2297,29 @@ object EventAnalytics {
     items.unpersist()
     edges.unpersist()
     dist.select(col("item"), col("dist")).orderBy(col("item"))
+  }
+
+  /** Driver-local walk results → a DataFrame carrying the distributed
+    * branch's exact schema (native item type, nullable fields),
+    * ordered by item — so the two branches are indistinguishable to
+    * any consumer (pinned by the adaptive-local-walk specs). */
+  private[graft] def localPathsDF(spark: org.apache.spark.sql.SparkSession,
+      itemType: org.apache.spark.sql.types.DataType,
+      rows: Seq[(Long, Long)]): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StructField, StructType}
+    import scala.jdk.CollectionConverters._
+    val schema = StructType(Seq(StructField("item", itemType),
+      StructField("dist", LongType)))
+    val toItem: Long => Any = itemType match {
+      case LongType    => i => i
+      case IntegerType => i => i.toInt
+      case other => throw new IllegalArgumentException(
+        s"localPathsDF: item type $other is not long or int — the " +
+          "driver-local walk cannot build rows of it")
+    }
+    val data = rows.map { case (i, d) => Row(toItem(i), d) }
+    spark.createDataFrame(data.asJava, schema).orderBy(col("item"))
   }
 
   /** `events_growth_accounting` — the weekly growth-accounting

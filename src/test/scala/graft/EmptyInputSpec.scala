@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import graft.sources.ShardTempRoot
 
 /** Empty-input robustness: a date predicate or an aggressive quality
   * filter can legitimately empty a whole corpus slice in production,
@@ -15,10 +15,10 @@ import java.nio.file.Files
   * excluded — an index build over an empty corpus is a real
   * configuration error and SHOULD fail loudly.
   */
-class EmptyInputSpec extends SparkSpec {
+class EmptyInputSpec extends ShardTempRoot {
 
   private lazy val emptyDir: String = {
-    val dir = Files.createTempDirectory("graft_empty_").toString
+    val dir = tmp("graft_empty_")
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings").foreach { tbl =>
       tables.raw(tbl).limit(0).write.mode("overwrite")
@@ -222,4 +222,6 @@ class EmptyInputSpec extends SparkSpec {
       assert(n >= 0)
     }
   }
+
+  leavesNoTempDirs()
 }

@@ -156,12 +156,8 @@ class PlanAuditSpec extends ShardTempRoot {
     // degree partial-agg + two LEFT SEMI survivor filters — a
     // cartesian/nested-loop means the equi-keys got lost and a round
     // degenerates to all-pairs at scale
-    val items = EventAnalytics.cappedDayItems(tables, 64)
-    val und = items.as("a")
-      .join(items.as("b"),
-        col("a.user_id") === col("b.user_id") && col("a.day") === col("b.day") &&
-          col("a.item") < col("b.item"))
-      .select(col("a.item").as("a"), col("b.item").as("b")).distinct()
+    val und = EventAnalytics.itemPairs(EventAnalytics.cappedDayItems(tables, 64),
+      Seq("user_id", "day")).select(col("a"), col("b"))
     val deg = und.select(col("a").as("node"))
       .unionAll(und.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))

@@ -1,13 +1,13 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.sources.ShardTempRoot
 
 /** Dedup-suite invariants beyond the driver's DuckDB gate: the LSH
   * embedding-dedup scale path must reproduce the exact all-pairs
   * answer on this corpus (exhaustive recall at the chosen band
   * parameters), and the exact form stays spec-only ground truth.
   */
-class DedupSpec extends SparkSpec {
+class DedupSpec extends ShardTempRoot {
 
   test("dedup_embedding (LSH path) equals the exact all-pairs ground truth") {
     val lsh = Dedup.dedupEmbedding(tables).collect().map(_.toSeq).toSet
@@ -125,7 +125,7 @@ class DedupSpec extends SparkSpec {
     // job — this drives the whole loop through that path
     import org.apache.spark.sql.functions.col
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt_").toString
+    val dir = tmp("graft_cc_ckpt_")
     spark.conf.set("graft.cc.checkpointDir", dir)
     try {
       val chain = (0L until 32L).flatMap(i => Seq((i, i + 1), (i + 1, i)))
@@ -389,4 +389,6 @@ class DedupSpec extends SparkSpec {
     assert(expect.values.exists(v => v._1 > 1 && v._2 > 1),
       "no group merged distinct raw URLs — canonicalization is dead code")
   }
+
+  leavesNoTempDirs()
 }

@@ -3,12 +3,12 @@ package graft.operators
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.sources.ShardTempRoot
 
 /** Semantic invariants for the embedding-corpus mining/observability
   * operators (deep value correctness is the driver's DuckDB gate).
   */
-class EmbeddingMiningSpec extends SparkSpec {
+class EmbeddingMiningSpec extends ShardTempRoot {
 
   test("hard negatives never share the query's label and fill top-k per query") {
     val df = Similarity.annHardNegatives(tables).cache()
@@ -217,7 +217,7 @@ class EmbeddingMiningSpec extends SparkSpec {
     // up in require/NaN rounding
     val sess = spark
     import sess.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_const_emb_").toString
+    val dir = tmp("graft_const_emb_")
     (0L until 40L).map(i => (i, Array.fill(64)(0.5)))
       .toDF("vec_id", "embedding")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
@@ -644,4 +644,6 @@ class EmbeddingMiningSpec extends SparkSpec {
     // far below the collapse regime
     assert(row.getDouble(4) > 0.0 && row.getDouble(4) < 0.5)
   }
+
+  leavesNoTempDirs()
 }

@@ -2,10 +2,10 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.sources.{JobCount, ShardTempRoot}
 
 /** Guards for the event-analytics fan-out hazards. */
-class EventAnalyticsSpec extends SparkSpec {
+class EventAnalyticsSpec extends ShardTempRoot {
 
   test("events_cuped matches an independent driver-side re-derivation") {
     // recompute the whole CUPED chain from raw events in plain Scala
@@ -663,7 +663,7 @@ class EventAnalyticsSpec extends SparkSpec {
 
     // 2) the audit must DETECT: a crafted feed where event 2 arrives
     //    carrying an event time an hour before event 1's
-    val dir = java.nio.file.Files.createTempDirectory("graft_ooo_")
+    val dir = tmp("graft_ooo_")
     val sess = spark
     import sess.implicits._
     Seq(
@@ -673,7 +673,7 @@ class EventAnalyticsSpec extends SparkSpec {
       .toDF("user_id", "event_id", "event_type", "ts", "value")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     val crafted = EventAnalytics
-      .eventsOooAudit(graft.Tables(spark, dir.toString)).collect()
+      .eventsOooAudit(graft.Tables(spark, dir)).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4))).toMap
     assert(crafted("click") == ((2L, 1L, 3600L, 500000L)), crafted)
@@ -893,16 +893,44 @@ class EventAnalyticsSpec extends SparkSpec {
   test("local walk rows keep long and int item types; others reject by name") {
     import org.apache.spark.sql.types.{IntegerType, LongType, ShortType}
     val rows = Seq((2L, 1L), (1L, 0L))
-    val asLong = EventAnalytics.localPathsDF(spark, LongType, LongType, rows)
+    val asLong = EventAnalytics.localPathsDF(spark, LongType, rows)
     assert(asLong.schema("item").dataType == LongType)
     assert(asLong.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ==
       Seq((1L, 0L), (2L, 1L)))
-    val asInt = EventAnalytics.localPathsDF(spark, IntegerType, LongType, rows)
+    val asInt = EventAnalytics.localPathsDF(spark, IntegerType, rows)
     assert(asInt.collect().map(r => (r.getInt(0), r.getLong(1))).toSeq ==
       Seq((1, 0L), (2, 1L)))
     val ex = intercept[IllegalArgumentException] {
-      EventAnalytics.localPathsDF(spark, ShortType, LongType, rows)
+      EventAnalytics.localPathsDF(spark, ShortType, rows)
     }
     assert(ex.getMessage.contains("ShortType"))
   }
+
+  test("localMaxEdges = 0 forces both walks' distributed loop, even with no pairs") {
+    // one item per user: no pairs, so the edge count is 0 — the rule
+    // must still pick the distributed loop, whose rounds checkpoint
+    // into LogicalRDD leaves; the driver-local walk is a LocalRelation
+    for (walk <- Seq(
+        EventAnalytics.eventsShortestPaths(tables, maxItemsPerUser = 1, localMaxEdges = 0L),
+        EventAnalytics.eventsWeightedPaths(tables, maxItemsPerUser = 1, localMaxEdges = 0L))) {
+      val leaves = walk.queryExecution.analyzed.collectLeaves().map(_.nodeName)
+      assert(leaves.contains("LogicalRDD") && !leaves.contains("LocalRelation"), leaves)
+      assert(walk.isEmpty)
+    }
+  }
+
+  test("building the pagerank, hits, communities and stickiness frames starts no job") {
+    // the frames are lazy, so a construction-time persist + count
+    // would only fill a cache that the returned plan never reads
+    tables.events.schema // the footer read behind the schema memo is not pinned here
+    val jobs = JobCount(spark) {
+      EventAnalytics.eventsPagerank(tables)
+      EventAnalytics.eventsHits(tables)
+      EventAnalytics.eventsCommunities(tables)
+      EventAnalytics.eventsStickiness(tables)
+    }
+    assert(jobs == 0, s"$jobs jobs")
+  }
+
+  leavesNoTempDirs()
 }

@@ -2,9 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.sources.ShardTempRoot
 
-class MultimodalSpec extends SparkSpec {
+class MultimodalSpec extends ShardTempRoot {
   import Multimodal._
 
   test("typed mapPartitions decode plumbing matches the column twin") {
@@ -257,7 +257,7 @@ class MultimodalSpec extends SparkSpec {
 
     // 2) discrimination: a crafted corpus must trip short AND
     //    undercaptioned (a 2-token caption on any image is both)
-    val dir = java.nio.file.Files.createTempDirectory("graft_cap_")
+    val dir = tmp("graft_cap_")
     val sess = spark
     import sess.implicits._
     // ten distinct 2-token captions: at least one draws a payload
@@ -268,7 +268,7 @@ class MultimodalSpec extends SparkSpec {
       .withColumn("lang", lit("en"))
       .withColumn("n_chars", length(col("text")).cast("long"))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val crafted = Multimodal.mmCaptionPairs(graft.Tables(spark, dir.toString))
+    val crafted = Multimodal.mmCaptionPairs(graft.Tables(spark, dir))
       .collect()
       .map(r => (r.getLong(2), r.getLong(3), r.getLong(4)))
     assert(crafted.map(_._1).sum >= 1, "short flag never fires")
@@ -380,4 +380,6 @@ class MultimodalSpec extends SparkSpec {
     // the synthetic corpus genuinely exercises the multi-chunk branch
     assert(got.exists(_._2 > 1) && got.exists(_._2 == 1))
   }
+
+  leavesNoTempDirs()
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.sources.ShardTempRoot
 
 /** Randomized equivalence: the engine's custom machinery run over
   * seeded random inputs and compared against straightforward in-memory
@@ -10,7 +10,7 @@ import graft.SparkSpec
   * paths DuckDB can't replay (the native as-of exec's merge loop, the
   * prefix-sum recursion's level math, the greedy regex tokenizer).
   */
-class RandomizedEquivalenceSpec extends SparkSpec {
+class RandomizedEquivalenceSpec extends ShardTempRoot {
 
   test("exactMean/exactStd are bit-identical across partitionings at half boundaries") {
     import org.apache.spark.sql.functions.col
@@ -128,7 +128,7 @@ class RandomizedEquivalenceSpec extends SparkSpec {
         (rnd.nextInt(20000) + 1) / 100.0,
         """{"k": 1}""")
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_attr_").toString
+    val dir = tmp("graft_attr_")
     events.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.parquet(s"$dir/events.parquet")
 
@@ -207,4 +207,6 @@ class RandomizedEquivalenceSpec extends SparkSpec {
       assert(n == greedyCount(s), s"mismatch on: '$s'")
     }
   }
+
+  leavesNoTempDirs()
 }

@@ -2,13 +2,13 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.sources.ShardTempRoot
 
 /** Guards the shared quality-score expression corpus_clean fuses into
   * its single-scan pipeline: it must score exactly as the standalone
   * text_quality operator.
   */
-class TextAnalysisSpec extends SparkSpec {
+class TextAnalysisSpec extends ShardTempRoot {
 
   test("quality scores from the shared expression match textQuality") {
     val viaOp = TextAnalysis.textQuality(tables)
@@ -66,7 +66,7 @@ class TextAnalysisSpec extends SparkSpec {
     val trainId = (0L to 200L).find(i => !"01".contains(nib(i))).get
     val otherTrain = (0L to 200L)
       .find(i => !"01".contains(nib(i)) && i != trainId).get
-    val dir = java.nio.file.Files.createTempDirectory("graft_leak_").toString
+    val dir = tmp("graft_leak_")
     Seq(
       (valId, "the same text twice", "en", "s0", 19L),
       (trainId, "the same text twice", "en", "s0", 19L),
@@ -300,7 +300,7 @@ class TextAnalysisSpec extends SparkSpec {
 
     // 2) discrimination: a corpus of all-fresh tokens must fit β ≈ 1
     //    (vocab grows with every token), far from the template's ~0
-    val dir = java.nio.file.Files.createTempDirectory("graft_heaps_")
+    val dir = tmp("graft_heaps_")
     val sess = spark
     import sess.implicits._
     (0 until 200).map { i =>
@@ -308,7 +308,7 @@ class TextAnalysisSpec extends SparkSpec {
     }.toDF("doc_id", "text", "source")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val diverse = TextAnalysis
-      .textHeapsLaw(graft.Tables(spark, dir.toString))
+      .textHeapsLaw(graft.Tables(spark, dir))
       .select(col("heaps_beta")).head().getDouble(0)
     assert(diverse > 0.95 && diverse <= 1.001,
       s"all-fresh corpus should fit β≈1, got $diverse")
@@ -911,4 +911,6 @@ class TextAnalysisSpec extends SparkSpec {
     assert(er(5L)._1._6 == "stopwords")
     assert(er(6L)._1._6 == "pass" && er(6L)._2)
   }
+
+  leavesNoTempDirs()
 }

@@ -1,16 +1,12 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
-
-class SourcesSpec extends SparkSpec {
+class SourcesSpec extends ShardTempRoot {
 
   private def roundtrip(fmt: String): Unit = {
     val t = tables
-    val base = Files.createTempDirectory("graft-sources").toString
+    val base = tmp("graft-sources")
     val src = t.nation.select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
     val path = s"$base/nation.$fmt"
     Sources.write(src, path)
@@ -26,7 +22,7 @@ class SourcesSpec extends SparkSpec {
 
   test("partitioned write produces directory partitions + pruning") {
     val t = tables
-    val base = Files.createTempDirectory("graft-sources-part").toString
+    val base = tmp("graft-sources-part")
     val path = s"$base/orders.parquet"
     Sources.write(t.orders.select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice")),
       path, partitionBy = Seq("o_orderstatus"))
@@ -38,7 +34,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("range-partitioned write yields disjoint per-file key ranges (file-level pruning)") {
-    val base = Files.createTempDirectory("graft-sources-range").toString
+    val base = tmp("graft-sources-range")
     val path = s"$base/orders_range.parquet"
     Sources.writeRangePartitioned(
       tables.orders.select(col("o_orderkey"), col("o_totalprice")),
@@ -60,7 +56,7 @@ class SourcesSpec extends SparkSpec {
 
   test("z-order layout bounds BOTH dimensions per file; a single-dim sort leaves day unpruned") {
     import org.apache.spark.sql.functions.{datediff, lit, max, min}
-    val base = Files.createTempDirectory("graft-sources-zorder").toString
+    val base = tmp("graft-sources-zorder")
     val zPath = s"$base/events_z.parquet"
     graft.sources.SourceOps.writeZOrderedEvents(tables, zPath, nFiles = 16)
     val uPath = s"$base/events_u.parquet"
@@ -204,4 +200,6 @@ class SourcesSpec extends SparkSpec {
     assert(expect.exists(_._3 > 0))
     assert(expect.forall { case (_, n, bad, _) => bad < n })
   }
+
+  leavesNoTempDirs()
 }
