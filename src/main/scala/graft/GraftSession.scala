@@ -38,6 +38,10 @@ object GraftSession {
       // read as long and normalize in Tables.events
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // every stream's offset, commit and state-store files: written
+      // in-process on a local path, Spark's default elsewhere
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        classOf[graft.streaming.LocalCheckpointFiles].getName)
 
   /** Local session sized to the test rig. */
   def local(appName: String = "graft"): SparkSession =

@@ -107,6 +107,16 @@ object Streaming {
     * carrying that count, so the caller's conf is never mutated —
     * batch queries on other threads cannot observe a transient
     * setting.
+    *
+    * Checkpoint files: each trigger's offset and commit log entries and
+    * each state-store delta and snapshot are small files written
+    * atomically through Spark's `CheckpointFileManager`. A graft session
+    * names [[LocalCheckpointFiles]] as that manager, and the child starts
+    * from the same `SparkConf`, so on a local path a drain writes them
+    * in-process. Spark's default forks a `chmod` per file it creates and
+    * two `readlink`s per rename there: 644 of the 664 processes a seed-1
+    * `stream_ingest` benchmark run started; 20 remain, none of them
+    * under a checkpoint write.
     */
   private[streaming] def drain(df: DataFrame, mode: String,
       extraConf: Map[String, String] = Map.empty)
