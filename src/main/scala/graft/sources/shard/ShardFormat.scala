@@ -99,7 +99,9 @@ import org.apache.spark.sql.types._
   * [[skipFully]], which can never spin on a truncated file).
   *
   * Sidecar `_manifest.gshard` (line-oriented, our own format so the
-  * reader needs no JSON dependency):
+  * reader needs no JSON dependency). It is a second hard link to the
+  * head generation's immutable commit record `_manifest.v<gen>.gshard`
+  * (see [[ShardFormat.publishManifest]]):
   * {{{
   *   gshard v3
   *   schema <name>:<tag>,...   tag ∈ long|double|string|timestamp|
@@ -1652,12 +1654,21 @@ object ShardFormat {
   private[graft] def hasManifest(dir: String): Boolean =
     Files.exists(Paths.get(dir, "_manifest.gshard")) ||
       // crash window: a commit record was exclusively created but the
-      // process died before writing the derived head pointer — the
+      // process died before linking the head pointer to it — the
       // table IS committed (the record is the commit), so report it
       commitRecordGens(dir).nonEmpty
 
-  private[graft] def writeManifest(dir: String, m: Manifest): Unit =
-    Files.write(Paths.get(dir, "_manifest.gshard"), renderManifest(m))
+  /** Replace the head pointer with `m`, bypassing the commit protocol
+    * (specs use it to stage legacy or hand-edited heads). The bytes go
+    * to a fresh file renamed over the pointer: writing through the
+    * pointer would rewrite the head's commit record, which it links. */
+  private[graft] def writeManifest(dir: String, m: Manifest): Unit = {
+    val tmp = Files.createTempFile(Paths.get(dir), ".gshard_manifest", ".tmp")
+    Files.write(tmp, renderManifest(m))
+    Files.move(tmp, Paths.get(dir, "_manifest.gshard"),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  }
 
   /** Serialize `m` to the manifest's line format. The single
     * chokepoint every write path (batch, streaming, truncate, delete,
@@ -1728,7 +1739,7 @@ object ShardFormat {
       if (Files.exists(ptr)) readManifestLines(Files.readAllLines(ptr))
       else {
         // the pointer never landed (crash between the commit record's
-        // exclusive create and the pointer write): recover from the
+        // exclusive create and the pointer link): recover from the
         // newest commit record — the record IS the commit
         val gens = commitRecordGens(dir)
         require(gens.nonEmpty, s"gshard: no manifest at $dir")
@@ -1736,8 +1747,8 @@ object ShardFormat {
           Files.readAllLines(Paths.get(dir, archiveName(gens.last))))
       }
     // RECONCILE: commit records are the source of truth (the pointer
-    // is a derived cache, written after the record) — a record one or
-    // more generations AHEAD of the pointer means another process
+    // is a second link to the head record, made after it) — a record
+    // one or more generations AHEAD of the pointer means another process
     // committed and hasn't (or never will have) moved the pointer;
     // the newest record wins.
     var g = m.gen + 1
@@ -1993,8 +2004,15 @@ object ShardFormat {
     * [[java.util.ConcurrentModificationException]] and its staged
     * data files become vacuum-sweepable orphans.
     *
-    * `_manifest.gshard` (what readers open first) is a DERIVED head
-    * pointer, atomically replaced after the record lands; a crash in
+    * `_manifest.gshard` (what readers open first) is the head
+    * pointer: after the record lands, a fresh name is hard-linked to
+    * the record and atomically renamed over the pointer, so the
+    * pointer is a SECOND LINK TO THE HEAD RECORD. The commit renders
+    * and writes the manifest once, and the rename frees no disk
+    * blocks: the old pointer's inode is the previous record, still
+    * linked (on a file system that frees blocks slowly, such as ext4
+    * mounted `discard`, freeing them was a large share of each
+    * upsert; `scripts/fs_probe.py` times both steps). A crash in
     * between leaves the pointer behind, and [[readManifest]]
     * reconciles forward off the records — the record IS the commit.
     *
@@ -2031,10 +2049,11 @@ object ShardFormat {
     }
     val next = m.copy(gen = headG + 1)
     linkCommitRecord(dir, next)
-    // the derived head pointer, atomically replaced — readers that
-    // catch us between link and move reconcile forward themselves
-    val tmp = Files.createTempFile(Paths.get(dir), ".gshard_head", ".tmp")
-    Files.write(tmp, renderManifest(next))
+    // the head pointer becomes a second name of the record just
+    // linked — readers that catch us between link and move reconcile
+    // forward
+    val tmp = Paths.get(dir, s".gshard_head${java.util.UUID.randomUUID}.tmp")
+    Files.createLink(tmp, Paths.get(dir, archiveName(next.gen)))
     Files.move(tmp, Paths.get(dir, "_manifest.gshard"),
       java.nio.file.StandardCopyOption.REPLACE_EXISTING,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)

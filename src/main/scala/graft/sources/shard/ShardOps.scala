@@ -173,14 +173,15 @@ object ShardOps {
   def upsert(spark: SparkSession, dir: String, updates: DataFrame,
       keyCol: String, nShards: Int = 0,
       txnId: Long = -1L, txnApp: Option[String] = None): Unit = {
-    val vis = ShardFormat.visible(ShardFormat.readManifest(dir).schema)
+    val head = ShardFormat.readManifest(dir)
+    val vis = ShardFormat.visible(head.schema)
     def tags(st: StructType) =
       st.fields.map(f => (f.name, ShardFormat.typeTag(f.dataType))).sorted.toSeq
     require(tags(updates.schema) == tags(vis),
       s"gshard merge schema mismatch: table=${vis.catalogString} " +
         s"updates=${updates.schema.catalogString}")
     // in the table's visible order, each update IS its key's output row
-    merge(spark, dir, updates.select(vis.fieldNames.toSeq.map(col): _*),
+    merge(spark, dir, head, updates.select(vis.fieldNames.toSeq.map(col): _*),
       keyCol, nShards, txnId, txnApp, uniqueKeys = true)((_, update) => update)
   }
 
@@ -229,9 +230,16 @@ object ShardOps {
     * sinks rely on. */
   def merge(spark: SparkSession, dir: String, source: DataFrame,
       keyCol: String, nShards: Int, txnId: Long, txnApp: Option[String],
-      uniqueKeys: Boolean = false)(perKey: PerKey): Unit = {
-    val head = ShardFormat.readManifest(dir)
+      uniqueKeys: Boolean = false)(perKey: PerKey): Unit =
+    merge(spark, dir, ShardFormat.readManifest(dir), source, keyCol, nShards,
+      txnId, txnApp, uniqueKeys)(perKey)
 
+  /** [[merge]] planned against `head`, the manifest the caller already
+    * read: the publish fails if the table moved past it. */
+  private def merge(spark: SparkSession, dir: String,
+      head: ShardFormat.Manifest, source: DataFrame, keyCol: String,
+      nShards: Int, txnId: Long, txnApp: Option[String],
+      uniqueKeys: Boolean)(perKey: PerKey): Unit = {
     // replay idempotence FIRST (same rule as the append path)
     val appliedBefore = txnId >= 0 && {
       txnApp.map(a => head.txns.getOrElse(a, -1L))

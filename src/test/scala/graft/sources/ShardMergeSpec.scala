@@ -566,6 +566,22 @@ class ShardMergeSpec extends ShardTempRoot {
     assert(ShardFormat.vacuum(d, keepVersions = 2).isEmpty)
   }
 
+  test("an upsert reads the manifest twice: its head once, the publish " +
+      "once") {
+    val sess = spark
+    import sess.implicits._
+    val d = tmp("reads")
+    ShardFormat.write(base(100), d, "id", 2)
+    // keys past every file's range: no file is touched, so no
+    // connector scan of touched files reads the manifest either
+    val u = (1000L until 1010L).map(i => (i, s"n$i", i))
+      .toDF("id", "tag", "score")
+    val before = ShardFormat.manifestReads.get()
+    ShardOps.upsert(spark, d, u, "id")
+    assert(ShardFormat.manifestReads.get() - before == 2L)
+    assert(spark.read.format("gshard").load(d).count() == 110L)
+  }
+
   test("a merge commit is one new generation record, no temp residue") {
     val d = kvTable("sm_commit", 2, 1)
     mergeKv(d, Seq((1L, 11L)))
