@@ -179,20 +179,13 @@ class ShardCatalog extends TableCatalog
     // gen 0 publishes through the commit protocol: two processes
     // racing to create the same table resolve at the exclusive-create
     // commit record, not last-writer-wins
-    ShardFormat.publishManifest(dir.toString,
-      ShardFormat.Manifest(schema, Seq.empty), basedOn = -1L)
+    ShardFormat.commit(dir.toString, basedOn = Some(-1L))(_ =>
+      ShardFormat.Manifest(schema, Seq.empty))
     new ShardTable(dir.toString, schema)
   }
 
-  override def dropTable(ident: Identifier): Boolean = {
-    if (!tableExists(ident)) false
-    else {
-      import scala.jdk.CollectionConverters._
-      Files.walk(dirOf(ident)).iterator().asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
-      true
-    }
-  }
+  override def dropTable(ident: Identifier): Boolean =
+    tableExists(ident) && { ShardFormat.deleteTree(dirOf(ident)); true }
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     val ns = namespace.foldLeft(warehouse)(_ resolve _)
@@ -226,60 +219,60 @@ class ShardCatalog extends TableCatalog
     * backfill. */
   override def alterTable(ident: Identifier,
       changes: TableChange*): Table = {
-    if (!tableExists(ident)) throw new NoSuchTableException(ident)
     val dir = dirOf(ident).toString
-    val m = ShardFormat.readManifest(dir)
-    val (schema, entries) = changes.foldLeft((m.schema, m.entries)) {
-      case ((s, es), ch) => ch match {
-        case add: TableChange.AddColumn =>
-          require(add.fieldNames.length == 1,
-            "gshard: only top-level ADD COLUMN is supported")
-          require(add.position == null,
-            "gshard ADD COLUMN appends at the end; positions need a rewrite")
-          require(add.isNullable,
-            "gshard ADD COLUMN must be nullable: existing rows read NULL")
-          val name = add.fieldNames()(0)
-          ShardFormat.validateFieldName(name)
-          require(!s.fieldNames.contains(name),
-            s"gshard: column $name already exists")
-          ShardFormat.typeTag(add.dataType) // validate supported type
-          (StructType(s.fields :+
-            org.apache.spark.sql.types.StructField(name, add.dataType)), es)
-        case ren: TableChange.RenameColumn =>
-          require(ren.fieldNames.length == 1,
-            "gshard: only top-level RENAME COLUMN is supported")
-          val from = ren.fieldNames()(0)
-          val to = ren.newName
-          val pos = s.fieldNames.indexOf(from)
-          require(pos >= 0 && !ShardFormat.isTombstone(from),
-            s"gshard: no such column $from")
-          ShardFormat.validateFieldName(to)
-          require(!s.fieldNames.contains(to),
-            s"gshard: column $to already exists")
-          (StructType(s.fields.updated(pos, s.fields(pos).copy(name = to))),
-            es.map(e => ShardFormat.renameStats(e, from, to)))
-        case del: TableChange.DeleteColumn =>
-          require(del.fieldNames.length == 1,
-            "gshard: only top-level DROP COLUMN is supported")
-          val name = del.fieldNames()(0)
-          val pos = s.fieldNames.indexOf(name)
-          require(pos >= 0 && !ShardFormat.isTombstone(name),
-            s"gshard: no such column $name")
-          require(ShardFormat.visible(s).length > 1,
-            "gshard: cannot drop the last visible column")
-          (StructType(s.fields.updated(pos, s.fields(pos)
-            .copy(name = s"${ShardFormat.TombstonePrefix}$pos"))),
-            es.map(e => ShardFormat.stripStats(e, name)))
-        case other => throw new UnsupportedOperationException(
-          "gshard supports ADD/RENAME/DROP COLUMN (zero-rewrite " +
-            s"evolutions), not $other")
-      }
-    }
     // a schema change is a table GENERATION like any other mutation:
-    // archive the old head so VERSION AS OF reads the prior schema
-    ShardFormat.publishManifest(dir,
-      m.copy(schema = schema, entries = entries), basedOn = m.gen)
-    new ShardTable(dir, ShardFormat.visible(schema))
+    // VERSION AS OF the previous generation reads the prior schema
+    val next = ShardFormat.commit(dir) { head =>
+      val m = head.getOrElse(throw new NoSuchTableException(ident))
+      val (schema, entries) = changes.foldLeft((m.schema, m.entries)) {
+        case ((s, es), ch) => ch match {
+          case add: TableChange.AddColumn =>
+            require(add.fieldNames.length == 1,
+              "gshard: only top-level ADD COLUMN is supported")
+            require(add.position == null,
+              "gshard ADD COLUMN appends at the end; positions need a rewrite")
+            require(add.isNullable,
+              "gshard ADD COLUMN must be nullable: existing rows read NULL")
+            val name = add.fieldNames()(0)
+            ShardFormat.validateFieldName(name)
+            require(!s.fieldNames.contains(name),
+              s"gshard: column $name already exists")
+            ShardFormat.typeTag(add.dataType) // validate supported type
+            (StructType(s.fields :+
+              org.apache.spark.sql.types.StructField(name, add.dataType)), es)
+          case ren: TableChange.RenameColumn =>
+            require(ren.fieldNames.length == 1,
+              "gshard: only top-level RENAME COLUMN is supported")
+            val from = ren.fieldNames()(0)
+            val to = ren.newName
+            val pos = s.fieldNames.indexOf(from)
+            require(pos >= 0 && !ShardFormat.isTombstone(from),
+              s"gshard: no such column $from")
+            ShardFormat.validateFieldName(to)
+            require(!s.fieldNames.contains(to),
+              s"gshard: column $to already exists")
+            (StructType(s.fields.updated(pos, s.fields(pos).copy(name = to))),
+              es.map(e => ShardFormat.renameStats(e, from, to)))
+          case del: TableChange.DeleteColumn =>
+            require(del.fieldNames.length == 1,
+              "gshard: only top-level DROP COLUMN is supported")
+            val name = del.fieldNames()(0)
+            val pos = s.fieldNames.indexOf(name)
+            require(pos >= 0 && !ShardFormat.isTombstone(name),
+              s"gshard: no such column $name")
+            require(ShardFormat.visible(s).length > 1,
+              "gshard: cannot drop the last visible column")
+            (StructType(s.fields.updated(pos, s.fields(pos)
+              .copy(name = s"${ShardFormat.TombstonePrefix}$pos"))),
+              es.map(e => ShardFormat.stripStats(e, name)))
+          case other => throw new UnsupportedOperationException(
+            "gshard supports ADD/RENAME/DROP COLUMN (zero-rewrite " +
+              s"evolutions), not $other")
+        }
+      }
+      ShardFormat.Manifest(schema, entries)
+    }
+    new ShardTable(dir, ShardFormat.visible(next.schema))
   }
 
   override def renameTable(oldIdent: Identifier,

@@ -167,10 +167,9 @@ private[shard] class ShardTable(dir: String, tableSchema: StructType,
   // pre-nullcount manifest) rejects the whole DELETE, and Spark reports
   // it — the Iceberg/Delta metadata-delete contract; a row-level
   // rewrite is MERGE's job ([[ShardOps.merge]]).
-  // Commit is manifest-FIRST: the new manifest (without the dropped
-  // entries) publishes atomically, then the dropped files are swept —
-  // a crash in between leaves orphans, never a manifest naming deleted
-  // data.
+  // The commit publishes a generation without the dropped entries and
+  // deletes no file: the previous generation still names them, and
+  // vacuum reclaims them under its retention.
 
   /** All rows of `e` provably satisfy `f`. False = unknown. */
   private def covers(e: ShardFormat.ShardEntry, f: Filter): Boolean = {
@@ -248,37 +247,33 @@ private[shard] class ShardTable(dir: String, tableSchema: StructType,
       ShardFormat.doubleZoneAdmits(filters.toSeq, e.dMin.contains,
         e.dMin(_), e.dMax(_)))
 
-  override def canDeleteWhere(rawFilters: Array[Filter]): Boolean = {
-    val m = ShardFormat.readManifest(dir)
-    val filters = normalizedForDelete(m.schema, rawFilters)
-    m.entries.forall { e =>
-      disjoint(e, filters) || filters.forall(covers(e, _))
+  /** The normalized filters, if every entry of `m` is provably
+    * disjoint from them or fully covered by them. */
+  private def decidable(m: ShardFormat.Manifest,
+      rawFilters: Array[Filter]): Option[Array[Filter]] =
+    Some(normalizedForDelete(m.schema, rawFilters)).filter(fs =>
+      m.entries.forall(e => disjoint(e, fs) || fs.forall(covers(e, _))))
+
+  override def canDeleteWhere(rawFilters: Array[Filter]): Boolean =
+    decidable(ShardFormat.readManifest(dir), rawFilters).isDefined
+
+  override def deleteWhere(rawFilters: Array[Filter]): Unit = {
+    require(pinnedVersion.isEmpty,
+      s"gshard: cannot DELETE from ${name()} — time-travel reads are frozen")
+    // metadata-only: the kept entries are decided on the head the
+    // commit reads under its lock. NO physical sweep: the dropped files
+    // stay referenced by the previous generation (VERSION AS OF reads
+    // it); ShardFormat.vacuum reclaims them under its retention — the
+    // Delta DELETE-then-VACUUM split
+    ShardFormat.commit(dir) { head =>
+      val m = head.getOrElse(
+        throw new IllegalStateException(s"gshard: no table at $dir"))
+      val filters = decidable(m, rawFilters).getOrElse(
+        throw new IllegalArgumentException(
+          s"gshard: DELETE not decidable from metadata for ${name()}"))
+      m.copy(entries = m.entries.filter(disjoint(_, filters)))
     }
   }
-
-  override def deleteWhere(rawFilters: Array[Filter]): Unit =
-    // metadata-only read-modify-publish: held under the table lock so
-    // a concurrent local writer can't slip a commit between the head
-    // read and the publish (cross-process movers trip the basedOn
-    // check inside publishManifest)
-    ShardFormat.tableLock(dir).synchronized {
-      require(pinnedVersion.isEmpty,
-        s"gshard: cannot DELETE from ${name()} — time-travel reads are frozen")
-      val m = ShardFormat.readManifest(dir)
-      val filters = normalizedForDelete(m.schema, rawFilters)
-      val keep = m.entries.filter { e =>
-        disjoint(e, filters) || !filters.forall(covers(e, _))
-      }
-      require(m.entries.forall { e =>
-        disjoint(e, filters) || filters.forall(covers(e, _))
-      }, s"gshard: DELETE not decidable from metadata for ${name()}")
-      // publish-with-archive, NO physical sweep: the dropped files stay
-      // referenced by the archived generation (VERSION AS OF reads it);
-      // bytes are reclaimed by ShardFormat.vacuum under its retention —
-      // the Delta DELETE-then-VACUUM split
-      ShardFormat.publishManifest(dir, m.copy(entries = keep),
-        basedOn = m.gen)
-    }
 }
 
 /** The DSv2 WRITE path: `df.write.format("gshard").save(dir)`.
@@ -291,12 +286,11 @@ private[shard] class ShardTable(dir: String, tableSchema: StructType,
   * receives one disjoint key range, which is exactly what makes the
   * emitted zone maps selective. `mode("overwrite")` routes through
   * [[SupportsTruncate]]; append merges manifest entries. Commit is
-  * manifest-last for appends (data files land, the manifest write
-  * publishes them — a reader never sees uncommitted files) and
-  * manifest-FIRST for truncation (the new manifest publishes the new
-  * generation atomically; only then are the replaced generation's
-  * files swept — a crash between the two steps leaves sweepable
-  * orphans, never a manifest pointing at deleted data). An optional
+  * manifest-last ([[ShardFormat.commit]]): data files land, then the
+  * next generation publishes them, so a reader never sees uncommitted
+  * files. A truncation publishes a generation without the old entries
+  * and deletes nothing: the previous generation still names them (time
+  * travel), and [[ShardFormat.vacuum]] reclaims them. An optional
   * `txnid` option makes appends REPLAY-IDEMPOTENT: the manifest
   * records the last applied id (the Delta txnAppId/txnVersion
   * pattern), and a replayed commit with an already-applied id is a
@@ -372,117 +366,42 @@ private[shard] class ShardBatchWrite(dir: String, schema: StructType,
     bloomCols: Set[String] = Set.empty, txnApp: Option[String] = None)
     extends BatchWrite {
 
-  /** The on-disk file schema: the table's PHYSICAL schema when the
-    * table has drop tombstones (new files keep every positional slot,
-    * tombstones as all-null blocks), else the write schema. A
-    * truncating write replaces the physical schema outright. */
-  private def physicalSchema: StructType =
-    if (!truncateFirst && ShardFormat.hasManifest(dir)) {
-      val ms = ShardFormat.readManifest(dir).schema
-      // only when the write schema actually matches the visible
-      // surface — a mismatched write fails commit's NAMED check, not
-      // an oblique fieldIndex error here
-      if (ms.fields.exists(f => ShardFormat.isTombstone(f.name)) &&
-          ShardFormat.visible(ms).fieldNames
-            .forall(schema.fieldNames.contains)) ms
-      else schema
-    } else schema
+  /** The layout of the files this write stages: the table's PHYSICAL
+    * schema, columns mapped by name (drop tombstones as all-null
+    * blocks), for an append to an existing table, which must pass
+    * [[ShardFormat.requireSchema]] first; the write's own schema for a
+    * truncate or a new table. Read once, when the write plans. */
+  private lazy val layout: StructType =
+    (if (truncateFirst) None else ShardFormat.headOf(dir)) match {
+      case Some(h) => ShardFormat.requireSchema(h.schema, schema); h.schema
+      case None => schema
+    }
 
   override def createBatchWriterFactory(
-      info: PhysicalWriteInfo): DataWriterFactory = {
-    val phys = physicalSchema
-    ShardWriterFactory(dir,
-      phys.fields.map(f => (f.name, ShardFormat.typeTag(f.dataType))),
-      queryId.take(8), chunkRows, bloomCols,
-      rowIdx = phys.fields.map(f =>
-        if (ShardFormat.isTombstone(f.name)) -1
-        else schema.fieldIndex(f.name)))
-  }
+      info: PhysicalWriteInfo): DataWriterFactory =
+    ShardWriterFactory.mapped(dir, layout, schema, queryId.take(8),
+      chunkRows, bloomCols)
 
-  // read-head → merge entries → publish, serialized per table within
-  // this JVM; a cross-process mover between OUR head read and publish
-  // trips publishManifest's basedOn check instead of being clobbered
-  override def commit(messages: Array[WriterCommitMessage]): Unit =
-    ShardFormat.tableLock(dir).synchronized {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+  override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val fresh = messages.collect {
       // empty partitions emit no file
       case m: ShardCommitMessage if m.entry.rows > 0 => m.entry
     }.sortBy(_.file).toSeq
-    val existing =
-      if (ShardFormat.hasManifest(dir)) Some(ShardFormat.readManifest(dir))
-      else None
-    // TXN idempotence, NAMESPACED by app id when one is given (the
-    // Delta txnAppId/txnVersion pattern): a replayed micro-batch
-    // (same app, same txnid) must not double-append — drop its staged
-    // files and leave the manifest be. A TRUNCATING write is never
-    // the replay no-op: a fresh streaming query reusing the directory
-    // restarts its batch ids at 0 with overwrite semantics, and
-    // silently dropping ITS data in favor of the stale table would
-    // invert the contract.
-    val appliedBefore = txnId >= 0 && !truncateFirst && existing.exists { m =>
-      txnApp.map(a => m.txns.getOrElse(a, -1L)).getOrElse(m.lastTxn) >= txnId
+    ShardFormat.commit(dir, txn = ShardFormat.Txn(txnId, txnApp),
+        truncate = truncateFirst, write = Some(schema),
+        staged = fresh.map(_.file)) { head =>
+      // a truncate replaces the schema and every entry
+      val prior = head.filter(_ => !truncateFirst)
+      // the files are positional: a head whose physical schema moved
+      // since this write planned would read them under other columns
+      if (prior.exists(h =>
+          ShardFormat.columns(h.schema) != ShardFormat.columns(layout)))
+        throw new java.util.ConcurrentModificationException(
+          s"gshard: the schema of $dir changed while this append ran; " +
+            "re-plan against the new head and retry")
+      ShardFormat.Manifest(prior.fold(schema)(_.schema),
+        prior.fold(Seq.empty[ShardFormat.ShardEntry])(_.entries) ++ fresh)
     }
-    if (appliedBefore) {
-      fresh.foreach(e => java.nio.file.Files.deleteIfExists(
-        java.nio.file.Paths.get(dir, e.file)))
-      return
-    }
-    // schema check by NAME:TYPE only — the manifest round-trips
-    // neither nullability nor metadata, so full StructType equality
-    // would spuriously reject appends of non-nullable frames
-    // (spark.range, count(*), literals); truncation may legitimately
-    // replace the schema
-    existing.filter(_ => !truncateFirst).foreach { m =>
-      // compare STORAGE tags, not DataTypes: the tag collapses array
-      // containsNull (both spellings name the same storage — null
-      // elements are rejected at write either way), and the manifest
-      // round-trips neither nullability nor metadata anyway. The
-      // comparison is against the VISIBLE surface: drop tombstones
-      // are physical placeholders the writer fills, never part of
-      // the user's frame
-      val a = ShardFormat.visible(m.schema).fields
-        .map(f => (f.name, ShardFormat.typeTag(f.dataType))).toSeq
-      val b = schema.fields
-        .map(f => (f.name, ShardFormat.typeTag(f.dataType))).toSeq
-      require(a == b,
-        s"gshard schema mismatch: table=${m.schema.catalogString} " +
-          s"write=${schema.catalogString}")
-    }
-    val prior =
-      if (!truncateFirst) existing.map(_.entries).getOrElse(Seq.empty)
-      else Seq.empty
-    // advance this writer's txn slot; a TRUNCATE resets it (fresh
-    // query, ids restart at 0) instead of max-ing against stale state.
-    // Other apps' slots carry forward untouched either way.
-    val oldLast = existing.map(_.lastTxn).getOrElse(-1L)
-    val oldTxns = existing.map(_.txns).getOrElse(Map.empty[String, Long])
-    val (nextLast, nextTxns) = txnApp match {
-      case None =>
-        val v = if (txnId < 0) oldLast
-          else if (truncateFirst) txnId else math.max(txnId, oldLast)
-        (v, oldTxns)
-      case Some(app) =>
-        if (txnId < 0) (oldLast, oldTxns)
-        else {
-          val v = if (truncateFirst) txnId
-            else math.max(txnId, oldTxns.getOrElse(app, -1L))
-          (oldLast, oldTxns + (app -> v))
-        }
-    }
-    // publish-with-archive: the previous head manifest is retained as
-    // `_manifest.v<gen>.gshard` and the new generation publishes
-    // atomically. Replaced files are NOT swept here — the archived
-    // generation still references them (time travel); reclamation is
-    // ShardFormat.vacuum's job under its retention window
-    // appends preserve the PHYSICAL schema (tombstones and all);
-    // truncation replaces it with the write's schema
-    val published =
-      if (truncateFirst) schema
-      else existing.map(_.schema).getOrElse(schema)
-    ShardFormat.publishManifest(dir,
-      ShardFormat.Manifest(published, prior ++ fresh, nextLast, nextTxns),
-      basedOn = existing.map(_.gen).getOrElse(-1L))
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -494,13 +413,26 @@ private[shard] class ShardBatchWrite(dir: String, schema: StructType,
 
 private[shard] final case class ShardWriterFactory(dir: String,
     fileSchema: Array[(String, String)], writeTag: String, chunkRows: Int,
-    bloomCols: Set[String] = Set.empty,
-    rowIdx: Array[Int] = null)
+    bloomCols: Set[String], rowIdx: Array[Int])
     extends DataWriterFactory {
   override def createWriter(partitionId: Int,
       taskId: Long): DataWriter[InternalRow] =
     new ShardDataWriter(dir, fileSchema, writeTag, partitionId, chunkRows,
       bloomCols, rowIdx)
+}
+
+private[shard] object ShardWriterFactory {
+  /** Writes rows of `input` in the file layout `phys`: each physical
+    * column takes the input column of its name, a drop tombstone an
+    * all-null block, so old and new files stay positionally
+    * compatible. */
+  def mapped(dir: String, phys: StructType, input: StructType,
+      writeTag: String, chunkRows: Int,
+      bloomCols: Set[String]): ShardWriterFactory =
+    ShardWriterFactory(dir, ShardFormat.columns(phys).toArray, writeTag,
+      chunkRows, bloomCols, phys.fields.map(f =>
+        if (ShardFormat.isTombstone(f.name)) -1
+        else input.fieldIndex(f.name)))
 }
 
 /** Streams its (range-disjoint) partition through the chunked file
@@ -511,19 +443,16 @@ private[shard] final case class ShardWriterFactory(dir: String,
   * format's null bitmaps. */
 private[shard] class ShardDataWriter(dir: String,
     fileSchema: Array[(String, String)], writeTag: String, partitionId: Int,
-    chunkRows: Int, bloomCols: Set[String] = Set.empty,
-    rowIdxOrNull: Array[Int] = null)
+    chunkRows: Int, bloomCols: Set[String],
+    // physical position → incoming row ordinal; -1 = a DROP tombstone
+    // slot (written as an all-null block, keeping old files' positional
+    // decode valid)
+    rowIdx: Array[Int])
     extends DataWriter[InternalRow] {
 
   private val schema = StructType(fileSchema.toIndexedSeq.map { case (n, t) =>
     org.apache.spark.sql.types.StructField(n, ShardFormat.dataTypeOf(t)) })
   private val types = schema.fields.map(_.dataType)
-  // physical position → incoming row ordinal; -1 = a DROP tombstone
-  // slot (written as an all-null block, keeping old files' positional
-  // decode valid)
-  private val rowIdx: Array[Int] =
-    if (rowIdxOrNull != null) rowIdxOrNull
-    else Array.tabulate(schema.length)(identity)
   private val file = f"part-$writeTag-$partitionId%05d.gshard"
   private var writer: ShardFormat.ShardFileWriter = null
 
@@ -1349,20 +1278,20 @@ private[shard] class ShardRowLevelOperation(dir: String,
     * commit. Re-planning (AQE) overwrites with an identical set. */
   @volatile private[shard] var plannedFiles: Seq[String] = null
 
-  /** The generation this operation's scan planned against — the
+  /** The head this operation's scan planned against. The rewrite lays
+    * its files out in its physical schema, and its generation is the
     * commit's optimistic-concurrency `basedOn` (a concurrent commit
     * between plan and publish fails this rewrite loudly instead of
     * being destroyed by it). */
-  @volatile private[shard] var plannedGen: Long = -1L
+  @volatile private[shard] var plannedHead: ShardFormat.Manifest = null
 
   override def command()
       : org.apache.spark.sql.connector.write.RowLevelOperation.Command = cmd
 
   override def newScanBuilder(
       options: CaseInsensitiveStringMap): ScanBuilder = {
-    val m = ShardFormat.readManifest(dir)
-    plannedGen = m.gen
-    new ShardScanBuilder(dir, m, options,
+    plannedHead = ShardFormat.readManifest(dir)
+    new ShardScanBuilder(dir, plannedHead, options,
       onPlan = fs => plannedFiles = fs)
   }
 
@@ -1410,45 +1339,30 @@ private[shard] class ShardReplaceWrite(dir: String, schema: StructType,
     s"gshard copy-on-write rewrite $dir rangeCol=$rangeCol"
 
   override def toBatch: BatchWrite = new BatchWrite {
+    private def unplanned = new IllegalStateException(
+      "gshard: replacement written before its scan planned")
+    private lazy val head = Option(op.plannedHead).getOrElse(throw unplanned)
+
     override def createBatchWriterFactory(
-        info: PhysicalWriteInfo): DataWriterFactory = {
-      // rewrites keep every PHYSICAL slot (tombstones as null blocks)
-      // so old and new files stay positionally compatible
-      val m = ShardFormat.readManifest(dir)
-      val phys = m.schema
-      ShardWriterFactory(dir,
-        phys.fields.map(f => (f.name, ShardFormat.typeTag(f.dataType))),
+        info: PhysicalWriteInfo): DataWriterFactory =
+      ShardWriterFactory.mapped(dir, head.schema, schema,
         s"rw${queryId.take(8)}", ShardFormat.DefaultChunkRows,
         // a rewrite must not silently strip the table's point-lookup
         // blooms: rebuild them for every column the existing entries
         // carry one for (the manifest IS the record of the bloom set)
-        m.entries.flatMap(_.bloom.keys).toSet,
-        rowIdx = phys.fields.map(f =>
-          if (ShardFormat.isTombstone(f.name)) -1
-          else schema.fieldIndex(f.name)))
-    }
+        head.entries.flatMap(_.bloom.keys).toSet)
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      val head = ShardFormat.readManifest(dir)
-      val planned = Option(op.plannedFiles).getOrElse(
-        throw new IllegalStateException(
-          "gshard: replacement committed before its scan planned"))
-      val a = ShardFormat.visible(head.schema).fields
-        .map(f => (f.name, ShardFormat.typeTag(f.dataType))).toSeq
-      val b = schema.fields
-        .map(f => (f.name, ShardFormat.typeTag(f.dataType))).toSeq
-      require(a == b, s"gshard rewrite schema mismatch: " +
-        s"table=${head.schema.catalogString} write=${schema.catalogString}")
+      val scanned = Option(op.plannedFiles).getOrElse(throw unplanned).toSet
       val fresh = messages.collect {
         case m: ShardCommitMessage if m.entry.rows > 0 => m.entry
       }.sortBy(_.file).toSeq
-      val plannedSet = planned.toSet
-      val keep = head.entries.filterNot(e => plannedSet(e.file))
-      // generational publish against the generation the SCAN planned
-      // from; replaced bytes reclaim at vacuum
-      ShardFormat.publishManifest(dir,
-        ShardFormat.Manifest(head.schema, keep ++ fresh,
-          head.lastTxn, head.txns), basedOn = op.plannedGen)
+      // a generation on top of the one the SCAN planned from; the
+      // replaced bytes reclaim at vacuum
+      ShardFormat.commit(dir, basedOn = Some(head.gen), write = Some(schema),
+          staged = fresh.map(_.file)) { _ =>
+        head.copy(entries = head.entries.filterNot(e => scanned(e.file)) ++ fresh)
+      }
     }
 
     override def abort(messages: Array[WriterCommitMessage]): Unit =

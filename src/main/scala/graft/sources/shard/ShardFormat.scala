@@ -400,25 +400,23 @@ object ShardFormat {
     * id; `txns` namespaces per-app versions (Delta's
     * txnAppId/txnVersion), so independent writers never dedupe each
     * other's ids. `gen` is the table GENERATION (commit version):
-    * every mutating publish archives the previous head manifest as
+    * every commit archives the previous head manifest as
     * `_manifest.v<gen>.gshard` and writes gen+1 — the retained chain
     * is what `VERSION AS OF` reads and what vacuum's retention
-    * protects. */
-  /** `changes` — THIS generation's row-grain CHANGE FILES (the Delta
-    * CDF choice, r16 verdict task #3): `(file, rows)` pairs naming
-    * `chg-*` data files that hold the commit's NET preimage/postimage
-    * rows (visible columns + `_change_side` ±1), written by the
-    * mutation at commit time where the data was already in hand.
-    * They describe ONE commit, never carry forward (every publish
-    * builds a fresh manifest; the default keeps non-CDF commits
-    * empty), are invisible to normal scans, and vacuum under the
-    * same retention as data files. */
-  /** `cdf` — true when this generation's mutation CAPTURED row-grain
-    * changes (even if the net set was empty — a value-identical
-    * re-upsert legitimately changes zero rows). The rowlevel CDC feed
-    * falls back to the ±file diff only for commits WITHOUT capture
-    * (appends, SQL row-level rewrites); an empty captured set emits
-    * nothing, which is exact. */
+    * protects.
+    *
+    * `changes` are THIS generation's row-grain CHANGE FILES (the Delta
+    * CDF choice): `(file, rows)` pairs naming `chg-*` data files that
+    * hold the commit's NET preimage/postimage rows (visible columns +
+    * `_change_side` ±1), written by the mutation at commit time where
+    * the data was already in hand. `cdf` is true when the commit
+    * CAPTURED row-grain changes, even an empty net set (a
+    * value-identical re-upsert changes zero rows). Both describe ONE
+    * commit: [[commit]] sets them, so they never carry into the next
+    * generation. The rowlevel CDC feed falls back to the ±file diff
+    * only for commits WITHOUT capture (appends, ALTERs, metadata
+    * deletes, SQL row-level rewrites). Change files are invisible to
+    * normal scans and vacuum under the same retention as data files. */
   final case class Manifest(schema: StructType, entries: Seq[ShardEntry],
       lastTxn: Long = -1L, txns: Map[String, Long] = Map.empty,
       gen: Long = 0L, changes: Seq[(String, Long)] = Seq.empty,
@@ -663,7 +661,14 @@ object ShardFormat {
 
   /** Write `df` as `nShards` range-clustered shard files + manifest.
     * `rangeCol` must be a non-null long column; every column must have
-    * a [[typeTag]] (nullable — nulls roundtrip exactly). */
+    * a [[typeTag]] (nullable — nulls roundtrip exactly).
+    *
+    * This is a REBUILD, not a commit on top: the directory is deleted
+    * first and the table starts again at generation 0, so no earlier
+    * generation stays readable. Staged builds rebuild from scratch
+    * ([[ensureStaged]]), and specs and the benchmark read generation 0
+    * after it. A DSv2 `mode("overwrite")`, by contrast, publishes a new
+    * generation on top of the head. */
   def write(df: DataFrame, dir: String, rangeCol: String,
       nShards: Int, chunkRows: Int = DefaultChunkRows): Manifest = {
     val schema = df.schema
@@ -672,19 +677,20 @@ object ShardFormat {
     }
     require(schema(rangeCol).dataType == LongType,
       s"range column $rangeCol must be long")
-    val path = Paths.get(dir)
+    deleteTree(Paths.get(dir))
+    Files.createDirectories(Paths.get(dir))
+    val entries = writeData(df, dir, rangeCol, nShards, chunkRows)
+    commit(dir, basedOn = Some(-1L))(_ => Manifest(schema, entries))
+  }
+
+  /** Deletes `path` and everything under it, if it exists. */
+  private[shard] def deleteTree(path: java.nio.file.Path): Unit =
     if (Files.exists(path)) {
       import scala.jdk.CollectionConverters._
-      Files.walk(path).iterator().asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
+      val s = Files.walk(path)
+      try s.iterator().asScala.toSeq.reverse.foreach(p => Files.deleteIfExists(p))
+      finally s.close()
     }
-    Files.createDirectories(path)
-
-    val entries = writeData(df, dir, rangeCol, nShards, chunkRows)
-    // publish through the commit protocol (gen 0 record + pointer):
-    // the directory was recreated empty above, so basedOn = -1
-    publishManifest(dir, Manifest(schema, entries), basedOn = -1L)
-  }
 
   /** The range-clustered DATA write alone — shard files land in `dir`
     * (named `part-<prefix><shard>.gshard`) and their manifest entries
@@ -1910,25 +1916,135 @@ object ShardFormat {
   private def archiveName(gen: Long) = s"_manifest.v$gen.gshard"
 
   /** Per-table commit locks (keyed by normalized absolute path):
-    * serializes read-modify-publish sections WITHIN this JVM — the
-    * cheap fast path that makes local contention fail at the basedOn
-    * check instead of burning a staged write per race. CROSS-PROCESS
-    * writers are serialized by [[publishManifest]]'s commit point
-    * itself: the next generation's commit record is EXCLUSIVELY
-    * CREATED (O_EXCL — the filesystem's own compare-and-swap, the
-    * public Delta-log commit protocol), so two processes can never
-    * both win a generation. */
+    * [[commit]] holds one over its whole read-modify-publish section,
+    * so in-JVM writers of one table never interleave there.
+    * CROSS-PROCESS writers are serialized by [[publishManifest]]'s
+    * commit point itself: the next generation's commit record is
+    * EXCLUSIVELY CREATED (O_EXCL — the filesystem's own
+    * compare-and-swap, the public Delta-log commit protocol), so two
+    * processes can never both win a generation. */
   private val tableLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private[graft] def tableLock(dir: String): Object =
     tableLocks.computeIfAbsent(
       Paths.get(dir).toAbsolutePath.normalize.toString, _ => new Object)
 
-  /** The generation a table currently sits at, -1 when uncommitted —
-    * the value a mutation must capture when it PLANS and hand back to
-    * [[publishManifest]] as `basedOn`. */
-  private[graft] def headGen(dir: String): Long =
-    if (hasManifest(dir)) readManifest(dir).gen else -1L
+  /** The table's head manifest, None while it is uncommitted. */
+  private[graft] def headOf(dir: String): Option[Manifest] =
+    if (hasManifest(dir)) Some(readManifest(dir)) else None
+
+  /** A replay-idempotent writer's token (Delta's txnAppId/txnVersion):
+    * `id` < 0 is a writer without one; `app` names the slot, so writers
+    * with independent id sequences never dedupe each other (no `app` is
+    * the default slot, the manifest's `txn` line). */
+  private[graft] final case class Txn(id: Long = -1L,
+      app: Option[String] = None) {
+    private def slot(m: Manifest): Long =
+      app.map(m.txns.getOrElse(_, -1L)).getOrElse(m.lastTxn)
+
+    /** `head` already applied this id: the commit is a replay. */
+    def applied(head: Manifest): Boolean = id >= 0 && slot(head) >= id
+
+    /** The slots (`lastTxn`, `txns`) after this commit: its own slot
+      * advances to `id`, or is set to it by a truncate (a fresh query
+      * restarts its ids at 0); every other slot carries forward. */
+    def advance(head: Option[Manifest],
+        truncate: Boolean): (Long, Map[String, Long]) = {
+      val last = head.map(_.lastTxn).getOrElse(-1L)
+      val txns = head.map(_.txns).getOrElse(Map.empty[String, Long])
+      if (id < 0) (last, txns)
+      else {
+        val v = if (truncate) id else math.max(id, head.map(slot).getOrElse(-1L))
+        app.fold((v, txns))(a => (last, txns + (a -> v)))
+      }
+    }
+  }
+
+  /** A schema's columns as (name, storage tag) pairs, in order. */
+  private[shard] def columns(st: StructType): Seq[(String, String)] =
+    st.fields.toSeq.map(f => (f.name, typeTag(f.dataType)))
+
+  /** The one schema rule for rows written into an existing table: they
+    * carry exactly the table's VISIBLE columns, matched by name and
+    * STORAGE tag in any order. Tags, not DataTypes: the manifest
+    * round-trips neither nullability nor metadata, and a tag collapses
+    * an array's containsNull (null elements reject at write either
+    * way). Drop tombstones are physical slots the writer fills, never
+    * part of the user's frame. */
+  private[graft] def requireSchema(table: StructType,
+      write: StructType): Unit =
+    require(columns(visible(table)).sorted == columns(write).sorted,
+      s"gshard schema mismatch: table=${visible(table).catalogString} " +
+        s"write=${write.catalogString}")
+
+  /** THE gshard commit: every writer publishes its generation here.
+    * Under the table lock it reads the head once, then:
+    *
+    *  - `basedOn` is the generation the caller planned against (-1 =
+    *    an uncommitted table): a moved head fails the commit with
+    *    [[java.util.ConcurrentModificationException]]. None is a blind
+    *    writer that plans on the head read here;
+    *  - `txn`: an id the head already applied makes the commit a no-op
+    *    that returns the head; otherwise the slot advances
+    *    ([[Txn.advance]]). A `truncate` is never a replay: a fresh
+    *    query reusing the directory restarts its ids at 0, and
+    *    dropping its data for the stale table's would invert the
+    *    contract;
+    *  - `write`, the schema of the rows written, must pass
+    *    [[requireSchema]] against the head (a truncate may replace the
+    *    schema, so it is not checked);
+    *  - `edit` turns the head into the next schema and entry list.
+    *    `gen`, the txn slots, `changes` and `cdf` are set here, never
+    *    carried from the head: change files describe one commit.
+    *
+    * It publishes through [[publishManifest]] on the head it read, so
+    * the publish reads no manifest. A commit that publishes nothing (a
+    * replay, a failed check, a lost race) deletes `staged`, the files
+    * the caller wrote for it; once the commit record is linked the
+    * generation is committed, and a failure after that (the pointer
+    * rename) deletes nothing. Returns the published manifest. */
+  private[graft] def commit(dir: String, basedOn: Option[Long] = None,
+      txn: Txn = Txn(), truncate: Boolean = false,
+      write: Option[StructType] = None, staged: Seq[String] = Seq.empty,
+      changes: Seq[(String, Long)] = Seq.empty, cdf: Boolean = false)(
+      edit: Option[Manifest] => Manifest): Manifest =
+    tableLock(dir).synchronized {
+      def discard(): Unit =
+        staged.foreach(f => Files.deleteIfExists(Paths.get(dir, f)))
+      val head = headOf(dir)
+      val headG = head.map(_.gen).getOrElse(-1L)
+      val next =
+        try {
+          basedOn.foreach(requireHead(dir, _, headG))
+          if (!truncate && head.exists(txn.applied)) None
+          else {
+            if (!truncate) for (w <- write; h <- head) requireSchema(h.schema, w)
+            val e = edit(head)
+            val (lastTxn, txns) = txn.advance(head, truncate)
+            Some(Manifest(e.schema, e.entries, lastTxn, txns, headG + 1,
+              changes, cdf))
+          }
+        } catch { case t: Throwable => discard(); throw t }
+      next match {
+        case None => discard(); head.get
+        case Some(m) =>
+          try publishManifest(dir, m, headG, _ => head)
+          catch {
+            case t: java.util.ConcurrentModificationException =>
+              discard(); throw t
+          }
+      }
+    }
+
+  /** Fails unless the head sits at `basedOn`, the generation the
+    * writer planned against. */
+  private def requireHead(dir: String, basedOn: Long, headG: Long): Unit =
+    if (headG != basedOn)
+      throw new java.util.ConcurrentModificationException(
+        s"gshard: concurrent commit detected at $dir — this write " +
+          s"planned against generation $basedOn but the head is now " +
+          s"$headG (a concurrent writer committed); re-plan against " +
+          "the new head and retry")
 
   // ── SCHEMA EVOLUTION: tombstones (DROP) and renames ────────────────
   //
@@ -1991,9 +2107,10 @@ object ShardFormat {
       if (!hasManifest(dir)) build
     }
 
-  /** MUTATING publish with ATOMIC cross-process concurrency control.
-    * The COMMIT POINT is an EXCLUSIVE CREATE: the manifest body is
-    * written to a temp name, then hard-linked to the next
+  /** The commit point, with ATOMIC cross-process concurrency control;
+    * [[commit]] is its one caller in the engine, and specs drive it
+    * directly. The COMMIT POINT is an EXCLUSIVE CREATE: the manifest
+    * body is written to a temp name, then hard-linked to the next
     * generation's immutable commit record `_manifest.v<gen+1>.gshard`
     * — `Files.createLink` fails with `FileAlreadyExistsException`
     * when the record exists, which is the filesystem's own
@@ -2001,8 +2118,7 @@ object ShardFormat {
     * commit protocol on HDFS-class stores. Two PROCESSES can
     * therefore never both win generation N+1: exactly one link
     * succeeds; the loser throws
-    * [[java.util.ConcurrentModificationException]] and its staged
-    * data files become vacuum-sweepable orphans.
+    * [[java.util.ConcurrentModificationException]].
     *
     * `_manifest.gshard` (what readers open first) is the head
     * pointer: after the record lands, a fresh name is hard-linked to
@@ -2020,19 +2136,15 @@ object ShardFormat {
     * the mutation (-1 = planned against an uncommitted table): a
     * moved head fails fast here before staging the record; a head
     * that moves BETWEEN that check and the link loses at the link —
-    * either way, never last-writer-wins (r15 verdict task #1, made
-    * exact rather than probabilistic in r17). Returns the published
-    * manifest with its assigned generation. */
+    * either way, never last-writer-wins. `readHead` reads the head to
+    * check; [[commit]] passes the one it already read. Returns the
+    * published manifest with its assigned generation. */
   private[graft] def publishManifest(dir: String, m: Manifest,
-      basedOn: Long): Manifest = tableLock(dir).synchronized {
-    val head = if (hasManifest(dir)) Some(readManifest(dir)) else None
+      basedOn: Long,
+      readHead: String => Option[Manifest] = headOf): Manifest = {
+    val head = readHead(dir)
     val headG = head.map(_.gen).getOrElse(-1L)
-    if (headG != basedOn)
-      throw new java.util.ConcurrentModificationException(
-        s"gshard: concurrent commit detected at $dir — this write " +
-          s"planned against generation $basedOn but the head is now " +
-          s"$headG (a concurrent writer committed); re-plan against " +
-          "the new head and retry")
+    requireHead(dir, basedOn, headG)
     Files.createDirectories(Paths.get(dir))
     // self-heal: a pre-record table (bootstrapped by a legacy layout
     // or a crash that lost records to manual cleanup) gets its head's

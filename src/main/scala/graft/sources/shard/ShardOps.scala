@@ -3,7 +3,6 @@ package graft.sources.shard
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Row-level mutation through the gshard catalog — what DELETE's
   * metadata-only surgery can't express: the copy-on-write [[merge]]
@@ -15,13 +14,13 @@ import org.apache.spark.sql.types.StructType
 object ShardOps {
 
   /** [[upsert]] with OPTIMISTIC-CONCURRENCY RETRY: a merge that loses
-    * a commit race ([[ShardFormat.publishManifest]]'s
+    * a commit race ([[ShardFormat.commit]]'s
     * `ConcurrentModificationException`) RE-PLANS against the new head
     * and retries — the loop every OCC store's writer runs (Delta's
     * commit-retry). Each attempt re-reads the head, re-discovers
     * touched files, and re-runs the rewrite, so retrying is always
-    * correct; the failed attempt's staged files are vacuum-sweepable
-    * orphans. Replay idempotence still holds: if a RACING writer with
+    * correct; the failed attempt's commit deletes its staged files.
+    * Replay idempotence still holds: if a RACING writer with
     * the same (txnApp, txnId) won, the retry no-ops on the txn slot.
     * Contended writers on DISJOINT keys all converge (spec-pinned);
     * `maxRetries` bounds pathological contention with a loud error. */
@@ -147,10 +146,10 @@ object ShardOps {
       prefix = s"d${java.util.UUID.randomUUID.toString.take(8)}-",
       rangeExpr = Some(lit(0L)), namePrefix = ShardFormat.ChangePrefix,
       bounds = Some((0L, 0L)))
-    ShardFormat.publishManifest(dir,
-      ShardFormat.Manifest(head.schema, entries, head.lastTxn, head.txns,
-        changes = changeEntries.map(e => (e.file, e.rows)), cdf = true),
-      basedOn = head.gen)
+    ShardFormat.commit(dir, basedOn = Some(head.gen),
+      staged = perFile.map(_._2) ++ changeEntries.map(_.file),
+      changes = changeEntries.map(e => (e.file, e.rows)), cdf = true)(
+      _ => head.copy(entries = entries))
     // newly deleted = merged counts − prior counts, per touched file
     // (map lookup, not a per-file linear scan over the entries)
     val priorCnt: Map[String, Long] = head.entries
@@ -174,14 +173,10 @@ object ShardOps {
       keyCol: String, nShards: Int = 0,
       txnId: Long = -1L, txnApp: Option[String] = None): Unit = {
     val head = ShardFormat.readManifest(dir)
-    val vis = ShardFormat.visible(head.schema)
-    def tags(st: StructType) =
-      st.fields.map(f => (f.name, ShardFormat.typeTag(f.dataType))).sorted.toSeq
-    require(tags(updates.schema) == tags(vis),
-      s"gshard merge schema mismatch: table=${vis.catalogString} " +
-        s"updates=${updates.schema.catalogString}")
+    ShardFormat.requireSchema(head.schema, updates.schema)
     // in the table's visible order, each update IS its key's output row
-    merge(spark, dir, head, updates.select(vis.fieldNames.toSeq.map(col): _*),
+    merge(spark, dir, head, updates.select(
+      ShardFormat.visible(head.schema).fieldNames.toSeq.map(col): _*),
       keyCol, nShards, txnId, txnApp, uniqueKeys = true)((_, update) => update)
   }
 
@@ -218,11 +213,12 @@ object ShardOps {
     *     shard's `chg-` change file, so a CDC consumer streams
     *     O(changed rows) per commit. The touched files' zone maps and
     *     the source pass give the shard range: no min/max job;
-    *  3. the generational publish with the txn slot advanced: the
-    *     head archives (VERSION AS OF still reads the pre-merge
-    *     table), replaced bytes reclaim at [[ShardFormat.vacuum]], and
-    *     the publish is OPTIMISTIC — a concurrent commit since this
-    *     merge read the head fails it loudly.
+    *  3. the generational [[ShardFormat.commit]] with the txn slot
+    *     advanced: the head archives (VERSION AS OF still reads the
+    *     pre-merge table), replaced bytes reclaim at
+    *     [[ShardFormat.vacuum]], and the commit is OPTIMISTIC — a
+    *     concurrent commit since this merge read the head fails it
+    *     loudly and deletes the files it staged.
     *
     * REPLAY-IDEMPOTENT via the manifest txn slots (Delta's
     * txnAppId/txnVersion): a merge whose id is already applied is a
@@ -240,12 +236,9 @@ object ShardOps {
       head: ShardFormat.Manifest, source: DataFrame, keyCol: String,
       nShards: Int, txnId: Long, txnApp: Option[String],
       uniqueKeys: Boolean)(perKey: PerKey): Unit = {
-    // replay idempotence FIRST (same rule as the append path)
-    val appliedBefore = txnId >= 0 && {
-      txnApp.map(a => head.txns.getOrElse(a, -1L))
-        .getOrElse(head.lastTxn) >= txnId
-    }
-    if (appliedBefore) return
+    // a replay does no work (the commit's own rule, checked at plan)
+    val txn = ShardFormat.Txn(txnId, txnApp)
+    if (txn.applied(head)) return
 
     // merge keys: every type whose STORAGE ordering the zone maps
     // index — long/int ids, timestamp (micros), date (days),
@@ -369,28 +362,15 @@ object ShardOps {
       // rewritten files keep the table's bloom set (manifest-derived)
       bloomCols = head.entries.flatMap(_.bloom.keys).toSet, perKey = perKey)
 
-    // 3. generational publish with the txn slot advanced
-    val (nextLast, nextTxns) = txnApp match {
-      case None =>
-        (if (txnId < 0) head.lastTxn else math.max(txnId, head.lastTxn),
-          head.txns)
-      case Some(app) =>
-        if (txnId < 0) (head.lastTxn, head.txns)
-        else (head.lastTxn,
-          head.txns + (app -> math.max(txnId, head.txns.getOrElse(app, -1L))))
-    }
+    // 3. OPTIMISTIC commit: this merge planned (touched files, touched
+    // read, txn slots) against head.gen — if a concurrent writer moved
+    // the head since, the commit deletes the files staged above and
+    // throws instead of destroying the winner's commit
     val untouched = head.entries.filterNot(touchedEntries.toSet)
-    // OPTIMISTIC publish: this merge planned (touched files, touched
-    // read, txn slots) against head.gen — if a concurrent writer
-    // moved the head since, publish throws and the fresh files stay
-    // orphaned (vacuum re-sweeps them) instead of destroying the
-    // winner's commit
-    ShardFormat.publishManifest(dir,
-      ShardFormat.Manifest(head.schema, untouched ++ fresh,
-        nextLast, nextTxns,
-        changes = changeEntries.map(e => (e.file, e.rows)),
-        cdf = true),
-      basedOn = head.gen)
+    ShardFormat.commit(dir, basedOn = Some(head.gen), txn = txn,
+      staged = (fresh ++ changeEntries).map(_.file),
+      changes = changeEntries.map(e => (e.file, e.rows)), cdf = true)(
+      _ => head.copy(entries = untouched ++ fresh))
   }
 
   /** The string clustering long on the driver: the key's first 7 UTF-8

@@ -6,8 +6,9 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{LongType, StructType}
 
-import graft.sources.shard.{ShardColumnarReader, ShardFormat,
-  ShardInputPartition, ShardTable}
+import graft.sources.shard.{ShardBatchWrite, ShardColumnarReader,
+  ShardFormat, ShardInputPartition, ShardReplaceWrite,
+  ShardRowLevelOperation, ShardTable}
 
 /** Test-only handle onto the package-private [[ShardTable]] API —
   * lets specs outside the shard package probe the metadata-delete
@@ -17,6 +18,30 @@ class TableProbe(dir: String) {
     new ShardTable(dir, ShardFormat.readManifest(dir).schema)
   def canDeleteWhere(filters: Array[Filter]): Boolean =
     table.canDeleteWhere(filters)
+}
+
+/** Test-only handles onto the DSv2 writers' commits. */
+object CommitProbe {
+  /** Plans an append of rows of `schema` to `dir` now (its file layout
+    * is fixed here); the returned function commits it with no file. */
+  def plannedAppend(dir: String, schema: StructType): () => Unit = {
+    val w = new ShardBatchWrite(dir, schema, truncateFirst = false, "probe",
+      ShardFormat.DefaultChunkRows, txnId = -1L)
+    w.createBatchWriterFactory(null)
+    () => w.commit(Array.empty)
+  }
+
+  /** Commits a rewrite of `dir` whose scan planned against the head and
+    * kept every file, and which wrote rows of `schema` into no file. */
+  def rewrite(dir: String, schema: StructType): Unit = {
+    val op = new ShardRowLevelOperation(dir,
+      org.apache.spark.sql.connector.write.RowLevelOperation.Command.UPDATE)
+    op.newScanBuilder(
+      org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
+    op.plannedFiles = Seq.empty
+    new ShardReplaceWrite(dir, schema, "probe", op).toBatch
+      .commit(Array.empty)
+  }
 }
 
 /** Test-only handles onto `private[shard]` format internals. */
