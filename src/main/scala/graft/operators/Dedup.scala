@@ -168,7 +168,7 @@ object Dedup {
           (col("ns") - ceil(col("ns") * threshold) + 1).cast("int")).as("prefix"))
       // materialize the (small) index ONCE: the self-join below would
       // otherwise duplicate the whole tokenize+rank lineage per branch.
-      // persist(), not localCheckpoint(): non-replicated checkpoint
+      // persist(), not a local checkpoint: non-replicated checkpoint
       // blocks die with an executor on a real cluster, while a cached
       // index recomputes from lineage; at 100 TB this is a staging
       // write. The index is O(docs · shingles · 8B), tiny next to the
@@ -693,12 +693,8 @@ object Dedup {
     val edges = pairs
       .select(col("doc_id_1").as("src"), col("doc_id_2").as("dst"))
       .union(pairs.select(col("doc_id_2").as("src"), col("doc_id_1").as("dst")))
-      .persist()
-    edges.count() // eager: every round joins this index; don't race the lazy cache
-    val Components(labels, iters, _) =
-      try connectedComponents(edges, maxIters,
-        halveFrom = if (pathHalving) DefaultHalveFrom else Int.MaxValue)
-      finally edges.unpersist()
+    val Components(labels, iters, _) = connectedComponents(edges, maxIters,
+      halveFrom = if (pathHalving) DefaultHalveFrom else Int.MaxValue)
     val out = t.documents.select(col("doc_id"))
       .join(labels, Seq("doc_id"), "left")
       .select(col("doc_id"),
@@ -790,28 +786,18 @@ object Dedup {
     * small-star trade in two joins, engaged ADAPTIVELY so shallow
     * graphs (the common near-dup case) never pay for it.
     *
-    * CHECKPOINT MODE: by default each round truncates lineage with
-    * `localCheckpoint()` — executor-local, non-replicated, right for
-    * a single-JVM rig. On a preemptible 1000-executor fleet one lost
-    * executor would kill the whole iteration, so setting the session
-    * conf `graft.cc.checkpointDir` to a reliable path (HDFS/object
-    * store) switches every round to a RELIABLE `checkpoint()`:
-    * executor loss costs one round's recompute from the last
-    * checkpoint files, not the job. Checkpoint files are cleaned by
-    * the ContextCleaner when
-    * `spark.cleaner.referenceTracking.cleanCheckpoints` is on (or by
-    * dir lifecycle policy) — the standard story for iterative Spark.
+    * LINEAGE: every round is cut through [[Rounds.run]] — a local
+    * checkpoint, or a reliable one when the session sets
+    * `graft.cc.checkpointDir` — and the superseded round is released
+    * as soon as the next one exists.
     *
-    * Returns the converged (doc_id, cluster_id) labels. STORAGE
-    * CONTRACT: checkpointed RDDs live OUTSIDE the CacheManager, so
-    * `spark.catalog.clearCache()` / `df.unpersist()` can NOT release
-    * them — each superseded round's blocks are unpersisted EXPLICITLY
-    * here (via the LogicalRDD handle) as soon as the next round
-    * materializes, so at most one round's blocks are live during the
-    * loop; the FINAL frame's blocks back the returned lineage (its
-    * source lineage is truncated — releasing early would make it
-    * unrecomputable) and are freed by [[releaseLabels]] once the
-    * caller has consumed the result, or by ContextCleaner GC.
+    * Returns the converged (doc_id, cluster_id) labels. The final
+    * round's cut blocks back the returned frame and are freed by
+    * [[Rounds.release]] once the caller has consumed it, or by
+    * ContextCleaner GC.
+    *
+    * The call caches `edges` while it runs and drops that cache
+    * before it returns, so callers pass the edge plan uncached.
     *
     * ADAPTIVE LOCAL FALLBACK: a graph at or below `localMaxEdges`
     * edges resolves as a driver union-find ([[localCc]], identical
@@ -822,96 +808,67 @@ object Dedup {
   private[graft] def connectedComponents(edges: DataFrame, maxIters: Int = 50,
       halveFrom: Int = DefaultHalveFrom,
       localMaxEdges: Long = LocalCcMaxEdges): Components = {
-    val sess = edges.sparkSession
-    // ADAPTIVE: small graphs resolve on the driver (callers persist +
-    // count the edge frame already, so this count hits cache)
-    if (runsLocal(edges.count(), localMaxEdges))
-      return Components(localCc(edges), iters = 0, local = true)
-    val reliableDir = sess.conf.getOption("graft.cc.checkpointDir")
-    reliableDir.foreach(sess.sparkContext.setCheckpointDir)
-    def materialize(df: DataFrame): DataFrame =
-      if (reliableDir.isDefined) df.checkpoint() else df.localCheckpoint()
-    def labelSum(labels: DataFrame): java.math.BigDecimal = {
-      val s = labels.agg(sum(col("cluster_id").cast("decimal(38,0)")))
-        .first().getDecimal(0)
+    // every round joins the edge frame, and the local path reads it
+    // twice (size, then collect): cached for this call only
+    edges.persist()
+    try {
+      // ADAPTIVE: small graphs resolve on the driver
+      if (runsLocal(edges.count(), localMaxEdges))
+        return Components(localCc(edges), iters = 0, local = true)
       // sum() of zero rows is SQL NULL: an empty pair graph (nothing
       // near-duplicated) must converge on the zero identity, not NPE
-      if (s == null) java.math.BigDecimal.ZERO else s
-    }
-    // iterate over graph NODES only (docs in ≥1 pair) — a small
-    // fraction of any real corpus; singletons join back at the end
-    var labels = edges.select(col("src").as("doc_id")).distinct()
-      .select(col("doc_id"), col("doc_id").as("cluster_id")).persist()
-    var converged = false
-    var iter = 0
-    try {
-      var prevSum = labelSum(labels)
-      while (!converged && iter < maxIters) {
-        // neighbor-min merge as ONE keyed min-agg (the r17 BFS
-        // discipline): every node's own label and its neighbors'
-        // labels union into one groupBy(doc_id).min — labels has
-        // exactly one row per node and every edge dst is a node, so
-        // min(own ∪ neighbor labels) ≡ the old least(own,
-        // left-joined nbr_min) row for row, without the second
-        // keyed join (and its exchange) per round
-        val prop = labels.unionAll(edges.as("e")
-            .join(labels.as("l"), col("e.src") === col("l.doc_id"))
-            .select(col("e.dst").as("doc_id"), col("l.cluster_id")))
-          .groupBy(col("doc_id"))
-          .agg(min(col("cluster_id")).as("cluster_id"))
-        val halve = iter + 1 >= halveFrom
-        val nextPlan = if (!halve) prop else {
-          prop.persist()
-          prop.as("a")
+      def labelSum(labels: DataFrame): java.math.BigDecimal =
+        Option(labels.agg(sum(col("cluster_id").cast("decimal(38,0)"))).first().getDecimal(0))
+          .getOrElse(java.math.BigDecimal.ZERO)
+      // iterate over graph NODES only (docs in ≥1 pair) — a small
+      // fraction of any real corpus; singletons join back at the end
+      val init = edges.select(col("src").as("doc_id")).distinct()
+        .select(col("doc_id"), col("doc_id").as("cluster_id")).persist()
+      val run = try {
+        // converged once a round leaves the label sum unchanged
+        var prevSum = labelSum(init)
+        def unchanged(next: DataFrame): Boolean = {
+          val s = labelSum(next)
+          val same = s.compareTo(prevSum) == 0
+          prevSum = s
+          same
+        }
+        Rounds.run(init, maxIters, unchanged) { round =>
+          // neighbor-min merge as ONE keyed min-agg (the r17 BFS
+          // discipline): every node's own label and its neighbors'
+          // labels union into one groupBy(doc_id).min — labels has
+          // exactly one row per node and every edge dst is a node, so
+          // min(own ∪ neighbor labels) ≡ the old least(own,
+          // left-joined nbr_min) row for row, without the second
+          // keyed join (and its exchange) per round
+          val prop = round.prev.unionAll(edges.as("e")
+              .join(round.prev.as("l"), col("e.src") === col("l.doc_id"))
+              .select(col("e.dst").as("doc_id"), col("l.cluster_id")))
+            .groupBy(col("doc_id"))
+            .agg(min(col("cluster_id")).as("cluster_id"))
+          // the pointer hop reads prop on both sides: cached for the round
+          if (round.number < halveFrom) prop
+          else round.cache(prop).as("a")
             .join(prop.select(col("doc_id").as("pid"), col("cluster_id").as("pcid")).as("b"),
               col("a.cluster_id") === col("pid"), "left")
             .select(col("a.doc_id").as("doc_id"),
               least(col("a.cluster_id"), coalesce(col("pcid"), col("a.cluster_id")))
                 .as("cluster_id"))
         }
-        // lineage hygiene: each round's plan EMBEDS the previous
-        // round's (3–4 copies of it, via nbrMin and the halving
-        // self-join), so plan size grows exponentially with rounds —
-        // persist() caches data but never truncates the logical plan.
-        // Checkpointing each round (local by default, reliable when
-        // graft.cc.checkpointDir is set) cuts lineage to a LogicalRDD;
-        // eager materialization doubles as the round's compute
-        val next = materialize(nextPlan)
-        val nextSum = labelSum(next) // also populates next's cache
-        if (halve) prop.unpersist()
-        releaseLabels(labels) // superseded round: free its blocks NOW
-        labels = next
-        converged = nextSum.compareTo(prevSum) == 0
-        prevSum = nextSum
-        iter += 1
-      }
-      require(converged, s"label propagation did not converge in $maxIters rounds")
-    } finally {
-      if (!converged) releaseLabels(labels)
-    }
-    Components(labels, iter, local = false)
+      } finally init.unpersist()
+      if (!run.converged) Rounds.release(run.last)
+      require(run.converged, s"label propagation did not converge in $maxIters rounds")
+      Components(run.last, run.rounds, local = false)
+    } finally edges.unpersist()
   }
 
   /** A [[connectedComponents]] result: the (doc_id, cluster_id)
     * labels, the propagation rounds run, and which path produced
     * them — `local` labels are a driver-built LocalRelation with no
     * checkpoint blocks behind them; distributed ones must go through
-    * [[releaseLabels]] once consumed. */
+    * [[Rounds.release]] once consumed. */
   private[graft] final case class Components(labels: DataFrame, iters: Int,
       local: Boolean)
-
-  /** Release the storage behind a [[connectedComponents]] round/result
-    * frame. Checkpointed RDDs are persisted at the RDD level, OUTSIDE
-    * the CacheManager — `df.unpersist()`/`clearCache()` are no-ops for
-    * them — so the block release must go through the LogicalRDD's own
-    * RDD handle. Only call on a frame whose consumers are done: a
-    * checkpoint-truncated frame has no lineage to recompute from. */
-  private[graft] def releaseLabels(df: DataFrame): Unit =
-    df.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false); ()
-      case _ => df.unpersist(); ()
-    }
 
   // ---- D14: incremental connected components ------------------------
 
@@ -942,10 +899,7 @@ object Dedup {
         .select(col("doc_id_1").as("src"), col("doc_id_2").as("dst"))
       val edges = pairs
         .union(pairs.select(col("dst").as("src"), col("src").as("dst")))
-        .persist()
-      edges.count()
-      val labels =
-        try connectedComponents(edges).labels finally edges.unpersist()
+      val labels = connectedComponents(edges).labels
       val labelTable = s"graft_cc_labels_$tag"
       Sources.writeBucketed(labels, labelTable, Seq("doc_id"), nBuckets = 8,
         sortCols = Seq("doc_id"),
@@ -1022,9 +976,7 @@ object Dedup {
     val half = ccIncrementEdges(t, splitId)
     val edges = half
       .union(half.select(col("dst").as("src"), col("src").as("dst")))
-      .persist()
-    edges.count()
-    val merged = try connectedComponents(edges).labels finally edges.unpersist()
+    val merged = connectedComponents(edges).labels
     // contracted-node labels: bounded by increment + touched clusters
     // (metadata-scale next to the corpus), hence broadcastable
     val nodeLabels = merged

@@ -1419,13 +1419,13 @@ object EventAnalytics {
     * Shape: each round is one symmetric-degree partial-agg count plus
     * two LEFT SEMI joins filtering the edge list on the survivor set
     * — all keyed shuffles over (int, int) pairs, state O(edges),
-    * nothing collected. Because a round's plan embeds the previous
-    * round's three times (degree union + both semi-joins), each round
-    * is `localCheckpoint()`-truncated exactly like
-    * [[graft.operators.Dedup.connectedComponents]], superseded
-    * rounds' blocks released eagerly, and the final (tiny, node-level)
-    * result is staged to parquet as the deterministic release point —
-    * the stored-artifact discipline production would use anyway. */
+    * nothing collected. A round's plan embeds the previous round's
+    * three times (degree union + both semi-joins), so the peel runs
+    * through [[Rounds.run]], which cuts each round and frees the one
+    * it replaced. The (node-level) result is cut once more while the
+    * edge cache is live, and that cut alone backs the returned frame:
+    * the last round's blocks and the edge cache are freed before it
+    * returns, and the consumer never re-reads the events. */
   def eventsKcore(t: Tables, k: Int = 5, rounds: Int = 4,
       maxItemsPerDay: Int = 64,
       localMaxEdges: Long = Dedup.LocalCcMaxEdges): DataFrame = {
@@ -1455,35 +1455,21 @@ object EventAnalytics {
     }
     val allNodes = und.select(col("a").as("item"))
       .unionAll(und.select(col("b").as("item"))).distinct()
-    var edges = und
-    var r = 0
-    while (r < rounds) {
-      val surv = degrees(edges).filter(col("deg") >= k)
-      val next = edges
+    val peel = Rounds.run(und, rounds) { round =>
+      val surv = degrees(round.prev).filter(col("deg") >= k)
+      round.prev
         .join(surv.select(col("node").as("a")), Seq("a"), "left_semi")
         .join(surv.select(col("node").as("b")), Seq("b"), "left_semi")
-        .localCheckpoint()
-      if (r > 0) Dedup.releaseLabels(edges) // superseded round; never `und`
-      edges = next
-      r += 1
     }
-    val degF = degrees(edges).select(col("node").as("item"), col("deg").as("core_deg"))
-    val out = allNodes.join(degF, Seq("item"), "left")
+    val degF = degrees(peel.last).select(col("node").as("item"), col("deg").as("core_deg"))
+    val out = Rounds.cut(allNodes.join(degF, Seq("item"), "left")
       .select(col("item"),
         coalesce(col("core_deg"), lit(0L)).as("core_deg"),
-        (coalesce(col("core_deg"), lit(0L)) >= k).as("in_core"))
-    // per-invocation tag: a second call (other k/rounds, or a re-run)
-    // must not clobber files a previously returned frame still reads
-    val path = graft.sources.SourceOps.staging(
-      s"kcore_${graft.sources.SourceOps.dirTag(t.dir)}" +
-        s"_k${k}_r${rounds}_${kcoreInvocation.incrementAndGet()}")
-    out.write.mode("overwrite").parquet(path)
-    if (rounds > 0) Dedup.releaseLabels(edges)
+        (coalesce(col("core_deg"), lit(0L)) >= k).as("in_core")))
+    Rounds.release(peel.last)
     und.unpersist()
-    t.spark.read.parquet(path)
+    out
   }
-
-  private val kcoreInvocation = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** `events_funnel_by_variant` — the ordered conversion funnel
     * ([[eventsFunnel]]) SPLIT BY EXPERIMENT ARM (the
@@ -2201,8 +2187,10 @@ object EventAnalytics {
     * symmetric weighted edge list, a budget cut, and a min-merge into
     * the settled distances; a node re-expands only when its distance
     * improves, so total work is O(Σ rounds |improved|·avg-degree),
-    * never |V|·|E|. The merged min-dist table `localCheckpoint`s per
-    * round, and the improved frontier is a lazy filter over it.
+    * never |V|·|E|. The rounds run through [[Rounds.run]]: the round
+    * state is the merged `(item, dist, old)` table, cut each round
+    * (the superseded round freed), and the improved frontier is a
+    * lazy filter over it.
     *
     * Edges carry a SIGNIFICANCE FLOOR: a pair must co-occur in at
     * least `max(2, distinct_users/50)` baskets. Without it the raw
@@ -2261,42 +2249,30 @@ object EventAnalytics {
       }
       return localPathsDF(sess, itemType, dist.toSeq)
     }
+    // seeds enter with a NULL `old`, so the first frontier is every seed
     val seeds = edges.select(col("src").as("item")).distinct()
       .filter(col("item") % 17 === 0)
-    // localCheckpoint (eager), NOT persist: an iterated persist chain
-    // reuses the DATA but every round's LOGICAL plan still nests all
-    // previous rounds, and Catalyst's per-iteration analysis/cache-
-    // canonicalization cost grows exponentially (measured: levels at
-    // 1.0 → 1.3 → 3.4 → 17 s and a 38 s final action at sf0.1; with
-    // truncated lineage the whole walk is ~1 s/level). Same fix every
-    // iterative Spark algorithm ships — the state is already
-    // computed, so checkpointing it loses nothing.
-    var dist = seeds.select(col("item"), lit(0L).as("dist")).localCheckpoint()
-    var frontier = dist
-    for (_ <- 1 to rounds) {
+      .select(col("item"), lit(0L).as("dist"), lit(null).cast("long").as("old"))
+    val walk = Rounds.run(seeds, rounds) { round =>
       // ONE min-agg carries both readouts: candidates enter with a
       // NULL `old`, settled rows with old = their current dist, so
       // min(dist) is the merged distance and min(old) (null-skipping)
       // recovers the pre-round distance — the improved-frontier test
-      // becomes a map-side filter over the merged checkpoint instead
-      // of a second agg + join + second checkpoint per round
-      val cand = frontier.join(edges, frontier("item") === edges("src"))
+      // is a map-side filter over the previous round's cut instead
+      // of a second agg + join + second cut per round
+      val frontier = round.prev.filter(col("old").isNull || col("dist") < col("old"))
+      val cand = frontier.as("f").join(edges.as("e"), col("f.item") === col("e.src"))
         .select(col("dst").as("item"), (col("dist") + col("cost")).as("dist"),
           lit(null).cast("long").as("old"))
         .filter(col("dist") <= budget)
-      val merged = dist.select(col("item"), col("dist"), col("dist").as("old"))
+      round.prev.select(col("item"), col("dist"), col("dist").as("old"))
         .unionAll(cand)
         .groupBy(col("item"))
         .agg(min(col("dist")).as("dist"), min(col("old")).as("old"))
-        .localCheckpoint()
-      frontier = merged
-        .filter(col("old").isNull || col("dist") < col("old"))
-        .select(col("item"), col("dist"))
-      dist = merged.select(col("item"), col("dist"))
     }
     items.unpersist()
     edges.unpersist()
-    dist.select(col("item"), col("dist")).orderBy(col("item"))
+    walk.last.select(col("item"), col("dist")).orderBy(col("item"))
   }
 
   /** Driver-local walk results → a DataFrame carrying the distributed

@@ -431,9 +431,7 @@ object Governance {
     val edges = matches
       .select(col("key_1").as("src"), col("key_2").as("dst"))
       .union(matches.select(col("key_2").as("src"), col("key_1").as("dst")))
-      .persist()
-    edges.count() // eager: every CC round joins this frame
-    val cc = try Dedup.connectedComponents(edges) finally edges.unpersist()
+    val cc = Dedup.connectedComponents(edges)
     if (cc.local) {
       // adaptive driver-local CC path (small match graph): the labels
       // are a LocalRelation — no checkpoint blocks to release and
@@ -446,11 +444,11 @@ object Governance {
       // writing it out here doubles as the deterministic release
       // point for the CC rounds' checkpoint blocks, which live
       // outside the CacheManager and would otherwise linger until
-      // ContextCleaner GC (see Dedup.releaseLabels)
+      // ContextCleaner GC (see Rounds.release)
       val labelPath = graft.sources.SourceOps.staging(
         s"er_labels_${graft.sources.SourceOps.dirTag(t.dir)}")
       cc.labels.write.mode("overwrite").parquet(labelPath)
-      Dedup.releaseLabels(cc.labels)
+      Rounds.release(cc.labels)
       goldenOf(t.part, t.spark.read.parquet(labelPath))
     }
   }
@@ -514,15 +512,12 @@ object Governance {
         .select(col("key_1"), col("key_2"))
       val edges = pairs.select(col("key_1").as("src"), col("key_2").as("dst"))
         .union(pairs.select(col("key_2").as("src"), col("key_1").as("dst")))
-        .persist()
-      edges.count()
-      val labels =
-        try Dedup.connectedComponents(edges).labels finally edges.unpersist()
+      val labels = Dedup.connectedComponents(edges).labels
       val labelTable = s"graft_er_labels_$tag"
       Sources.writeBucketed(labels, labelTable, Seq("doc_id"), nBuckets = 8,
         sortCols = Seq("doc_id"),
         path = Some(SourceOps.staging(s"er_labels_hist_$tag")))
-      Dedup.releaseLabels(labels)
+      Rounds.release(labels)
       val entityTable = s"graft_er_entities_$tag"
       Sources.writeBucketed(
         goldenOf(t.part.filter(col("p_partkey") <= splitKey),
@@ -586,10 +581,7 @@ object Governance {
       .union(nnPairs.select(col("key_1").as("src"), col("key_2").as("dst")))
     val edges = half
       .union(half.select(col("dst").as("src"), col("src").as("dst")))
-      .persist()
-    edges.count()
-    val merged = try Dedup.connectedComponents(edges).labels
-      finally edges.unpersist()
+    val merged = Dedup.connectedComponents(edges).labels
     val nodeLabels = merged
       .select(col("doc_id").as("node"), col("cluster_id").as("label"))
     val stored = sess.table(entityTable)

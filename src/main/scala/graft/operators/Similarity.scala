@@ -1871,10 +1871,7 @@ object Similarity {
       .join(g.as("b"),
         col("a.src") === col("b.dst") && col("a.dst") === col("b.src"))
       .select(col("a.src").as("src"), col("a.dst").as("dst"))
-      .persist()
-    mutual.count() // eager: every CC round joins this frame
-    val labels =
-      try Dedup.connectedComponents(mutual).labels finally mutual.unpersist()
+    val labels = Dedup.connectedComponents(mutual).labels
     val nodes = withEmb(t).filter(col("vec_id") % 16 === 0)
       .select(col("vec_id"))
     val lab = nodes
@@ -2287,26 +2284,12 @@ object Similarity {
         .select(col("a.vec_id").as("src"), col("b.vec_id").as("dst"))
     }.reduce(_ unionByName _)
       .distinct() // a pair sharing both bands must not occupy 2 rank slots
-    // each round's graph is localCheckpoint'ed (eager): round r's
-    // plan would otherwise EMBED rounds 0..r−1 — five copies of the
-    // previous round per level via undir×undir ∪ g — so plan size
-    // (and Catalyst analysis + CacheManager canonicalization) grows
-    // 5^r with persist() alone, the exact lineage disease the BFS
-    // walks hit in r17 (EventAnalytics). Checkpointing cuts each
-    // round to a LogicalRDD leaf; the graph is already computed, so
-    // nothing is lost (production builds checkpoint per round for
-    // exactly this reason).
-    // localCheckpoint + constraint barrier: the checkpointed
-    // LogicalRDD carries origin constraints that can reference
-    // pre-checkpoint attribute ids, and UnionBase.rewriteConstraints
-    // crashes on them ("key not found") when the frame lands under a
-    // union — rebuilding from the checkpointed RDD + schema keeps the
-    // materialized blocks and drops the stale constraints
-    def ckpt(df: DataFrame): DataFrame = {
-      val c = df.localCheckpoint()
-      c.sparkSession.createDataFrame(c.rdd, c.schema)
-    }
-    var g = ckpt(rank(init))
+    // each round's graph is cut (Rounds.cut): round r's plan would
+    // otherwise EMBED rounds 0..r−1 — five copies of the previous
+    // round per level via undir×undir ∪ g — so plan size grows 5^r.
+    // Not Rounds.run: the recall union below reads every round, so
+    // no round is superseded and none is released.
+    var g = Rounds.cut(rank(init))
     var perRound = g.select(lit(0).as("round"), col("src"), col("dst"))
     for (r <- 1 to rounds) {
       // two-hop candidates via the NN-descent LOCAL JOIN (Dong et al.
@@ -2316,11 +2299,11 @@ object Similarity {
       // of the old self-join's two (undir keyed by dst AND by src are
       // different subplans, so nothing reuses; no distinct was needed
       // on undir — reciprocal duplicates die in the distinct below).
-      // Per-mid lists are bounded by 2·graphK by construction, so the
-      // collect+explode never holds more than (2k)² pairs per row —
-      // safe at any corpus size (unlike the init buckets, whose size
-      // scales with the corpus and which therefore keep the streaming
-      // join form above).
+      // A mid's list holds its graphK out-neighbours plus every node
+      // that ranks it among ITS graphK: only the out-degree is bounded.
+      // A hub's list grows with its in-degree, and its collect+explode
+      // row with the square of that (the init buckets, whose size
+      // scales with the corpus, keep the streaming join form above).
       val cands = g
         .select(explode(array(
           struct(col("src").as("mid"), col("dst").as("nbr")),
@@ -2334,7 +2317,7 @@ object Similarity {
         .filter(col("src") =!= col("dst"))
         .unionByName(g)
         .distinct()
-      g = ckpt(rank(cands))
+      g = Rounds.cut(rank(cands))
       perRound = perRound.unionByName(
         g.select(lit(r).as("round"), col("src"), col("dst")))
     }

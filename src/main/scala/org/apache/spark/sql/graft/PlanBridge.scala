@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 
 /** Bridge from a raw Catalyst [[LogicalPlan]] to a public DataFrame —
   * the `Dataset.ofRows` constructor is `private[sql]` in Spark 4, so
@@ -23,6 +23,16 @@ object PlanBridge {
     */
   def logicalPlan(df: DataFrame): LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].logicalPlan
+
+  /** A checkpointed frame (a bare [[LogicalRDD]]) with its leaf copied
+    * without origin constraints (the LogicalRDD's second parameter list
+    * is not public). The copy keeps the same RDD, so the blocks behind
+    * it can still be freed through it, and the same origin statistics. */
+  def withoutOriginConstraints(cut: DataFrame): DataFrame = {
+    val lr = logicalPlan(cut).asInstanceOf[LogicalRDD]
+    ofRows(cut.sparkSession, lr.copy()(
+      cut.sparkSession.asInstanceOf[classic.SparkSession], Some(lr.computeStats()), None))
+  }
 
   /** The session's stable UUID (`sessionUUID` is `private[sql]`) —
     * the correct per-session cache-key component: identityHashCode is

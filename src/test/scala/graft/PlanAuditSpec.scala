@@ -151,8 +151,8 @@ class PlanAuditSpec extends ShardTempRoot {
 
   test("events_kcore round body: degree count + survivor semi-joins are keyed, never nested-loop") {
     // the peel loop's per-round plan, reconstructed exactly as the
-    // operator builds it (the operator itself returns a staged
-    // parquet read-back, so the loop body is pinned here): symmetric
+    // operator builds it (the operator itself returns a cut frame, a
+    // bare LogicalRDD, so the loop body is pinned here): symmetric
     // degree partial-agg + two LEFT SEMI survivor filters — a
     // cartesian/nested-loop means the equi-keys got lost and a round
     // degenerates to all-pairs at scale
@@ -169,6 +169,38 @@ class PlanAuditSpec extends ShardTempRoot {
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
     assert(p.contains("partial_count") || p.contains("partial_"),
       s"no map-side combine on the degree count:\n$p")
+  }
+
+  test("round loops cut lineage: a result's plan has as many nodes at 6 rounds as at 2") {
+    // every round of a distributed loop is cut to a LogicalRDD leaf,
+    // so the returned plan must not grow with the rounds run; a loop
+    // that stops cutting embeds each earlier round in the next.
+    // ann_nndescent_build is left out: its recall union reads every
+    // round by design, one branch per round
+    import spark.implicits._
+    def chainCc(n: Long): DataFrame =
+      Dedup.connectedComponents(
+        (0L until n).flatMap(i => Seq((i, i + 1), (i + 1, i))).toDF("src", "dst"),
+        maxIters = 100, localMaxEdges = 0).labels
+    val loops: Seq[(String, DataFrame, DataFrame)] = Seq(
+      // a 3-node chain converges in 2 rounds, a 64-node one in many more
+      ("connected components", chainCc(2L), chainCc(63L)),
+      ("events_kcore", EventAnalytics.eventsKcore(tables, rounds = 2, localMaxEdges = 0L),
+        EventAnalytics.eventsKcore(tables, rounds = 6, localMaxEdges = 0L)),
+      ("events_shortest_paths",
+        EventAnalytics.eventsShortestPaths(tables, maxDist = 2, localMaxEdges = 0L),
+        EventAnalytics.eventsShortestPaths(tables, maxDist = 6, localMaxEdges = 0L)),
+      ("events_weighted_paths",
+        EventAnalytics.eventsWeightedPaths(tables, budget = 4L, localMaxEdges = 0L),
+        EventAnalytics.eventsWeightedPaths(tables, budget = 12L, localMaxEdges = 0L)))
+    def nodes(df: DataFrame): Int = df.queryExecution.analyzed.collect { case n => n }.size
+    try loops.foreach { case (name, short, long) =>
+      assert(nodes(short) == nodes(long),
+        s"$name: plan grew with the rounds run:\n${long.queryExecution.analyzed}")
+    } finally loops.foreach { case (_, short, long) =>
+      Rounds.release(short)
+      Rounds.release(long)
+    }
   }
 
   test("q_interval_overlap: grid rewrite is a (customer, cell) equi-join, never nested-loop") {

@@ -113,52 +113,67 @@ class DedupSpec extends ShardTempRoot {
       val d = distLabels.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(l == d, s"missing=${(d -- l).take(5)} extra=${(l -- d).take(5)}")
     } finally {
-      Dedup.releaseLabels(distLabels)
+      Rounds.release(distLabels)
       localLabels.unpersist(); ()
     }
   }
 
-  test("connected components: reliable-checkpoint mode converges through the configured dir") {
-    // the preemptible-fleet story: graft.cc.checkpointDir switches the
-    // per-round lineage cut from executor-local localCheckpoint to a
-    // RELIABLE checkpoint(), so executor loss costs one round, not the
-    // job — this drives the whole loop through that path
-    import org.apache.spark.sql.functions.col
-    import spark.implicits._
-    val dir = tmp("graft_cc_ckpt_")
-    spark.conf.set("graft.cc.checkpointDir", dir)
-    try {
+  /** Every distributed round loop, forced off its driver-local path
+    * (`localMaxEdges = 0`): connected components over a 32-node chain,
+    * the k-core peel and both seeded walks. */
+  private val roundLoops: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+    "connected components" -> { () =>
+      import spark.implicits._
       val chain = (0L until 32L).flatMap(i => Seq((i, i + 1), (i + 1, i)))
         .toDF("src", "dst")
-      val Dedup.Components(labels, iters, _) =
-        Dedup.connectedComponents(chain, maxIters = 100, localMaxEdges = 0)
-      assert(labels.filter(col("cluster_id") =!= 0L).count() == 0,
-        "reliable-checkpoint run did not converge to the component min")
-      assert(iters > 0)
-      def countFiles(p: java.io.File): Int =
-        Option(p.listFiles())
-          .map(_.map(f => if (f.isDirectory) countFiles(f) else 1).sum).getOrElse(0)
-      assert(countFiles(new java.io.File(dir)) > 0,
-        s"no checkpoint files landed under $dir — rounds bypassed the reliable path")
-      Dedup.releaseLabels(labels)
-    } finally spark.conf.unset("graft.cc.checkpointDir")
-  }
-
-  test("connected components: superseded rounds' blocks are released, nothing leaks") {
-    // checkpointed RDDs sit outside the CacheManager (clearCache is a
-    // no-op for them): the loop must unpersist each superseded round
-    // via the RDD handle, and releaseLabels must free the final frame
-    import org.apache.spark.sql.functions.col
-    import spark.implicits._
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val chain = (0L until 24L).flatMap(i => Seq((i, i + 1), (i + 1, i)))
-      .toDF("src", "dst")
-    val labels =
       Dedup.connectedComponents(chain, maxIters = 100, localMaxEdges = 0).labels
-    assert(labels.filter(col("cluster_id") =!= 0L).count() == 0)
-    Dedup.releaseLabels(labels)
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leaked.isEmpty, s"CC loop leaked persistent RDDs: $leaked")
+    },
+    "events_kcore" -> (() => EventAnalytics.eventsKcore(tables, localMaxEdges = 0L)),
+    "events_shortest_paths" ->
+      (() => EventAnalytics.eventsShortestPaths(tables, localMaxEdges = 0L)),
+    "events_weighted_paths" ->
+      (() => EventAnalytics.eventsWeightedPaths(tables, localMaxEdges = 0L)))
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  roundLoops.foreach { case (name, loop) =>
+    test(s"$name: reliable-checkpoint mode converges through the configured dir") {
+      // the preemptible-fleet story: graft.cc.checkpointDir switches
+      // every round's cut from executor-local to a RELIABLE
+      // checkpoint, so executor loss costs one round, not the run
+      val local = loop()
+      val expected = sortedRows(local)
+      Rounds.release(local)
+      val dir = tmp("graft_cc_ckpt_")
+      spark.conf.set("graft.cc.checkpointDir", dir)
+      try {
+        val reliable = loop()
+        assert(sortedRows(reliable) == expected,
+          s"$name: reliable-checkpoint rows differ from the local-cut run")
+        def countFiles(p: java.io.File): Int =
+          Option(p.listFiles())
+            .map(_.map(f => if (f.isDirectory) countFiles(f) else 1).sum).getOrElse(0)
+        assert(countFiles(new java.io.File(dir)) > 0,
+          s"no checkpoint files landed under $dir — rounds bypassed the reliable path")
+        Rounds.release(reliable)
+      } finally spark.conf.unset("graft.cc.checkpointDir")
+    }
+
+    test(s"$name: superseded rounds' blocks are released, nothing leaks") {
+      // cut RDDs sit outside the CacheManager (clearCache is a no-op
+      // for them): the loop must free each superseded round through
+      // the RDD handle, so once the result is collected at most the
+      // cut behind it is live, and Rounds.release frees that one
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val result = loop()
+      result.collect()
+      val live = spark.sparkContext.getPersistentRDDs.keySet -- before
+      Rounds.release(result)
+      assert(live.size <= 1, s"$name kept ${live.size} persistent RDDs live: $live")
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(leaked.isEmpty, s"$name leaked persistent RDDs: $leaked")
+    }
   }
 
   test("dedup_clusters_incremental: stored-state merge equals the full recompute") {

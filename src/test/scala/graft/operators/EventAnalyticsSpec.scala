@@ -332,6 +332,25 @@ class EventAnalyticsSpec extends ShardTempRoot {
     assert(r4.exceptAll(r5).isEmpty && r5.exceptAll(r4).isEmpty)
   }
 
+  test("events_kcore: forced-distributed calls stage nothing, and an earlier result outlives a later call") {
+    // the result is backed by the loop's own cut, not a staged parquet
+    // dir: no call adds a staging entry, and a second call (another k)
+    // cannot disturb the rows a frame returned earlier still reads
+    val root = graft.sources.SourceOps.stagingDir.toFile
+    def entries(): Set[String] = Option(root.list()).map(_.toSet).getOrElse(Set.empty)
+    val before = entries()
+    val first = EventAnalytics.eventsKcore(tables, localMaxEdges = 0L)
+    val firstRows = first.collect().map(_.toString).sorted.toSeq
+    val second = EventAnalytics.eventsKcore(tables, k = 2, localMaxEdges = 0L)
+    assert(second.collect().map(_.toString).sorted.toSeq != firstRows,
+      "degenerate: k = 2 and k = 5 peel this graph alike")
+    assert(entries() -- before == Set.empty, s"staged: ${entries() -- before}")
+    assert(first.collect().map(_.toString).sorted.toSeq == firstRows,
+      "the first result changed after a second call")
+    Rounds.release(first)
+    Rounds.release(second)
+  }
+
   test("events_neighbor_jaccard equals a naive adjacency-set replay") {
     // independent algorithm: per-edge set intersection over driver
     // adjacency maps, vs the operator's oriented-wedge enumeration
