@@ -692,7 +692,7 @@ object SparkEntry {
     // scores ALL pairs so any blocking hole fails the hash gate
     "er_fuzzy_pairs"      -> q(Governance.erFuzzyPairs),
     "er_blocking_eval"    -> q(Governance.erBlockingEval),
-    "er_resolve_clusters" -> q(Governance.erResolveClusters),
+    "er_resolve_clusters" -> q(t => Governance.erResolveClusters(t)),
     "er_resolve_incremental" -> q(Governance.erResolveIncremental),
     "q_compaction"        -> q(t => graft.sources.SourceOps.qCompaction(t)),
     "q_incremental_rollup" -> q(t => graft.sources.SourceOps.incrementalRollup(t)),

@@ -424,14 +424,16 @@ object Governance {
     * entity id. The DuckDB oracle recomputes the closure from the
     * ALL-PAIRS match set via a recursive CTE, so both the blocking
     * completeness AND the distributed CC are checked against ground
-    * truth every round.
+    * truth every round. `localMaxEdges = 0` forces the distributed
+    * loop.
     */
-  def erResolveClusters(t: Tables): DataFrame = {
+  def erResolveClusters(t: Tables,
+      localMaxEdges: Long = Dedup.LocalCcMaxEdges): DataFrame = {
     val matches = erPairs(t).select(col("key_1"), col("key_2"))
     val edges = matches
       .select(col("key_1").as("src"), col("key_2").as("dst"))
       .union(matches.select(col("key_2").as("src"), col("key_1").as("dst")))
-    val cc = Dedup.connectedComponents(edges)
+    val cc = Dedup.connectedComponents(edges, localMaxEdges = localMaxEdges)
     if (cc.local) {
       // adaptive driver-local CC path (small match graph): the labels
       // are a LocalRelation — no checkpoint blocks to release and
@@ -444,9 +446,12 @@ object Governance {
       // writing it out here doubles as the deterministic release
       // point for the CC rounds' checkpoint blocks, which live
       // outside the CacheManager and would otherwise linger until
-      // ContextCleaner GC (see Rounds.release)
+      // ContextCleaner GC (see Rounds.release). Each call writes its
+      // own dir: the returned frame reads it, so a later call must not
+      // overwrite it
       val labelPath = graft.sources.SourceOps.staging(
-        s"er_labels_${graft.sources.SourceOps.dirTag(t.dir)}")
+        s"er_labels_${graft.sources.SourceOps.dirTag(t.dir)}_" +
+          java.util.UUID.randomUUID)
       cc.labels.write.mode("overwrite").parquet(labelPath)
       Rounds.release(cc.labels)
       goldenOf(t.part, t.spark.read.parquet(labelPath))

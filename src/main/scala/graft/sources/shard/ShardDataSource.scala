@@ -77,8 +77,12 @@ class ShardDataSource extends TableProvider
   }
 }
 
+/** A gshard table at `dir`. `pinnedVersion` freezes it at a retained
+  * generation; `planned` is a manifest the caller already holds, which
+  * its scans plan on instead of reading one ([[ShardTable.scan]]). */
 private[shard] class ShardTable(dir: String, tableSchema: StructType,
-    pinnedVersion: Option[Long] = None)
+    pinnedVersion: Option[Long] = None,
+    planned: Option[ShardFormat.Manifest] = None)
     extends Table with SupportsRead with SupportsWrite with SupportsDelete
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns
     with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations {
@@ -135,19 +139,9 @@ private[shard] class ShardTable(dir: String, tableSchema: StructType,
       TableCapability.MICRO_BATCH_READ,
       TableCapability.BATCH_WRITE, TableCapability.TRUNCATE)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val version = pinnedVersion
-      .orElse(Option(options.get("versionasof")).map(_.toLong))
-    val m = ShardFormat.readManifestVersion(dir, version)
-    // `files` option: restrict the scan to a named entry subset — the
-    // internal handle ShardOps.upsert uses to read EXACTLY the files
-    // it will rewrite through the normal pruned/pushed scan path
-    val restricted = Option(options.get("files")) match {
-      case None => m
-      case Some(fs) =>
-        val want = fs.split(",").map(_.trim).filter(_.nonEmpty).toSet
-        m.copy(entries = m.entries.filter(e => want(e.file)))
-    }
-    new ShardScanBuilder(dir, restricted, options)
+    val m = planned.getOrElse(ShardFormat.readManifestVersion(dir,
+      pinnedVersion.orElse(Option(options.get("versionasof")).map(_.toLong))))
+    new ShardScanBuilder(dir, m, options)
   }
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     require(pinnedVersion.isEmpty,
@@ -274,6 +268,19 @@ private[shard] class ShardTable(dir: String, tableSchema: StructType,
       m.copy(entries = m.entries.filter(disjoint(_, filters)))
     }
   }
+}
+
+private[shard] object ShardTable {
+
+  /** The visible rows of `m`'s entries at `dir`, planned on `m`: the
+    * scan reads no manifest, and pruning, projection and delete masks
+    * apply as in any gshard read. */
+  def scan(spark: org.apache.spark.sql.SparkSession, dir: String,
+      m: ShardFormat.Manifest): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.graft.PlanBridge.ofRows(spark,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+        .create(new ShardTable(dir, ShardFormat.visible(m.schema),
+          planned = Some(m)), None, None, CaseInsensitiveStringMap.empty()))
 }
 
 /** The DSv2 WRITE path: `df.write.format("gshard").save(dir)`.

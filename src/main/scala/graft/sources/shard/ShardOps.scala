@@ -1,8 +1,12 @@
 package graft.sources.shard
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanBridge
 
 /** Row-level mutation through the gshard catalog — what DELETE's
   * metadata-only surgery can't express: the copy-on-write [[merge]]
@@ -192,27 +196,39 @@ object ShardOps {
     * the key's rows; every other key passes through unchanged. `source`
     * may have any schema; each output row must carry its key and the
     * table's visible columns, or the commit fails before it publishes.
-    * One call runs two Spark actions:
+    * One call runs at most two Spark actions:
     *
-    *  1. the SOURCE PASS — one query over the source keys that returns
-    *     the TOUCHED files (each key matched on the executors against
-    *     the manifest's per-file key zone maps, which are
-    *     metadata-sized: a file is rewritten only if some source key
-    *     falls inside its [min,max] — everything else is untouched,
-    *     zero read, zero write), the keys' clustering range, and with
-    *     `uniqueKeys` the first duplicate or NULL key, which fails the
-    *     merge before any file is written;
+    *  1. the SOURCE PASS — a summary of the source keys: the TOUCHED
+    *     files (each key matched against the manifest's per-file key
+    *     zone maps, which are metadata-sized: a file is rewritten only
+    *     if some source key falls inside its [min,max] — everything
+    *     else is untouched, zero read, zero write), the keys'
+    *     clustering range, and with `uniqueKeys` the first duplicate
+    *     or NULL key, which fails the merge before any file is
+    *     written. Where the source rows already are decides where it
+    *     runs: a driver-held source (`createDataFrame` over a local
+    *     collection, `toDF`, which Catalyst folds with the key
+    *     projection into one `LocalRelation`) is summarised on the
+    *     driver and starts no job; any other source runs one query
+    *     (a `groupBy` on the key with `uniqueKeys`) that summarises
+    *     each partition on the executors;
     *  2. the FUSED REWRITE ([[ShardFormat.writeMerge]]) — the touched
-    *     rows (a `files`-restricted connector scan: pruning, projection
-    *     and delete masks apply) and the source rows go through ONE
-    *     key-clustered shuffle; each write task streams a key without
-    *     source rows into the shard's data file and runs `perKey` on a
-    *     key with them (at most [[ShardFormat.DefaultChunkRows]] rows,
-    *     or the commit fails naming the key): its output lands in the
-    *     data file, its NET difference against its touched rows in the
-    *     shard's `chg-` change file, so a CDC consumer streams
-    *     O(changed rows) per commit. The touched files' zone maps and
-    *     the source pass give the shard range: no min/max job;
+    *     rows (a connector scan planned on the merge's head, restricted
+    *     to the touched entries: pruning, projection and delete masks
+    *     apply, and it reads no manifest) and the source rows go
+    *     through ONE key-clustered shuffle; each write task streams a
+    *     key without source rows into the shard's data file and runs
+    *     `perKey` on a key with them (at most
+    *     [[ShardFormat.DefaultChunkRows]] rows, or the commit fails
+    *     naming the key): its output lands in the data file, its NET
+    *     difference against its touched rows in the shard's `chg-`
+    *     change file, so a CDC consumer streams O(changed rows) per
+    *     commit. The touched files' zone maps and the source pass give
+    *     the shard range: no min/max job. A rewrite that fails deletes
+    *     every file it staged. With AQE the rewrite is two jobs (its
+    *     shuffle map stage, then the write), so an upsert of a
+    *     driver-held source runs two jobs and one of a distributed
+    *     source four;
     *  3. the generational [[ShardFormat.commit]] with the txn slot
     *     advanced: the head archives (VERSION AS OF still reads the
     *     pre-merge table), replaced bytes reclaim at
@@ -290,27 +306,46 @@ object ShardOps {
         val zones = bounded.map(e => (e.zMin(keyCol), e.zMax(keyCol)))
         (r, hit) => markZones(zones, r.getLong(1), hit)
       }
-    val keyed =
-      if (uniqueKeys) source.groupBy(col(keyCol)).agg(count(lit(1)).as("n"))
-      else source.select(col(keyCol), lit(1L).as("n"))
-    val parts = keyed.select(col(keyCol), clusterExpr, col("n")).rdd
-      .mapPartitions { it =>
-        val hit = new java.util.BitSet
-        var lo = Long.MaxValue
-        var hi = Long.MinValue
-        var bad: Option[String] = None
-        it.foreach { r =>
-          val dup = r.getLong(2) > 1 || (uniqueKeys && r.isNullAt(0))
-          if (bad.isEmpty && dup)
-            bad = Some(Row(r.get(0), r.getLong(2)).toString)
-          if (!r.isNullAt(0) && !r.isNullAt(1)) {
-            lo = math.min(lo, r.getLong(1))
-            hi = math.max(hi, r.getLong(1))
-            mark(r, hit)
-          }
+    // one summary of (key, clustering long, source rows of the key)
+    // rows: the files they fall in, their clustering range, and with
+    // `uniqueKeys` the first duplicate or NULL key
+    def summarize(it: Iterator[Row]) = {
+      val hit = new java.util.BitSet
+      var lo = Long.MaxValue
+      var hi = Long.MinValue
+      var bad: Option[String] = None
+      it.foreach { r =>
+        val dup = r.getLong(2) > 1 || (uniqueKeys && r.isNullAt(0))
+        if (bad.isEmpty && dup)
+          bad = Some(Row(r.get(0), r.getLong(2)).toString)
+        if (!r.isNullAt(0) && !r.isNullAt(1)) {
+          lo = math.min(lo, r.getLong(1))
+          hi = math.max(hi, r.getLong(1))
+          mark(r, hit)
         }
-        Iterator((hit, lo, hi, bad))
-      }.collect() // one summary per source partition
+      }
+      (hit, lo, hi, bad)
+    }
+    val probe = source.select(col(keyCol), clusterExpr)
+    val parts = probe.queryExecution.optimizedPlan match {
+      // driver-held rows: Catalyst folds a `createDataFrame`/`toDF`
+      // source with these projections into one LocalRelation, whose
+      // collect() starts no job; the keys are counted here
+      case _: LocalRelation =>
+        val rows = probe.collect()
+        val n: Any => Long =
+          if (uniqueKeys) rows.groupMapReduce(_.get(0))(_ => 1L)(_ + _)
+          else _ => 1L
+        Seq(summarize(rows.iterator.map(r =>
+          Row(r.get(0), r.get(1), n(r.get(0))))))
+      case _ =>
+        val keyed =
+          if (uniqueKeys) source.groupBy(col(keyCol)).agg(count(lit(1)).as("n"))
+          else source.select(col(keyCol), lit(1L).as("n"))
+        keyed.select(col(keyCol), clusterExpr, col("n")).rdd
+          .mapPartitions(it => Iterator(summarize(it)))
+          .collect().toSeq // one summary per source partition
+    }
     val bad = parts.flatMap(_._4).headOption
     require(bad.isEmpty,
       s"gshard merge: duplicate or NULL key in updates (${bad.getOrElse("")})")
@@ -329,9 +364,8 @@ object ShardOps {
       struct(source.columns.toSeq.map(col): _*).as("__source"))
     val tagged =
       if (touched.isEmpty) sourceSide
-      else sourceSide.union(spark.read.format("gshard")
-        .option("files", touched.mkString(","))
-        .load(dir)
+      else sourceSide.union(ShardTable.scan(spark, dir,
+          head.copy(entries = touchedEntries))
         .select(col(keyCol), lit(ShardFormat.TouchedSide),
           struct(visSchema.fieldNames.toSeq.map(col): _*),
           lit(null).cast(source.schema)))
@@ -357,10 +391,12 @@ object ShardOps {
     // invariant unconditionally
     val prefix = s"m${head.gen + 1}x" +
       java.util.UUID.randomUUID.toString.take(8) + "-"
-    val (fresh, changeEntries) = ShardFormat.writeMerge(tagged, dir,
-      head.schema, clusterExpr, shards, bounds, prefix,
-      // rewritten files keep the table's bloom set (manifest-derived)
-      bloomCols = head.entries.flatMap(_.bloom.keys).toSet, perKey = perKey)
+    val (fresh, changeEntries) = sweepOnFailure(spark, dir, prefix) {
+      ShardFormat.writeMerge(tagged, dir, head.schema, clusterExpr, shards,
+        bounds, prefix,
+        // rewritten files keep the table's bloom set (manifest-derived)
+        bloomCols = head.entries.flatMap(_.bloom.keys).toSet, perKey = perKey)
+    }
 
     // 3. OPTIMISTIC commit: this merge planned (touched files, touched
     // read, txn slots) against head.gen — if a concurrent writer moved
@@ -371,6 +407,32 @@ object ShardOps {
       staged = (fresh ++ changeEntries).map(_.file),
       changes = changeEntries.map(e => (e.file, e.rows)), cdf = true)(
       _ => head.copy(entries = untouched ++ fresh))
+  }
+
+  /** Runs `write`, the rewrite that stages files whose names hold
+    * `prefix`. If it fails, waits until its jobs' tasks have stopped
+    * (a task of a failed job may still be writing), deletes every such
+    * file in `dir`, and rethrows: a failed merge leaves nothing behind. */
+  private def sweepOnFailure[A](spark: SparkSession, dir: String,
+      prefix: String)(write: => A): A = {
+    val sc = spark.sparkContext
+    val tag = s"gshard-merge-$prefix"
+    sc.addJobTag(tag)
+    try write
+    catch { case t: Throwable =>
+      val st = sc.statusTracker
+      def running: Int = {
+        PlanBridge.drainListenerBus(spark)
+        st.getJobIdsForTag(tag).iterator.flatMap(st.getJobInfo(_))
+          .flatMap(_.stageIds).flatMap(st.getStageInfo(_))
+          .map(_.numActiveTasks).sum
+      }
+      val deadline = System.nanoTime + 60L * 1000 * 1000 * 1000
+      while (running > 0 && System.nanoTime < deadline) Thread.sleep(10)
+      ShardFormat.listDir(Paths.get(dir)).filter(_.contains(prefix))
+        .foreach(f => Files.deleteIfExists(Paths.get(dir, f)))
+      throw t
+    } finally sc.removeJobTag(tag)
   }
 
   /** The string clustering long on the driver: the key's first 7 UTF-8

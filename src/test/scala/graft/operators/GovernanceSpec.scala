@@ -84,6 +84,18 @@ class GovernanceSpec extends SparkSpec {
       s"missing=${(expected -- got).take(5)} extra=${(got -- expected).take(5)}")
   }
 
+  test("er_resolve_clusters: a forced-distributed result outlives a later call") {
+    // each call stages its own labels: a second call must not replace
+    // the files the first call's frame still reads
+    val first = Governance.erResolveClusters(tables, localMaxEdges = 0L)
+    val n = first.count()
+    assert(n > 0, "degenerate: no multi-member entity at this SF")
+    val second = Governance.erResolveClusters(tables, localMaxEdges = 0L)
+    assert(second.count() == n)
+    assert(first.count() == n, "the first result changed after a second call")
+    assert(first.collect().toSet == Governance.erResolveClusters(tables).collect().toSet)
+  }
+
   test("er_resolve_incremental equals the full re-resolve and crosses the split") {
     val t = tables
     def asSet(df: org.apache.spark.sql.DataFrame) = df.collect()

@@ -185,7 +185,7 @@ class ShardCommitSpec extends ShardTempRoot {
         val d = pathTable("r_ups")
         () => ShardOps.upsert(spark, d, rows(1000, 1010), "id")
       }),
-      ("upsert, touched files", 4L, () => {
+      ("upsert, touched files", 2L, () => {
         val d = pathTable("r_upt")
         () => ShardOps.upsert(spark, d, rows(90, 110), "id")
       }),

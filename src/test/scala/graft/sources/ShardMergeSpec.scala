@@ -365,6 +365,9 @@ class ShardMergeSpec extends ShardTempRoot {
   private def files(d: String) =
     ShardFormat.readManifest(d).entries.map(_.file).toSet
 
+  /** Every file name in `d`. */
+  private def listing(d: String) = ShardFormat.listDir(Paths.get(d)).toSet
+
   private def mergeKv(d: String, rows: Seq[(Long, Long)], txnId: Long = -1L,
       app: Option[String] = None): Unit =
     ShardOps.merge(spark, d, kv(rows: _*), "k", 0, txnId, app)(latest)
@@ -391,6 +394,7 @@ class ShardMergeSpec extends ShardTempRoot {
   test("merge: a key past the per-key row bound fails the commit, " +
       "naming the key") {
     val d = kvTable("sm_bound", 64, 4)
+    val listed = listing(d)
     val big = spark.range(ShardFormat.DefaultChunkRows.toLong + 1)
       .select(lit(5L).as("k"), col("id").as("v"))
     val ex = intercept[Exception] {
@@ -399,11 +403,13 @@ class ShardMergeSpec extends ShardTempRoot {
     assert(ex.getMessage.contains(
       s"key 5 brings more than ${ShardFormat.DefaultChunkRows}"), ex.getMessage)
     assert(gen(d) == 0L && head(d).toMap.apply(5L) == 50L)
+    assert(listing(d) == listed, "the failed rewrite left its staged files")
   }
 
   test("merge: a per-key output that does not match the table's columns " +
       "or its key fails the commit") {
     val d = kvTable("sm_badout", 64, 4)
+    val listed = listing(d)
     val wrongType: ShardOps.PerKey = (_, s) =>
       Seq(InternalRow(s.head.getLong(0), UTF8String.fromString("x")))
     val wrongKey: ShardOps.PerKey = (_, s) =>
@@ -413,8 +419,28 @@ class ShardMergeSpec extends ShardTempRoot {
         ShardOps.merge(spark, d, kv((7L, 1L)), "k", 0, -1L, None)(f)
       }
       assert(ex.getMessage.contains("does not match"), ex.getMessage)
+      assert(listing(d) == listed, "the failed rewrite left its staged files")
     }
     assert(gen(d) == 0L && head(d).toMap.apply(7L) == 70L)
+  }
+
+  test("merge: a failed rewrite deletes the files its other tasks " +
+      "wrote, before and after the failure") {
+    val d = kvTable("sm_late", 64, 4)
+    val listed = listing(d)
+    // 5 shards of 13 keys over [0, 64]: keys 7, 30 and 64 fall in
+    // shards 0, 2 and 4, which hash to three different write tasks.
+    // Key 30's task writes its files before key 7's task fails; key 64
+    // is its task's last row, so its per-key call runs after the
+    // task's input ends, and that task writes after the job has failed
+    val ex = intercept[Exception] {
+      ShardOps.merge(spark, d, kv((7L, 1L), (30L, 1L), (64L, 1L)), "k", 5,
+        -1L, None)(slowFailOn7)
+    }
+    assert(ex.getMessage.contains("fail at 7"), ex.getMessage)
+    Thread.sleep(2500) // key 64's files land about 1 s after the failure
+    assert(listing(d) == listed, "the failed rewrite left its staged files")
+    assert(gen(d) == 0L)
   }
 
   test("merge: a key-local function applies and bumps the generation") {
@@ -617,9 +643,9 @@ class ShardMergeSpec extends ShardTempRoot {
 
   // ── per-commit job budget ─────────────────────────────────────────
 
-  test("job budget: an upsert into an 8-file table with untouched " +
-      "files runs at most 4 Spark jobs (one source pass, one fused " +
-      "rewrite)") {
+  test("job budget: an upsert of driver-held rows into an 8-file table " +
+      "with untouched files runs at most 2 Spark jobs (the fused " +
+      "rewrite; the source pass runs on the driver)") {
     val sess = spark
     import sess.implicits._
     val d = tmp("jobs_upsert")
@@ -632,11 +658,11 @@ class ShardMergeSpec extends ShardTempRoot {
     assert(before.size == 8 &&
       after.entries.map(_.file).toSet.intersect(before).size == 7)
     assert(after.changes.map(_._2).sum == 30L) // 10 updated ×2, 10 new
-    assert(jobs <= 4, s"upsert ran $jobs Spark jobs")
+    assert(jobs <= 2, s"upsert ran $jobs Spark jobs")
   }
 
-  test("job budget: the SCD2 merge (Scale.scd2PerKey) runs at most " +
-      "3 Spark jobs") {
+  test("job budget: the SCD2 merge (Scale.scd2PerKey) of driver-held " +
+      "rows runs at most 2 Spark jobs") {
     val sess = spark
     import sess.implicits._
     val d = tmp("jobs_scd2")
@@ -652,7 +678,84 @@ class ShardMergeSpec extends ShardTempRoot {
     val jobs = JobCount(spark)(ShardOps.merge(spark, d, incr, "user_id", 0,
       -1L, None)(Scale.scd2PerKey))
     assert(spark.read.format("gshard").load(d).count() == 42L)
-    assert(jobs <= 3, s"SCD2 merge ran $jobs Spark jobs")
+    assert(jobs <= 2, s"SCD2 merge ran $jobs Spark jobs")
+  }
+
+  // ── the source pass: driver-held versus distributed sources ───────
+
+  /** Upserts `updates` (driver-held) into one fresh copy of `table`,
+    * and the same rows as a distributed frame into another; returns
+    * per side (jobs run, the key bounds of each file rewritten, the
+    * table's rows after). Both copies are written alike, so equal
+    * bounds mean the same files. */
+  private def upsertBothWays(tag: String, table: DataFrame, key: String,
+      shards: Int, updates: DataFrame) = {
+    val distributed = spark.createDataFrame(updates.rdd, updates.schema)
+    Seq(updates, distributed).zipWithIndex.map { case (u, i) =>
+      val d = tmp(s"${tag}_$i")
+      table.write.format("gshard").option("rangecol", key)
+        .option("shards", shards.toLong).mode("overwrite").save(d)
+      val before = ShardFormat.readManifest(d).entries
+      val jobs = JobCount(spark)(ShardOps.upsert(spark, d, u, key))
+      val kept = files(d)
+      val touched = before.filterNot(e => kept(e.file)).map(e =>
+        (e.zMin.get(key), e.zMax.get(key), e.sMin.get(key), e.sMax.get(key)))
+      (jobs, touched.toSet, spark.read.format("gshard").load(d)
+        .collect().map(_.toSeq).sortBy(_.toString).toSeq)
+    } match { case Seq(local, dist) => (local, dist) }
+  }
+
+  test("source pass: a distributed source upserts in at most 4 jobs " +
+      "and leaves the table the driver-held upsert leaves") {
+    val sess = spark
+    import sess.implicits._
+    val updates = (990L until 1010L).map(i => (i, s"UPD$i", i * 100L))
+      .toDF("id", "tag", "score")
+    val ((lJobs, lTouched, lRows), (dJobs, dTouched, dRows)) =
+      upsertBothWays("both_long", base(1000), "id", 8, updates)
+    assert(lJobs <= 2, s"driver-held upsert ran $lJobs Spark jobs")
+    assert(dJobs <= 4, s"distributed upsert ran $dJobs Spark jobs")
+    assert(lTouched.nonEmpty && lTouched.size < 8 && dTouched == lTouched,
+      (lTouched, dTouched))
+    assert(lRows.size == 1010 && dRows == lRows)
+  }
+
+  test("source pass: a STRING-keyed driver-held upsert rewrites the " +
+      "files the distributed pass marks") {
+    val sess = spark
+    import sess.implicits._
+    val table = (0 until 1000).map(i => (f"k$i%04d", i.toLong))
+      .toDF("key", "score")
+    // keys in two files' ranges, one past every file
+    val updates = ((100 until 105).map(i => (f"k$i%04d", -1L)) ++
+      (990 until 995).map(i => (f"k$i%04d", -2L)) :+ (("zz_new", 7L)))
+      .toDF("key", "score")
+    val ((lJobs, lTouched, lRows), (_, dTouched, dRows)) =
+      upsertBothWays("both_str", table, "key", 8, updates)
+    assert(lJobs <= 2, s"driver-held upsert ran $lJobs Spark jobs")
+    assert(lTouched.size >= 2 && lTouched.size < 8 && dTouched == lTouched,
+      (lTouched, dTouched))
+    assert(lRows.size == 1001 && dRows == lRows)
+  }
+
+  test("source pass: driver-held duplicate and NULL keys reject before " +
+      "any file is written") {
+    val sess = spark
+    import sess.implicits._
+    val d = tmp("local_dup")
+    ShardFormat.write(base(100), d, "id", 2)
+    val listed = listing(d)
+    val dup = Seq((7L, "a", 1L), (7L, "b", 2L)).toDF("id", "tag", "score")
+    val nul = Seq[(java.lang.Long, String, Long)]((null, "a", 1L),
+      (8L, "b", 2L)).toDF("id", "tag", "score")
+    for (bad <- Seq(dup, nul)) {
+      val ex = intercept[IllegalArgumentException] {
+        ShardOps.upsert(spark, d, bad, "id")
+      }
+      assert(ex.getMessage.contains("duplicate or NULL key"), ex.getMessage)
+      assert(listing(d) == listed)
+    }
+    assert(gen(d) == 0L)
   }
 
   leavesNoTempDirs()
@@ -674,6 +777,21 @@ object ShardMergeSpec {
   val crashOn7: ShardOps.PerKey = (touched, source) =>
     if (source.head.getLong(0) == 7L) throw new IllegalStateException("crash")
     else latest(touched, source)
+
+  /** Key 7 fails its write task after 0.5 s, key 64 merges as
+    * [[latest]] after 1.5 s, and every other key at once. The waits
+    * spin: a cancelled task's interrupt does not cut them short. */
+  val slowFailOn7: ShardOps.PerKey = (touched, source) => {
+    def spin(ms: Long): Unit = {
+      val until = System.nanoTime + ms * 1000L * 1000L
+      while (System.nanoTime < until) {}
+    }
+    source.head.getLong(0) match {
+      case 7L => spin(500); throw new IllegalStateException("fail at 7")
+      case 64L => spin(1500); latest(touched, source)
+      case _ => latest(touched, source)
+    }
+  }
 
   /** Every call of [[logged]]: (key, touched (k, v) rows, source (k, v)
     * rows). */
