@@ -10,6 +10,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan,
@@ -661,7 +662,9 @@ object ShardFormat {
 
   /** Write `df` as `nShards` range-clustered shard files + manifest.
     * `rangeCol` must be a non-null long column; every column must have
-    * a [[typeTag]] (nullable — nulls roundtrip exactly).
+    * a [[typeTag]] (nullable — nulls roundtrip exactly). One job reads
+    * the key range before the directory is touched, so a NULL key
+    * fails it and leaves the directory as it was.
     *
     * This is a REBUILD, not a commit on top: the directory is deleted
     * first and the table starts again at generation 0, so no earlier
@@ -677,9 +680,24 @@ object ShardFormat {
     }
     require(schema(rangeCol).dataType == LongType,
       s"range column $rangeCol must be long")
+    // each non-empty partition's key range
+    val ranges = PlanBridge.collectPartitions(df.select(col(rangeCol)),
+        "gshard range") { it =>
+      var lo = Long.MaxValue
+      var hi = Long.MinValue
+      it.foreach { r =>
+        require(!r.isNullAt(0), s"gshard: range column $rangeCol must be non-null")
+        lo = math.min(lo, r.getLong(0))
+        hi = math.max(hi, r.getLong(0))
+      }
+      if (lo > hi) Iterator.empty else Iterator.single((lo, hi))
+    }
     deleteTree(Paths.get(dir))
     Files.createDirectories(Paths.get(dir))
-    val entries = writeData(df, dir, rangeCol, nShards, chunkRows)
+    val entries =
+      if (ranges.isEmpty) Seq.empty // an empty frame: no shard file
+      else writeData(df, dir, col(rangeCol),
+        (ranges.map(_._1).min, ranges.map(_._2).max), nShards, chunkRows)
     commit(dir, basedOn = Some(-1L))(_ => Manifest(schema, entries))
   }
 
@@ -693,53 +711,23 @@ object ShardFormat {
     }
 
   /** The range-clustered DATA write alone — shard files land in `dir`
-    * (named `part-<prefix><shard>.gshard`) and their manifest entries
-    * return to the caller, who decides how to publish them (fresh
-    * manifest for [[write]], entry merge for [[ShardOps.merge]]).
-    * Nothing is visible to readers until a manifest names the files.
-    * A caller that already knows the clustering key's range passes
-    * `bounds` and skips the min/max job; the shard id is clamped into
-    * [0, nShards), so bounds that miss some keys cost locality only. */
-  private[shard] def writeData(df: DataFrame, dir: String, rangeCol: String,
-      nShards: Int, chunkRows: Int = DefaultChunkRows,
-      prefix: String = "", bloomCols: Set[String] = Set.empty,
-      rangeExpr: Option[Column] = None,
-      namePrefix: String = "part-",
-      bounds: Option[(Long, Long)] = None)
-      : Seq[ShardEntry] = {
+    * (named `<namePrefix><prefix><shard>.gshard`) and their manifest
+    * entries return to the caller, who decides how to publish them
+    * (fresh manifest for [[write]], change files for
+    * [[ShardOps.deleteMor]]). Nothing is visible to readers until a
+    * manifest names the files. `rk` is the clustering key as a storage
+    * long and `bounds` its range, which the caller knows; shard `i`
+    * holds the keys of the `i`-th of `nShards` equal-width slices of
+    * it, and neither the bounds nor any other per-call value becomes a
+    * SQL literal, so repeated writes reuse their generated code
+    * ([[clusteredWrite]]). */
+  private[shard] def writeData(df: DataFrame, dir: String, rk: Column,
+      bounds: (Long, Long), nShards: Int, chunkRows: Int = DefaultChunkRows,
+      prefix: String = "", namePrefix: String = "part-"): Seq[ShardEntry] = {
     val schema = df.schema
-    // the CLUSTERING key as a storage long: the column itself for the
-    // long/int default, or a caller-supplied exact storage encoding
-    // (micros/days/unscaled — or a lexicographic prefix for string
-    // keys, where the long only drives LOCALITY and the real string
-    // zone maps drive pruning)
-    // without an explicit storage-long expression the range column
-    // itself must BE long-encoded: cast("long") on a non-numeric
-    // string yields NULL, and a silently-NULL bound would publish an
-    // EMPTY table where the old path threw — keep the failure loud
-    if (rangeExpr.isEmpty)
-      require(physicallyLong(schema(rangeCol).dataType),
-        s"gshard: range column $rangeCol must be long-encoded " +
-          s"(got ${schema(rangeCol).dataType}); string keys need an " +
-          "explicit rangeExpr")
-    val rk = rangeExpr.getOrElse(col(rangeCol)).cast("long")
-    val known = bounds.orElse {
-      val b = df.agg(min(rk), max(rk)).head()
-      // NULL bounds must mean an EMPTY input (zero shard files), never
-      // an uncastable range expression silently emptying the table
-      if (b.isNullAt(0)) {
-        require(df.isEmpty,
-          s"gshard: range key $rangeCol evaluated NULL on a non-empty " +
-            "frame — the clustering expression does not cover the data")
-        None
-      } else Some((b.getLong(0), b.getLong(1)))
-    }
-    known.fold(Seq.empty[ShardEntry]) { case (lo, hi) =>
-      clusteredWrite(df, rk, lo, hi, nShards,
-        schema.fieldNames.toSeq.map(col)) { it =>
-        writeTaskShards(it, dir, schema, chunkRows, prefix, bloomCols,
-          namePrefix)
-      }
+    clusteredWrite(df, rk, bounds, nShards,
+      schema.fieldNames.toSeq.map(col)) { it =>
+      writeTaskShard(it, dir, schema, chunkRows, prefix, namePrefix)
     }
   }
 
@@ -752,43 +740,62 @@ object ShardFormat {
 
   /** The fused MERGE rewrite: one clustered write of `tagged` (key,
     * input side, touched row as a struct of the visible columns, source
-    * row as a struct), sorted by (shard, key, side) for
-    * [[mergeTaskShards]]. Returns (data entries, change entries). */
+    * row as a struct), each shard's rows sorted by (key, side) for
+    * [[mergeTaskShard]], whose data files roll over at `fileRows` rows.
+    * Returns (data entries, change entries). */
   private[shard] def writeMerge(tagged: DataFrame, dir: String,
-      schema: StructType, rangeExpr: Column, nShards: Int,
+      schema: StructType, rangeExpr: Column, nShards: Int, fileRows: Long,
       bounds: (Long, Long), prefix: String, bloomCols: Set[String],
       perKey: ShardOps.PerKey): (Seq[ShardEntry], Seq[ShardEntry]) = {
     val keyAt = visible(schema).fieldIndex(tagged.columns.head)
     val srcWidth = tagged.schema(3).dataType.asInstanceOf[StructType].length
-    clusteredWrite(tagged, rangeExpr.cast("long"), bounds._1, bounds._2,
-      nShards, tagged.columns.toSeq.take(2).map(col)) { it =>
-      mergeTaskShards(it, dir, schema, keyAt, srcWidth, prefix, bloomCols,
-        perKey)
+    clusteredWrite(tagged, rangeExpr.cast("long"), bounds, nShards,
+      tagged.columns.toSeq.take(2).map(col)) { it =>
+      mergeTaskShard(it, dir, schema, keyAt, srcWidth, fileRows, prefix,
+        bloomCols, perKey)
     }.partition(e => !e.file.startsWith(ChangePrefix))
   }
 
-  /** One range shuffle on the storage-long `rk` into `nShards` shard
-    * ids of equal width over [lo, hi] (clamped), sorted within shard by
-    * `sortCols`, each task streaming its Catalyst rows through `task`
+  /** One shuffle of `df` into `nShards` write tasks, task `i` holding
+    * exactly the rows of shard `i` ([[shardOf]] over `bounds` on the
+    * storage-long `rk`, passed through as the partition id, so no two
+    * shards share a task), sorted within it by `sortCols`; each task
+    * streams its Catalyst rows, the shard id trailing, through `task`
     * (one SQL execution, so listeners see the write like any action);
-    * only the manifest entries return to the driver. */
-  private def clusteredWrite(df: DataFrame, rk: Column, lo: Long, hi: Long,
+    * only the manifest entries return to the driver.
+    *
+    * No per-commit value may enter the plan as a SQL literal: Spark
+    * inlines a literal into the generated Java source, so bounds or a
+    * shard count that change every commit would compile new classes on
+    * every commit. The bounds ride in [[shardOf]]'s closure; the shard
+    * count is the partition count, which a merge keeps from commit to
+    * commit ([[ShardOps.merge]]). */
+  private def clusteredWrite(df: DataFrame, rk: Column, bounds: (Long, Long),
       nShards: Int, sortCols: Seq[Column])(
       task: Iterator[InternalRow] => Iterator[ShardEntry]): Seq[ShardEntry] = {
-    val width = math.max(1L, (hi - lo) / nShards + 1)
     val clustered = df
-      // integer DIV, not double division: a double quotient loses
-      // exactness past 2^53 and would misassign shards at key scale;
-      // a NULL key stays NULL (the task rejects it loudly)
-      .withColumn("__rk", rk)
-      .withColumn("__shard", expr(s"CAST(CASE WHEN __rk < ${lo}L THEN 0L " +
-        s"WHEN __rk > ${hi}L THEN ${nShards - 1}L " +
-        s"ELSE (__rk - ${lo}L) DIV ${width}L END AS INT)"))
-      .drop("__rk")
-      .repartition(nShards, col("__shard"))
-      .sortWithinPartitions(col("__shard") +: sortCols: _*)
+      .withColumn("__shard", shardOf(bounds._1, bounds._2, nShards)(rk))
+      .repartitionById(nShards, col("__shard"))
+      .sortWithinPartitions(sortCols: _*)
     PlanBridge.collectPartitions(clustered, "gshard write")(task)
       .sortBy(_.file).toSeq
+  }
+
+  /** The shard of a storage-long key: `n` slices of equal width over
+    * [lo, hi], a key outside them clamped to the first or last shard.
+    * A UDF, not a SQL expression: its closure, not a literal, carries
+    * (lo, width, n), so the generated code is the same for every range
+    * ([[clusteredWrite]]). The width and the offset are unsigned, so a
+    * range wider than 2^63 (signed 64-bit hash ids) neither overflows
+    * nor trips ANSI; one shard over all 2^64 keys wraps its width to 0.
+    * A NULL key gives a NULL shard, which the write task rejects. */
+  private def shardOf(lo: Long, hi: Long, n: Int): UserDefinedFunction = {
+    val width = java.lang.Long.divideUnsigned(hi - lo, n.toLong) + 1
+    udf { (k: Long) =>
+      if (k < lo || width == 0) 0
+      else if (k > hi) n - 1
+      else java.lang.Long.divideUnsigned(k - lo, width).toInt
+    }
   }
 
   /** A storage value as Spark's grouping sees it — −0.0 as 0.0, every
@@ -804,49 +811,43 @@ object ShardFormat {
     case other => other
   }
 
-  /** Executor side: stream this task's rows (sorted by `__shard`) into
-    * one file per shard id through the chunked writer — peak memory is
-    * one chunk, regardless of shard size. */
-  private def writeTaskShards(
+  /** Executor side: stream this task's rows, all of one shard, into
+    * that shard's file through the chunked writer — peak memory is one
+    * chunk, regardless of shard size. The trailing shard id names the
+    * file; it is NULL only for a NULL key, whose row reaches task 0
+    * and fails it here. */
+  private def writeTaskShard(
       it: Iterator[InternalRow], dir: String, schema: StructType,
-      chunkRows: Int, prefix: String = "", bloomCols: Set[String] = Set.empty,
-      namePrefix: String = "part-")
+      chunkRows: Int, prefix: String, namePrefix: String)
       : Iterator[ShardEntry] = {
     val nCols = schema.length
     val types = schema.fields.map(_.dataType)
-    val out = mutable.ArrayBuffer.empty[ShardEntry]
-    var shard = -1
     var writer: ShardFileWriter = null
-    def flush(): Unit = if (writer != null) {
-      out ++= Some(writer.close()).filter(_.rows > 0)
-      writer = null
-    }
     it.foreach { r =>
       require(!r.isNullAt(nCols), "gshard: range column must be non-null")
-      val s = r.getInt(nCols) // trailing __shard column
-      if (s != shard) {
-        flush(); shard = s
-        writer = new ShardFileWriter(f"$dir/$namePrefix$prefix$shard%05d.gshard",
-          schema, chunkRows, bloomCols)
-      }
+      if (writer == null) writer = new ShardFileWriter(
+        f"$dir/$namePrefix$prefix${r.getInt(nCols)}%05d.gshard", schema,
+        chunkRows)
       val values = new Array[Any](nCols)
       var i = 0
       while (i < nCols) { values(i) = storageValue(r, i, types(i)); i += 1 }
       writer.add(values)
     }
-    flush()
-    out.iterator
+    Option(writer).map(_.close()).filter(_.rows > 0).iterator
   }
 
-  /** Executor side of [[writeMerge]]: one data and one change file per
-    * shard. A key without source rows streams into the data file; a key
-    * with source rows (at most [[DefaultChunkRows]] with its touched
-    * rows, held in memory) goes through `perKey`, its output into the
-    * data file and, against its touched rows, its non-zero net
-    * differences into the change file. */
-  private def mergeTaskShards(it: Iterator[InternalRow], dir: String,
-      schema: StructType, keyAt: Int, srcWidth: Int, prefix: String,
-      bloomCols: Set[String], perKey: ShardOps.PerKey): Iterator[ShardEntry] = {
+  /** Executor side of [[writeMerge]]: the task's shard (named as in
+    * [[writeTaskShard]]) as data files of at most `fileRows` rows each
+    * (`part-<prefix><shard>.gshard`, then `-1`, `-2`, … before the
+    * extension) and one change file. A key without source rows streams
+    * into the data files; a key with source rows (at most
+    * [[DefaultChunkRows]] with its touched rows, held in memory) goes
+    * through `perKey`, its output into the data files and, against its
+    * touched rows, its non-zero net differences into the change file. */
+  private def mergeTaskShard(it: Iterator[InternalRow], dir: String,
+      schema: StructType, keyAt: Int, srcWidth: Int, fileRows: Long,
+      prefix: String, bloomCols: Set[String], perKey: ShardOps.PerKey)
+      : Iterator[ShardEntry] = {
     val visIdx = schema.fields.indices
       .filterNot(i => isTombstone(schema(i).name)).toArray
     val visTypes = visIdx.map(schema(_).dataType)
@@ -856,10 +857,21 @@ object ShardFormat {
       StructField(ShardCdc.SideCol, IntegerType, nullable = false))
     val order = org.apache.spark.sql.catalyst.expressions.InterpretedOrdering
       .forSchema(visTypes.toSeq)
-    val out = mutable.ArrayBuffer.empty[ShardEntry]
     var shard = -1
+    val files = mutable.ArrayBuffer.empty[ShardEntry] // full data files
     var writer: ShardFileWriter = null
     var chgWriter: ShardFileWriter = null
+    def dataFile() = {
+      val roll = if (files.isEmpty) "" else s"-${files.size}"
+      new ShardFileWriter(f"$dir/part-$prefix$shard%05d$roll.gshard",
+        schema, DefaultChunkRows, bloomCols)
+    }
+    def write(values: Array[Any]): Unit = {
+      if (writer.rows == fileRows) {
+        files += writer.close(); writer = dataFile()
+      }
+      writer.add(values)
+    }
     // the open key: its key value, touched rows and source rows
     var key: Any = null
     val touched = mutable.ArrayBuffer.empty[InternalRow]
@@ -886,7 +898,7 @@ object ShardFormat {
       }
       val sorted = (touched.map(r => (r, physical(r), -1)) ++ merged)
         .sortBy(_._1)(order)
-      sorted.foreach { case (_, values, side) => if (side > 0) writer.add(values) }
+      sorted.foreach { case (_, values, side) => if (side > 0) write(values) }
       // each run of equal rows (Catalyst's ordering equates what Spark's
       // grouping does) leaves its canonical cells and net count
       var from = 0
@@ -902,18 +914,11 @@ object ShardFormat {
       }
       touched.clear(); source.clear()
     }
-    def closeShard(): Unit = if (writer != null) {
-      mergeKey()
-      out ++= Seq(writer.close(), chgWriter.close()).filter(_.rows > 0)
-    }
-
     it.foreach { r =>
       require(!r.isNullAt(4), "gshard: range column must be non-null")
-      val s = r.getInt(4) // trailing __shard column
-      if (s != shard) {
-        closeShard(); shard = s
-        writer = new ShardFileWriter(f"$dir/part-$prefix$shard%05d.gshard",
-          schema, DefaultChunkRows, bloomCols)
+      if (writer == null) {
+        shard = r.getInt(4) // trailing __shard column
+        writer = dataFile()
         chgWriter = new ShardFileWriter(
           f"$dir/${ChangePrefix}c$prefix$shard%05d.gshard", chgSchema)
       }
@@ -921,7 +926,7 @@ object ShardFormat {
       val inKey = source.nonEmpty && k == key
       val isSource = r.getInt(1) == SourceSide
       if (!inKey) mergeKey()
-      if (!inKey && !isSource) writer.add(physical(r.getStruct(2, nVis)))
+      if (!inKey && !isSource) write(physical(r.getStruct(2, nVis)))
       else if (touched.size + source.size == DefaultChunkRows)
         throw new IllegalStateException(s"gshard merge: key $k brings " +
           s"more than $DefaultChunkRows touched and source rows")
@@ -931,13 +936,17 @@ object ShardFormat {
         source += r.getStruct(3, srcWidth).copy()
       }
     }
-    closeShard()
-    out.iterator
+    if (writer == null) Iterator.empty
+    else {
+      mergeKey()
+      (files ++ Seq(writer.close(), chgWriter.close())).filter(_.rows > 0)
+        .iterator
+    }
   }
 
   /** THE STORAGE-VALUE CONTRACT — the one map from a Spark cell to the
     * value [[ShardFileWriter.add]] takes, called by both writers (the
-    * DSv2 [[ShardDataWriter]] and [[writeTaskShards]]). The input is
+    * DSv2 [[ShardDataWriter]] and [[writeTaskShard]]). The input is
     * Catalyst's internal encoding, which the long block already
     * matches for every logical type:
     *  - NULL → `null` (the block's null bitmap);
@@ -1037,6 +1046,9 @@ object ShardFormat {
     private var totalRows = 0L
     private val buf = new mutable.ArrayBuffer[Array[Any]](chunkRows)
     private var dos: DataOutputStream = null
+
+    /** Rows added so far. */
+    def rows: Long = totalRows + buf.length
 
     def add(values: Array[Any]): Unit = {
       buf += values

@@ -142,14 +142,12 @@ object ShardOps {
     // change set (side −1) — written as this generation's change
     // files so the rowlevel CDC feed streams exactly them
     import graft.sources.shard.ShardCdc.{SideCol => ChangeSide}
-    // one shard over the constant key 0: the bounds are known, so no
-    // min/max job runs over the matched rows
+    // one shard over the constant key 0
     val changeEntries = ShardFormat.writeData(
       matchedFull.select(visCols.map(col) :+ lit(-1).as(ChangeSide): _*),
-      dir, visCols.head, 1,
+      dir, lit(0L), (0L, 0L), 1,
       prefix = s"d${java.util.UUID.randomUUID.toString.take(8)}-",
-      rangeExpr = Some(lit(0L)), namePrefix = ShardFormat.ChangePrefix,
-      bounds = Some((0L, 0L)))
+      namePrefix = ShardFormat.ChangePrefix)
     ShardFormat.commit(dir, basedOn = Some(head.gen),
       staged = perFile.map(_._2) ++ changeEntries.map(_.file),
       changes = changeEntries.map(e => (e.file, e.rows)), cdf = true)(
@@ -216,11 +214,21 @@ object ShardOps {
     *     rows (a connector scan planned on the merge's head, restricted
     *     to the touched entries: pruning, projection and delete masks
     *     apply, and it reads no manifest) and the source rows go
-    *     through ONE key-clustered shuffle; each write task streams a
-    *     key without source rows into the shard's data file and runs
-    *     `perKey` on a key with them (at most
-    *     [[ShardFormat.DefaultChunkRows]] rows, or the commit fails
-    *     naming the key): its output lands in the data file, its NET
+    *     through ONE key-clustered shuffle. The shards are as many
+    *     as the files it touched, at least one, and more only if the
+    *     source rows alone fill more files of the table's largest
+    *     size ([[ShardFormat.DefaultChunkRows]] rows if that is more;
+    *     an explicit `nShards > 0` wins). A shard's data rolls over
+    *     into a further file at that size, so no merge grows the
+    *     table's files: a merge keeps the file count it touches unless
+    *     its rows outgrow those files, and commits of the same shape
+    *     run the same compiled plan, since no per-commit value enters
+    *     it as a SQL literal ([[ShardFormat.clusteredWrite]]). Write
+    *     task `i` writes shard `i`: it streams a key without source
+    *     rows into the shard's data files and runs `perKey` on a key
+    *     with them (at most [[ShardFormat.DefaultChunkRows]] rows, or
+    *     the commit fails naming the key): its output lands in the
+    *     data files, its NET
     *     difference against its touched rows in the shard's `chg-`
     *     change file, so a CDC consumer streams O(changed rows) per
     *     commit. The touched files' zone maps and the source pass give
@@ -307,24 +315,26 @@ object ShardOps {
         (r, hit) => markZones(zones, r.getLong(1), hit)
       }
     // one summary of (key, clustering long, source rows of the key)
-    // rows: the files they fall in, their clustering range, and with
-    // `uniqueKeys` the first duplicate or NULL key
+    // rows: the files they fall in, their clustering range, their
+    // source rows, and with `uniqueKeys` the first duplicate or NULL key
     def summarize(it: Iterator[Row]) = {
       val hit = new java.util.BitSet
       var lo = Long.MaxValue
       var hi = Long.MinValue
+      var rows = 0L
       var bad: Option[String] = None
       it.foreach { r =>
         val dup = r.getLong(2) > 1 || (uniqueKeys && r.isNullAt(0))
         if (bad.isEmpty && dup)
           bad = Some(Row(r.get(0), r.getLong(2)).toString)
+        rows += r.getLong(2)
         if (!r.isNullAt(0) && !r.isNullAt(1)) {
           lo = math.min(lo, r.getLong(1))
           hi = math.max(hi, r.getLong(1))
           mark(r, hit)
         }
       }
-      (hit, lo, hi, bad)
+      (hit, lo, hi, rows, bad)
     }
     val probe = source.select(col(keyCol), clusterExpr)
     val parts = probe.queryExecution.optimizedPlan match {
@@ -346,7 +356,7 @@ object ShardOps {
           .mapPartitions(it => Iterator(summarize(it)))
           .collect().toSeq // one summary per source partition
     }
-    val bad = parts.flatMap(_._4).headOption
+    val bad = parts.flatMap(_._5).headOption
     require(bad.isEmpty,
       s"gshard merge: duplicate or NULL key in updates (${bad.getOrElse("")})")
     val hit = new java.util.BitSet
@@ -377,11 +387,24 @@ object ShardOps {
         (prefixLong(ShardFormat.unb64(lo)),
           prefixLong(ShardFormat.unb64(e.sMax(keyCol)))))
       else e.zMin.get(keyCol).map(lo => (lo, e.zMax(keyCol)))) ++
-      parts.collect { case (_, lo, hi, _) if lo <= hi => (lo, hi) }
+      parts.collect { case (_, lo, hi, _, _) if lo <= hi => (lo, hi) }
     val bounds =
       if (ranges.isEmpty) (0L, 0L)
       else (ranges.map(_._1).min, ranges.map(_._2).max)
-    val shards = if (nShards > 0) nShards else math.max(1, touched.size + 1)
+    // a rewritten file holds at most as many rows as the table's
+    // largest file (or one chunk, if more), rolling over past them, so
+    // no merge grows the table's files; the shards are as many as the
+    // files touched, or more if the source rows alone fill more such
+    // files: a merge keeps the file count it touches, and with it the
+    // write's partition count, so commits of the same shape run the
+    // same compiled plan
+    val fileRows = (head.entries.map(_.rows) :+
+      ShardFormat.DefaultChunkRows.toLong).max
+    val sourceRows = parts.map(_._4).sum
+    val shards =
+      if (nShards > 0) nShards
+      else Seq(1L, touched.size.toLong,
+        (sourceRows + fileRows - 1) / fileRows).max.toInt
     // fresh file prefix: gen for debuggability PLUS a random token —
     // two concurrent merges that both planned at gen N must never
     // stage under the same names (the loser's tasks would overwrite
@@ -393,7 +416,7 @@ object ShardOps {
       java.util.UUID.randomUUID.toString.take(8) + "-"
     val (fresh, changeEntries) = sweepOnFailure(spark, dir, prefix) {
       ShardFormat.writeMerge(tagged, dir, head.schema, clusterExpr, shards,
-        bounds, prefix,
+        fileRows, bounds, prefix,
         // rewritten files keep the table's bloom set (manifest-derived)
         bloomCols = head.entries.flatMap(_.bloom.keys).toSet, perKey = perKey)
     }

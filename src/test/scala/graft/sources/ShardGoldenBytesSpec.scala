@@ -90,12 +90,14 @@ class ShardGoldenBytesSpec extends ShardTempRoot {
     assert(headDigests(d)._1 == golden("dsv2-1"))
   }
 
-  /** (data, change) digests after each of the two upserts. */
+  /** (data, change) digests after each of the two upserts. They also
+    * pin the merge's shard count: each upsert touches one file and
+    * rewrites it as one shard. */
   private val goldenUpserts = Seq(
-    ("9a231687f21552619a56b58a3ad35fb3520ce3525a8ead657d5f8df2572ce862",
-      "45ee7812962140f09502d53aeb6cf2f587ea1d836598e00592115d7e1835152e"),
-    ("b1580817be95cab2dca7d35360791ff88602b9c27057dddec42b56920ba7658f",
-      "901af6f0155d0caec86e401477ad73f67e3da17183040096efdf9ad9879d4a96"))
+    ("d357e034e3341edc19c871f246ff77d39641e216110cc4a7becf3d06f27b35b5",
+      "a66f9c628cc680ee11233d822378b2127843f87619c06ab963927893b3fc29fa"),
+    ("63addf50caceef328dc217b6d055df599b105525bcde985bdf9fc527c719bf4b",
+      "ac450f58ad94a068e83914ed4db41cb9fbe11f00415009202941d1b65f8bdf34"))
 
   test("a fixed upsert sequence writes the golden data and change bytes") {
     val d = tmp("ups")

@@ -429,7 +429,7 @@ class ShardMergeSpec extends ShardTempRoot {
     val d = kvTable("sm_late", 64, 4)
     val listed = listing(d)
     // 5 shards of 13 keys over [0, 64]: keys 7, 30 and 64 fall in
-    // shards 0, 2 and 4, which hash to three different write tasks.
+    // shards 0, 2 and 4, so write tasks 0, 2 and 4 run them.
     // Key 30's task writes its files before key 7's task fails; key 64
     // is its task's last row, so its per-key call runs after the
     // task's input ends, and that task writes after the job has failed

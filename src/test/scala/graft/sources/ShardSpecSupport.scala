@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graft.PlanBridge
@@ -74,5 +75,18 @@ object JobCount {
       PlanBridge.drainListenerBus(spark)
     } finally spark.sparkContext.removeSparkListener(listener)
     jobs.get
+  }
+}
+
+/** Counts the classes Spark's code generator compiles while a block
+  * runs: the change in Janino's compile counter, which is JVM-wide, so
+  * it holds for suites that run one at a time. A plan whose generated
+  * source is already in the codegen cache compiles none. */
+object CompileCount {
+  def apply(body: => Unit): Long = {
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    body
+    compiles.getCount - before
   }
 }
